@@ -269,14 +269,17 @@ def _final_line(timings: dict[str, float], sf_val) -> str:
     silently overflowing the driver's capture window.
     """
     for decimals in (2, 1):
+        queries = {k: round(v, decimals) for k, v in timings.items()}
         line = json.dumps(
             {
                 # Shortest useful tag: the sum of the 74 query-name keys
                 # alone is 1184 chars, so every envelope byte counts.
                 "metric": "hq",
-                "value": round(sum(timings.values()), 2),
+                # The sum of the values actually emitted, so the total
+                # matches the per-query numbers at either precision.
+                "value": round(sum(queries.values()), decimals),
                 "unit": "sec",
-                "queries": {k: round(v, decimals) for k, v in timings.items()},
+                "queries": queries,
                 "sf": sf_val,
             },
             separators=(",", ":"),

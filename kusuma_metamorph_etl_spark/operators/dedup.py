@@ -321,24 +321,6 @@ def containment_pairs(
 
 # ----------------------------------------------------------------- MinHash + LSH
 
-def minhash_signature(text: Column, n_hashes: int = 16, n: int = 3) -> Column:
-    """MinHash signature as a single Column expression: for seed j, min
-    over shingles of xxhash64(j, shingle).
-
-    Convenience form only — it embeds the shingle expression ``n_hashes``
-    times, so Spark re-tokenizes per seed (Catalyst's CollapseProject
-    inlines any aliased intermediate).  The hot path is
-    :func:`minhash_signatures`, which shingles exactly once.
-    """
-    shingles = word_shingles(text, n)
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(j), s)))
-            for j in range(n_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -346,12 +328,14 @@ def minhash_signatures(
     n_hashes: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """(id, sig) MinHash signatures, shingling each document exactly once.
+    """(id, sig) MinHash signatures: ``sig[j]`` is the min over a
+    document's word ``n``-gram shingles of ``xxhash64(j, shingle)``.
 
-    Plan: explode shingles → one groupBy(id) with ``n_hashes``
-    ``min(xxhash64(seed, shingle))`` aggregates.  min() is
-    partial-aggregatable, so the shuffle carries one ``n_hashes``-long row
-    per (id, map partition), not per shingle — this is the 100 TB shape.
+    Each document is shingled exactly once.  Plan: explode shingles →
+    one groupBy(id) with ``n_hashes`` ``min(xxhash64(seed, shingle))``
+    aggregates.  min() is partial-aggregatable, so the shuffle carries
+    one ``n_hashes``-long row per (id, map partition), not per shingle —
+    this is the 100 TB shape.
     Documents with fewer than ``n`` tokens have no shingles and drop out
     (they cannot be shingle-near-dups of anything).
     """

@@ -226,6 +226,9 @@ def pagerank(
       (uniform when ``weight_col`` is None);
     * dangling mass (nodes with no out-edges) is redistributed uniformly
       every round, so ``Σ pr == 1`` is an invariant;
+    * an edge with a NULL ``src`` or ``dst`` is ignored, so no NULL node
+      is ranked (a NULL id cannot be joined back, and its mass would
+      break the invariant);
     * exactly ``n_iter`` synchronous rounds — a fixed round count rather
       than an epsilon stop, because two engines agreeing on "converged"
       is a float question while agreeing on round 15 is not.  15 rounds
@@ -262,7 +265,7 @@ def pagerank(
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     norm = _ckpt(
         # out_w > 0 guard: a node whose out-edges all carry zero weight

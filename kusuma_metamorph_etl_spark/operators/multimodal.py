@@ -1067,13 +1067,6 @@ RESIZE_SCHEMA = (
 )
 
 
-def fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resizer: truncates/pads bytes to width*height —
-    preserves the batch/schema contract a real resampler would use."""
-    target = width * height
-    return payload[:target].ljust(target, b"\x00")
-
-
 def resize(
     df: DataFrame,
     width: int,

@@ -537,14 +537,14 @@ def merge_samples(
     wide k-sample WITHOUT rescanning raw data — the uniform-sample
     member of the mergeable-sketch family (`operators/sketches.py`).
 
-    Why it is exact, not approximate: the global k smallest hashes are
-    each the smallest within their own slice, so they all survive their
-    slice's bottom-k — the union of per-slice samples provably contains
-    the global sample, and re-taking bottom-k over it recovers it
-    EXACTLY (same argument as `merge_kmv`; ==direct-draw is the driver
-    gate).  Build a k-sample per day/month at ingest, answer "uniform
-    sample of any date range" by merging sample rows — k × slices rows,
-    never the corpus.
+    Why it is exact, not approximate: bottom-k of per-slice bottom-k's
+    is bottom-k.  Each of the global k smallest hashes has fewer than k
+    smaller hashes in the whole corpus, hence in its own slice, so it
+    survives its slice's bottom-k — the union of per-slice samples
+    provably contains the global sample, and re-taking bottom-k over it
+    recovers it EXACTLY (==direct-draw is the driver gate).  Build a
+    k-sample per day/month at ingest, answer "uniform sample of any date
+    range" by merging sample rows — k × slices rows, never the corpus.
     """
     return fixed_size_sample(samples, key, k, seed)
 

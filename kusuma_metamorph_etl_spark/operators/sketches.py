@@ -1,30 +1,29 @@
-"""[EXT] Mergeable summary sketches beyond what Spark aggregates offer.
+"""[EXT] Mergeable summary sketches.
 
-Spark's ``percentile_approx`` (Greenwald-Khanna) is accurate but its
-state cannot be persisted and merged across pre-aggregations — the thing
-a 100 TB pipeline actually needs: write a tiny sketch per (key, day) at
-ingest, then answer any-range quantile queries by MERGING sketches
-instead of re-scanning raw data (the same pattern `hll_sketch_agg` /
-`hll_union_agg` give distinct counts, cf `agg_hll_mergeable`).
+The pattern a 100 TB pipeline needs: write a tiny sketch per (key, day)
+at ingest, then answer any-range questions by MERGING sketches instead
+of re-scanning raw data.  Spark 4.1 ships mergeable HLL, theta and KLL
+sketches as builtins, so distinct-count set algebra here
+(:func:`theta_set_algebra`) is a thin wrapper over the theta functions.
+The hand-rolled sketches below stay because no builtin gives what
+their callers rely on:
 
-Measured merge-vs-rescan (sf0.1, local[32], median of 3 — the numbers
-behind the claim): answering per-type distinct-users from a persisted
-daily HLL rollup takes 0.25s (merge ~n_types×n_days sketch rows) vs
-0.35s re-scanning all raw events exactly and 0.27s re-scanning with
-``approx_count_distinct``.  At sf0.1 raw is only 100k rows so the gap
-is modest; the point is the SHAPE — merge cost is bounded by the rollup
-table (keys × days), rescan cost by raw volume, and the ratio widens
-linearly with data size (at 100 TB the rollup stays MB-scale while the
-rescan is the full corpus).  One-off rollup build+write: 4.3s.
-
-The fixed-bin histogram sketch here is the simplest mergeable quantile
-summary: merging is a bin-wise sum (associative, commutative), the
-estimate error is bounded by one bin width, and the whole thing is plain
-DataFrame ops — a (keys, bin, n) long-form table that parquet stores
-RLE-compressed.  Trade-off versus t-digest/KLL: bounds must be known
-up front and accuracy is uniform over the range rather than adaptive at
-the tails; within those limits it is exact-cost-model, oracle-checkable,
-and trivially mergeable.
+* **Fixed-bin histogram** (quantiles; ``stats.py`` PSI): merging is a
+  bin-wise sum, and the value error is bounded by one bin width and
+  deterministic.  Spark's KLL is neither here: over 8 runs at sf0.1 its
+  quantiles were off by up to 12.7 bin widths and varied between runs,
+  and ``kll_sketch_get_rank_double`` only takes a foldable rank
+  argument, so a rank gate against the in-plan exact value cannot be
+  written without a driver fetch.  Trade-off: bounds must be known up
+  front, and accuracy is uniform over the range rather than adaptive at
+  the tails.
+* **Count-min**: the SQL ``count_min_sketch`` aggregate returns only a
+  binary blob, with no function to estimate from it inside a plan.
+* **Bloom**: no Bloom aggregate or membership function is registered.
+* **Misra–Gries** (:func:`heavy_hitters`, the streaming summaries in
+  ``streaming/sink.py``): they rely on its no-false-negative guarantee —
+  every item above n/k survives the summary — which an approximate
+  top-k does not give.
 """
 
 from __future__ import annotations
@@ -598,168 +597,28 @@ def bloom_prefilter_join(
     return kept.join(dim, on=on, how=how)
 
 
-# ------------------------------------------------------------ KMV (theta)
+# ------------------------------------------------------------------- theta
 
-def kmv_sketch(
-    df: DataFrame,
-    value_col: str,
-    k: int = 256,
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """K-minimum-values distinct sketch as a long-form ``(keys..., h)``
-    table: the ``k`` smallest distinct ``xxhash64`` values per key group
-    (Bar-Yossef et al. 2002; the theta-sketch family).  What it buys over
-    HLL: the retained hash SAMPLE supports set INTERSECTION estimates
-    (:func:`kmv_intersect`) — HLL unions beautifully but cannot
-    intersect without inclusion-exclusion error blowup.
+def theta_set_algebra(a: DataFrame, b: DataFrame, value_col: str) -> DataFrame:
+    """Distinct-count set algebra over two frames from Spark's theta
+    sketches: one sketch per side (``theta_sketch_agg``), combined with
+    ``theta_union`` / ``theta_intersection`` / ``theta_difference``.
+    Single-row ``(est_a, est_b, est_union, est_intersection,
+    est_difference)`` of longs.
 
-    Build: hash (narrow map) → distinct → TWO-LEVEL bottom-k: a salted
-    pre-reduction (bottom-k per (key, h mod n_salts) slice) bounds every
-    sort task at distinct/n_salts rows, then the global bottom-k runs
-    over ≤ n_salts·k pre-reduced rows per key — a naive single window
-    would sort a key's ENTIRE distinct set in one task, the classic
-    hot-key trap for billion-cardinality columns.  Bottom-k of bottom-k's
-    is bottom-k, so the reduction is exact, and the same property makes
-    per-day sketches roll up without rescanning raw data
-    (:func:`merge_kmv`).
+    Intersection and difference are what theta adds over HLL, which
+    unions well but cannot intersect.  Spark's default nominal size
+    (lgNomEntries 12) is used: below 4096 distinct values per side every
+    estimate is exact, and the estimates are deterministic across runs.
+    An empty side is an empty sketch, so its estimates are 0, not NULL.
     """
-    keys = keys or []
-    hashed = (
-        df.select(*keys, F.xxhash64(F.col(value_col)).alias("h"))
-        .distinct()
-    )
-    pre = _bottom_k(hashed, k, [*keys, F.pmod("h", F.lit(64))])
-    return _bottom_k(pre, k, list(keys))
-
-
-def _bottom_k(frame: DataFrame, k: int, part_cols: list) -> DataFrame:
-    w = Window.partitionBy(*part_cols).orderBy("h")
-    return (
-        frame.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def merge_kmv(
-    sketches: DataFrame, k: int = 256, keys: list[str] | None = None
-) -> DataFrame:
-    """Merge compatible (same k) sketches: union → distinct → bottom-k
-    per key again (inputs are already ≤ k rows per key per slice, so no
-    salting needed).  Associative and idempotent."""
-    keys = keys or []
-    return _bottom_k(sketches.select(*(keys or []), "h").distinct(), k, list(keys))
-
-
-def kmv_distinct(
-    sketch: DataFrame, k: int = 256, keys: list[str] | None = None
-) -> DataFrame:
-    """Distinct-count estimates from a KMV sketch: ``(keys..., est)``.
-
-    With fewer than k retained hashes the sketch IS the distinct set —
-    the count is exact.  Otherwise the k-th smallest hash estimates the
-    sampled fraction θ of hash space and est = (k−1)/θ (the unbiased
-    KMV estimator; relative error ~ 1/√(k−2)).  Hash values map to
-    (0,1) via the signed-long affine shift — all column arithmetic,
-    sketch-cardinality work.
-    """
-    keys = keys or []
-    two63 = float(1 << 63)
-    two64 = float(1 << 64)
-    agg = sketch.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("__n"), F.max("h").alias("__hmax")
-    )
-    theta = (F.col("__hmax").cast("double") + F.lit(two63)) / F.lit(two64)
-    est = F.when(F.col("__n") < k, F.col("__n").cast("double")).otherwise(
-        F.lit(float(k - 1)) / theta
-    )
-    return agg.select(*keys, F.round(est, 6).alias("est"))
-
-
-def kmv_intersect(
-    sketch_a: DataFrame, sketch_b: DataFrame, k: int = 256
-) -> DataFrame:
-    """Set-INTERSECTION cardinality estimate from two key-free KMV
-    sketches — the query HLL cannot answer.  Single-row output
-    ``(est_a, est_b, est_union, est_intersection)``.
-
-    Standard theta-sketch combination: form the union sketch (bottom-k
-    of A ∪ B), count how many of its hashes appear in BOTH inputs (ρ),
-    then |A∩B| ≈ ρ/k · |A∪B|̂ — the union sketch is a uniform hash
-    sample of A∪B, so the fraction of its members lying in the
-    intersection transfers.  Everything is sketch-cardinality joins;
-    raw data is never touched.
-    """
-    a = sketch_a.select("h").distinct()
-    b = sketch_b.select("h").distinct()
-    union_sk = merge_kmv(a.unionByName(b), k)
-    both = a.join(b, on="h", how="left_semi")
-    in_both = union_sk.join(both, on="h", how="left_semi")
-    est_a = kmv_distinct(a, k).select(F.col("est").alias("est_a"))
-    est_b = kmv_distinct(b, k).select(F.col("est").alias("est_b"))
-    est_u = kmv_distinct(union_sk, k).select(F.col("est").alias("est_union"))
-    counts = (
-        union_sk.agg(F.count(F.lit(1)).alias("__ku"))
-        .crossJoin(in_both.agg(F.count(F.lit(1)).alias("__rho")))
-    )
-    return (
-        est_a.crossJoin(est_b)
-        .crossJoin(est_u)
-        .crossJoin(counts)
-        .select(
-            "est_a",
-            "est_b",
-            "est_union",
-            # guard the empty-union degenerate case (both inputs empty):
-            # 0 intersection, not a division-by-zero
-            F.when(
-                F.col("__ku") > 0,
-                F.round(
-                    F.col("__rho") / F.col("__ku") * F.col("est_union"), 6
-                ),
-            ).otherwise(F.lit(0.0)).alias("est_intersection"),
-        )
-    )
-
-
-def kmv_difference(
-    sketch_a: DataFrame, sketch_b: DataFrame, k: int = 256
-) -> DataFrame:
-    """Set-DIFFERENCE cardinality estimate |A \\ B| from two key-free
-    KMV sketches — completes the theta-sketch algebra next to
-    :func:`kmv_intersect` (union / intersection / difference are the
-    three ops the Apache DataSketches theta family exposes).  Single-row
-    ``(est_a, est_b, est_union, est_difference)``.
-
-    Same transfer argument as the intersection: the union sketch is a
-    uniform hash sample of A ∪ B, so the fraction of its members lying
-    in A but not B estimates |A \\ B| / |A ∪ B|.  Everything is
-    sketch-cardinality joins; raw data is never touched.
-    """
-    a = sketch_a.select("h").distinct()
-    b = sketch_b.select("h").distinct()
-    union_sk = merge_kmv(a.unionByName(b), k)
-    only_a = a.join(b, on="h", how="left_anti")
-    in_diff = union_sk.join(only_a, on="h", how="left_semi")
-    est_a = kmv_distinct(a, k).select(F.col("est").alias("est_a"))
-    est_b = kmv_distinct(b, k).select(F.col("est").alias("est_b"))
-    est_u = kmv_distinct(union_sk, k).select(F.col("est").alias("est_union"))
-    counts = union_sk.agg(F.count(F.lit(1)).alias("__ku")).crossJoin(
-        in_diff.agg(F.count(F.lit(1)).alias("__rho"))
-    )
-    return (
-        est_a.crossJoin(est_b)
-        .crossJoin(est_u)
-        .crossJoin(counts)
-        .select(
-            "est_a",
-            "est_b",
-            "est_union",
-            F.when(
-                F.col("__ku") > 0,
-                F.round(
-                    F.col("__rho") / F.col("__ku") * F.col("est_union"), 6
-                ),
-            ).otherwise(F.lit(0.0)).alias("est_difference"),
-        )
+    sa = a.agg(F.theta_sketch_agg(value_col).alias("sa"))
+    sb = b.agg(F.theta_sketch_agg(value_col).alias("sb"))
+    est = F.theta_sketch_estimate
+    return sa.crossJoin(sb).select(
+        est("sa").alias("est_a"),
+        est("sb").alias("est_b"),
+        est(F.theta_union("sa", "sb")).alias("est_union"),
+        est(F.theta_intersection("sa", "sb")).alias("est_intersection"),
+        est(F.theta_difference("sa", "sb")).alias("est_difference"),
     )

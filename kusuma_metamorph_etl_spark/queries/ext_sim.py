@@ -453,8 +453,8 @@ def sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF shortlist → exact MaxSim re-rank over candidate tokens only,
     recall-gated by `sim_maxsim_ann_err`) — per-query re-rank cost
     |q| × N·tokens, independent of corpus size.  Funded by
-    consolidating `agg_kmv_intersect` + `agg_kmv_diff` →
-    `agg_kmv_family` under the retire-one policy."""
+    consolidating the separate sketch intersection and difference rows
+    into `agg_kmv_family` under the retire-one policy."""
     emb = t(spark, sf_dir, "embeddings")
     docs = emb.select(
         (F.col("vec_id") % 10).alias("dkey"), "embedding"

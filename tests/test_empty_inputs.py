@@ -48,11 +48,12 @@ def test_sketches_empty(spark):
     from kusuma_metamorph_etl_spark.operators.sketches import (
         bloom_probe,
         bloom_sketch,
-        kmv_sketch,
+        theta_set_algebra,
     )
 
     empty = _empty(spark, "v long")
-    assert kmv_sketch(empty, "v").count() == 0
+    # empty sketches estimate 0, not NULL
+    assert tuple(theta_set_algebra(empty, empty, "v").collect()[0]) == (0,) * 5
     sk = bloom_sketch(empty, "v", n_bits=1 << 10)
     assert sk.count() == 0
     # probing a non-empty frame against an EMPTY sketch: definitively absent

@@ -185,6 +185,23 @@ def test_pagerank_dangling_and_star_shape(spark):
         assert abs(got[k] - want[k]) < 1e-9
 
 
+def test_pagerank_null_endpoints_ignored(spark):
+    """An edge with a NULL endpoint is dropped up front: no NULL node is
+    ranked and Σpr stays 1 (a NULL node used to be counted in n but
+    never re-attached, leaking its share of the mass)."""
+    from kusuma_metamorph_etl_spark.operators.graph import pagerank
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, None), (None, 2), (None, None)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["pr"] for r in pagerank(df, n_iter=15).collect()}
+    assert None not in got
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    want = _np_pagerank([(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0)])
+    assert set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-9
+
+
 def test_pagerank_empty_edges_raises(spark):
     import pytest
 

@@ -530,31 +530,22 @@ def test_ewma_matches_bruteforce_truncated_definition(obs):
     a=st.sets(st.integers(0, 5000), min_size=1, max_size=400),
     b=st.sets(st.integers(0, 5000), min_size=0, max_size=400),
 )
-def test_kmv_merge_associative_idempotent_and_exact_below_k(a, b):
-    from kusuma_metamorph_etl_spark.operators.sketches import (
-        kmv_distinct,
-        kmv_sketch,
-        merge_kmv,
-    )
+def test_theta_set_algebra_exact_below_nominal_size(a, b):
+    """Below Spark's nominal theta size (4096 distinct values) every
+    estimate of the set algebra is the exact cardinality."""
+    from kusuma_metamorph_etl_spark.operators.sketches import theta_set_algebra
 
     spark = _session()
-    k = 64
     df_a = spark.createDataFrame([(v,) for v in a], "v long")
     df_b = spark.createDataFrame([(v,) for v in b], "v long") if b else df_a.limit(0)
-    sk_a, sk_b = kmv_sketch(df_a, "v", k), kmv_sketch(df_b, "v", k)
-    merged = merge_kmv(sk_a.unionByName(sk_b), k)
-    direct = kmv_sketch(df_a.unionByName(df_b), "v", k)
-    assert sorted(r["h"] for r in merged.collect()) == sorted(
-        r["h"] for r in direct.collect()
-    )
-    # idempotence: re-merging the merge changes nothing
-    again = merge_kmv(merged.unionByName(merged), k)
-    assert sorted(r["h"] for r in again.collect()) == sorted(
-        r["h"] for r in merged.collect()
-    )
-    if len(a | b) < k:  # exact regime
-        est = kmv_distinct(direct, k).collect()[0]["est"]
-        assert est == float(len(a | b))
+    row = theta_set_algebra(df_a, df_b, "v").collect()[0]
+    assert (
+        row["est_a"],
+        row["est_b"],
+        row["est_union"],
+        row["est_intersection"],
+        row["est_difference"],
+    ) == (len(a), len(b), len(a | b), len(a & b), len(a - b))
 
 
 @settings(max_examples=_ex(8), deadline=None)

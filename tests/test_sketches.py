@@ -317,96 +317,39 @@ class TestBloom:
         assert matching <= kept < total * 0.5
 
 
-class TestKMV:
-    def test_exact_below_k(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_distinct,
-            kmv_sketch,
-        )
+class TestThetaSetAlgebra:
+    @staticmethod
+    def _ests(a, b):
+        return tuple(sketches.theta_set_algebra(a, b, "v").collect()[0])
 
-        df = spark.range(0, 100).select(F.col("id").alias("v"))
-        sk = kmv_sketch(df, "v", k=256)
-        assert sk.count() == 100  # below k the sketch IS the distinct set
-        assert kmv_distinct(sk, k=256).collect()[0]["est"] == 100.0
+    @staticmethod
+    def _range(spark, lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("v"))
 
-    def test_estimate_accuracy_above_k(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_distinct,
-            kmv_sketch,
-        )
-
-        df = spark.range(0, 5000).select(F.col("id").alias("v"))
-        sk = kmv_sketch(df, "v", k=256)
-        assert sk.count() == 256
-        est = kmv_distinct(sk, k=256).collect()[0]["est"]
-        assert abs(est - 5000) / 5000 < 0.2  # sigma ~ 1/sqrt(k) ~ 6%
-
-    def test_merge_equals_direct_build(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_sketch,
-            merge_kmv,
-        )
-
-        a = spark.range(0, 3000).select(F.col("id").alias("v"))
-        b = spark.range(2000, 6000).select(F.col("id").alias("v"))
-        merged = merge_kmv(
-            kmv_sketch(a, "v", k=128).unionByName(kmv_sketch(b, "v", k=128)),
-            k=128,
-        )
-        direct = kmv_sketch(a.unionByName(b), "v", k=128)
-        assert sorted(r["h"] for r in merged.collect()) == sorted(
-            r["h"] for r in direct.collect()
-        )
-
-    def test_intersection_estimate(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_intersect,
-            kmv_sketch,
-        )
-
-        a = spark.range(0, 4000).select(F.col("id").alias("v"))
-        b = spark.range(2000, 6000).select(F.col("id").alias("v"))
-        row = kmv_intersect(
-            kmv_sketch(a, "v", k=256), kmv_sketch(b, "v", k=256), k=256
-        ).collect()[0]
-        assert abs(row["est_union"] - 6000) / 6000 < 0.2
-        assert abs(row["est_intersection"] - 2000) / 2000 < 0.35
-
-    def test_difference_estimate(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_difference,
-            kmv_sketch,
-        )
-
-        a = spark.range(0, 4000).select(F.col("id").alias("v"))
-        b = spark.range(2000, 6000).select(F.col("id").alias("v"))
-        row = kmv_difference(
-            kmv_sketch(a, "v", k=256), kmv_sketch(b, "v", k=256), k=256
-        ).collect()[0]
-        # |A \ B| = 2000 of a 6000 union: rho ~ 85, sigma ~ 11%
-        assert abs(row["est_difference"] - 2000) / 2000 < 0.35
-
-    def test_difference_empty_and_disjoint_cases(self, spark):
-        from kusuma_metamorph_etl_spark.operators.sketches import (
-            kmv_difference,
-            kmv_sketch,
-        )
-
-        a = spark.range(0, 300).select(F.col("id").alias("v"))
+    def test_edge_cases_exact(self, spark):
+        a = self._range(spark, 0, 300)
         empty = a.filter(F.lit(False))
-        # A \ A = 0; A \ empty = A exactly (all below k -> exact)
-        same = kmv_difference(
-            kmv_sketch(a, "v", k=512), kmv_sketch(a, "v", k=512), k=512
-        ).collect()[0]
-        assert same["est_difference"] == 0.0
-        disj = kmv_difference(
-            kmv_sketch(a, "v", k=512), kmv_sketch(empty, "v", k=512), k=512
-        ).collect()[0]
-        assert disj["est_difference"] == 300.0
-        both_empty = kmv_difference(
-            kmv_sketch(empty, "v", k=512), kmv_sketch(empty, "v", k=512), k=512
-        ).collect()[0]
-        assert both_empty["est_difference"] == 0.0
+        # (a, b, union, intersection, difference); empty sides give 0
+        assert self._ests(a, a) == (300, 300, 300, 300, 0)
+        assert self._ests(a, empty) == (300, 0, 300, 0, 300)
+        assert self._ests(empty, empty) == (0, 0, 0, 0, 0)
+
+    def test_above_nominal_size_within_gate_bands(self, spark):
+        # 20000 distinct per side, far above the 4096 nominal entries;
+        # the bands are agg_kmv_family's gate
+        a = self._range(spark, 0, 20000)
+        b = self._range(spark, 10000, 30000)
+        exact = (20000, 20000, 30000, 10000, 10000)
+        bands = (0.06, 0.06, 0.06, 0.15, 0.35)
+        for est, x, tol in zip(self._ests(a, b), exact, bands):
+            assert abs(est - x) <= tol * x, (est, x, tol)
+
+    def test_repeat_runs_identical(self, spark):
+        # the oracle gate compares one run against fixed bands, so the
+        # estimates must not vary between runs
+        a = self._range(spark, 0, 20000).repartition(5)
+        b = self._range(spark, 10000, 30000).repartition(3)
+        assert self._ests(a, b) == self._ests(a, b)
 
 
 def test_nan_excluded_from_bounds_and_bins(spark):

@@ -42,7 +42,6 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 name, sf_dir, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from kusuma_metamorph_etl_spark import registry
 from kusuma_metamorph_etl_spark.session import get_session
@@ -352,11 +351,17 @@ def main() -> int:
         ap.error("--reps must be >= 1")
     results = {}
     for name in queries:
+        # `python -c` puts the working directory first on sys.path, so
+        # the child imports the engine from this checkout.
         proc = subprocess.run(
-            [sys.executable, "-c", _CHILD, name, args.sf_dir, str(args.reps)],
+            [
+                sys.executable, "-c", _CHILD,
+                name, os.path.abspath(args.sf_dir), str(args.reps),
+            ],
             capture_output=True,
             text=True,
             timeout=900,
+            cwd=REPO,
         )
         line = next(
             (l for l in proc.stdout.splitlines() if l.startswith("ISOLATED_RESULT ")),

@@ -37,7 +37,7 @@ Usage:
     python tools/scale_probe.py --build           # once: writes .scale/sf1.0
     python tools/scale_probe.py --record          # probe + BENCH_SCALE.json
 
-The scaled dataset lives under ``/root/repo/.scale/sf1.0`` (gitignored).
+The scaled dataset lives under ``.scale/sf1.0`` in the checkout (gitignored).
 """
 
 from __future__ import annotations
@@ -50,7 +50,9 @@ import subprocess
 import sys
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
-SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SF01 = os.path.abspath(
+    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+)
 SF10 = str(REPO / ".scale" / "sf1.0")
 FACTOR = 10
 
@@ -71,7 +73,6 @@ PROBE_ROWS = [
 
 _BUILD = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.session import get_session
 
@@ -167,7 +168,6 @@ print("BUILD_DONE")
 
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 name, sf_dir, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from kusuma_metamorph_etl_spark import registry
 from kusuma_metamorph_etl_spark.session import get_session
@@ -203,7 +203,6 @@ print("PROBE_RESULT " + json.dumps({"query": name, "reps": runs}))
 #   scale-up is visible, not inferred.
 _STREAM_CHILD = r"""
 import json, shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
 name, sf_dir, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from kusuma_metamorph_etl_spark.session import get_session
 from kusuma_metamorph_etl_spark.streaming.stateful import sessionize_stream
@@ -253,12 +252,15 @@ def _run_child(script: str, args: list[str], timeout: int) -> str:
     env = dict(os.environ)
     env.pop("PYSPARK_SUBMIT_ARGS", None)
     env["SPARK_GRAFT_DRIVER_MEM"] = "12g"  # session.py routes to submit args
+    # `python -c` puts the working directory first on sys.path, so the
+    # child imports the engine from this checkout.
     proc = subprocess.run(
         [sys.executable, "-c", script, *args],
         capture_output=True,
         text=True,
         timeout=timeout,
         env=env,
+        cwd=REPO,
     )
     if proc.returncode != 0:
         raise RuntimeError(proc.stderr[-3000:])
