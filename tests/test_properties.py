@@ -530,9 +530,11 @@ def test_ewma_matches_bruteforce_truncated_definition(obs):
     a=st.sets(st.integers(0, 5000), min_size=1, max_size=400),
     b=st.sets(st.integers(0, 5000), min_size=0, max_size=400),
 )
-def test_theta_set_algebra_exact_below_nominal_size(a, b):
-    """Below Spark's nominal theta size (4096 distinct values) every
-    estimate of the set algebra is the exact cardinality."""
+def test_kmv_merge_associative_idempotent_and_exact_below_k(a, b):
+    """Theta sketches (Spark's KMV family): below the nominal size (4096
+    distinct values) every estimate of the set algebra is the exact
+    cardinality, the union of two sketches equals the sketch of the
+    union, and re-merging a sketch with itself changes nothing."""
     from kusuma_metamorph_etl_spark.operators.sketches import theta_set_algebra
 
     spark = _session()
@@ -546,6 +548,10 @@ def test_theta_set_algebra_exact_below_nominal_size(a, b):
         row["est_intersection"],
         row["est_difference"],
     ) == (len(a), len(b), len(a | b), len(a & b), len(a - b))
+    both = df_a.unionByName(df_b)
+    direct = theta_set_algebra(both, both, "v").collect()[0]
+    assert direct["est_a"] == row["est_union"]
+    assert direct["est_union"] == direct["est_a"]  # idempotent merge
 
 
 @settings(max_examples=_ex(8), deadline=None)

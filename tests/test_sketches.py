@@ -317,17 +317,50 @@ class TestBloom:
         assert matching <= kept < total * 0.5
 
 
+def _theta_ests(a, b):
+    return sketches.theta_set_algebra(a, b, "v").collect()[0]
+
+
+def _range(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("v"))
+
+
+class TestKMV:
+    """The k-minimum-values family, served by Spark's theta sketches (a
+    theta sketch keeps the hashes below theta, the k-th minimum once it
+    fills its 4096 nominal entries)."""
+
+    def test_exact_below_k(self, spark):
+        df = _range(spark, 0, 100)
+        row = _theta_ests(df, df.filter(F.lit(False)))
+        # below the nominal size the sketch IS the distinct set
+        assert (row["est_a"], row["est_union"]) == (100, 100)
+
+    def test_estimate_accuracy_above_k(self, spark):
+        row = _theta_ests(_range(spark, 0, 5000), _range(spark, 0, 0))
+        assert abs(row["est_a"] - 5000) / 5000 < 0.2
+
+    def test_intersection_estimate(self, spark):
+        a = _range(spark, 0, 4000)
+        b = _range(spark, 2000, 6000)
+        row = _theta_ests(a, b)
+        assert abs(row["est_union"] - 6000) / 6000 < 0.2
+        assert abs(row["est_intersection"] - 2000) / 2000 < 0.35
+
+    def test_difference_estimate(self, spark):
+        a = _range(spark, 0, 4000)
+        b = _range(spark, 2000, 6000)
+        row = _theta_ests(a, b)
+        assert abs(row["est_difference"] - 2000) / 2000 < 0.35
+
+
 class TestThetaSetAlgebra:
     @staticmethod
     def _ests(a, b):
-        return tuple(sketches.theta_set_algebra(a, b, "v").collect()[0])
-
-    @staticmethod
-    def _range(spark, lo, hi):
-        return spark.range(lo, hi).select(F.col("id").alias("v"))
+        return tuple(_theta_ests(a, b))
 
     def test_edge_cases_exact(self, spark):
-        a = self._range(spark, 0, 300)
+        a = _range(spark, 0, 300)
         empty = a.filter(F.lit(False))
         # (a, b, union, intersection, difference); empty sides give 0
         assert self._ests(a, a) == (300, 300, 300, 300, 0)
@@ -337,8 +370,8 @@ class TestThetaSetAlgebra:
     def test_above_nominal_size_within_gate_bands(self, spark):
         # 20000 distinct per side, far above the 4096 nominal entries;
         # the bands are agg_kmv_family's gate
-        a = self._range(spark, 0, 20000)
-        b = self._range(spark, 10000, 30000)
+        a = _range(spark, 0, 20000)
+        b = _range(spark, 10000, 30000)
         exact = (20000, 20000, 30000, 10000, 10000)
         bands = (0.06, 0.06, 0.06, 0.15, 0.35)
         for est, x, tol in zip(self._ests(a, b), exact, bands):
@@ -347,8 +380,8 @@ class TestThetaSetAlgebra:
     def test_repeat_runs_identical(self, spark):
         # the oracle gate compares one run against fixed bands, so the
         # estimates must not vary between runs
-        a = self._range(spark, 0, 20000).repartition(5)
-        b = self._range(spark, 10000, 30000).repartition(3)
+        a = _range(spark, 0, 20000).repartition(5)
+        b = _range(spark, 10000, 30000).repartition(3)
         assert self._ests(a, b) == self._ests(a, b)
 
 
