@@ -13,7 +13,7 @@ Scale notes:
   A4) is replaced by :func:`global_percent_rank` — exact same values, no
   single-partition sort.
 * Reference quirk B3 (overwriting the real sale date with *yesterday*) is
-  off by default, available as ``yesterday_quirk=True`` for parity runs.
+  not reproduced: the mart keeps the real sale date.
 * ``LOAD_TSTMP`` is injectable (``run_ts``) for reproducible runs.
 """
 
@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.functions.numeric import decimal_round
 from kusuma_metamorph_etl_spark.operators.windows import global_percent_rank
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.sources.sinks import stamp_snapshot
 
 FINAL_COLUMNS = [
@@ -54,17 +55,13 @@ def customer_sales_report(
     customers: DataFrame,
     run_date: dt.date | str | None = None,
     run_ts: dt.datetime | str | None = None,
-    yesterday_quirk: bool = False,
-    broadcast_dims: bool = True,
     persist_intermediate: bool = True,
 ) -> DataFrame:
     """Build the customer-sales-report mart (one row per qualifying sale).
 
-    ``persist_intermediate`` caches the enriched fact before the tiering
-    step; the cache lives until Spark's LRU evicts it (callers looping
-    over many marts in one session can pass ``False``)."""
-    maybe_broadcast = F.broadcast if broadcast_dims else (lambda df: df)
-
+    ``persist_intermediate`` shares the enriched fact before the tiering
+    step (:func:`plans.share.share`); ``False`` recomputes it per
+    consumer and keeps the whole plan visible to ``explain``."""
     # FIL: status IN ('Delivered', 'Shipped')  (`fil_isin`).
     fil_sales = sales.filter(F.col("ORDER_STATUS").isin("Delivered", "Shipped"))
 
@@ -72,7 +69,7 @@ def customer_sales_report(
     jnr_products = (
         fil_sales.alias("s")
         .join(
-            maybe_broadcast(products.alias("p")),
+            F.broadcast(products.alias("p")),
             on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
             how="left",
         )
@@ -88,18 +85,14 @@ def customer_sales_report(
         )
     )
 
-    # EXP: dates + amounts.  B3 quirk (sale date := yesterday) opt-in only.
-    sale_date = (
-        F.date_sub(F.current_date(), 1) if yesterday_quirk else F.col("SALE_DATE")
-    )
+    # EXP: dates + amounts.
     load_ts = (
         F.current_timestamp()
         if run_ts is None
         else F.lit(str(run_ts)).cast("timestamp")
     )
     exp = (
-        jnr_products.withColumn("SALE_DATE", sale_date)
-        .withColumn("SALE_MONTH", F.month("SALE_DATE"))
+        jnr_products.withColumn("SALE_MONTH", F.month("SALE_DATE"))
         .withColumn("SALE_YEAR", F.year("SALE_DATE"))
         .withColumn("PRICE", F.round("PRICE", 2))
         .withColumn(
@@ -119,16 +112,10 @@ def customer_sales_report(
     # consumers (r1 shape) recompute beat persist (4.0s vs 6.5s — the rank
     # branch pruned to 3 columns); with the probe making it 3+ passes the
     # trade-off flips: persist wins 1.1s vs 2.3s warm / 3.2s vs 7.0s cold
-    # at sf0.1 (3-rep A/B, this VM).  Re-measure if the consumer count
-    # changes again.  Shared via LAZY localCheckpoint, not persist():
-    # nothing here can unpersist after the caller's action, so persist
-    # pinned one cache-manager entry per build for the session lifetime
-    # AND let later identical builds silently reuse it (bench reps then
-    # measure cache reads — the dedup_substring measurement-correction
-    # class, bench.py notes).  The checkpoint RDD is ContextCleaner-
-    # released when the result frame is dropped.
+    # at sf0.1 (3-rep A/B).  Re-measure if the consumer count changes
+    # again.
     if persist_intermediate:
-        exp = exp.localCheckpoint(eager=False)
+        exp = share(exp)
 
     # WIN 1: global percentile tiers — scalable exact percent_rank.
     # SALE_AMOUNT is near-continuous money (distinct ≈ rows at scale), so
@@ -162,7 +149,7 @@ def customer_sales_report(
     jnr_customers = (
         flagged.alias("l")
         .join(
-            maybe_broadcast(customers.alias("c")),
+            F.broadcast(customers.alias("c")),
             on=F.col("l.CUSTOMER_ID") == F.col("c.CUSTOMER_ID"),
             how="left",
         )

@@ -19,12 +19,16 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kusuma_metamorph_etl_spark.marts.supplier_performance import FINAL_COLUMNS
+from kusuma_metamorph_etl_spark.marts.supplier_performance import (
+    FINAL_COLUMNS,
+    agg_by_supplier,
+)
 from kusuma_metamorph_etl_spark.plans.pipeline import Pipeline
 from kusuma_metamorph_etl_spark.plans.quality import duplicate_gate
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.sources.sinks import stamp_snapshot
 
 
@@ -56,36 +60,6 @@ def supplier_performance_pipeline(
             )
         )
 
-    def agg_by_supplier(fact: DataFrame) -> DataFrame:
-        agg = fact.groupBy("SUPPLIER_ID").agg(
-            F.sum("REVENUE").alias("TOTAL_REVENUE"),
-            F.countDistinct("PRODUCT_ID").alias("TOTAL_PRODUCTS_SOLD"),
-            F.sum("QUANTITY").alias("TOTAL_STOCK_SOLD"),
-        )
-        top_window = Window.partitionBy("SUPPLIER_ID").orderBy(
-            F.desc("PRODUCT_REVENUE"), F.asc("PRODUCT_NAME")
-        )
-        top = (
-            # decimal sum + name-not-null: mirrors the function mart —
-            # a plain double sum ties nondeterministically in the last
-            # ulp, and a null-name group (sale whose product id missed
-            # the dim) must not win the window and surface as "No sales"
-            fact.filter(
-                F.col("PRODUCT_ID").isNotNull()
-                & F.col("PRODUCT_NAME").isNotNull()
-            )
-            .groupBy("SUPPLIER_ID", "PRODUCT_NAME")
-            .agg(
-                F.sum(F.col("REVENUE").cast("decimal(38,6)")).alias(
-                    "PRODUCT_REVENUE"
-                )
-            )
-            .withColumn("rn", F.row_number().over(top_window))
-            .filter(F.col("rn") == 1)
-            .select("SUPPLIER_ID", F.col("PRODUCT_NAME").alias("TOP_SELLING_PRODUCT"))
-        )
-        return agg.join(F.broadcast(top), on="SUPPLIER_ID", how="left")
-
     def jnr_suppliers(agg: DataFrame) -> DataFrame:
         return (
             suppliers.alias("r")
@@ -105,17 +79,11 @@ def supplier_performance_pipeline(
         )
 
     def exp_defaults(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn(
-                "TOP_SELLING_PRODUCT",
-                F.coalesce(
-                    F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")
-                ),
-            )
-            .fillna(
-                {"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0}
-            )
-            .withColumn("TOTAL_REVENUE", F.round("TOTAL_REVENUE", 2))
+        return df.withColumn(
+            "TOP_SELLING_PRODUCT",
+            F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
+        ).fillna(
+            {"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0}
         )
 
     return (
@@ -136,16 +104,10 @@ def supplier_performance_pipeline(
             lambda df: df.select(*FINAL_COLUMNS),
             kind="TGT",
         )
-        .stage(
-            # the persist boundary the pipeline module docstring promises:
-            # the gate's collect() materializes the checkpoint, so the
-            # caller's first action reuses it instead of recomputing the
-            # whole mart (lazy localCheckpoint: GC-released, no cache-
-            # manager pin — see customer_sales_report.py)
-            "PERSIST_Boundary",
-            lambda df: df.localCheckpoint(eager=False),
-            kind="TGT",
-        )
+        # the share boundary the pipeline module docstring promises: the
+        # gate's action materializes it, so the caller's first action
+        # reuses it instead of recomputing the whole mart
+        .stage("PERSIST_Boundary", share, kind="TGT")
         .stage(
             "GATE_PK",
             lambda df: duplicate_gate(df, ["SUPPLIER_ID", "DAY_DT"]),

@@ -43,11 +43,8 @@ def product_performance(
     sales: DataFrame,
     products: DataFrame,
     run_date: dt.date | str | None = None,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Build the product-performance mart."""
-    maybe_broadcast = F.broadcast if broadcast_dims else (lambda df: df)
-
     # FIL first (B1 fix: status is still in scope), project after.
     fil_sales = sales.filter(F.col("ORDER_STATUS") != "Cancelled").select(
         "PRODUCT_ID", "QUANTITY"
@@ -56,7 +53,7 @@ def product_performance(
     jnr = (
         fil_sales.alias("s")
         .join(
-            maybe_broadcast(products.alias("p")),
+            F.broadcast(products.alias("p")),
             on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
             how="left",
         )

@@ -35,84 +35,18 @@ FINAL_COLUMNS = [
 ]
 
 
-def supplier_performance(
-    sales: DataFrame,
-    products: DataFrame,
-    suppliers: DataFrame,
-    run_date: dt.date | str | None = None,
-    supplier_key_from: str = "products",
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Build the supplier-performance mart.
-
-    ``supplier_key_from``: ``"products"`` (reference layout — the FK lives
-    on the product dim) or ``"sales"`` (TPC-H layout — ``l_suppkey`` on the
-    fact row).
+def agg_by_supplier(fact: DataFrame) -> DataFrame:
+    """The AGG node: per-supplier totals plus top-selling product over
+    the revenue-bearing fact grain (``SUPPLIER_ID``, ``PRODUCT_ID``,
+    ``PRODUCT_NAME``, ``QUANTITY``, ``REVENUE``).  Both this module's mart
+    and the named-stage pipeline (:mod:`marts.pipelines`) run it, so
+    their totals cannot drift apart.
     """
-    if supplier_key_from not in ("products", "sales"):
-        raise ValueError("supplier_key_from must be 'products' or 'sales'")
-
-    maybe_broadcast = F.broadcast if broadcast_dims else (lambda df: df)
-
-    # FIL: drop cancelled sales (predicate reaches the scan via Catalyst).
-    fil_sales = sales.filter(F.col("ORDER_STATUS") != "Cancelled")
-
-    # JNR_1: sales ⟕ products — alias-disciplined disambiguation
-    # (`join_disambig`); price always comes from the product dim.
-    supplier_key = (
-        F.col("p.SUPPLIER_ID") if supplier_key_from == "products" else F.col("s.SUPPLIER_ID")
-    )
-    jnr_products = (
-        fil_sales.alias("s")
-        .join(
-            maybe_broadcast(products.alias("p")),
-            on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
-            how="left",
-        )
-        .select(
-            F.col("s.PRODUCT_ID").alias("PRODUCT_ID"),
-            F.col("s.QUANTITY").alias("QUANTITY"),
-            supplier_key.alias("SUPPLIER_ID"),
-            F.col("p.PRODUCT_NAME").alias("PRODUCT_NAME"),
-            F.col("p.SELLING_PRICE").alias("SELLING_PRICE"),
-        )
-    )
-
-    # EXP: REVENUE = QUANTITY * SELLING_PRICE on the fact grain.
-    fact = jnr_products.withColumn(
-        "REVENUE", F.col("QUANTITY") * F.col("SELLING_PRICE")
-    )
-
-    # AGG FIRST, join the supplier dim after: the reference's fact ⟖
-    # suppliers right-join runs BEFORE aggregation, which forces a
-    # full-fact SortMergeJoin (an outer join cannot broadcast its
-    # preserved side).  Aggregating to supplier grain first collapses the
-    # fact to dim cardinality, so the outer join below broadcasts.  Rows
-    # whose supplier is absent from the dim drop out either way; idle
-    # suppliers surface as nulls and take the fillna defaults — identical
-    # output, one fewer fact-sized shuffle.
-    agg_fact = fact.groupBy("SUPPLIER_ID").agg(
+    totals = fact.groupBy("SUPPLIER_ID").agg(
         # exact decimal sum: order-independent across partitions/engines
         decimal_sum(F.col("REVENUE"), 2).alias("TOTAL_REVENUE"),
         F.countDistinct("PRODUCT_ID").alias("TOTAL_PRODUCTS_SOLD"),
         F.sum("QUANTITY").alias("TOTAL_STOCK_SOLD"),
-    )
-
-    # JNR_2: suppliers ⟕ per-supplier totals (keeps suppliers w/o sales).
-    agg = (
-        suppliers.alias("r")
-        .join(
-            maybe_broadcast(agg_fact.alias("l")),
-            on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
-            how="left",
-        )
-        .select(
-            F.col("r.SUPPLIER_ID").alias("SUPPLIER_ID"),
-            F.col("r.SUPPLIER_NAME").alias("SUPPLIER_NAME"),
-            F.col("l.TOTAL_REVENUE").alias("TOTAL_REVENUE"),
-            F.col("l.TOTAL_PRODUCTS_SOLD").alias("TOTAL_PRODUCTS_SOLD"),
-            F.col("l.TOTAL_STOCK_SOLD").alias("TOTAL_STOCK_SOLD"),
-        )
     )
 
     # WIN: top product per supplier over a per-(supplier, product)
@@ -141,16 +75,85 @@ def supplier_performance(
         .filter(F.col("rn") == 1)
         .select("SUPPLIER_ID", F.col("PRODUCT_NAME").alias("TOP_SELLING_PRODUCT"))
     )
+    return totals.join(F.broadcast(top_products), on="SUPPLIER_ID", how="left")
 
-    # JNR_3 + null handling: "No sales" default and zero-filled measures
-    # (`cond_null_default`, `null_fillna_map`).
-    enriched = (
-        agg.join(maybe_broadcast(top_products), on="SUPPLIER_ID", how="left")
-        .withColumn(
-            "TOP_SELLING_PRODUCT",
-            F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
-        )
-        .fillna({"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0})
+
+def supplier_performance(
+    sales: DataFrame,
+    products: DataFrame,
+    suppliers: DataFrame,
+    run_date: dt.date | str | None = None,
+    supplier_key_from: str = "products",
+) -> DataFrame:
+    """Build the supplier-performance mart.
+
+    ``supplier_key_from``: ``"products"`` (reference layout — the FK lives
+    on the product dim) or ``"sales"`` (TPC-H layout — ``l_suppkey`` on the
+    fact row).
+    """
+    if supplier_key_from not in ("products", "sales"):
+        raise ValueError("supplier_key_from must be 'products' or 'sales'")
+
+    # FIL: drop cancelled sales (predicate reaches the scan via Catalyst).
+    fil_sales = sales.filter(F.col("ORDER_STATUS") != "Cancelled")
+
+    # JNR_1: sales ⟕ products — alias-disciplined disambiguation
+    # (`join_disambig`); price always comes from the product dim.
+    supplier_key = (
+        F.col("p.SUPPLIER_ID") if supplier_key_from == "products" else F.col("s.SUPPLIER_ID")
     )
+    jnr_products = (
+        fil_sales.alias("s")
+        .join(
+            F.broadcast(products.alias("p")),
+            on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
+            how="left",
+        )
+        .select(
+            F.col("s.PRODUCT_ID").alias("PRODUCT_ID"),
+            F.col("s.QUANTITY").alias("QUANTITY"),
+            supplier_key.alias("SUPPLIER_ID"),
+            F.col("p.PRODUCT_NAME").alias("PRODUCT_NAME"),
+            F.col("p.SELLING_PRICE").alias("SELLING_PRICE"),
+        )
+    )
+
+    # EXP: REVENUE = QUANTITY * SELLING_PRICE on the fact grain.
+    fact = jnr_products.withColumn(
+        "REVENUE", F.col("QUANTITY") * F.col("SELLING_PRICE")
+    )
+
+    # AGG FIRST, join the supplier dim after: the reference's fact ⟖
+    # suppliers right-join runs BEFORE aggregation, which forces a
+    # full-fact SortMergeJoin (an outer join cannot broadcast its
+    # preserved side).  Aggregating to supplier grain first collapses the
+    # fact to dim cardinality, so the outer join below broadcasts.  Rows
+    # whose supplier is absent from the dim drop out either way; idle
+    # suppliers surface as nulls and take the fillna defaults — identical
+    # output, one fewer fact-sized shuffle.
+    # JNR_2: suppliers ⟕ per-supplier AGG (keeps suppliers w/o sales).
+    agg = (
+        suppliers.alias("r")
+        .join(
+            F.broadcast(agg_by_supplier(fact).alias("l")),
+            on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
+            how="left",
+        )
+        .select(
+            F.col("r.SUPPLIER_ID").alias("SUPPLIER_ID"),
+            F.col("r.SUPPLIER_NAME").alias("SUPPLIER_NAME"),
+            "l.TOTAL_REVENUE",
+            "l.TOTAL_PRODUCTS_SOLD",
+            "l.TOTAL_STOCK_SOLD",
+            "l.TOP_SELLING_PRODUCT",
+        )
+    )
+
+    # Null handling: "No sales" default and zero-filled measures
+    # (`cond_null_default`, `null_fillna_map`).
+    enriched = agg.withColumn(
+        "TOP_SELLING_PRODUCT",
+        F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
+    ).fillna({"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0})
 
     return stamp_snapshot(enriched, run_date).select(*FINAL_COLUMNS)

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.text import fingerprint, words
+from kusuma_metamorph_etl_spark.plans.share import share
 
 
 # ----------------------------------------------------------------- exact
@@ -163,23 +164,16 @@ def bloom_incremental_dedup(
         bloom_sketch,
     )
 
-    # One eager materialization of the history fingerprints serves all
-    # three actions (count, sketch build, verify anti-join).  Why
-    # localCheckpoint and not persist(): persist is best-effort CACHING
-    # — a lost executor recomputes evicted partitions from the live
-    # source, so a history that changed between the sketch action and
-    # the verify action could surface a fingerprint the sketch never
-    # saw, which would probe definitely-absent, bypass the verify join,
-    # and break the hash-equality contract.  localCheckpoint truncates
-    # the lineage: the fingerprints are a true snapshot (a lost block
-    # fails LOUD instead of silently recomputing), and the blocks are
-    # reclaimed by the ContextCleaner once the result is consumed —
-    # persist()'s CacheManager entries would leak one cache per call
-    # until session shutdown (r14 review).
-    hist = (
-        history_df.select(fingerprint(F.col(text_col)).alias("__fp"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # One eager share of the history fingerprints serves all three
+    # actions (count, sketch build, verify anti-join).  It must be a
+    # lineage-truncated snapshot, not a persist() cache: a lost cached
+    # partition is recomputed from the live source, so a history that
+    # changed between the sketch action and the verify action could
+    # surface a fingerprint the sketch never saw, probe definitely-absent,
+    # bypass the verify join, and break the hash-equality contract.
+    hist = share(
+        history_df.select(fingerprint(F.col(text_col)).alias("__fp")).distinct(),
+        eager=True,
     )
     n_bits, n_hashes = bloom_params_for(hist.count(), fpp)
     sketch = bloom_sketch(hist, "__fp", n_bits=n_bits, n_hashes=n_hashes)
@@ -776,9 +770,8 @@ def embedding_lsh_pairs(
     # One signature pass, not two: both self-join sides read the same
     # materialized (id, tbl, bucket) frame — without sharing, each side
     # re-runs the MapInPandas hyperplane pass over the FULL vector corpus
-    # (r18 before-plan: sigs() at nodes 6 and 11).  Lazy localCheckpoint,
-    # ContextCleaner-released (the persist-leak lesson in substring_pairs).
-    sigs = sig(df, "a").localCheckpoint(eager=False)
+    # (r18 before-plan: sigs() at nodes 6 and 11).
+    sigs = share(sig(df, "a"))
     cand = (
         sigs.join(sigs.withColumnRenamed("a", "b"), on=["tbl", "bucket"])
         .filter(F.col("a") < F.col("b"))
@@ -1068,21 +1061,15 @@ def substring_pairs(
         raise ValueError(f"k={k} must be <= min_len={min_len}")
     w = min_len - k + 1
     fp = _winnow_fingerprints_udf(k, w)
-    fps = (
+    # The sketch feeds THREE consumers (hot-hash count, both sides of the
+    # candidate self-join); without sharing, Catalyst re-runs the text
+    # scan + fingerprint UDF for each.  The shared frame is (id, hash,
+    # pos) triples — sketch-sized, ~2/(w+1) rows per character, far
+    # smaller than the corpus.
+    fps = share(
         df.select(F.col(id_col), fp(F.col(text_col)).alias("f"))
         .select(id_col, F.explode("f").alias("f"))
         .select(id_col, "f.h", "f.pos")
-        # The sketch feeds THREE consumers (hot-hash count, both sides
-        # of the candidate self-join); without sharing, Catalyst
-        # re-runs the text scan + fingerprint UDF for each.  The shared
-        # frame is (id, hash, pos) triples — sketch-sized, ~2/(w+1) rows
-        # per character, far smaller than the corpus.  LAZY localCheckpoint
-        # rather than persist(): same one-materialization sharing, but the
-        # backing RDD cache is released by the ContextCleaner when the
-        # result frame is garbage-collected — persist() pins an entry in
-        # the cache manager FOREVER unless the caller unpersists, leaking
-        # one cached sketch per call in a per-shard pipeline.
-        .localCheckpoint(eager=False)
     )
     hot = (
         fps.groupBy("h")
@@ -1163,14 +1150,11 @@ def incremental_substring_pairs(
     fp = _winnow_fingerprints_udf(k, w)
 
     def sketch(frame: DataFrame) -> DataFrame:
-        return (
+        # shared by the hot-hash count and the candidate joins
+        return share(
             frame.select(F.col(id_col), fp(F.col(text_col)).alias("f"))
             .select(id_col, F.explode("f").alias("f"))
             .select(id_col, "f.h", "f.pos")
-            # shared by the hot-hash count and the candidate joins —
-            # same lazy-localCheckpoint lifetime story as
-            # :func:`substring_pairs`
-            .localCheckpoint(eager=False)
         )
 
     new_fps, hist_fps = sketch(new_df), sketch(history_df)
@@ -1385,11 +1369,9 @@ def semantic_pairs(
     # `assign_cells_np`).  The b side is a RENAME of the a side, but a
     # DataFrame self-join does NOT share the branch: the r18 before-plan
     # ran the cell-assignment ArrowEvalPython once per join side over
-    # the full corpus.  Lazy localCheckpoint materializes the assigned
-    # frame once (ContextCleaner-released); both sides read it.
-    a = assign_cells_np(df, centroids, "a", id_col, vec_col).localCheckpoint(
-        eager=False
-    )
+    # the full corpus.  Sharing the assigned frame lets both sides read
+    # one materialization.
+    a = share(assign_cells_np(df, centroids, "a", id_col, vec_col))
     b = a.select(
         F.col("a").alias("b"), F.col("a_v").alias("b_v"), "cell"
     )

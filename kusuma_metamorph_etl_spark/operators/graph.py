@@ -17,15 +17,10 @@ bottleneck — star rounds only ever rewire edges, never multiply them.
 Scale shape per round: one equi-join of the symmetric edge list against
 current labels + one min-aggregation, both keyed on node id — shuffles
 carry (node, label) pairs only, never payloads.  Lineage is truncated
-every round with ``localCheckpoint`` (an iterative plan otherwise grows
-exponentially in the optimizer); the convergence probe is one bounded
-count per round, and the loop is capped by ``max_iter``.
-``localCheckpoint`` blocks live on executors, so losing an executor
-(dynamic allocation, spot/preemptible nodes) loses them — pass
-``checkpoint_dir`` to swap in reliable ``checkpoint()`` backed by a
-fault-tolerant filesystem for those clusters (costs one write+read of
-the (node, label) frame per round; label frames are id-pairs only, so
-this is small relative to the join shuffle it protects).
+every round with :func:`plans.share.share` (an iterative plan otherwise
+grows exponentially in the optimizer; set a Spark checkpoint dir to make
+the per-round frames survive executor loss); the convergence probe is one
+bounded count per round, and the loop is capped by ``max_iter``.
 """
 
 from __future__ import annotations
@@ -33,26 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpointer(spark_df: DataFrame, checkpoint_dir: str | None, eager: bool = True):
-    """Per-round lineage truncation: executor-local blocks by default,
-    reliable ``checkpoint()`` when a fault-tolerant dir is given (see
-    module docstring for the preemptible-cluster trade-off).  ``eager``
-    forces a materialization job per call — needed when the loop reads a
-    per-round signal (CC's convergence count); a fixed-round loop like
-    pagerank can defer (``eager=False``) and save the per-round job."""
-    if checkpoint_dir is not None:
-        spark_df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=eager)
-
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-
-    return _ckpt
+from kusuma_metamorph_etl_spark.plans.share import share
 
 
 def connected_components(
@@ -60,7 +36,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``, with ``component``
     the minimum node id of its connected component.
@@ -69,27 +44,22 @@ def connected_components(
     normalized away here.  Raises ``RuntimeError`` if ``max_iter`` rounds
     do not reach the fixed point (i.e. component diameter exceeded the
     budget) rather than returning silently-wrong partial labels.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    RELIABLE ``checkpoint()`` into that directory (survives executor
-    loss — use on preemptible/dynamic-allocation clusters) instead of
-    executor-local ``localCheckpoint`` blocks.
     """
-    _ckpt = _checkpointer(edges, checkpoint_dir)
-
     # Materialize the symmetric edge list ONCE: every round's join would
     # otherwise re-evaluate the upstream edge lineage (for near-dup edges
     # that is the whole shingle/LSH pipeline — measured 10.7s → ~4s warm
     # at sf0.1 on exact-Jaccard edges from this one checkpoint).
-    sym = _ckpt(
+    sym = share(
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    labels = _ckpt(
+    labels = share(
         sym.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node"))
+        .withColumn("component", F.col("node")),
+        eager=True,
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -132,7 +102,7 @@ def connected_components(
                 F.coalesce("grandparent", "component").alias("component"),
             )
         )
-        updated = _ckpt(updated)
+        updated = share(updated, eager=True)
         # labels only ever decrease, so "any row changed this round" is
         # exactly the fixed-point probe; isEmpty short-circuits on the
         # first changed row instead of counting them all
@@ -213,7 +183,6 @@ def pagerank(
     weight_col: str | None = None,
     damping: float = 0.85,
     n_iter: int = 15,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list → ``(node, pr)``.
 
@@ -241,8 +210,8 @@ def pagerank(
     out-edges contributes its whole pr there), so no separate anti-join
     pass exists; the scalar then broadcasts back.  Shuffles carry
     (node, rank) pairs only, never a driver collect.  Edge normalization
-    is computed ONCE and checkpointed; per-round lineage is truncated by
-    LAZILY checkpointing the tiny (dst, mass) AGG frame — ranks itself
+    is computed ONCE and shared; per-round lineage is truncated by
+    LAZILY sharing the tiny (dst, mass) AGG frame — ranks itself
     stays a constant-depth derivation from it, so plans never grow, and
     a fixed-round loop needs no per-round materialization job (measured
     warm at sf0.1: ~3.9s vs ~4.4s eager vs ~4.6-6s checkpointing ranks
@@ -260,14 +229,12 @@ def pagerank(
         raise ValueError(f"pagerank: damping must be in [0, 1], got {damping}")
     if n_iter < 0:
         raise ValueError(f"pagerank: n_iter must be >= 0, got {n_iter}")
-    _ckpt = _checkpointer(edges, checkpoint_dir, eager=False)
-
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    norm = _ckpt(
+    norm = share(
         # out_w > 0 guard: a node whose out-edges all carry zero weight
         # has no defined transition distribution — its edges are dropped
         # so the node becomes DANGLING (left-join miss below) and its
@@ -278,7 +245,7 @@ def pagerank(
         .filter(F.col("out_w") > 0)
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
     )
-    nodes = _ckpt(
+    nodes = share(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -309,14 +276,14 @@ def pagerank(
             .otherwise(F.col("pr") * F.col("p"))
             .alias("c"),
         )
-        agg = _ckpt(
+        agg = share(
             contrib.unionByName(zero_seed)
             .groupBy("dst")
             .agg(F.sum("c").alias("mass"))
         )
         # The dangling mass is ONE bounded scalar per round.  Fetching
         # it with first() makes the SAME driver action materialize the
-        # round's lazy checkpoint AND return the scalar — one job per
+        # round's lazy share AND return the scalar — one job per
         # round where the old BroadcastExchange + crossJoin shape paid
         # two (checkpoint materialization, then the broadcast build).
         # The value is bit-identical to what the broadcast carried, and
@@ -348,7 +315,6 @@ def connected_components_star(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) via alternating LARGE-STAR / SMALL-STAR rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -382,8 +348,6 @@ def connected_components_star(
     the regime that matters when one component holds 10^8 near-dup
     members at 100 TB.  Identical outputs are pytest-pinned.
     """
-    _ckpt = _checkpointer(edges, checkpoint_dir)
-
     def canon(e: DataFrame) -> DataFrame:
         # undirected edge set, canonical (lo, hi) orientation, no loops
         return (
@@ -442,19 +406,21 @@ def connected_components_star(
         ).collect()[0]
         return row["h"], row["n"]
 
-    cur = _ckpt(
+    cur = share(
         canon(
             edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        )
+        ),
+        eager=True,
     )
-    nodes = _ckpt(
+    nodes = share(
         cur.select(F.col("u").alias("node"))
         .union(cur.select(F.col("v").alias("node")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     prev_sig = checksum(cur)
     for _ in range(max_iter):
-        cur = _ckpt(small_star(large_star(cur)))
+        cur = share(small_star(large_star(cur)), eager=True)
         sig = checksum(cur)
         if sig == prev_sig:
             # fixed point: canonical (lo, hi) edges are (root, member)
@@ -480,7 +446,6 @@ def incremental_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Merge a NEW batch of edges into existing ``(node, component)``
     labels WITHOUT re-running CC over the historical edge list — the
@@ -507,7 +472,7 @@ def incremental_components(
             F.col(b_col).cast(labels.schema["node"].dataType),
         ).toDF(a_col, b_col)
     )
-    cc = connected_components(combined, a_col, b_col, max_iter, checkpoint_dir)
+    cc = connected_components(combined, a_col, b_col, max_iter)
     untouched = labels.join(cc.select("node"), on="node", how="left_anti")
     return cc.unionByName(untouched.select("node", "component"))
 
@@ -533,26 +498,17 @@ def triangles_per_vertex(
     ordered by the orientation rank).
     """
     e = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-    # Three shared frames are lazily localCheckpointed (r18, guide §2.2):
-    # without them the plan re-derives `und` for both degree-union sides
-    # plus the orientation join, `oriented` for both wedge self-join
-    # sides plus the closure probe, and `tri` for all three corner-union
-    # branches — 9 copies of the dedup/degree/orientation pipeline in
-    # one plan (139 Exchanges / 90 source scans before; the corner
-    # branches are narrow column picks after).  Each frame is 2-3 long
-    # columns, ContextCleaner-released.  localCheckpoint stores the
-    # O(|E|)/O(#triangles) blocks UNREPLICATED with lineage truncated —
-    # fine on the single-node bench target, but on a multi-executor
-    # cluster an executor loss makes the job unrecoverable (ADVICE
-    # r18); cluster runs should route these through the reliable
-    # checkpoint-dir mechanism `connected_components` already uses.
-    und = (
+    # Three frames are shared (r18, guide §2.2): without them the plan
+    # re-derives `und` for both degree-union sides plus the orientation
+    # join, `oriented` for both wedge self-join sides plus the closure
+    # probe, and `tri` for all three corner-union branches — 9 copies of
+    # the dedup/degree/orientation pipeline in one plan (139 Exchanges /
+    # 90 source scans before; the corner branches are narrow column picks
+    # after).  Each frame is 2-3 long columns.
+    und = share(
         e.filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-        )
+        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = (
         und.select(F.col("a").alias("v"))
@@ -564,13 +520,15 @@ def triangles_per_vertex(
     a_lower = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = wd.select(
-        F.when(a_lower, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_lower, F.col("b")).otherwise(F.col("a")).alias("v"),
-        # the dst endpoint's (degree, id) rank, carried so wedge pairs
-        # order and the closure edge's orientation is known v→w
-        F.when(a_lower, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)
+    oriented = share(
+        wd.select(
+            F.when(a_lower, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_lower, F.col("b")).otherwise(F.col("a")).alias("v"),
+            # the dst endpoint's (degree, id) rank, carried so wedge pairs
+            # order and the closure edge's orientation is known v→w
+            F.when(a_lower, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        )
+    )
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     rank_lt = (F.col("e1.dv") < F.col("e2.dv")) | (
         (F.col("e1.dv") == F.col("e2.dv")) & (F.col("e1.v") < F.col("e2.v"))
@@ -583,7 +541,7 @@ def triangles_per_vertex(
     closer = oriented.select(
         F.col("u").alias("v"), F.col("v").alias("w")
     )
-    tri = wedges.join(closer, on=["v", "w"]).localCheckpoint(eager=False)
+    tri = share(wedges.join(closer, on=["v", "w"]))
     corners = (
         tri.select(F.col("u").alias("node"))
         .unionAll(tri.select(F.col("v").alias("node")))
@@ -600,7 +558,6 @@ def kcore(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact k-core decomposition membership: the maximal subgraph where
     every vertex keeps degree ≥ k — the standard density filter for
@@ -630,8 +587,7 @@ def kcore(
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
     )
-    ckpt = _checkpointer(und, checkpoint_dir)
-    cur = ckpt(und)
+    cur = share(und, eager=True)
     n_edges = cur.count()
     converged = n_edges == 0
     for _ in range(max_iter):
@@ -644,10 +600,11 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("v")
-        nxt = ckpt(
+        nxt = share(
             cur.join(keep.withColumnRenamed("v", "a"), "a", "left_semi").join(
                 keep.withColumnRenamed("v", "b"), "b", "left_semi"
-            )
+            ),
+            eager=True,
         )
         n_next = nxt.count()
         cur = nxt

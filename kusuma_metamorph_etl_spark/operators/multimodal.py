@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 FEATURE_SCHEMA = (
     "doc_id long, format string, width int, height int, channels int, "
     "n_bytes long, mean_value double, content_md5 string"
@@ -1489,8 +1491,8 @@ def phash_near_dups(
     # trade, NOT the reverted hamming_blocked_pairs-level one (SimHash
     # signatures are a cheap codegen'd SQL pipeline that recomputes
     # faster than it materializes; the pHash chain is heavyweight
-    # Python).  Lazy localCheckpoint, ContextCleaner-released.
-    sigs = phash_signatures(df, id_col, payload_col).localCheckpoint(eager=False)
+    # Python).
+    sigs = share(phash_signatures(df, id_col, payload_col))
     return hamming_blocked_pairs(sigs, _PHASH_BITS, max_hamming, id_col, "phash")
 
 

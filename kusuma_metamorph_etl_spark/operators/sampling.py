@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 
 def rate_threshold(rate: float) -> str:
     """Hex-string threshold for ``hash_bucket < threshold`` at ~``rate``.
@@ -696,14 +698,9 @@ def dsir_log_weights(
     # (counts + total).  The per-doc raw counts are the finest grain, so
     # the global raw distribution ROLLS UP from them (sum over docs is
     # exactly the global count); both total-token scalars roll up from
-    # the ≤n_buckets-row count frames.  The two shared frames are lazily
-    # localCheckpointed (ContextCleaner-released).
-    raw_doc = bucket_counts(raw, id_col).localCheckpoint(eager=False)
-    tcnt = (
-        bucket_counts(target)
-        .withColumnRenamed("__c", "__tc")
-        .localCheckpoint(eager=False)
-    )
+    # the ≤n_buckets-row count frames.
+    raw_doc = share(bucket_counts(raw, id_col))
+    tcnt = share(bucket_counts(target).withColumnRenamed("__c", "__tc"))
     rcnt = raw_doc.groupBy("__bucket").agg(F.sum("__c").alias("__rc"))
     ttot = tcnt.agg(F.sum("__tc").alias("__tt"))
     rtot = rcnt.agg(F.sum("__rc").alias("__rt"))

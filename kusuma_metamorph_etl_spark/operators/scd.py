@@ -21,6 +21,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 OPEN_END = "9999-12-31"
 
 
@@ -136,11 +138,10 @@ def scd2_merge(
     # the join subtree, 12 scans of the dimension table.  One flat
     # projection resolves the side-qualified attributes, presence
     # markers, change flag and effective date (eff may reference ``u.``,
-    # so it must resolve here), then a lazy localCheckpoint
-    # (ContextCleaner-released) shares the materialized diff and the
-    # branches become narrow filters.  eqNullSafe never yields NULL, so
-    # the change flag is always boolean.
-    flat = cmp.select(
+    # so it must resolve here), then the diff is shared and the branches
+    # become narrow filters.  eqNullSafe never yields NULL, so the change
+    # flag is always boolean.
+    flat = share(cmp.select(
         *[F.col(k) for k in key],
         *[F.col(f"c.{a}").alias(f"__ca_{a}") for a in attrs],
         *[F.col(f"u.{a}").alias(f"__ua_{a}") for a in attrs],
@@ -149,7 +150,7 @@ def scd2_merge(
         exists_u.alias("__eu"),
         changed.alias("__ch"),
         eff.alias("__eff"),
-    ).localCheckpoint(eager=False)
+    ))
 
     u_cols = [*key, *[F.col(f"__ua_{a}").alias(a) for a in attrs]]
     c_cols = [*key, *[F.col(f"__ca_{a}").alias(a) for a in attrs]]

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.windows import top_k_per_group
+from kusuma_metamorph_etl_spark.plans.share import share
 
 
 def as_double(vec: Column) -> Column:
@@ -1527,24 +1528,21 @@ def maxsim_ann_topk(
     :func:`maxsim_topk` the natural quality gate (the registered
     ``sim_maxsim_ann_err`` row pins it at ≥ 0.7).
 
-    The pooled doc frame is ``localCheckpoint``-ed EAGERLY (r18, guide
-    §1.2 step 1 / §5): the index-build path takes ~4 passes over it
-    (cell-count derivation, seed collect, Lloyd pass, assignment scan in
-    the final plan) and each pass over the LAZY frame re-runs the full
-    token-table pooling aggregation — a whole-corpus scan + shuffle.
-    Materializing the pooled proxy once (n_docs×dim doubles — the small
-    side by construction, the §8 "decide with small rows" shape) turns
-    three redundant corpus aggregations into local-block reads; the
-    checkpoint is per-call state, rebuilt from the inputs on every
-    invocation, and is released from the block manager by the
-    ContextCleaner when the returned plan is dropped.  (The r17
-    ``persist_centroids`` flag — recompute-vs-persist, measured a wash
-    at gate scales because lazy ``persist()`` still paid the pooling
-    once per *concurrent* action — is subsumed and removed; measured
-    r18 sf0.1 in-session: construct 2.3 s → ~0.9 s, execute unchanged.)"""
-    dcent = group_centroids(doc_tokens, d_col, vec_col=vec_col).select(
-        F.col(d_col).alias(tok_col), F.col("centroid").alias(vec_col)
-    ).localCheckpoint(eager=True)
+    The pooled doc frame is shared EAGERLY (r18, guide §1.2 step 1 /
+    §5): the index-build path takes ~4 passes over it (cell-count
+    derivation, seed collect, Lloyd pass, assignment scan in the final
+    plan) and each pass over the LAZY frame re-runs the full token-table
+    pooling aggregation — a whole-corpus scan + shuffle.  Materializing
+    the pooled proxy once (n_docs×dim doubles — the small side by
+    construction, the §8 "decide with small rows" shape) turns three
+    redundant corpus aggregations into block reads (measured r18 sf0.1
+    in-session: construct 2.3 s → ~0.9 s, execute unchanged)."""
+    dcent = share(
+        group_centroids(doc_tokens, d_col, vec_col=vec_col).select(
+            F.col(d_col).alias(tok_col), F.col("centroid").alias(vec_col)
+        ),
+        eager=True,
+    )
     if n_probe is None or n_candidates is None or n_centroids is None:
         n_docs = dcent.count()
         if n_centroids is None:

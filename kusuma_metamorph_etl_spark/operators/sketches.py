@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 
 def derive_bounds(df: DataFrame, value_col: str) -> tuple[float, float]:
     """One global min/max aggregation deriving sketch bounds ``(lo, hi)``.
@@ -316,17 +318,14 @@ def heavy_hitters(
     One scan in approx mode, two in exact mode (summaries + verify) —
     n_total rides along as per-partition total rows inside the summary
     frame (``_mg_partition_summaries``), and the bounded summary frame
-    is shared across its consumers via a lazy localCheckpoint
-    (≤ partitions × (k+1) rows — the cheap side of the SCALE.md
-    cache-lifetime policy), so no third scan computes the count.
+    (≤ partitions × (k+1) rows) is shared across its consumers, so no
+    third scan computes the count.
     """
     if k < 1:
         # fail fast: a non-positive k makes the frequency-> n/k threshold
         # meaningless and silently returned an empty frame (r17 edge sweep)
         raise ValueError(f"heavy_hitters: k must be >= 1, got {k}")
-    summaries = _mg_partition_summaries(df, item_col, k).localCheckpoint(
-        eager=False
-    )
+    summaries = share(_mg_partition_summaries(df, item_col, k))
     merged = (
         summaries.filter(F.col("n_part").isNull())
         .groupBy("__item")

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic.  Deliberately small and public-domain-obvious; real pipelines
 # plug in fastText-style models via mapInPandas (multimodal.py pattern).
@@ -763,12 +765,8 @@ def tf_idf(
     # (doc, term, tf) frame, and without sharing the explode+groupBy
     # pipeline ran once for the join side and once under the rollup
     # (r18 before-plan of txt_tfidf: 3 document scans, 2 under their own
-    # explode).  Lazy localCheckpoint, ContextCleaner-released.
-    tf = (
-        tok.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    # explode).
+    tf = share(tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = df.agg(F.countDistinct(id_col).alias("n_docs"))
     return (
@@ -1064,11 +1062,9 @@ def bigram_lm_scores(
     # the scoring side when self-scoring — without sharing, Catalyst
     # re-ran the zip+explode tokenize pipeline per consumer (r18
     # before-plan of txt_perplexity: 5 document scans, each under its
-    # own Generate).  Lazy localCheckpoint, ContextCleaner-released;
-    # the oracle SQL declares the same shape (`big AS MATERIALIZED`).
-    train = bigrams(
-        train_df if train_df is not None else df
-    ).localCheckpoint(eager=False)
+    # own Generate).  The oracle SQL declares the same shape
+    # (`big AS MATERIALIZED`).
+    train = share(bigrams(train_df if train_df is not None else df))
     c2 = train.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     c1 = train.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     vocab = (

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 EPOCH = "1970-01-01"
 
 
@@ -61,9 +63,8 @@ def gapfill(
     # The series feeds BOTH the spine-extent aggregation and the
     # spine join; callers pass an aggregated daily series, so without
     # sharing that upstream aggregation runs twice (ts_gapfill's r18
-    # before-plan scanned orders once per consumer).  Lazy
-    # localCheckpoint, ContextCleaner-released.
-    df = df.localCheckpoint(eager=False)
+    # before-plan scanned orders once per consumer).
+    df = share(df)
     spine = (
         df.groupBy(*key_cols)
         .agg(F.min(d).alias("_lo"), F.max(d).alias("_hi"))
@@ -299,8 +300,7 @@ def ewma(
     # sharing that upstream aggregation runs twice (ts_ewma's r18
     # before-plan scanned+aggregated orders once per consumer — the
     # oracle SQL declares the same share as `agg AS MATERIALIZED`).
-    # Lazy localCheckpoint, ContextCleaner-released.
-    df = df.localCheckpoint(eager=False)
+    df = share(df)
     decay = 1.0 - alpha
     d = _epoch_day(F.col(date_col))
     off = F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias("__off")

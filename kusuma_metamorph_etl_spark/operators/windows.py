@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.plans.share import share
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -342,15 +344,10 @@ def _percent_rank_distinct_bucketed(
         quantile_bucket,
     )
 
-    counts = (
-        df.groupBy(value_col)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        # shared by approxQuantile's driver action, the in-bucket window
-        # and bucket_offsets — without one materialization the O(n) scan
-        # + O(distinct) aggregation re-runs three times (lazy
-        # localCheckpoint: GC-released, no cache-manager pin)
-        .localCheckpoint(eager=False)
-    )
+    # shared by approxQuantile's driver action, the in-bucket window and
+    # bucket_offsets — without it the O(n) scan + O(distinct) aggregation
+    # re-runs three times
+    counts = share(df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt")))
     bucketed, n_buckets = quantile_bucket(counts, value_col, num_parts)
     order = F.col(value_col).desc() if descending else F.col(value_col).asc()
     in_bkt = Window.partitionBy("__bkt").orderBy(order).rowsBetween(

@@ -22,6 +22,7 @@ from kusuma_metamorph_etl_spark.functions.numeric import (
 )
 from kusuma_metamorph_etl_spark.operators.joins import equi_join
 from kusuma_metamorph_etl_spark.operators.windows import global_percent_rank, top_k_per_group
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import RUN_DATE, register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.sources.csv import read_csv
@@ -187,7 +188,7 @@ def src_roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossy writer or a schema-drifting reader in any branch flips the
     hash gate.  Text is sound because the fixture corpus has no embedded
     newlines (a newline would split a row — the honest failure); the
-    text branch re-materializes via eager localCheckpoint before its
+    text branch re-materializes via an eager share before its
     temp dir is deleted, never a driver round-trip (r11 ADVICE)."""
     import shutil
     import tempfile
@@ -212,7 +213,8 @@ def src_roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="text_src_")
     try:
         docs.write.mode("overwrite").text(tmp)
-        text_back = spark.read.text(tmp).localCheckpoint(eager=True)
+        # eager: the temp dir is deleted below
+        text_back = share(spark.read.text(tmp), eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

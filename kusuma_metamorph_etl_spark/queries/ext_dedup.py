@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.operators import dedup, similarity, text
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.queries.ext_common import (
@@ -586,7 +587,7 @@ def dedup_substring_incr_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only meaningful when incremental and batch drop the same hot
     # hashes (r8 self-review — differing defaults made the gate
     # corpus-size-dependent)
-    # NOT shared via localCheckpoint: the pair set feeds the recovered
+    # NOT shared: the pair set feeds the recovered
     # filter and the symmetric-difference side, but materializing it
     # measured slower in every interleaved A/B pairing (r18) — the two
     # consumers recompute in parallel on idle cores while a checkpoint
@@ -825,8 +826,8 @@ def dedup_normalized_nfkc_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter, the two exceptAll directions, and the gate output); the
     # NFKC fold is a per-document Python pass, so without sharing the
     # plan re-ran it once per consumer (12 ArrowEvalPython nodes in the
-    # r18 sweep).  Lazy localCheckpoint of the 1-column survivor lists.
-    survivors = (
+    # r18 sweep).  The shared frames are 1-column survivor lists.
+    survivors = share(
         dedup.exact_dedup(
             corpus.select(
                 "doc_id",
@@ -834,18 +835,14 @@ def dedup_normalized_nfkc_err(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "text"
                 ),
             )
-        )
-        .select("doc_id")
-        .localCheckpoint(eager=False)
+        ).select("doc_id")
     )
-    expected = (
+    expected = share(
         dedup.exact_dedup(
             docs.select(
                 "doc_id", text.normalize_for_dedup(F.col("text")).alias("text")
             )
-        )
-        .select("doc_id")
-        .localCheckpoint(eager=False)
+        ).select("doc_id")
     )
     stats = (
         _n(planted, "n_planted")
@@ -899,10 +896,8 @@ def dedup_semantic_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The survivor list feeds the alive filter AND the superset
     # anti-join; sharing it stops the second full semantic-dedup pass
     # (cell-assign Arrow chain + in-cell pairing) — guide §2.2.
-    sem = (
-        dedup.semantic_dedup(corpus, threshold=0.9, n_clusters=None)
-        .select("vec_id")
-        .localCheckpoint(eager=False)
+    sem = share(
+        dedup.semantic_dedup(corpus, threshold=0.9, n_clusters=None).select("vec_id")
     )
     exact = dedup.embedding_dedup(corpus, threshold=0.9).select("vec_id")
     expected = emb.filter(F.col("vec_id") % 13 == 0).select(

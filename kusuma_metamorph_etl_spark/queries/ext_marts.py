@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.operators import multimodal, sampling, similarity, text
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import RUN_DATE, register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.queries.ext_common import _W_LOWER, _W_TEXT
@@ -227,19 +228,17 @@ def mart_domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("?utm_source=crawl&utm_id="),
         F.col("doc_id").cast("string"), F.lit("#f"),
     )
-    # Lazy checkpoint (r19, §2.2): curate_domains reads its input on TWO
-    # plan branches — the domain_stats aggregation and the semi-join's
-    # doc side — and each branch re-ran the regexp-heavy
-    # quality_features + normalize_url pass over every document.  The
-    # shared frame is 4 narrow columns (no text payload).
-    staged = (
+    # Shared (r19, §2.2): curate_domains reads its input on TWO plan
+    # branches — the domain_stats aggregation and the semi-join's doc
+    # side — and each branch re-ran the regexp-heavy quality_features +
+    # normalize_url pass over every document.  The shared frame is 4
+    # narrow columns (no text payload).
+    staged = share(
         scored.select(
             "doc_id",
             "quality_score",
             text.normalize_url(url_raw).alias("url_norm"),
-        )
-        .withColumn("domain", text.registrable_domain(F.col("url_norm")))
-        .localCheckpoint(eager=False)
+        ).withColumn("domain", text.registrable_domain(F.col("url_norm")))
     )
     kept = text.curate_domains(
         staged,
@@ -333,12 +332,12 @@ def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~10 rule references (filter-pushdown has no non-cheap-alias guard
     # the way CollapseProject does) — measured 14-15s for the quality
     # stage vs ~1.3s unpushed; (2) temperature_sample reads its input on
-    # three plan branches.  Checkpointing the projected frame makes
-    # `keep` a materialized COLUMN (filters on it are free) and lets the
-    # sampler's branches share one evaluation: whole pipeline 33s → ~3s
-    # at sf0.1.  On a cluster this is exactly where the filtered corpus
-    # would be persisted as a table anyway.
-    quality_all = text.gopher_filter(surviving).localCheckpoint(eager=False)
+    # three plan branches.  Sharing the projected frame makes `keep` a
+    # materialized COLUMN (filters on it are free) and lets the sampler's
+    # branches share one evaluation: whole pipeline 33s → ~3s at sf0.1.
+    # On a cluster this is exactly where the filtered corpus would be
+    # persisted as a table anyway.
+    quality_all = share(text.gopher_filter(surviving))
     english = (
         quality_all.filter(F.col("keep"))
         .filter(F.col("lang") == "en")
@@ -471,9 +470,9 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving = docs.join(keep_ids, "doc_id", "left_semi")
     # same materialization point as mart_llm_dataprep (filter-pushdown
     # trap + multi-branch reuse — see the audit note there); here the
-    # checkpointed frame additionally feeds the tokenizer's word-count
+    # shared frame additionally feeds the tokenizer's word-count
     # aggregation, so it is read on FOUR plan branches.
-    quality_all = text.gopher_filter(surviving).localCheckpoint(eager=False)
+    quality_all = share(text.gopher_filter(surviving))
     english = (
         quality_all.filter(F.col("keep"))
         .filter(F.col("lang") == "en")
@@ -485,7 +484,16 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = bpe.bpe_train(sampled, n_merges=200)
     encoded = bpe.bpe_encode(sampled, merges)
     normalized = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    gated = (
+    # r18 (guide §1.2 step 1 / §5): pack_sequences reads its input on
+    # THREE plan paths — the quantile-bounds action, the in-bucket cumsum
+    # branch, and the bucket-offsets broadcast branch — and each re-ran
+    # the Arrow-batched BPE encode + lossless-gate pass (the whole
+    # curation chain's most expensive stage; the r18 before-plan shows
+    # the full encode subtree twice in the FINAL plan alone).  Sharing
+    # the narrow post-gate proxy (doc_id, source, n_tokens — the §8
+    # "decide with small rows" shape) runs the encode exactly once per
+    # invocation.
+    gated = share(
         encoded.withColumn("__norm", normalized)
         .filter(bpe.bpe_decode(F.col("tokens")) == F.col("__norm"))
         .select(
@@ -493,16 +501,6 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             text.token_count(F.col("text")).cast("long").alias("n_tokens"),
         )
-        # r18 (guide §1.2 step 1 / §5): pack_sequences reads its input on
-        # THREE plan paths — the quantile-bounds action, the in-bucket
-        # cumsum branch, and the bucket-offsets broadcast branch — and
-        # each re-ran the Arrow-batched BPE encode + lossless-gate pass
-        # (the whole curation chain's most expensive stage; the r18
-        # before-plan shows the full encode subtree twice in the FINAL
-        # plan alone).  Checkpointing the narrow post-gate proxy
-        # (doc_id, source, n_tokens — the §8 "decide with small rows"
-        # shape) runs the encode exactly once per invocation.
-        .localCheckpoint(eager=False)
     )
     repeated = sampling.repeat_epochs(
         gated, 1.5, F.col("doc_id"), seed="43"
@@ -654,8 +652,8 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts the whole grain in one task) is out: each score routes
     through `global_ntile` (r19, VERDICT r18 Next #3) — exact ntile via
     quantile-bucketed global row numbers, the same two-regime scaffold
-    as `win_percent_rank`.  The per-customer aggregate is shared via
-    one lazy localCheckpoint: each of the three scores runs a bounded
+    as `win_percent_rank`.  The per-customer aggregate is shared: each
+    of the three scores runs a bounded
     quantile/cardinality probe (a driver action), and without the
     materialization every probe would re-run the full orders scan +
     aggregation (§2.2)."""
@@ -663,13 +661,15 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kusuma_metamorph_etl_spark.operators.windows import global_ntile
 
     orders = t(spark, sf_dir, "orders")
-    per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.datediff(
-            F.lit(RUN_DATE).cast("date"), F.to_date(F.max("o_orderdate"))
-        ).alias("recency_days"),
-        F.count(F.lit(1)).alias("frequency"),
-        decimal_sum(F.col("o_totalprice")).alias("monetary"),
-    ).localCheckpoint(eager=False)
+    per_cust = share(
+        orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
+            F.datediff(
+                F.lit(RUN_DATE).cast("date"), F.to_date(F.max("o_orderdate"))
+            ).alias("recency_days"),
+            F.count(F.lit(1)).alias("frequency"),
+            decimal_sum(F.col("o_totalprice")).alias("monetary"),
+        )
+    )
     # Key shapes are known (skip the cardinality probe action): recency
     # is bounded by the order-date span in days and frequency by the max
     # orders-per-customer — both tiny distinct sets; monetary is a
@@ -742,8 +742,8 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user count (small distinct set → broadcast-offsets regime,
     probe skipped).  One user-keyed shuffle feeds sessionize and the
     per-user rollup; the streak branch reuses the day-grain collapse;
-    the 3-join profile is shared via a lazy localCheckpoint so the
-    ntile's offset map doesn't re-run the whole join tree."""
+    the 3-join profile is shared so the ntile's offset map doesn't
+    re-run the whole join tree."""
     from kusuma_metamorph_etl_spark.operators.events import (
         activity_streaks,
         sessionize,
@@ -769,9 +769,7 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(RUN_DATE).cast("date"), F.to_date(F.max("ts"))
         ).alias("recency_days")
     )
-    joined = (
-        per_user.join(st, "user").join(last, "user").localCheckpoint(eager=False)
-    )
+    joined = share(per_user.join(st, "user").join(last, "user"))
     return global_ntile(
         joined, "n_events", [F.asc("user")], 4, "engagement_tier",
         descending=True, low_cardinality=True,
@@ -846,9 +844,9 @@ def mart_mm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deliberately drops payloads, so each consumer otherwise re-runs
     # the payload-synthesis Arrow chain from the documents scan — the
     # r18 before-plan carried 48 ArrowEvalPython nodes for what is
-    # logically ONE ingest pass.  Lazy localCheckpoint of the 2-column
-    # (doc_id, payload) frame, ContextCleaner-released (guide §2.2/§4).
-    kept = corpus.join(keep_ids, "doc_id").localCheckpoint(eager=False)
+    # logically ONE ingest pass.  The shared frame is 2 columns
+    # (doc_id, payload) (guide §2.2/§4).
+    kept = share(corpus.join(keep_ids, "doc_id"))
     # pHash hamming-0 is the BLOCKING stage; byte equality is the
     # verify.  Without it, survivors depend on where 64-bit DCT-hash
     # collisions fall — real at corpus scale and invisible at the
@@ -1160,11 +1158,11 @@ def mart_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r18 before-plan: nodes 1-14 duplicated at 21-38; the hoped-for
     # AQE exchange reuse never fires because the anti-join side prunes
     # `value` and pushes isnotnull(event_type), so the subtrees differ).
-    # Lazy localCheckpoint of the narrow 5-column survivor frame halves
-    # the event-stream window passes; ContextCleaner releases the blocks.
-    ded = dedup_within_window(
-        ev, keys=["user_id", "event_type"], window_seconds=600
-    ).localCheckpoint(eager=False)
+    # Sharing the narrow 5-column survivor frame halves the event-stream
+    # window passes.
+    ded = share(
+        dedup_within_window(ev, keys=["user_id", "event_type"], window_seconds=600)
+    )
     sess = sessionize(
         ded, gap_seconds=1800, keep_cols=["event_type", "value"]
     )

@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.operators import multimodal, text
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.queries.ext_common import _gate, _n
@@ -318,8 +319,8 @@ def mm_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One synthesis pass: both consumers (original-features witness and
     # the augment fan-out) read the materialized payload frame — without
     # sharing, make_png ran once per join branch (r18 before-plan nodes
-    # 2 and 8).  Lazy localCheckpoint, ContextCleaner-released.
-    png = multimodal.attach_png_payload(docs).localCheckpoint(eager=False)
+    # 2 and 8).
+    png = share(multimodal.attach_png_payload(docs))
     orig = multimodal.extract_binary_features(png).select(
         "doc_id", F.col("mean_value").alias("orig_mean")
     )
@@ -363,7 +364,7 @@ def mm_audio_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # Shared synthesis pass — same §4 single-evaluation shape as
     # mm_augment above.
-    wav = multimodal.attach_audio_payload(docs).localCheckpoint(eager=False)
+    wav = share(multimodal.attach_audio_payload(docs))
 
     def orig_abs_sum(payload: bytes) -> dict:
         audio = multimodal.decode_audio(payload)
@@ -566,11 +567,9 @@ def mm_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join's probe side and the `redecoded` feature pass — and each
     # branch re-ran the whole synthesize→encode→sniff→transcode Python
     # chain (the before-plan shows the 4-way union + MapInPandas subtree
-    # twice).  A lazy localCheckpoint materializes the transcoded rows
-    # once per invocation; both branches then read local blocks.
-    out = multimodal.transcode_images(mixed, to="png").localCheckpoint(
-        eager=False
-    )
+    # twice).  Sharing the transcoded rows runs the chain once per
+    # invocation.
+    out = share(multimodal.transcode_images(mixed, to="png"))
     redecoded = multimodal.extract_binary_features(out).select(
         "doc_id", F.col("mean_value").alias("png_mean")
     )

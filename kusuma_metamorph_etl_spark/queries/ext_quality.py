@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.operators import sampling
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import RUN_DATE, register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.queries.ext_common import _W_TEXT, _gate, _n
@@ -207,11 +208,8 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch build and the union path are driver-checked."""
     events = t(spark, sf_dir, "events")
     # Sketch build and exact gate share ONE 3-column pass over events
-    # (lazy localCheckpoint) instead of two scans (r19, §2.2 — see
-    # agg_quantile_mergeable).
-    proxy = events.select(
-        "event_type", F.to_date("ts").alias("d"), "user_id"
-    ).localCheckpoint(eager=False)
+    # instead of two scans (r19, §2.2 — see agg_quantile_mergeable).
+    proxy = share(events.select("event_type", F.to_date("ts").alias("d"), "user_id"))
     daily = proxy.groupBy("event_type", "d").agg(
         F.hll_sketch_agg("user_id").alias("sk")
     )
@@ -249,16 +247,18 @@ def agg_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = (hi - lo) / n_bins
     li = t(spark, sf_dir, "lineitem")
     # The sketch build and the exact-percentile gate twin both consume
-    # the fact table; share ONE 3-column pass (lazy localCheckpoint)
-    # instead of two full scans (r19, VERDICT r18 Next #5 — the
+    # the fact table; share ONE 3-column pass instead of two full
+    # scans (r19, VERDICT r18 Next #5 — the
     # samp_dsir roll-up pattern, §2.2).  Interleaved fresh-JVM A/B at
     # sf0.1: 0.97x min / 3x3 reps vs the two-scan shape — local
     # neutral-to-positive; the at-scale win is the halved fact scan.
-    proxy = li.select(
-        "l_returnflag",
-        F.trunc("l_shipdate", "month").alias("month"),
-        "l_extendedprice",
-    ).localCheckpoint(eager=False)
+    proxy = share(
+        li.select(
+            "l_returnflag",
+            F.trunc("l_shipdate", "month").alias("month"),
+            "l_extendedprice",
+        )
+    )
     per_month = sketches.histogram_sketch(
         proxy,
         "l_extendedprice",
@@ -303,22 +303,16 @@ def agg_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth, width = 4, 256
     events = t(spark, sf_dir, "events")
     # One 2-column pass over events shared by the sketch build and the
-    # exact gate (lazy localCheckpoint, r19 §2.2); the stream total is a
-    # roll-up of the tiny exact-counts frame — groupBy partitions every
-    # row, so the integer sum IS count(*), no third scan.
-    proxy = events.select(
-        F.to_date("ts").alias("day"), "event_type"
-    ).localCheckpoint(eager=False)
+    # exact gate (r19 §2.2); the stream total is a roll-up of the tiny
+    # exact-counts frame — groupBy partitions every row, so the integer
+    # sum IS count(*), no third scan.
+    proxy = share(events.select(F.to_date("ts").alias("day"), "event_type"))
     per_day = sketches.cms_sketch(proxy, "event_type", depth, width, keys=["day"])
     merged = sketches.merge_cms(per_day.drop("day"))
     # exact feeds THREE consumers (estimate probe list, gate join, total
-    # roll-up); checkpoint the ≤|event_types|-row frame so the proxy is
+    # roll-up); share the ≤|event_types|-row frame so the proxy is
     # aggregated once, not three times.
-    exact = (
-        proxy.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=False)
-    )
+    exact = share(proxy.groupBy("event_type").agg(F.count(F.lit(1)).alias("exact_n")))
     est = sketches.cms_estimate(
         merged, exact.select("event_type"), "event_type", depth, width
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.streaming.windows import session_agg
@@ -1006,8 +1007,8 @@ def src_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     key on it — the pattern's whole point.  Oracle recomputes the
     parsed/quarantined split from the base table; a policy regression
     (corrupt rows dropped, fields not nulled, raw line lost) flips
-    rows or hashes.  Result materializes executor-side via eager
-    localCheckpoint before the landing dir is deleted (the
+    rows or hashes.  Result materializes executor-side via an eager
+    share before the landing dir is deleted (the
     `src_roundtrip_family` text-branch temp lifecycle) — nothing ever lands on the
     driver."""
     import shutil
@@ -1040,8 +1041,9 @@ def src_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
             F.col("_corrupt").isNotNull().alias("quarantined"),
         )
-        # lineage cut executor-side, no driver materialization (r11
-        # ADVICE: out.collect() pulled the whole table to the driver)
-        return out.localCheckpoint(eager=True)
+        # eager: the temp dir is deleted below; the rows stay executor-
+        # side (r11 ADVICE: out.collect() pulled the whole table to the
+        # driver)
+        return share(out, eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

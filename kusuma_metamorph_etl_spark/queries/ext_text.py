@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.operators import text
+from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
 from kusuma_metamorph_etl_spark.queries.ext_common import _NUMREF_DECODE, _W_LOWER, _W_TEXT
@@ -1041,18 +1042,20 @@ def txt_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Knuth mix for id >= 0, overflow-safe at any doc_id (r16 ADVICE)
     u = (((F.col("doc_id") % 1000) * F.lit(2654435761)) % 1000) / F.lit(1000.0)
     x_sep = F.when(u < 0.5, 0.6 * u - 0.5).otherwise(0.6 * (u - 0.5) + 0.2)
-    # Lazy checkpoint: the trainer's internal persist and the scoring
-    # pass otherwise EACH re-run the quality_features text pass over
+    # Shared: the trainer's internal persist and the scoring pass
+    # otherwise EACH re-run the quality_features text pass over
     # documents — two full feature extractions for one query (r19,
     # §2.2).  The shared frame is 6 narrow columns.
-    train = qf.select(
-        "doc_id",
-        x_sep.alias("x_sep"),
-        (u >= 0.5).cast("int").alias("label"),
-        "punct_ratio",
-        "stopword_ratio",
-        (F.col("avg_word_len") / 10.0).alias("awl_scaled"),
-    ).localCheckpoint(eager=False)
+    train = share(
+        qf.select(
+            "doc_id",
+            x_sep.alias("x_sep"),
+            (u >= 0.5).cast("int").alias("label"),
+            "punct_ratio",
+            "stopword_ratio",
+            (F.col("avg_word_len") / 10.0).alias("awl_scaled"),
+        )
+    )
     feature_cols = ["x_sep", "punct_ratio", "stopword_ratio", "awl_scaled"]
     # 10 passes at lr=8 reach 0 errors at sf0.001/0.01/0.1 (A/B'd r15;
     # 20@4 was the same accuracy for 2x the overhead-dominated jobs)
@@ -1118,12 +1121,9 @@ def txt_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both read the narrow (doc_id, bits_per_bigram, lang) frame —
     # without sharing, the whole bigram-LM subtree (tokenize, bigram +
     # unigram counts, vocab, per-doc log-sum) ran TWICE (r18 before-plan:
-    # nodes 1-56 duplicated at 58-113; 40 Exchanges total).  Lazy
-    # localCheckpoint, ContextCleaner-released.
-    scores = (
-        text.bigram_lm_scores(docs)
-        .join(docs.select("doc_id", "lang"), "doc_id")
-        .localCheckpoint(eager=False)
+    # nodes 1-56 duplicated at 58-113; 40 Exchanges total).
+    scores = share(
+        text.bigram_lm_scores(docs).join(docs.select("doc_id", "lang"), "doc_id")
     )
     th = scores.groupBy("lang").agg(
         F.round(F.percentile("bits_per_bigram", F.lit(1.0 / 3)), 6).alias("t1"),

@@ -31,6 +31,16 @@ def spark():
     return session
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A Spark checkpoint dir for one test, so ``share`` runs in its
+    reliable mode; unset afterwards so later tests share locally."""
+    path = str(tmp_path / "spark_ckpt")
+    spark.sparkContext.setCheckpointDir(path)
+    yield path
+    spark.sparkContext._jsc.sc().setCheckpointDir(None)
+
+
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL

@@ -70,22 +70,22 @@ def test_star_graph_skew_converges_fast(spark):
     assert len(got) == 501 and set(got.values()) == {0}
 
 
-def test_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir swaps localCheckpoint for reliable checkpoint():
-    same labels, and checkpoint files actually land in the directory."""
+def test_reliable_checkpoint_path(spark, checkpoint_dir):
+    """A Spark checkpoint dir swaps the per-round localCheckpoint for
+    reliable checkpoint(): same labels, and checkpoint files actually
+    land in the directory."""
     import os
 
-    ckpt = str(tmp_path / "cc_ckpt")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "a long, b long"
     )
     got = {
         r["node"]: r["component"]
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
+        for r in connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    wrote = any(files for _, _, files in os.walk(ckpt))
-    assert wrote, "reliable checkpoint() wrote nothing under checkpoint_dir"
+    wrote = any(files for _, _, files in os.walk(checkpoint_dir))
+    assert wrote, "reliable checkpoint() wrote nothing under the checkpoint dir"
 
 
 def test_components_match_networkx_free_oracle(spark, sf_small):

@@ -69,6 +69,38 @@ def test_named_stage_mart_equals_function_mart(spark, sf_small):
     )
 
 
+def test_pipeline_revenue_matches_function_mart_on_half_cent(spark):
+    """3 x 0.155 is exactly 0.465, which rounds half-up to 0.47; the
+    double product is 0.46499999999999997, which rounds to 0.46.  Both
+    supplier-mart paths sum revenue exactly and must report 0.47."""
+    from kusuma_metamorph_etl_spark.marts import supplier_performance
+    from kusuma_metamorph_etl_spark.marts.pipelines import (
+        supplier_performance_pipeline,
+    )
+
+    sales = spark.createDataFrame(
+        [("P1", 3, "S1", "Delivered")],
+        "PRODUCT_ID string, QUANTITY int, SUPPLIER_ID string, ORDER_STATUS string",
+    )
+    products = spark.createDataFrame(
+        [("P1", "Widget", 0.155)],
+        "PRODUCT_ID string, PRODUCT_NAME string, SELLING_PRICE double",
+    )
+    suppliers = spark.createDataFrame(
+        [("S1", "Acme")], "SUPPLIER_ID string, SUPPLIER_NAME string"
+    )
+
+    via_fn = supplier_performance(
+        sales, products, suppliers, run_date="2024-06-01", supplier_key_from="sales"
+    )
+    via_pipe = supplier_performance_pipeline(
+        products, suppliers, run_date="2024-06-01"
+    ).run(sales)
+
+    assert [r["TOTAL_REVENUE"] for r in via_fn.collect()] == [0.47]
+    assert [r["TOTAL_REVENUE"] for r in via_pipe.collect()] == [0.47]
+
+
 def test_pipeline_is_lazy(spark):
     calls = []
 
