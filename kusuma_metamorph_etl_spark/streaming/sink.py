@@ -15,6 +15,13 @@ patterns used instead, keyed on ``batch_id``:
   heavy-hitter summaries) — the replay rewrites the same partition;
 * manifest-pointer republish of a derived snapshot (SCD2 dimension, CDC
   table) — the replay re-derives and re-publishes the same version.
+
+Three of the four sinks read their micro-batch more than once (two
+write targets, an emptiness probe before a merge), so the shared driver
+:func:`_run_foreach_batch` persists each batch frame for exactly the
+span of the sink call: the micro-batch plan — including any stateful
+``applyInPandasWithState`` operator upstream — runs once per batch, not
+once per read.  The sinks themselves hold no batch-level cache.
 """
 
 from __future__ import annotations
@@ -25,12 +32,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.scd import scd2_init, scd2_merge
+from kusuma_metamorph_etl_spark.streaming.metrics import record_batch_metrics
 
 
 def _run_foreach_batch(stream_df, fn, checkpoint_dir: str, available_now: bool):
     """The one copy of the writeStream/foreachBatch/trigger boilerplate
-    every sink here shares (r9 review: four hand-synced copies)."""
-    writer = stream_df.writeStream.foreachBatch(fn).option(
+    every sink here shares, and the one place a micro-batch is persisted
+    (see the module docstring).  The ``finally`` releases the entry even
+    when ``fn`` throws; a foreachBatch retry persists afresh."""
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            fn(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    writer = stream_df.writeStream.foreachBatch(run_batch).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:
@@ -100,6 +118,11 @@ def stream_dual_write(
     the test/backfill mode; production drops the trigger for continuous
     micro-batches.
 
+    Each micro-batch is computed once: :func:`_run_foreach_batch` hands
+    ``write_batch`` a persisted frame, so the raw write, the legacy write
+    and (with ``metrics_root``) the row count all read the same cached
+    batch instead of re-running the stream plan once per read.
+
     SCHEMA SEAM: the legacy layout here is partitioned by
     ``(DAY_DT, __batch_id)`` — one extra partition column vs the batch
     :func:`sources.sinks.dual_write` layout — because ``__batch_id`` is
@@ -124,44 +147,29 @@ def stream_dual_write(
         run_date = dt.date.today()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # raw: overwrite — trivially replay-idempotent.
+        batch_df.write.mode("overwrite").parquet(raw_path)
+        # legacy: the batch dual_write APPENDS, which duplicates rows
+        # when foreachBatch replays a batch.  Partition by
+        # (DAY_DT, __batch_id) with dynamic partition overwrite
+        # instead: a replayed batch rewrites exactly its own
+        # partitions.  __batch_id is the declared idempotence key and
+        # reads back as a partition column.
+        (
+            stamp_snapshot(batch_df, run_date)
+            .withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(DAY_DT, "__batch_id")
+            .parquet(legacy_path)
+        )
         if metrics_root is not None:
-            # One extra pass over the micro-batch buys the ops row; the
-            # persist keeps the dual write itself single-compute.  The
-            # try/finally releases the cache even when a write throws —
-            # a foreachBatch retry persists afresh, so a leaked entry
-            # would otherwise live until session end.
-            batch_df.persist()
-        try:
-            # raw: overwrite — trivially replay-idempotent.
-            batch_df.write.mode("overwrite").parquet(raw_path)
-            # legacy: the batch dual_write APPENDS, which duplicates rows
-            # when foreachBatch replays a batch.  Partition by
-            # (DAY_DT, __batch_id) with dynamic partition overwrite
-            # instead: a replayed batch rewrites exactly its own
-            # partitions.  __batch_id is the declared idempotence key and
-            # reads back as a partition column.
-            (
-                stamp_snapshot(batch_df, run_date)
-                .withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(DAY_DT, "__batch_id")
-                .parquet(legacy_path)
+            n = batch_df.count()
+            # dual write republishes every input row to both sides
+            record_batch_metrics(
+                batch_df.sparkSession, metrics_root, "dual_write",
+                batch_id, rows_in=n, rows_out=n,
             )
-            if metrics_root is not None:
-                from kusuma_metamorph_etl_spark.streaming.metrics import (
-                    record_batch_metrics,
-                )
-
-                n = batch_df.count()
-                # dual write republishes every input row to both sides
-                record_batch_metrics(
-                    batch_df.sparkSession, metrics_root, "dual_write",
-                    batch_id, rows_in=n, rows_out=n,
-                )
-        finally:
-            if metrics_root is not None:
-                batch_df.unpersist()
 
     return _run_foreach_batch(
         stream_df, write_batch, checkpoint_dir, available_now
@@ -283,32 +291,32 @@ def stream_heavy_hitters(
         s = _mg_partition_summaries(batch_df, item_col, k)
         if metrics_root is not None:
             s = s.persist()
-        # One directory per batch, OVERWRITTEN: a replayed batch rewrites
-        # its own summaries instead of appending a second copy (which
-        # would double-count and break the lower-bound guarantee).
-        s.write.mode("overwrite").parquet(
-            f"{summary_path}/batch_id={batch_id}"
-        )
-        if metrics_root is not None:
-            from kusuma_metamorph_etl_spark.streaming.metrics import (
-                record_batch_metrics,
+        try:
+            # One directory per batch, OVERWRITTEN: a replayed batch
+            # rewrites its own summaries instead of appending a second
+            # copy (which would double-count and break the lower-bound
+            # guarantee).
+            s.write.mode("overwrite").parquet(
+                f"{summary_path}/batch_id={batch_id}"
             )
-
-            # rows_in is exact and free: the summarizer embeds one
-            # n_part total-row per input partition — Σ n_part is the
-            # micro-batch's row count, no second pass over the input.
-            # rows_out counts only the counter rows (the merge input).
-            agg = s.agg(
-                F.sum("n_part").alias("n_in"),
-                F.count(F.when(F.col("n_part").isNull(), 1)).alias("n_out"),
-            ).first()
-            s.unpersist()
-            record_batch_metrics(
-                batch_df.sparkSession, metrics_root, "heavy_hitters",
-                batch_id, rows_in=int(agg["n_in"] or 0),
-                rows_out=int(agg["n_out"]),
-                state_rows=int(agg["n_out"]),  # the summary IS the state
-            )
+            if metrics_root is not None:
+                # rows_in is exact and free: the summarizer embeds one
+                # n_part total-row per input partition — Σ n_part is the
+                # micro-batch's row count, no second pass over the input.
+                # rows_out counts only the counter rows (the merge input).
+                agg = s.agg(
+                    F.sum("n_part").alias("n_in"),
+                    F.count(F.when(F.col("n_part").isNull(), 1)).alias("n_out"),
+                ).first()
+                record_batch_metrics(
+                    batch_df.sparkSession, metrics_root, "heavy_hitters",
+                    batch_id, rows_in=int(agg["n_in"] or 0),
+                    rows_out=int(agg["n_out"]),
+                    state_rows=int(agg["n_out"]),  # the summary IS the state
+                )
+        finally:
+            if metrics_root is not None:
+                s.unpersist()
 
     return _run_foreach_batch(
         stream_df, write_batch, checkpoint_dir, available_now

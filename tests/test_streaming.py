@@ -1044,3 +1044,139 @@ def test_stateful_dedup_window_restarts_from_checkpoint(spark, tmp_path):
     # 102 at +4 min of the RECOVERED last-seen stays suppressed; 103
     # (+21 min) opens a new burst.
     assert got == {100, 103}
+
+
+# ------------------------------------------ one evaluation per micro-batch
+
+SINK_SCHEMA = "id long, v string, seq long, op string, eff timestamp"
+
+
+def _two_batch_stream(spark, tmp_path):
+    """Five rows in two files, read back one file per micro-batch."""
+    import datetime
+
+    d1, d2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    src = tmp_path / "src"
+    batches = [
+        [(1, "a", 1, "I", d1), (2, "b", 2, "I", d1), (3, "c", 3, "I", d1)],
+        [(1, "a2", 4, "U", d2), (4, "d", 5, "I", d2)],
+    ]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, SINK_SCHEMA).coalesce(1).write.parquet(
+            str(src / f"b{i}")
+        )
+    return (
+        spark.readStream.schema(SINK_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+
+
+def _sessionized(stream):
+    """The benchmark's shape: the stateful sessionizer feeds the sink."""
+    from pyspark.sql import functions as F
+
+    from kusuma_metamorph_etl_spark.streaming.stateful import sessionize_stream
+
+    return sessionize_stream(
+        stream.select(
+            F.col("id").alias("user_id"),
+            F.col("seq").alias("event_id"),
+            F.col("eff").alias("ts"),
+        )
+    )
+
+
+def _run_sink(name, stream, out, cp):
+    from kusuma_metamorph_etl_spark.streaming import sink
+
+    if name == "dual_write":
+        sink.stream_dual_write(
+            stream, f"{out}/raw", f"{out}/legacy", cp, run_date="2024-06-01"
+        )
+    elif name == "scd2_upsert":
+        sink.stream_scd2_upsert(
+            stream, out, cp, key=["id"], attrs=["v"], effective_from_col="eff"
+        )
+    elif name == "cdc_apply":
+        sink.stream_cdc_apply(
+            stream, out, cp, key=["id"], snapshot_schema="id long, v string"
+        )
+    else:
+        sink.stream_heavy_hitters(stream, "id", 2, out, cp)
+
+
+@pytest.mark.parametrize(
+    "shape,sink_name",
+    [
+        (None, "dual_write"),
+        (None, "scd2_upsert"),
+        (None, "cdc_apply"),
+        (None, "heavy_hitters"),
+        (_sessionized, "dual_write"),
+    ],
+    ids=["dual_write", "scd2_upsert", "cdc_apply", "heavy_hitters",
+         "sessionize_dual_write"],
+)
+def test_sink_evaluates_each_micro_batch_once(spark, tmp_path, shape, sink_name):
+    """Three of the four sinks read their batch more than once (two
+    targets, or an emptiness probe before the merge); the foreachBatch
+    driver's persist must keep the frame handed to every sink — and any
+    stateful operator feeding it — to ONE evaluation per row.
+
+    A pass-through Python function on the sink's input tallies the rows
+    it sees.  ``mapInPandas``, not a column UDF: the optimizer can
+    neither prune it from a column-free probe such as ``isEmpty()`` nor
+    push it below anything.  The tally goes to files, not an
+    accumulator: ``isEmpty()`` stops reading after one row, and a Python
+    worker cut off early never ships its accumulator updates."""
+    import uuid
+
+    stream = _two_batch_stream(spark, tmp_path)
+    if shape is not None:
+        stream = shape(stream)
+    seen = tmp_path / "seen"
+    seen.mkdir()
+
+    def counted(batches):
+        for pdf in batches:
+            (seen / uuid.uuid4().hex).write_text(str(len(pdf)))
+            yield pdf
+
+    _run_sink(
+        sink_name,
+        stream.mapInPandas(counted, stream.schema),
+        str(tmp_path / "out"),
+        str(tmp_path / "cp"),
+    )
+    assert sum(int(p.read_text()) for p in seen.iterdir()) == 5
+
+
+def test_stream_heavy_hitters_releases_caches_when_the_write_fails(
+    spark, tmp_path
+):
+    """A throwing summary write must not leak the summary cache (or the
+    driver's batch cache): both are released in a ``finally``.  The
+    write fails before any job runs, so nothing has been materialized
+    yet — the leak shows as an entry left in the cache manager."""
+    from pyspark.errors import StreamingQueryException
+
+    from kusuma_metamorph_etl_spark.streaming.sink import stream_heavy_hitters
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    # earlier tests' localCheckpoint RDDs stay listed until GC
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    blocker = tmp_path / "mg"
+    blocker.write_text("a plain file where the summary directory goes")
+    with pytest.raises(StreamingQueryException):
+        stream_heavy_hitters(
+            _two_batch_stream(spark, tmp_path),
+            "id",
+            2,
+            str(blocker),
+            str(tmp_path / "cp"),
+            metrics_root=str(tmp_path / "metrics"),
+        )
+    assert cache_manager.isEmpty()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted_before
