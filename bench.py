@@ -186,68 +186,6 @@ EXTRA = {
 # was entirely environmental).  The headline value is the per-query MEDIAN
 # of REPS runs; per-rep values ship in the JSON so cross-round comparison
 # has an in-file noise estimate.
-#
-# BENCH r6->r7 regression A/B (VERDICT r7 Next #2), measured in r8 with
-# fresh-JVM isolated runs (warm-up query, 3-5 reps) vs the r6 CODE run
-# under identical conditions in the same session type:
-#   * environment drift is real: r6 code re-run in the r8 environment
-#     gives dedup_cc_representatives median 5.13s (recorded r6: 4.11)
-#     and txt_bpe_roundtrip 1.78s (recorded r6: 1.53) — a uniform ~1.2x.
-#   * txt_bpe_roundtrip 1.53->2.12 was PART code: the r7 END-sentinel /
-#     whitespace-contract fix swapped C-speed str.split() for a per-call
-#     regex split in the encode UDF (isolated: 2.2-2.4s).  Fixed in r8
-#     with a character-exact translate+split formulation (isolated back
-#     to 1.85s ~= the 1.78s r6-code floor); unigram_encode shared the
-#     pattern and got the same fix.
-#   * dedup_cc_representatives 4.11->6.04: NO hot-path code change
-#     (the r7 _checkpointer refactor keeps localCheckpoint(eager=True)
-#     semantics); r6-code reps today [8.0, 5.1, 5.0] overlap current-code
-#     reps [7.9, 5.2, 5.5, 6.3, 5.6] — environment drift plus rep noise,
-#     not a regression.
-#
-# r8->r9 DRIFT A/B (VERDICT r8 Next #2), measured with the committed
-# tools/isolated_reps.py (fresh JVM per query, warm-up, 5 reps) AND an
-# in-session 5-rep twin, 2026-08-14, on the five worst r7->r8 drifters
-# (none of whose hot-path code changed in r8 or r9):
-#             r7     r8     r9 in-session med (min)   r9 isolated med (min)
-#   scd2_merge       0.56   0.79   1.38 (1.07)            1.25 (1.06)
-#   stream_session   0.40   0.56   0.60 (0.56)            0.76 (0.69)
-#   join_asof        0.44   0.56   0.74 (0.65)            1.03 (0.98)
-#   join_fuzzy       0.48   0.61   0.70 (0.65)            1.09 (0.85)
-#   win_percent_rank 0.75   0.96   0.95 (0.88)            1.48 (1.23)
-# Classification: ENVIRONMENTAL, all five.  The movement is uniform
-# across unrelated operators (joins, windows, streaming twins), today's
-# in-session numbers sit ABOVE r8 just as r8 sat above r7 (the same
-# box-slowdown the r8 A/B measured re-running r6 code: ~1.2x), first-rep
-# spreads are 2-3x, and the isolated numbers exceed in-session (fresh-JVM
-# codegen cost dominates sub-second queries) — no per-query plan change
-# exists to blame, and no code fix applies.  Cross-round comparisons on
-# this box should use ratios between queries within one run, not
-# absolute seconds across rounds.
-#
-# scd2_merge r7 0.56s -> r8 ~0.9s is the new duplicate-key guard
-# (operators/scd.py check_unique, default on): one eager aggregation over
-# the update batch that raises before a duplicate key can fan out into
-# two conflicting is_current rows.  The benched query keeps the default
-# because that is what a caller gets; pre-compacted pipelines pass
-# check_unique=False and pay nothing.
-#
-# mart_customer_sales_report r7 ~2.2s -> r8 ~2.8-3.5s warm is the same
-# correction class as dedup_substring below: the mart's intermediate
-# persist() was never released, so later identical builds (bench reps
-# 2..N) silently read rep 1's cache.  The share is now a lazy
-# localCheckpoint (ContextCleaner-released); every rep pays the honest
-# build cost.
-#
-# dedup_substring r7 ~1.1s -> r8 ~2.2s is a MEASUREMENT correction, not a
-# regression: the r7 code leaked its persisted fingerprint sketch (never
-# unpersisted), so reps 2..N of the SAME input hit the leaked cache-manager
-# entry and timed ~0.8-1.1s — memoization a per-shard production pipeline
-# (different input each call) never sees.  r8 replaces persist() with a
-# lazy localCheckpoint (ContextCleaner-released, cache manager stays
-# empty); measured honest per-call cost is the same for both strategies
-# once the leak is cleaned: persist+explicit-cleanup [2.75, 2.13, 2.22] vs
-# localCheckpoint [2.57, 2.19] warm at sf0.1.
 REPS = 3
 
 # The driver keeps only the last ~2000 chars of stdout.  r17's final line
@@ -289,37 +227,44 @@ def _final_line(timings: dict[str, float], sf_val) -> str:
     return line  # 1-decimal overflow would need ~90+ rows; emit regardless
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def time_rows(spark, sf_dir: str, names: list[str]) -> dict[str, list[float]]:
+    """The repo's one timing loop: ``REPS`` wall-clock seconds per row.
+
+    One ``agg_groupby_single`` warm-up first, so the first row does not
+    absorb JVM and codegen start-up.  A row in ``EXTRA`` runs its hook;
+    any other row is a registry query forced with a noop write.  The
+    timed span covers construction as well as execution: some operators
+    do bounded eager work while building (e.g. the percent_rank
+    quantile-bound probe), and that pass is part of the honest cost.
+    """
     from kusuma_metamorph_etl_spark import registry
-    from kusuma_metamorph_etl_spark.session import get_session
 
-    spark = get_session()
-    spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-
-    # Warm the JVM/codegen once so q1 doesn't absorb session startup.
     qs["agg_groupby_single"](spark, sf_dir).write.mode("overwrite").format(
         "noop"
     ).save()
-
-    timings: dict[str, float] = {}
     reps: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        # Time construction + execution: some operators do bounded eager
-        # work while building (e.g. the percent_rank quantile-bound probe)
-        # and that pass is part of the honest cost.
+    for name in names:
         runs: list[float] = []
         for _ in range(REPS):
             start = time.perf_counter()
             if name in EXTRA:
                 EXTRA[name](spark, sf_dir)
             else:
-                df = qs[name](spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
+                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             runs.append(round(time.perf_counter() - start, 3))
         reps[name] = runs
-        timings[name] = sorted(runs)[len(runs) // 2]  # median
+    return reps
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from kusuma_metamorph_etl_spark.session import get_session
+
+    spark = get_session()
+    spark.sparkContext.setLogLevel("ERROR")
+    reps = time_rows(spark, sf_dir, HEADLINE)
+    timings = {name: sorted(runs)[len(runs) // 2] for name, runs in reps.items()}
 
     # Headline totals under the three honest aggregations (VERDICT r11
     # Next #5): `single` is what a one-pass contended run would have

@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.marts.supplier_performance import (
     FINAL_COLUMNS,
     agg_by_supplier,
+    join_products,
+    join_suppliers,
+    null_defaults,
 )
 from kusuma_metamorph_etl_spark.plans.pipeline import Pipeline
 from kusuma_metamorph_etl_spark.plans.quality import duplicate_gate
@@ -42,62 +45,18 @@ def supplier_performance_pipeline(
     Stage names mirror the reference's mapping nodes so a reader of the
     original task can follow the engine version line by line.
     """
-
-    def jnr_products(sales: DataFrame) -> DataFrame:
-        return (
-            sales.alias("s")
-            .join(
-                F.broadcast(products.alias("p")),
-                on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
-                how="left",
-            )
-            .select(
-                F.col("s.PRODUCT_ID").alias("PRODUCT_ID"),
-                F.col("s.QUANTITY").alias("QUANTITY"),
-                F.col("s.SUPPLIER_ID").alias("SUPPLIER_ID"),
-                F.col("p.PRODUCT_NAME").alias("PRODUCT_NAME"),
-                F.col("p.SELLING_PRICE").alias("SELLING_PRICE"),
-            )
-        )
-
-    def jnr_suppliers(agg: DataFrame) -> DataFrame:
-        return (
-            suppliers.alias("r")
-            .join(
-                F.broadcast(agg.alias("l")),
-                on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
-                how="left",
-            )
-            .select(
-                F.col("r.SUPPLIER_ID").alias("SUPPLIER_ID"),
-                F.col("r.SUPPLIER_NAME").alias("SUPPLIER_NAME"),
-                "l.TOTAL_REVENUE",
-                "l.TOTAL_PRODUCTS_SOLD",
-                "l.TOTAL_STOCK_SOLD",
-                "l.TOP_SELLING_PRODUCT",
-            )
-        )
-
-    def exp_defaults(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "TOP_SELLING_PRODUCT",
-            F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
-        ).fillna(
-            {"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0}
-        )
-
     return (
         Pipeline("m_load_suppliers_performance")
         .stage("FIL_Sales_Cancelled", lambda df: df.filter(F.col("ORDER_STATUS") != "Cancelled"), kind="FIL")
-        .stage("JNR_Sales_Products", jnr_products, kind="JNR")
+        .stage("JNR_Sales_Products", lambda df: join_products(df, products, "sales"), kind="JNR")
         .stage(
             "EXP_Revenue",
             lambda df: df.withColumn("REVENUE", F.col("QUANTITY") * F.col("SELLING_PRICE")),
             kind="EXP",
         )
         .stage("AGG_TRANS_By_Supplier", agg_by_supplier, kind="AGG")
-        .stage("JNR_Suppliers", jnr_suppliers, kind="JNR")
-        .stage("EXP_Null_Defaults", exp_defaults, kind="EXP")
+        .stage("JNR_Suppliers", lambda df: join_suppliers(suppliers, df), kind="JNR")
+        .stage("EXP_Null_Defaults", null_defaults, kind="EXP")
         .stage("EXP_Snapshot", lambda df: stamp_snapshot(df, run_date), kind="EXP")
         .stage(
             "Shortcut_To_Supplier_Performance_Tgt",

@@ -35,6 +35,32 @@ FINAL_COLUMNS = [
 ]
 
 
+def join_products(
+    sales: DataFrame, products: DataFrame, supplier_key_from: str
+) -> DataFrame:
+    """JNR_1: sales ⟕ products — alias-disciplined disambiguation
+    (`join_disambig`); price always comes from the product dim, the
+    supplier key from the side ``supplier_key_from`` names."""
+    supplier_key = (
+        F.col("p.SUPPLIER_ID") if supplier_key_from == "products" else F.col("s.SUPPLIER_ID")
+    )
+    return (
+        sales.alias("s")
+        .join(
+            F.broadcast(products.alias("p")),
+            on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
+            how="left",
+        )
+        .select(
+            F.col("s.PRODUCT_ID").alias("PRODUCT_ID"),
+            F.col("s.QUANTITY").alias("QUANTITY"),
+            supplier_key.alias("SUPPLIER_ID"),
+            F.col("p.PRODUCT_NAME").alias("PRODUCT_NAME"),
+            F.col("p.SELLING_PRICE").alias("SELLING_PRICE"),
+        )
+    )
+
+
 def agg_by_supplier(fact: DataFrame) -> DataFrame:
     """The AGG node: per-supplier totals plus top-selling product over
     the revenue-bearing fact grain (``SUPPLIER_ID``, ``PRODUCT_ID``,
@@ -78,6 +104,35 @@ def agg_by_supplier(fact: DataFrame) -> DataFrame:
     return totals.join(F.broadcast(top_products), on="SUPPLIER_ID", how="left")
 
 
+def join_suppliers(suppliers: DataFrame, agg: DataFrame) -> DataFrame:
+    """JNR_2: suppliers ⟕ per-supplier AGG (keeps suppliers w/o sales)."""
+    return (
+        suppliers.alias("r")
+        .join(
+            F.broadcast(agg.alias("l")),
+            on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
+            how="left",
+        )
+        .select(
+            F.col("r.SUPPLIER_ID").alias("SUPPLIER_ID"),
+            F.col("r.SUPPLIER_NAME").alias("SUPPLIER_NAME"),
+            "l.TOTAL_REVENUE",
+            "l.TOTAL_PRODUCTS_SOLD",
+            "l.TOTAL_STOCK_SOLD",
+            "l.TOP_SELLING_PRODUCT",
+        )
+    )
+
+
+def null_defaults(df: DataFrame) -> DataFrame:
+    """Null handling: "No sales" default and zero-filled measures
+    (`cond_null_default`, `null_fillna_map`)."""
+    return df.withColumn(
+        "TOP_SELLING_PRODUCT",
+        F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
+    ).fillna({"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0})
+
+
 def supplier_performance(
     sales: DataFrame,
     products: DataFrame,
@@ -97,29 +152,8 @@ def supplier_performance(
     # FIL: drop cancelled sales (predicate reaches the scan via Catalyst).
     fil_sales = sales.filter(F.col("ORDER_STATUS") != "Cancelled")
 
-    # JNR_1: sales ⟕ products — alias-disciplined disambiguation
-    # (`join_disambig`); price always comes from the product dim.
-    supplier_key = (
-        F.col("p.SUPPLIER_ID") if supplier_key_from == "products" else F.col("s.SUPPLIER_ID")
-    )
-    jnr_products = (
-        fil_sales.alias("s")
-        .join(
-            F.broadcast(products.alias("p")),
-            on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
-            how="left",
-        )
-        .select(
-            F.col("s.PRODUCT_ID").alias("PRODUCT_ID"),
-            F.col("s.QUANTITY").alias("QUANTITY"),
-            supplier_key.alias("SUPPLIER_ID"),
-            F.col("p.PRODUCT_NAME").alias("PRODUCT_NAME"),
-            F.col("p.SELLING_PRICE").alias("SELLING_PRICE"),
-        )
-    )
-
     # EXP: REVENUE = QUANTITY * SELLING_PRICE on the fact grain.
-    fact = jnr_products.withColumn(
+    fact = join_products(fil_sales, products, supplier_key_from).withColumn(
         "REVENUE", F.col("QUANTITY") * F.col("SELLING_PRICE")
     )
 
@@ -131,29 +165,5 @@ def supplier_performance(
     # whose supplier is absent from the dim drop out either way; idle
     # suppliers surface as nulls and take the fillna defaults — identical
     # output, one fewer fact-sized shuffle.
-    # JNR_2: suppliers ⟕ per-supplier AGG (keeps suppliers w/o sales).
-    agg = (
-        suppliers.alias("r")
-        .join(
-            F.broadcast(agg_by_supplier(fact).alias("l")),
-            on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
-            how="left",
-        )
-        .select(
-            F.col("r.SUPPLIER_ID").alias("SUPPLIER_ID"),
-            F.col("r.SUPPLIER_NAME").alias("SUPPLIER_NAME"),
-            "l.TOTAL_REVENUE",
-            "l.TOTAL_PRODUCTS_SOLD",
-            "l.TOTAL_STOCK_SOLD",
-            "l.TOP_SELLING_PRODUCT",
-        )
-    )
-
-    # Null handling: "No sales" default and zero-filled measures
-    # (`cond_null_default`, `null_fillna_map`).
-    enriched = agg.withColumn(
-        "TOP_SELLING_PRODUCT",
-        F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),
-    ).fillna({"TOTAL_REVENUE": 0.0, "TOTAL_PRODUCTS_SOLD": 0, "TOTAL_STOCK_SOLD": 0})
-
+    enriched = null_defaults(join_suppliers(suppliers, agg_by_supplier(fact)))
     return stamp_snapshot(enriched, run_date).select(*FINAL_COLUMNS)

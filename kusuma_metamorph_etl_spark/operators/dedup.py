@@ -443,7 +443,6 @@ def minhash_near_dups(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    prefilter_candidates: bool = False,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard — the full near-dup
     pipeline (generate cheaply, verify exactly).
@@ -457,10 +456,7 @@ def minhash_near_dups(
     the shingle table was also measured SLOWER than recomputation
     (11.4-12.0s persisted vs 8.9-9.8s recomputed — cache materialization
     plus the extra job boundary beat cheap tokenize passes), so the plan
-    recomputes.  ``prefilter_candidates`` semi-joins the array side down
-    to candidate documents first — the right shape when candidates are a
-    vanishing fraction of a huge corpus; at test scale the extra joins
-    cost more than they save, hence opt-in.
+    recomputes.
     """
     if n_hashes < 1 or bands < 1:
         # fail fast at the public entry: a non-positive n_hashes otherwise
@@ -483,9 +479,6 @@ def minhash_near_dups(
     ).select(F.col(id_col), token_shingles(F.col("__toks"), n).alias("sh"))
     sa = sh.toDF("a", "sha")
     sb = sh.toDF("b", "shb")
-    if prefilter_candidates:
-        sa = sa.join(candidates.select("a").distinct(), on="a", how="left_semi")
-        sb = sb.join(candidates.select("b").distinct(), on="b", how="left_semi")
     verified = (
         candidates.join(sa, on="a")
         .join(sb, on="b")
@@ -514,7 +507,6 @@ def incremental_minhash_near_dups(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    include_new_pairs: bool = True,
 ) -> DataFrame:
     """Incremental near-dup detection: check a NEW batch against an
     existing corpus without ever re-pairing history against itself.
@@ -523,9 +515,8 @@ def incremental_minhash_near_dups(
     and already internally deduped; tonight's batch is 0.1% of that.
     Recomputing all-pairs LSH over the union redoes 99.9% of yesterday's
     work — the incremental plan only joins the new batch's band table
-    against the history band table (plus, with ``include_new_pairs``, the
-    new batch against itself), so cost scales with |new| × collision
-    rate, not |corpus|².  In production the history band table is the
+    against the history band table (plus the new batch against itself),
+    so cost scales with |new| × collision rate, not |corpus|².  In production the history band table is the
     PERSISTED index (`_band_table` output, partitionable by band_idx,
     append-only: tonight's new bands become tomorrow's history).
 
@@ -551,18 +542,16 @@ def incremental_minhash_near_dups(
         .distinct()
         .withColumn("against", F.lit("history"))
     )
-    candidates = cross
-    if include_new_pairs:
-        l = new_bands.toDF("new_id", "band_idx", "band_hash")
-        r = new_bands.toDF("match_id", "band_idx", "band_hash")
-        within = (
-            l.join(r, on=["band_idx", "band_hash"])
-            .filter(F.col("new_id") < F.col("match_id"))
-            .select("new_id", "match_id")
-            .distinct()
-            .withColumn("against", F.lit("new"))
-        )
-        candidates = candidates.unionByName(within)
+    l = new_bands.toDF("new_id", "band_idx", "band_hash")
+    r = new_bands.toDF("match_id", "band_idx", "band_hash")
+    within = (
+        l.join(r, on=["band_idx", "band_hash"])
+        .filter(F.col("new_id") < F.col("match_id"))
+        .select("new_id", "match_id")
+        .distinct()
+        .withColumn("against", F.lit("new"))
+    )
+    candidates = cross.unionByName(within)
 
     def _sh(df: DataFrame) -> DataFrame:
         return df.select(
@@ -1120,7 +1109,6 @@ def incremental_substring_pairs(
     min_len: int = 50,
     k: int | None = None,
     max_df: int = 50,
-    include_new_pairs: bool = True,
 ) -> DataFrame:
     """Incremental substring-level dedup: find duplicated spans between a
     NEW batch and an existing corpus without re-pairing history against
@@ -1136,7 +1124,7 @@ def incremental_substring_pairs(
     per character — index-sized); the stop-fingerprint cap counts
     document frequency over the union of sketches (boilerplate is
     boilerplate whichever side it sits on); candidates are new×history
-    anchor matches plus, with ``include_new_pairs``, new×new (a < b);
+    anchor matches plus new×new (a < b);
     the verify joins text in for candidate pairs only and extends each
     anchor to its maximal literal span.  Output:
     ``(a, b, a_start, b_start, length, against)`` where ``a`` is always
@@ -1182,36 +1170,26 @@ def incremental_substring_pairs(
         .select("a", "b", "pos_a", "pos_b")
         .withColumn("against", F.lit("history"))
     )
-    cand = cross
-    if include_new_pairs:
-        within = (
-            left.join(
-                new_f.select(
-                    "h", F.col(id_col).alias("b"), F.col("pos").alias("pos_b")
-                ),
-                on="h",
-            )
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", "pos_a", "pos_b")
-            .withColumn("against", F.lit("new"))
+    within = (
+        left.join(
+            new_f.select(
+                "h", F.col(id_col).alias("b"), F.col("pos").alias("pos_b")
+            ),
+            on="h",
         )
-        cand = cross.unionByName(within)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b", "pos_a", "pos_b")
+        .withColumn("against", F.lit("new"))
+    )
+    cand = cross.unionByName(within)
 
     texts_a = new_df.select(
         F.col(id_col).alias("a"), F.col(text_col).alias("__ta")
     )
-    texts_b = (
-        history_df.select(
-            F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
-        ).unionByName(
-            new_df.select(
-                F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
-            )
-        )
-        if include_new_pairs
-        else history_df.select(
-            F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
-        )
+    texts_b = history_df.select(
+        F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
+    ).unionByName(
+        new_df.select(F.col(id_col).alias("b"), F.col(text_col).alias("__tb"))
     )
     extend = _extend_match_udf(k)
     return (
@@ -1424,7 +1402,6 @@ def incremental_semantic_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    include_new_pairs: bool = True,
 ) -> DataFrame:
     """Incremental SemDeDup (VERDICT r8 #5 — the semantic member of the
     incremental family exact/MinHash/substring/CC already have): check a
@@ -1438,10 +1415,10 @@ def incremental_semantic_pairs(
     partitions are read back (bounded by n_centroids cells, a static
     ``isin`` partition filter — at 100 TB the nightly batch touches a
     handful of cells and the scan prunes to those files).  Candidate
-    pairs are (new × corpus-in-cell) plus, with ``include_new_pairs``,
-    (new × new in-cell); verification is the same exact-cosine Arrow
-    scorer as :func:`semantic_pairs`, so cost scales with |new| × cell
-    occupancy, not |corpus|².
+    pairs are (new × corpus-in-cell) plus (new × new in-cell);
+    verification is the same exact-cosine Arrow scorer as
+    :func:`semantic_pairs`, so cost scales with |new| × cell occupancy,
+    not |corpus|².
 
     Same recall seam as the batch path, plus one incremental-specific
     caveat: a drifting embedding distribution degrades frozen-centroid
@@ -1497,19 +1474,18 @@ def incremental_semantic_pairs(
         .select("new_id", "new_id_v", "match_id", "match_id_v")
         .withColumn("against", F.lit("history"))
     )
-    if include_new_pairs:
-        b = a.select(
-            F.col("new_id").alias("match_id"),
-            F.col("new_id_v").alias("match_id_v"),
-            "cell",
-        )
-        within = (
-            a.join(b, on="cell")
-            .filter(F.col("new_id") < F.col("match_id"))
-            .select("new_id", "new_id_v", "match_id", "match_id_v")
-            .withColumn("against", F.lit("new"))
-        )
-        cand = cand.unionByName(within)
+    b = a.select(
+        F.col("new_id").alias("match_id"),
+        F.col("new_id_v").alias("match_id_v"),
+        "cell",
+    )
+    within = (
+        a.join(b, on="cell")
+        .filter(F.col("new_id") < F.col("match_id"))
+        .select("new_id", "new_id_v", "match_id", "match_id_v")
+        .withColumn("against", F.lit("new"))
+    )
+    cand = cand.unionByName(within)
 
     def score(batches):
         for batch in batches:

@@ -27,7 +27,6 @@ def top_k_per_group(
     order_by: list[Column],
     k: int = 1,
     rank_col: str = "rn",
-    keep_rank: bool = False,
 ) -> DataFrame:
     """`win_rownum_topk`: row_number ≤ k per group, deterministic iff
     ``order_by`` is a total order (pass tiebreak columns!).
@@ -36,10 +35,11 @@ def top_k_per_group(
     AQE.  No global sort.
     """
     window = Window.partitionBy(*partition_by).orderBy(*order_by)
-    ranked = df.withColumn(rank_col, F.row_number().over(window)).filter(
-        F.col(rank_col) <= k
+    return (
+        df.withColumn(rank_col, F.row_number().over(window))
+        .filter(F.col(rank_col) <= k)
+        .drop(rank_col)
     )
-    return ranked if keep_rank else ranked.drop(rank_col)
 
 
 def global_percent_rank(

@@ -51,12 +51,10 @@ class Pipeline:
         self.stages.append(Stage(name, fn, kind))
         return self
 
-    def run(self, df: DataFrame, explain: bool = False) -> DataFrame:
+    def run(self, df: DataFrame) -> DataFrame:
         """Apply all stages lazily; the result carries the whole Catalyst
         plan, to be optimized globally at first action."""
         for stage in self.stages:
             df = stage.fn(df)
             logger.debug("pipeline %s: applied %s/%s", self.name, stage.kind, stage.name)
-        if explain:
-            df.explain("formatted")
         return df

@@ -65,7 +65,6 @@ def dim_enrich(
     dim: DataFrame,
     on: str | list[str],
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream–static enrichment join: attach dimension attributes to a
     stream (the streaming analog of the marts' broadcast dim joins).
@@ -77,5 +76,4 @@ def dim_enrich(
     un-shuffled, exactly like the batch marts; the same call works on a
     batch frame, which is what the stream==batch test asserts.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how=how)

@@ -1,23 +1,23 @@
 """Interleaved fresh-JVM A/B benchmark: HEAD tree vs a base tree.
 
-    python tools/ab_compare.py --base-path /tmp/ab_base --rounds 3 --reps 3 \
+    git worktree add /tmp/ab_base <ref>
+    python tools/ab_compare.py --base-path /tmp/ab_base --rounds 3 \
         dedup_substring scd2_merge ...
 
 Protocol (the only measurement this host's bursty co-tenant noise
 respects — r18: A/A on one tree reproduced 1.5-3x warm-rep scatter, so
 single-sided runs are meaningless): each ROUND launches one fresh JVM
-per side, alternating which side goes first, and times ``reps``
-noop-sink executions per query inside that JVM after a warm-up query.
-Decisions read the per-query MIN across rounds on each side (bursts
-only ever inflate), plus the full rep lists for honesty.
+per side, alternating which side goes first, and times each row with
+that side's ``bench.time_rows`` — the repo's one timing loop (warm-up,
+then ``bench.REPS`` runs per row; ``bench.EXTRA`` rows such as
+``stream_sessionize_stateful`` run through their hook).  Decisions read
+the per-query MIN across rounds on each side (bursts only ever
+inflate), plus the full rep lists for honesty.
 
-``--base-path`` is any checkout of this repo (e.g. ``git worktree add
-/tmp/ab_base <ref>``); the child process gets the side's tree FIRST on
-``sys.path`` so engine + bench code both come from that side.
-
-The special row ``stream_sessionize_stateful`` (bench EXTRA, not a
-registry query) is replayed through the side's own ``bench.py`` EXTRA
-hook so the streaming machinery is measured end-to-end.
+The child process gets the side's tree FIRST on ``sys.path`` so engine
+and bench code both come from that side.  A base tree must be at or
+after the commit that introduced ``bench.time_rows``; older trees have
+no such function.
 """
 
 from __future__ import annotations
@@ -31,37 +31,17 @@ import sys
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
 _CHILD = r"""
-import json, sys, time
-side_path = sys.argv[1]
-sf_dir = sys.argv[2]
-reps = int(sys.argv[3])
-names = sys.argv[4:]
-sys.path.insert(0, side_path)
-from kusuma_metamorph_etl_spark import registry
+import json, sys
+sys.path.insert(0, sys.argv[1])
 from kusuma_metamorph_etl_spark.session import get_session
-spark = get_session()
-spark.sparkContext.setLogLevel("ERROR")
-qs = registry.queries()
-qs["agg_groupby_single"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-import bench as side_bench
-out = {}
-for name in names:
-    runs = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        if name in side_bench.EXTRA:
-            side_bench.EXTRA[name](spark, sf_dir)
-        else:
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        runs.append(round(time.perf_counter() - t0, 3))
-    out[name] = runs
-print("AB_RESULT " + json.dumps(out))
+import bench
+print("AB_RESULT " + json.dumps(bench.time_rows(get_session(), sys.argv[2], sys.argv[3:])))
 """
 
 
-def run_side(side_path: str, sf_dir: str, reps: int, names: list[str]) -> dict:
+def run_side(side_path: str, sf_dir: str, names: list[str]) -> dict:
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, side_path, sf_dir, str(reps), *names],
+        [sys.executable, "-c", _CHILD, side_path, sf_dir, *names],
         capture_output=True, text=True, cwd=side_path,
     )
     for line in proc.stdout.splitlines():
@@ -79,7 +59,6 @@ def main() -> int:
     ap.add_argument("--base-path", required=True)
     ap.add_argument("--head-path", default=str(REPO))
     ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=None, help="append JSON result here")
     args = ap.parse_args()
@@ -94,7 +73,7 @@ def main() -> int:
             else [("base", args.base_path), ("head", args.head_path)]
         )
         for side, path in order:
-            res = run_side(path, args.sf_dir, args.reps, args.queries)
+            res = run_side(path, args.sf_dir, args.queries)
             for q, runs in res.items():
                 acc[q][side].append(runs)
             print(f"round {rnd} {side}: "
