@@ -107,23 +107,16 @@ def customer_sales_report(
         .withColumn("LOAD_TSTMP", load_ts)
     )
 
-    # The enriched fact feeds the percent_rank quantile probe, the rank
-    # window, the bucket-offsets branch AND the final row stream.  With 2
-    # consumers (r1 shape) recompute beat persist (4.0s vs 6.5s — the rank
-    # branch pruned to 3 columns); with the probe making it 3+ passes the
-    # trade-off flips: persist wins 1.1s vs 2.3s warm / 3.2s vs 7.0s cold
-    # at sf0.1 (3-rep A/B).  Re-measure if the consumer count changes
-    # again.
+    # The enriched fact is read three times: by the rank's regime probe
+    # (its joins make Catalyst's size estimate large, so the probe runs),
+    # by the per-value counts or per-bucket offsets branch of the chosen
+    # regime, and by the row stream the ranks join back to.  Sharing runs
+    # the three-way join once instead of three times.
     if persist_intermediate:
         exp = share(exp)
 
     # WIN 1: global percentile tiers — scalable exact percent_rank.
-    # SALE_AMOUNT is near-continuous money (distinct ≈ rows at scale), so
-    # force the range-partitioned path: the broadcast rank map would be
-    # O(n) and its "tiny" window a single-task sort of ~n values.
-    tiered = global_percent_rank(
-        exp, "SALE_AMOUNT", out_col="__pr", descending=True, low_cardinality=False
-    )
+    tiered = global_percent_rank(exp, "SALE_AMOUNT", out_col="__pr", descending=True)
     tiered = tiered.withColumn(
         "LOYALTY_TIER",
         F.when(F.col("__pr") <= 0.2, F.lit("Gold"))

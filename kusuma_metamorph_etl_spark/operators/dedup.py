@@ -87,7 +87,6 @@ def incremental_dedup(
     new_df: DataFrame,
     history_df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Drop rows of ``new_df`` whose content fingerprint already exists in
     ``history_df`` — the daily-snapshot shape of dedup: each ingest batch
@@ -136,7 +135,6 @@ def bloom_incremental_dedup(
     new_df: DataFrame,
     history_df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     fpp: float = 0.01,
 ) -> DataFrame:
     """:func:`incremental_dedup` with a Bloom prefilter — the 100 TB

@@ -492,7 +492,7 @@ def _decode_block(
     return pred, _C.T @ (coef.reshape(8, 8) * q) @ _C + mid
 
 
-def _decode_dc_first(br, dc_tab, pred, al):
+def _decode_dc_first(br, dc_tab, pred):
     size = _decode_huffman(br, dc_tab)
     pred += _extend(br.read_bits(size), size)
     return pred  # coefficient is pred << al, applied by the caller
@@ -689,7 +689,7 @@ def _decode_progressive_scan(
                         by, bx = my * vi + v, mx * hi + hh
                         if ah == 0:
                             preds[cid] = _decode_dc_first(
-                                br, huff[(0, td)], preds[cid], al
+                                br, huff[(0, td)], preds[cid]
                             )
                             arr[by, bx, 0] = preds[cid] << al
                         else:
@@ -703,7 +703,7 @@ def _decode_progressive_scan(
                 td, _ta = scan_tables[cid]
                 if ah == 0:
                     preds[cid] = _decode_dc_first(
-                        br, huff[(0, td)], preds[cid], al
+                        br, huff[(0, td)], preds[cid]
                     )
                     arr[by, bx, 0] = preds[cid] << al
                 else:

@@ -939,7 +939,6 @@ def synthesize_pgm_quantized(text: str) -> bytes:
 def attach_png_subbyte_payload(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     interlace: bool = False,
 ) -> DataFrame:
     """Synthesized sub-byte-depth PNG payload column (Arrow-batched
@@ -956,7 +955,7 @@ def attach_png_subbyte_payload(
 
 
 def attach_pgm_quantized_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Quantized-PGM twin payload column for the sub-byte gate."""
 
@@ -970,7 +969,7 @@ def attach_pgm_quantized_payload(
 
 
 def attach_image_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Synthesized-image payload column (Arrow-batched pandas UDF), typed
     ``image/ppm``."""
@@ -987,7 +986,6 @@ def attach_image_payload(
 def attach_png_payload(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     interlace: bool = False,
     palette: bool = False,
     trns: bool = False,
@@ -1335,7 +1333,7 @@ def synthesize_y4m(text: str) -> bytes:
 
 
 def attach_video_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Synthesized-Y4M payload column (Arrow-batched pandas UDF), typed
     ``video/y4m``."""
@@ -1699,7 +1697,7 @@ def synthesize_wav_format(
 
 
 def attach_audio_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Synthesized-audio payload column (Arrow-batched pandas UDF), typed
     ``audio/wav``."""
@@ -1781,7 +1779,7 @@ def extract_spectral_features(
 
 
 def attach_tone_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Synthesized pure-tone payload column, typed ``audio/wav``."""
 
@@ -2247,7 +2245,6 @@ def synthesize_gif(text: str, interlace: bool = False) -> bytes:
 def attach_gif_payload(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     interlace: bool = False,
 ) -> DataFrame:
     """Synthesized-GIF payload column (Arrow-batched pandas UDF), typed
@@ -2273,7 +2270,7 @@ def synthesize_jpeg(text: str) -> bytes:
 
 
 def attach_jpeg_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Synthesized-JPEG payload column (Arrow-batched pandas UDF), typed
     ``image/jpeg``."""

@@ -1,13 +1,15 @@
 """Deterministic value-range bucketing — the shared scaffold for global
-order-statistics operators (`global_percent_rank`, `pack_sequences`).
+order-statistics operators (the global rank scaffold, `pack_sequences`).
 
 Why not ``repartitionByRange``: its boundaries re-sample on every
 recompute, so a diamond plan's branches can observe *different*
 partitionings (measured on this repo — every partition count disagreed
 between two counts of the same frame).  A bucket id must be a pure
 function of the value: quantile bounds are collected ONCE on the driver
-(bounded ≤P doubles) and applied via ``Bucketizer`` — JVM binary search,
-narrow, no shuffle, identical on every recompute.
+(bounded ≤P doubles), then applied via ``Bucketizer`` — JVM binary search,
+narrow, no shuffle, identical on every recompute.  :func:`quantile_cuts`
+is the bounds aggregate, so a caller can fuse it into a probe it already
+runs; :func:`bucketize` applies bounds from either source.
 """
 
 from __future__ import annotations
@@ -16,42 +18,37 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def quantile_bucket(
-    df: DataFrame, numeric_col: str, num_buckets: int, out_col: str = "__bkt"
-) -> tuple[DataFrame, int]:
-    """Add a deterministic range-bucket id (int) for ``numeric_col``;
-    returns ``(bucketed_df, effective_bucket_count)``.
+def quantile_cuts(numeric_col: str, num_buckets: int) -> Column:
+    """Aggregate expression for the ``num_buckets - 1`` inner quantile
+    cut points of ``numeric_col`` (array of doubles; null on an input
+    with no real values).  NaN is left out like null, so no NaN cut can
+    make the splits non-increasing.  The 0.001 relative error only
+    shifts bucket balance: the bounds need to be fixed, not exact.
+    """
+    probs = [i / num_buckets for i in range(1, num_buckets)] or [0.5]
+    x = F.col(numeric_col).cast("double")
+    return F.percentile_approx(F.nanvl(x, F.lit(None).cast("double")), probs, 1000)
 
-    Bounds come from one ``approxQuantile`` pass (bounded driver collect);
-    equal values always share a bucket; nulls get bucket -1 and NaN the
+
+def bucketize(
+    df: DataFrame, numeric_col: str, bounds: list[float] | None, out_col: str = "__bkt"
+) -> tuple[DataFrame, int]:
+    """Add a deterministic range-bucket id (int) for ``numeric_col``
+    split at ``bounds`` (a :func:`quantile_cuts` result); returns
+    ``(bucketed_df, effective_bucket_count)``.
+
+    Equal values always share a bucket; nulls get bucket -1 and NaN the
     TOP bucket (== effective count) — the placements Spark's own sort
     uses (asc: NULLS FIRST … NaN last; desc: NaN first … NULLS LAST), so
     a rank built from these buckets matches ``ORDER BY value`` exactly.
-    Routing NaN to -1 with the nulls would flip its position in the
-    descending walk (the old behavior — ranks then disagreed with the
-    broadcast-map path on the same data).  NaN is remapped explicitly
-    rather than left to Bucketizer ``keep`` so a NaN that leaked into
-    the collected bounds can't make the splits non-increasing and throw.
-    Bounds need not be exact quantiles — only fixed — so the 0.001
-    relative error is irrelevant to correctness, it only shifts bucket
-    balance slightly.  The effective count can collapse below
-    ``num_buckets`` under heavy ties (a constant column yields 1) —
-    callers should fall back to a small-data strategy when it does.
+    The effective count collapses below the requested one under heavy
+    ties (a constant column yields 2, an empty one 1).
     """
-    import math
-
     from pyspark.ml.feature import Bucketizer
 
     is_null = F.col(numeric_col).isNull()
     is_nan = ~is_null & F.isnan(F.col(numeric_col).cast("double"))
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    bounds = sorted(
-        {
-            b
-            for b in df.stat.approxQuantile(numeric_col, probs, 0.001)
-            if not math.isnan(b)
-        }
-    )
+    bounds = sorted(set(bounds or []))
     if not bounds:
         # Empty or all-null/NaN column: Bucketizer would reject the
         # 2-split spec; a single bucket is trivially correct.
@@ -83,15 +80,26 @@ def quantile_bucket(
     return bucketed, n_eff
 
 
+def quantile_bucket(
+    df: DataFrame, numeric_col: str, num_buckets: int, out_col: str = "__bkt"
+) -> tuple[DataFrame, int]:
+    """:func:`bucketize` at bounds collected from ``df`` in one pass."""
+    # bound: one row of at most num_buckets - 1 doubles
+    bounds = df.agg(quantile_cuts(numeric_col, num_buckets)).first()[0]
+    return bucketize(df, numeric_col, bounds, out_col)
+
+
 def bucket_offsets(
     bucketed: DataFrame,
     bucket_col: str,
     weight: Column,
     ascending: bool = True,
 ) -> DataFrame:
-    """≤P-row frame of (bucket, prefix-sum of earlier buckets' weight,
-    grand total) — the tiny broadcastable side of a two-level prefix sum.
-    The only unpartitioned window here runs over ≤P rows.
+    """≤P-row frame of (bucket, ``__before`` = prefix-sum of earlier
+    buckets' weight, ``__total`` = grand total) — the tiny broadcastable
+    side of a two-level prefix sum.  The only unpartitioned window here
+    runs over ≤P rows.  With a value column as the bucket and weight 1
+    it is the per-value rank map of the broadcast rank regime.
     """
     order = F.col(bucket_col).asc() if ascending else F.col(bucket_col).desc()
     offset_window = Window.orderBy(order).rowsBetween(
@@ -102,13 +110,11 @@ def bucket_offsets(
     )
     return (
         bucketed.groupBy(bucket_col)
-        .agg(F.sum(weight).alias("__bkt_weight"))
+        .agg(F.sum(weight).alias("__weight"))
         .select(
             bucket_col,
-            F.coalesce(F.sum("__bkt_weight").over(offset_window), F.lit(0)).alias(
-                "__bkt_offset"
-            ),
-            F.sum("__bkt_weight").over(total_window).alias("__total"),
+            F.coalesce(F.sum("__weight").over(offset_window), F.lit(0)).alias("__before"),
+            F.sum("__weight").over(total_window).alias("__total"),
         )
     )
 

@@ -313,11 +313,11 @@ def pack_sequences(
         .withColumn(
             out_col,
             F.floor(
-                (F.col("__bkt_offset") + F.col("__cum") - F.col(token_col))
+                (F.col("__before") + F.col("__cum") - F.col(token_col))
                 / F.lit(budget)
             ).cast("long"),
         )
-        .drop("__bkt", "__h", "__hnum", "__cum", "__bkt_offset", "__total")
+        .drop("__bkt", "__h", "__hnum", "__cum", "__before", "__total")
     )
 
 

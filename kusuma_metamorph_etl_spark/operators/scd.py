@@ -28,7 +28,6 @@ OPEN_END = "9999-12-31"
 
 def scd2_init(
     snapshot: DataFrame,
-    key: list[str],
     effective_date: dt.date | str | None = None,
     *,
     effective_col: str | None = None,

@@ -1018,7 +1018,6 @@ def mmr_select(
 def group_centroids(
     df: DataFrame,
     group_col: str,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
     assemble: bool = True,

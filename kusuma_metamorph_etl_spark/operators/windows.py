@@ -1,24 +1,56 @@
 """Window operators (SURVEY.md §2.6).
 
 ``win_rownum_topk`` / ``win_rownum_flag`` are stock ``row_number`` windows.
-The interesting one is ``win_percent_rank``: the reference ranks the WHOLE
-dataset with an unpartitioned ``Window.orderBy(...)``
-(``/root/reference/ETL-Airflow/dags/tasks/customer_sales_report_task.py:
-101-106``, anti-pattern A4) — Spark executes that as a single task holding
-every row.  :func:`global_percent_rank` computes the *exact* same values
-scalably, picking between two regimes: a broadcast rank map over the
-distinct values (low cardinality) or rank-within-quantile-buckets with
-prefix-summed offsets (continuous keys).  Ties receive identical
-percent_rank either way (SQL ``percent_rank = (rank - 1) / (n - 1)`` with
-``rank`` = 1 + count of rows sorting strictly before).
+The reference ranks the WHOLE dataset with an unpartitioned
+``Window.orderBy(...)`` (``ETL-Airflow/dags/tasks/
+customer_sales_report_task.py:101-106``, anti-pattern A4) — Spark runs
+that as one task holding every row.  :func:`global_percent_rank` and
+:func:`global_ntile` give the exact same values without it.  Both are
+formulas over one scaffold, :func:`_global_rank`, which returns SQL
+``RANK() OVER (ORDER BY value [DESC], *tiebreaks)`` plus the row total in
+one of three regimes:
+
+* **broadcast** — per-value row counts, a tiny window over the distinct
+  values for the rows before each value and the total, joined back with
+  a broadcast, null-safe join.  The broadcast is O(distinct).
+* **range** — rows bucketed at fixed quantile bounds, ``rank()`` within
+  each bucket, plus the prefix-summed rows of earlier buckets from a
+  ≤P-row frame.  No O(n) broadcast, no task holding more than ~n/P rows.
+* **distinct** (distinct-bucketed) — the range scaffold run over the
+  distinct-value frame weighted by row counts, joined back by value.
+  For a hot value over a large distinct tail: the row quantiles
+  collapse onto the hot value, but each value appears once in the
+  distinct frame, so its quantiles still spread.
+
+With tiebreaks, a within-value ``rank()`` partitioned by the value adds
+the position inside a tied value (broadcast and distinct regimes; the
+range regime orders each bucket by the tiebreaks directly).
+
+The regime comes from the plan, never from the caller.  If Catalyst's
+size estimate of the frame is at most ``spark.sql.autoBroadcastJoinThreshold``
+the frame could be broadcast whole, so its distinct-value map can too:
+broadcast, with no job.  Otherwise one probe job collects the
+approximate distinct count and the row quantiles: at most
+``_BROADCAST_LIMIT`` distinct values → broadcast; quantiles giving more
+than two buckets → range on those bounds; otherwise → distinct.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, NumericType, TimestampNTZType, TimestampType
 
+from kusuma_metamorph_etl_spark.operators.partitioning import (
+    bucket_offsets,
+    bucketize,
+    quantile_bucket,
+    quantile_cuts,
+)
 from kusuma_metamorph_etl_spark.plans.share import share
+
+# Most distinct values a broadcast rank map may hold.
+_BROADCAST_LIMIT = 100_000
 
 
 def top_k_per_group(
@@ -47,83 +79,16 @@ def global_percent_rank(
     value_col: str,
     out_col: str = "percent_rank",
     descending: bool = True,
-    low_cardinality: bool | None = None,
-    cardinality_threshold: int = 100_000,
 ) -> DataFrame:
-    """Exact global ``percent_rank`` without a single-partition window.
-
-    Two scale regimes, both exact (SQL ``PERCENT_RANK() OVER (ORDER BY
-    value [DESC])`` incl. tie semantics — ``(rows strictly before) /
-    (n - 1)``):
-
-    * **low cardinality** (distinct values ≪ rows — flags, tiers, small
-      enums): rank the distinct-value frame in one tiny window and
-      broadcast the (value → percent_rank) map back.  O(d) broadcast.
-    * **high cardinality** (near-continuous keys — money amounts, floats,
-      timestamps): the rank map is O(n), so broadcasting it back is an OOM
-      and the "tiny" window a single-task sort of ~n rows.  Instead:
-      bucket rows by deterministic quantile bounds, rank *within* buckets,
-      and prefix-sum the ≤P per-bucket totals (genuinely tiny) for global
-      offsets.  No O(n) broadcast, no map-back join, no single task
-      holding more than ~n/P rows.
-
-    ``low_cardinality=None`` picks the regime from a one-pass
-    ``approx_count_distinct`` probe vs ``cardinality_threshold``.  Callers
-    that know their key shape (e.g. the customer-sales mart's continuous
-    SALE_AMOUNT) should pass it explicitly and skip the probe.
+    """Exact global ``PERCENT_RANK() OVER (ORDER BY value [DESC])``
+    without a single-partition window: ``(rank - 1) / (n - 1)``, so tied
+    values share a percent_rank and nulls rank where Spark's sort puts
+    them (last for desc, first for asc).  Regimes: module docstring.
     """
-    if low_cardinality is None:
-        probe = df.agg(F.approx_count_distinct(value_col).alias("d")).first()
-        low_cardinality = (probe["d"] or 0) <= cardinality_threshold
-    if low_cardinality:
-        return _percent_rank_broadcast_map(df, value_col, out_col, descending)
-    # The range path buckets via approxQuantile, which accepts only
-    # numeric columns — but timestamps are EXACTLY the near-continuous
-    # keys this path exists for (docstring; r8 review caught the crash).
-    # Rank on an order-isomorphic numeric shadow instead: unix micros
-    # (strictly monotonic, tie-preserving), epoch days for dates.
-    dtype = df.schema[value_col].dataType.typeName()
-    if dtype in ("timestamp", "timestamp_ntz", "date"):
-        shadow = "__pr_shadow"
-        if dtype == "date":
-            num = F.datediff(F.col(value_col), F.lit("1970-01-01").cast("date"))
-        elif dtype == "timestamp_ntz":
-            # wall-clock arithmetic, NOT a session-zone cast: under a DST
-            # session zone the cast collapses spring-forward-gap wall
-            # times onto the next instant, breaking tie preservation
-            # (r8 self-review; this repo pins UTC, but the operator must
-            # not depend on that)
-            num = F.expr(
-                f"timestampdiff(MICROSECOND, "
-                f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{value_col}`)"
-            )
-        else:
-            num = F.unix_micros(F.col(value_col))
-        return _percent_rank_range_partitioned(
-            df.withColumn(shadow, num), shadow, out_col, descending,
-            cardinality_threshold,
-        ).drop(shadow)
-    numeric_ok = dtype in (
-        "byte", "short", "integer", "long", "float", "double", "decimal",
-    ) or dtype.startswith("decimal")
-    if not numeric_ok:
-        # approxQuantile is numeric-only, so the range regime cannot
-        # bucket strings/binary — fail loudly instead of deep inside
-        # quantile_bucket (r8 self-review).  The seam for an
-        # order-isomorphic prefix encoding (first 8 bytes as a long —
-        # binary-collation-consistent) is documented here; until a real
-        # corpus needs it, callers rank high-cardinality strings via
-        # low_cardinality=True (exact at any distinct count that fits a
-        # broadcast) or pre-encode.
-        raise ValueError(
-            f"global_percent_rank: high-cardinality path cannot bucket "
-            f"{dtype!r} column {value_col!r} (approxQuantile is "
-            "numeric-only); pass low_cardinality=True or pre-encode an "
-            "order-isomorphic numeric shadow"
-        )
-    return _percent_rank_range_partitioned(
-        df, value_col, out_col, descending, cardinality_threshold
-    )
+    ranked = _global_rank(df, value_col, [], descending)
+    rank, n = F.col("__rank"), F.col("__total")
+    pr = F.when(n > 1, (rank - 1) / (n - 1)).otherwise(F.lit(0.0))
+    return ranked.withColumn(out_col, pr).drop("__rank", "__total")
 
 
 def global_ntile(
@@ -133,57 +98,22 @@ def global_ntile(
     n_tiles: int,
     out_col: str,
     descending: bool = False,
-    low_cardinality: bool | None = None,
-    cardinality_threshold: int = 100_000,
 ) -> DataFrame:
     """Exact global ``NTILE(n) OVER (ORDER BY value [DESC], tiebreaks)``
-    without a single-partition window (VERDICT r18 Next #3: the RFM /
-    engagement-tier ntiles sorted the full customer/user grain in ONE
-    task).
+    without a single-partition window.
 
     Requires ``(value_col, *tiebreaks)`` to be a TOTAL order (the
     registered callers all append a unique key — the same discipline
-    Spark needs for a deterministic ntile).  ntile is row_number
-    arithmetic: with n rows in k tiles, the first ``n % k`` tiles hold
-    ``n div k + 1`` rows and the rest ``n div k`` (SQL standard; Spark
-    ``NTile`` and DuckDB agree), so an exact global row_number plus the
-    total gives the exact tile.  Row numbers come from the same
-    two-regime scaffold as :func:`global_percent_rank`:
-
-    * **high cardinality** (default for continuous metrics): rows are
-      range-bucketed by deterministic quantile bounds
-      (``quantile_bucket`` — equal values always share a bucket, so the
-      in-bucket ``row_number`` over (value, tiebreaks) is globally
-      consistent), offsets prefix-sum over the ≤P-row bucket-totals
-      frame, ``rn = offset + rn_in_bucket``.
-    * **low cardinality** (tiers, counts, small enums): the per-value
-      offset map is a tiny distinct-value window broadcast back
-      (null-safe join, as in the percent_rank broadcast path), and the
-      within-value ``row_number`` runs partitioned BY the value.  A
-      single hot value still lands in one window partition; if a real
-      corpus ever concentrates most rows on one value, sub-bucket the
-      tiebreak inside that value with the same quantile/offset scaffold
-      (documented seam, same as the percent_rank skew regime).
-
-    Both regimes emit zero unpartitioned WindowExec over row-scale
-    frames; the only global windows run on ≤P bucket rows or ≤d distinct
-    values.
+    Spark needs for a deterministic ntile), so the scaffold's rank is the
+    global row number.  ntile is row_number arithmetic: with n rows in k
+    tiles, the first ``n % k`` tiles hold ``n div k + 1`` rows and the
+    rest ``n div k`` (SQL standard; Spark ``NTile`` and DuckDB agree).
+    Regimes: module docstring.
     """
-    if low_cardinality is None:
-        probe = df.agg(F.approx_count_distinct(value_col).alias("d")).first()
-        low_cardinality = (probe["d"] or 0) <= cardinality_threshold
-    rn_col, total_col = "__gn_rn", "__gn_total"
-    if low_cardinality:
-        with_rn = _row_number_broadcast_offsets(
-            df, value_col, tiebreaks, descending, rn_col, total_col
-        )
-    else:
-        with_rn = _row_number_range_partitioned(
-            df, value_col, tiebreaks, descending, rn_col, total_col
-        )
+    ranked = _global_rank(df, value_col, tiebreaks, descending)
     k = F.lit(int(n_tiles)).cast("long")
-    n = F.col(total_col)
-    rn = F.col(rn_col)
+    n = F.col("__total")
+    rn = F.col("__rank")
     # long/long division yields double; cast truncates toward zero ==
     # floor for the non-negative counts here (exact below 2^53 rows).
     q = (n / k).cast("long")
@@ -196,273 +126,178 @@ def global_ntile(
     tile = F.when(
         rn <= boundary, ((rn + q) / (q + F.lit(1))).cast("long")
     ).otherwise(r + ((rn - boundary + q_safe - F.lit(1)) / q_safe).cast("long"))
-    return with_rn.withColumn(out_col, tile.cast("int")).drop(rn_col, total_col)
+    return ranked.withColumn(out_col, tile.cast("int")).drop("__rank", "__total")
 
 
-def _row_number_broadcast_offsets(
+def _global_rank(
     df: DataFrame,
     value_col: str,
     tiebreaks: list[Column],
     descending: bool,
-    rn_col: str,
-    total_col: str,
+    regime: str | None = None,
 ) -> DataFrame:
-    """Low-cardinality global row_number: broadcast per-value offsets +
-    within-value row_number (partitioned window)."""
-    order = F.desc(value_col) if descending else F.asc(value_col)
-    counts = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt"))
-    tiny_window = Window.orderBy(order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    total_window = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = counts.select(
-        F.col(value_col).alias("__rank_value"),
-        F.coalesce(F.sum("__cnt").over(tiny_window), F.lit(0)).alias("__before"),
-        F.sum("__cnt").over(total_window).alias(total_col),
-    )
-    in_value = Window.partitionBy(value_col).orderBy(*tiebreaks)
-    return (
-        df.withColumn("__rn_in_value", F.row_number().over(in_value))
-        .join(
-            F.broadcast(offsets),
-            on=F.col(value_col).eqNullSafe(F.col("__rank_value")),
-            how="left",
-        )
-        .withColumn(rn_col, F.col("__before") + F.col("__rn_in_value"))
-        .drop("__rank_value", "__before", "__rn_in_value")
-    )
+    """``df`` plus ``__rank`` = SQL ``RANK() OVER (ORDER BY value [DESC],
+    *tiebreaks)`` and ``__total`` = its row count.
 
-
-def _row_number_range_partitioned(
-    df: DataFrame,
-    value_col: str,
-    tiebreaks: list[Column],
-    descending: bool,
-    rn_col: str,
-    total_col: str,
-) -> DataFrame:
-    """High-cardinality global row_number: quantile-bucket rows, number
-    within buckets over the full (value, tiebreaks) order, add the
-    ≤P-row prefix-summed bucket offsets."""
-    from kusuma_metamorph_etl_spark.operators.partitioning import (
-        bucket_offsets,
-        quantile_bucket,
-    )
-
-    spark = df.sparkSession
-    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    bucketed, n_buckets = quantile_bucket(df, value_col, num_parts)
-    if n_buckets <= 2:
-        # Collapsed quantiles: ties dominate — the broadcast-offsets
-        # regime handles exactly that shape (and a pathological
-        # hot-value-plus-huge-tail column would need the documented
-        # distinct-bucketed seam, as in global_percent_rank).
-        return _row_number_broadcast_offsets(
-            df, value_col, tiebreaks, descending, rn_col, total_col
-        )
-    order = F.col(value_col).desc() if descending else F.col(value_col).asc()
-    in_bkt = Window.partitionBy("__bkt").orderBy(order, *tiebreaks)
-    offsets = bucket_offsets(
-        bucketed, "__bkt", F.lit(1), ascending=not descending
-    )
-    return (
-        bucketed.withColumn("__rn_in_bkt", F.row_number().over(in_bkt))
-        .join(F.broadcast(offsets), on="__bkt")
-        .withColumn(rn_col, F.col("__bkt_offset") + F.col("__rn_in_bkt"))
-        .withColumnRenamed("__total", total_col)
-        .drop("__bkt", "__rn_in_bkt", "__bkt_offset")
-    )
-
-
-def _percent_rank_broadcast_map(
-    df: DataFrame, value_col: str, out_col: str, descending: bool
-) -> DataFrame:
-    """Low-cardinality path: tiny distinct-value window + broadcast map.
-
-    The map joins back with NULL-SAFE equality so null values receive
-    their rank like any other group (Spark's window ranks nulls — last
-    for desc, first for asc — and the distinct-value window here orders
-    them identically); a plain equi-join would leave null rows unranked.
+    ``regime`` (``"broadcast"``, ``"range"`` or ``"distinct"``) forces a
+    regime so tests can check each one; by default
+    :func:`_choose_regime` picks it.
     """
-    order = F.desc(value_col) if descending else F.asc(value_col)
-    counts = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt"))
-    # The distinct-value frame is small; this window is cheap by design.
-    tiny_window = (
-        Window.orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    total_window = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = counts.select(
-        F.col(value_col).alias("__rank_value"),
-        F.coalesce(F.sum("__cnt").over(tiny_window), F.lit(0)).alias("__before"),
-        F.sum("__cnt").over(total_window).alias("__total"),
-    ).select(
-        "__rank_value",
-        F.when(F.col("__total") > 1, F.col("__before") / (F.col("__total") - 1))
-        .otherwise(F.lit(0.0))
-        .alias(out_col),
-    )
-    return df.join(
-        F.broadcast(ranked),
-        on=F.col(value_col).eqNullSafe(F.col("__rank_value")),
-        how="left",
-    ).drop("__rank_value")
+    key, keyed = _order_key(df, value_col)
+    num_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    bounds = None
+    if regime is None:
+        regime, bounds = _choose_regime(keyed, key, num_parts)
+    if regime == "range":
+        ranked = _rank_range(keyed, key, tiebreaks, descending, num_parts, bounds)
+    elif regime == "broadcast":
+        value_map = bucket_offsets(keyed, key, F.lit(1), ascending=not descending)
+        ranked = _rank_by_value(keyed, key, tiebreaks, value_map, broadcast=True)
+    else:
+        value_map = _distinct_value_map(keyed, key, descending, num_parts)
+        ranked = _rank_by_value(keyed, key, tiebreaks, value_map, broadcast=False)
+    return ranked if key == value_col else ranked.drop(key)
 
 
+def _order_key(df: DataFrame, value_col: str) -> tuple[str, DataFrame]:
+    """The column to rank on: dates and timestamps get an
+    order-isomorphic numeric shadow (epoch days; unix micros — strictly
+    monotonic, tie-preserving), because quantile bounds are numeric-only.
+    """
+    dtype = df.schema[value_col].dataType
+    if isinstance(dtype, DateType):
+        num = F.datediff(F.col(value_col), F.lit("1970-01-01").cast("date"))
+    elif isinstance(dtype, TimestampNTZType):
+        # wall-clock arithmetic, NOT a session-zone cast: under a DST
+        # session zone the cast collapses spring-forward-gap wall times
+        # onto the next instant, breaking tie preservation
+        num = F.expr(
+            f"timestampdiff(MICROSECOND, "
+            f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{value_col}`)"
+        )
+    elif isinstance(dtype, TimestampType):
+        num = F.unix_micros(F.col(value_col))
+    else:
+        return value_col, df
+    return "__rank_key", df.withColumn("__rank_key", num)
 
-def _percent_rank_distinct_bucketed(
+
+def _choose_regime(
+    df: DataFrame, key: str, num_parts: int
+) -> tuple[str, list[float] | None]:
+    """The regime rule of the module docstring; returns the regime and,
+    for range, the bucket bounds its probe collected."""
+    jconf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if size <= jconf.autoBroadcastJoinThreshold():
+        return "broadcast", None
+    numeric = isinstance(df.schema[key].dataType, NumericType)
+    probes = [F.approx_count_distinct(key).alias("d")]
+    if numeric:
+        probes.append(quantile_cuts(key, num_parts).alias("cuts"))
+    # bound: one row — a count plus at most P - 1 doubles
+    probe = df.agg(*probes).first()
+    if probe["d"] <= _BROADCAST_LIMIT:
+        return "broadcast", None
+    if not numeric:
+        raise ValueError(
+            f"global rank: {df.schema[key].dataType.simpleString()} column "
+            f"{key!r} has more than {_BROADCAST_LIMIT} distinct values, too "
+            "many for a broadcast rank map, and quantile buckets need a "
+            "numeric key; rank an order-isomorphic numeric encoding instead"
+        )
+    # One cut (a near-constant column) gives two buckets, one of which
+    # holds every row: the range regime would run in a single task.
+    if len(set(probe["cuts"] or [])) > 1:
+        return "range", probe["cuts"]
+    return "distinct", None
+
+
+def _rank_range(
     df: DataFrame,
-    value_col: str,
-    out_col: str,
+    key: str,
+    tiebreaks: list[Column],
     descending: bool,
     num_parts: int,
+    bounds: list[float] | None,
 ) -> DataFrame:
-    """Heavy-skew + high-cardinality regime: rank the DISTINCT-VALUE
-    frame, weighted by per-value row counts, and join the rank map back
-    by value.
-
-    When one value holds most rows, the ROW quantiles collapse (every
-    probe returns the hot value) so range-bucketing rows degenerates —
-    but each value appears ONCE in the distinct frame, so ITS quantiles
-    spread over the tail no matter how skewed the row counts are.  Rows
-    strictly before a value = its bucket's weighted offset + the
-    weighted prefix within the bucket; the per-bucket window runs over
-    ≤ |distinct|/P VALUE rows, never row counts.  The join back is a
-    value-keyed equi-join (the rank map is O(distinct) — too big to
-    broadcast, which is exactly why this regime can't use the broadcast
-    path); its hot-key pressure is one map row joined to the hot rows,
-    which AQE's skew-join split spreads (session default).  NULL values
-    ride the -1 bucket like the row-bucketed path, via a null-safe join
-    key.
+    """Range regime.  The bucket id is a fixed function of the value
+    (``repartitionByRange`` re-samples its boundaries on every recompute,
+    so the rank and offsets branches of this diamond could disagree), and
+    equal values share a bucket, so ``rank()`` within a bucket plus the
+    rows of earlier buckets is the global rank.  Nulls take bucket -1 and
+    NaN the top bucket — Spark's sort positions in both directions.
     """
-    from kusuma_metamorph_etl_spark.operators.partitioning import (
-        bucket_offsets,
-        quantile_bucket,
+    if bounds is None:
+        bucketed, _ = quantile_bucket(df, key, num_parts)
+    else:
+        bucketed, _ = bucketize(df, key, bounds)
+    order = F.col(key).desc() if descending else F.col(key).asc()
+    in_bkt = Window.partitionBy("__bkt").orderBy(order, *tiebreaks)
+    offsets = bucket_offsets(bucketed, "__bkt", F.lit(1), ascending=not descending)
+    return (
+        bucketed.withColumn("__rank_in_bkt", F.rank().over(in_bkt))
+        .join(F.broadcast(offsets), on="__bkt")
+        .withColumn("__rank", F.col("__before") + F.col("__rank_in_bkt"))
+        .drop("__bkt", "__rank_in_bkt", "__before")
     )
 
-    # shared by approxQuantile's driver action, the in-bucket window and
-    # bucket_offsets — without it the O(n) scan + O(distinct) aggregation
-    # re-runs three times
-    counts = share(df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt")))
-    bucketed, n_buckets = quantile_bucket(counts, value_col, num_parts)
-    order = F.col(value_col).desc() if descending else F.col(value_col).asc()
+
+def _distinct_value_map(
+    df: DataFrame, key: str, descending: bool, num_parts: int
+) -> DataFrame:
+    """Distinct regime's (value, ``__before`` = rows before it,
+    ``__total``) map: the distinct-value frame range-bucketed on its own
+    quantiles, each value's rows-before summed within its bucket over
+    ≤ |distinct|/P value rows, never row counts.  The map is O(distinct)
+    — too big to broadcast — so it joins back by value; AQE's skew-join
+    split spreads the hot value's rows."""
+    # read by the bounds collect, the in-bucket window and bucket_offsets
+    counts = share(df.groupBy(key).agg(F.count(F.lit(1)).alias("__cnt")))
+    bucketed, _ = quantile_bucket(counts, key, num_parts)
+    order = F.col(key).desc() if descending else F.col(key).asc()
     in_bkt = Window.partitionBy("__bkt").orderBy(order).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    offsets = bucket_offsets(
-        bucketed, "__bkt", F.col("__cnt"), ascending=not descending
-    )
-    ranked = (
+    offsets = bucket_offsets(bucketed, "__bkt", F.col("__cnt"), ascending=not descending)
+    return (
         bucketed.withColumn(
-            "__before_in_bkt",
-            F.coalesce(F.sum("__cnt").over(in_bkt), F.lit(0)),
+            "__before_in_bkt", F.coalesce(F.sum("__cnt").over(in_bkt), F.lit(0))
         )
         .join(F.broadcast(offsets), on="__bkt")
         .select(
-            F.col(value_col).alias("__rank_value"),
-            F.when(
-                F.col("__total") > 1,
-                (F.col("__bkt_offset") + F.col("__before_in_bkt"))
-                / (F.col("__total") - 1),
-            )
-            .otherwise(F.lit(0.0))
-            .alias(out_col),
+            key,
+            (F.col("__before") + F.col("__before_in_bkt")).alias("__before"),
+            "__total",
         )
     )
-    return df.join(
-        ranked,
-        on=F.col(value_col).eqNullSafe(F.col("__rank_value")),
-        how="left",
-    ).drop("__rank_value")
 
 
-def _percent_rank_range_partitioned(
+def _rank_by_value(
     df: DataFrame,
-    value_col: str,
-    out_col: str,
-    descending: bool,
-    cardinality_threshold: int = 100_000,
+    key: str,
+    tiebreaks: list[Column],
+    value_map: DataFrame,
+    broadcast: bool,
 ) -> DataFrame:
-    """High-cardinality path: rank within value-range buckets + tiny offsets.
-
-    The bucket id must be a *deterministic function of the value*:
-    ``repartitionByRange`` re-samples its boundaries on every recompute,
-    so in a diamond plan (the ranks branch and the per-bucket-totals
-    branch both read the bucketed frame) the two branches can observe
-    *different* partitionings and produce wrong global ranks -- measured
-    on this repo: two counts of the same range-partitioned frame
-    disagreed on every partition.  Instead: one bounded driver collect of
-    ~P approximate quantiles (``approxQuantile``, P = shuffle
-    parallelism) fixes the bucket bounds for the whole plan, and a
-    ``Bucketizer`` (JVM binary search, narrow -- no shuffle) assigns each
-    row its bucket.
-
-    Equal values land in one bucket by construction, so ``rank()``
-    *within* a bucket is exact and adding the rows of earlier buckets
-    turns it into the global rank.  The per-bucket totals are a <=P-row
-    frame -- the only unpartitioned window in the plan -- and the only
-    broadcast is that <=P-row offset table.  One full-width shuffle total
-    (the per-bucket window); no O(n) rank map, no map-back join, no
-    single task holding more than ~n/P rows (quantile bounds balance the
-    buckets even under value skew).
-
-    Nulls get bucket -1: first for ascending, last for descending --
-    exactly Spark's window null order -- and tie among themselves, so the
-    output matches ``PERCENT_RANK() OVER (ORDER BY value [DESC])``
-    including null rows (the broadcast-map path ranks nulls identically
-    via its null-safe join — the two regimes agree on nulls by design).
-    """
-    from kusuma_metamorph_etl_spark.operators.partitioning import (
-        bucket_offsets,
-        quantile_bucket,
-    )
-
-    spark = df.sparkSession
-    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    order = F.col(value_col).desc() if descending else F.col(value_col).asc()
-
-    bucketed, n_buckets = quantile_bucket(df, value_col, num_parts)
-    if n_buckets <= 2:
-        # A (near-)constant column yields at most ONE distinct quantile
-        # bound (a constant c gives splits [-inf, c, inf]: two buckets,
-        # all rows in [c, inf)) — bucketing degenerates.  Collapsed ROW
-        # quantiles do NOT imply low cardinality, though (r8 review): a
-        # 99.5%-one-value column can still hide a billion-distinct tail
-        # that would OOM the broadcast rank map.  Probe before choosing:
-        # small distinct → broadcast map; large → rank the DISTINCT-VALUE
-        # frame (each value once, so ITS quantiles spread regardless of
-        # row skew) and join the rank map back by value.
-        probe = df.agg(F.approx_count_distinct(value_col).alias("d")).first()
-        if (probe["d"] or 0) <= cardinality_threshold:
-            return _percent_rank_broadcast_map(
-                df, value_col, out_col, descending
-            )
-        return _percent_rank_distinct_bucketed(
-            df, value_col, out_col, descending, num_parts
-        )
-    bkt_window = Window.partitionBy("__bkt").orderBy(order)
-    local = bucketed.withColumn("__rank_in_bkt", F.rank().over(bkt_window))
-
-    # <=P-row frame: rows per bucket -> prefix-sum offsets + grand total,
-    # walked in rank order (desc: high buckets first; bucket -1 sorts
-    # last for desc and first for asc, matching the null order).
-    offsets = bucket_offsets(
-        bucketed, "__bkt", F.lit(1), ascending=not descending
-    )
-
+    """Join a per-value (value, ``__before`` = rows before it,
+    ``__total``) map back to the rows.  The join is NULL-SAFE so null
+    values rank as one group like any other value; with tiebreaks a
+    within-value ``rank()`` orders the rows that share a value — a hot
+    value lands in one window partition there."""
+    value_map = value_map.withColumnRenamed(key, "__rank_value")
+    if broadcast:
+        value_map = F.broadcast(value_map)
+    rank = F.col("__before") + F.lit(1)
+    if tiebreaks:
+        in_value = Window.partitionBy(key).orderBy(*tiebreaks)
+        rank = rank + F.rank().over(in_value) - F.lit(1)
     return (
-        local.join(F.broadcast(offsets), on="__bkt")
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("__total") > 1,
-                (F.col("__bkt_offset") + F.col("__rank_in_bkt") - 1)
-                / (F.col("__total") - 1),
-            ).otherwise(F.lit(0.0)),
+        df.join(
+            value_map,
+            on=F.col(key).eqNullSafe(F.col("__rank_value")),
+            how="left",
         )
-        .drop("__bkt", "__rank_in_bkt", "__bkt_offset", "__total")
+        .withColumn("__rank", rank)
+        .drop("__rank_value", "__before")
     )

@@ -862,13 +862,12 @@ def win_rownum_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalable exact global percent_rank (see operators/windows.py) — the
-    oracle uses the classic single-window formulation.  o_totalprice is
-    near-continuous, so force the range-partitioned path (the broadcast
-    rank map would be O(n))."""
+    oracle uses the classic single-window formulation.  The regime comes
+    from the plan: a scan small enough to broadcast ranks through the
+    broadcast map with no probe; a large one probes the near-continuous
+    o_totalprice and takes the range regime."""
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return global_percent_rank(
-        orders, "o_totalprice", out_col="pr", descending=True, low_cardinality=False
-    )
+    return global_percent_rank(orders, "o_totalprice", out_col="pr", descending=True)
 
 
 @register(

@@ -650,11 +650,11 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run on the CUSTOMER grain — smaller than the fact table but
     NOT small at 100 TB, so an unpartitioned `F.ntile` window (which
     sorts the whole grain in one task) is out: each score routes
-    through `global_ntile` (r19, VERDICT r18 Next #3) — exact ntile via
-    quantile-bucketed global row numbers, the same two-regime scaffold
-    as `win_percent_rank`.  The per-customer aggregate is shared: each
-    of the three scores runs a bounded
-    quantile/cardinality probe (a driver action), and without the
+    through `global_ntile` — exact ntile over global row numbers from
+    the same rank scaffold as `win_percent_rank`, which picks each
+    score's regime from the plan.  The per-customer aggregate is shared:
+    a score whose input Catalyst estimates as large runs a bounded
+    distinct-count/quantile probe (a driver action), and without the
     materialization every probe would re-run the full orders scan +
     aggregation (§2.2)."""
     from kusuma_metamorph_etl_spark.functions.numeric import decimal_sum
@@ -670,21 +670,15 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             decimal_sum(F.col("o_totalprice")).alias("monetary"),
         )
     )
-    # Key shapes are known (skip the cardinality probe action): recency
-    # is bounded by the order-date span in days and frequency by the max
-    # orders-per-customer — both tiny distinct sets; monetary is a
-    # near-continuous decimal sum.
     scored = global_ntile(
         per_cust, "recency_days", [F.asc("custkey")], 5, "r_score",
-        descending=False, low_cardinality=True,
+        descending=False,
     )
     scored = global_ntile(
-        scored, "frequency", [F.asc("custkey")], 5, "f_score",
-        descending=True, low_cardinality=True,
+        scored, "frequency", [F.asc("custkey")], 5, "f_score", descending=True
     )
     scored = global_ntile(
-        scored, "monetary", [F.asc("custkey")], 5, "m_score",
-        descending=True, low_cardinality=False,
+        scored, "monetary", [F.asc("custkey")], 5, "m_score", descending=True
     )
     return scored.select(
         "custkey", "recency_days", "frequency", "monetary",
@@ -737,13 +731,12 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     events-quartile engagement tier.  Every stage is the registered
     operator; the tier quartile runs on the post-agg USER grain — which
     at 100 TB is itself large, so it routes through `global_ntile`
-    (r19, VERDICT r18 Next #3) instead of an unpartitioned `F.ntile`
-    window that would sort every user in one task.  n_events is a
-    per-user count (small distinct set → broadcast-offsets regime,
-    probe skipped).  One user-keyed shuffle feeds sessionize and the
-    per-user rollup; the streak branch reuses the day-grain collapse;
-    the 3-join profile is shared so the ntile's offset map doesn't
-    re-run the whole join tree."""
+    instead of an unpartitioned `F.ntile` window that would sort every
+    user in one task; the rank scaffold picks the regime from the plan.
+    One user-keyed shuffle feeds sessionize and the per-user rollup;
+    the streak branch reuses the day-grain collapse; the 3-join profile
+    is shared so the rank's probe and value map don't re-run the whole
+    join tree."""
     from kusuma_metamorph_etl_spark.operators.events import (
         activity_streaks,
         sessionize,
@@ -771,8 +764,7 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = share(per_user.join(st, "user").join(last, "user"))
     return global_ntile(
-        joined, "n_events", [F.asc("user")], 4, "engagement_tier",
-        descending=True, low_cardinality=True,
+        joined, "n_events", [F.asc("user")], 4, "engagement_tier", descending=True
     ).select(
         "user",
         "n_events",

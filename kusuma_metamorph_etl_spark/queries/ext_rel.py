@@ -87,7 +87,6 @@ def scd2_merge_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         supplier.select(
             F.col("s_suppkey").alias("id"), F.col("s_nationkey").alias("nation")
         ),
-        ["id"],
         "2024-01-01",
     )
     updates = (

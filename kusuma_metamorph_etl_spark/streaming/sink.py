@@ -237,7 +237,7 @@ def stream_scd2_upsert(
         upd = latest.select(*key, *attrs, effective_from_col)
         current_name, dim = _read_current(spark, dim_path)
         if dim is None:
-            merged = scd2_init(upd, key, effective_col=effective_from_col)
+            merged = scd2_init(upd, effective_col=effective_from_col)
         else:
             merged = scd2_merge(
                 dim,

@@ -41,6 +41,21 @@ def checkpoint_dir(spark, tmp_path):
     spark.sparkContext._jsc.sc().setCheckpointDir(None)
 
 
+@pytest.fixture
+def probed_rank(spark, monkeypatch):
+    """Send the global rank scaffold (``operators/windows.py``) past its
+    size shortcut to its probe, with every distinct count over the
+    broadcast limit, so the quantiles pick range or distinct as on a
+    large frame.  The broadcast threshold is restored afterwards."""
+    from kusuma_metamorph_etl_spark.operators import windows
+
+    monkeypatch.setattr(windows, "_BROADCAST_LIMIT", 0)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL

@@ -2420,9 +2420,9 @@ class TestTranscode:
         docs = spark.createDataFrame(
             [("urn:uuid:rec-a",), ("urn:uuid:rec-b",)], ["rid"]
         )
-        payloads = multimodal.attach_image_payload(
-            docs, text_col="rid", id_col="rid"
-        ).select("rid", "payload")
+        payloads = multimodal.attach_image_payload(docs, text_col="rid").select(
+            "rid", "payload"
+        )
         out = multimodal.transcode_images(payloads, to="png", id_col="rid").collect()
         assert sorted(r["rid"] for r in out) == ["urn:uuid:rec-a", "urn:uuid:rec-b"]
         for r in out:

@@ -144,7 +144,7 @@ def test_tfidf_broadcasts_corpus_size(spark, sf_small):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_percent_rank_range_path_scales(spark, sf_small):
+def test_percent_rank_range_path_scales(spark, sf_small, probed_rank):
     # The continuous-key percent_rank path must not broadcast an O(n) rank
     # map and must not sort all rows in one task: the only broadcast is the
     # <=P-row bucket-offset table, and the big window is partitioned by the
@@ -156,10 +156,7 @@ def test_percent_rank_range_path_scales(spark, sf_small):
         "o_orderkey", "o_totalprice"
     )
     plan = _plan(
-        global_percent_rank(
-            orders, "o_totalprice", out_col="pr", descending=True,
-            low_cardinality=False,
-        )
+        global_percent_rank(orders, "o_totalprice", out_col="pr", descending=True)
     )
     assert plan.count("BroadcastExchange") == 1  # offsets only, never the map
     assert "windowspecdefinition(__bkt" in plan  # rank window is partitioned
@@ -167,7 +164,7 @@ def test_percent_rank_range_path_scales(spark, sf_small):
     assert "SortMergeJoin" not in plan  # no map-back join at all
 
 
-def test_customer_mart_uses_range_percent_rank(spark, sf_small):
+def test_customer_mart_uses_range_percent_rank(spark, sf_small, probed_rank):
     # The mart ranks near-continuous SALE_AMOUNT: it must go through the
     # bucketed path (no O(n) broadcast rank map, no global value window).
     plan = _plan(mart_customer_sales_report(spark, sf_small))
@@ -763,7 +760,7 @@ def test_paired_curation_pushes_gates_before_output(spark, sf_small):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_rfm_ntiles_are_not_single_partition_windows(spark, sf_small):
+def test_rfm_ntiles_are_not_single_partition_windows(spark, sf_small, probed_rank):
     # r19 (VERDICT r18 Next #3): the three RFM quintiles and the
     # engagement tier must NOT run Spark's ntile in an unpartitioned
     # window (one task sorting the whole customer/user grain).  After

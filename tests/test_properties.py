@@ -90,28 +90,34 @@ def test_asof_join_matches_bruteforce(lefts, rights):
     )
 )
 def test_global_percent_rank_matches_window(values):
-    """Both percent_rank paths (broadcast rank map, range-partitioned
-    prefix-sum) equal Spark's own single-partition window, including tie
-    semantics."""
+    """Each forced rank-scaffold regime (broadcast map, range buckets,
+    distinct-bucketed) gives Spark's own single-partition RANK and row
+    total, and the public percent_rank equals the window's, including
+    tie semantics."""
+    from kusuma_metamorph_etl_spark.operators.windows import _global_rank
+
     spark = _session()
     df = spark.createDataFrame(
         [(i, None if v is None else float(v)) for i, v in enumerate(values)],
         "i long, v double",
     )
-    reference = {
-        r["i"]: r["pr"]
-        for r in df.withColumn(
-            "pr", F.percent_rank().over(Window.orderBy(F.desc("v")))
-        ).collect()
-    }
-    for low_card in (True, False):
+    order = Window.orderBy(F.desc("v"))
+    truth = df.select(
+        "i", F.rank().over(order).alias("rk"), F.percent_rank().over(order).alias("pr")
+    ).collect()
+    ranks = {r["i"]: (r["rk"], len(values)) for r in truth}
+    reference = {r["i"]: r["pr"] for r in truth}
+    for regime in ("broadcast", "range", "distinct"):
         got = {
-            r["i"]: r["pr"]
-            for r in global_percent_rank(
-                df, "v", out_col="pr", descending=True, low_cardinality=low_card
-            ).collect()
+            r["i"]: (r["__rank"], r["__total"])
+            for r in _global_rank(df, "v", [], True, regime).collect()
         }
-        assert got == reference, f"low_cardinality={low_card}"
+        assert got == ranks, f"regime={regime}"
+    got = {
+        r["i"]: r["pr"]
+        for r in global_percent_rank(df, "v", out_col="pr", descending=True).collect()
+    }
+    assert got == reference
 
 
 @settings(max_examples=_ex(12), deadline=None)
@@ -125,32 +131,41 @@ def test_global_percent_rank_matches_window(values):
     descending=st.booleans(),
 )
 def test_global_ntile_matches_window(values, n_tiles, descending):
-    """Both global_ntile regimes (broadcast offsets, range-partitioned
-    row numbers) equal Spark's own single-partition NTILE over the same
-    total order — heavy ties, nulls, n < k, and both directions."""
-    from kusuma_metamorph_etl_spark.operators.windows import global_ntile
+    """Each forced rank-scaffold regime gives Spark's own single-partition
+    row number over the total order (value, i), and the public
+    global_ntile equals its NTILE — heavy ties, nulls, n < k, and both
+    directions."""
+    from kusuma_metamorph_etl_spark.operators.windows import (
+        _global_rank,
+        global_ntile,
+    )
 
     spark = _session()
     df = spark.createDataFrame(
         [(i, None if v is None else float(v)) for i, v in enumerate(values)],
         "i long, v double",
     )
-    order = F.desc("v") if descending else F.asc("v")
-    reference = {
+    order = Window.orderBy(F.desc("v") if descending else F.asc("v"), F.asc("i"))
+    truth = df.select(
+        "i",
+        F.row_number().over(order).alias("rn"),
+        F.ntile(n_tiles).over(order).alias("nt"),
+    ).collect()
+    row_numbers = {r["i"]: r["rn"] for r in truth}
+    reference = {r["i"]: r["nt"] for r in truth}
+    for regime in ("broadcast", "range", "distinct"):
+        got = {
+            r["i"]: r["__rank"]
+            for r in _global_rank(df, "v", [F.asc("i")], descending, regime).collect()
+        }
+        assert got == row_numbers, f"regime={regime}"
+    got = {
         r["i"]: r["nt"]
-        for r in df.withColumn(
-            "nt", F.ntile(n_tiles).over(Window.orderBy(order, F.asc("i")))
+        for r in global_ntile(
+            df, "v", [F.asc("i")], n_tiles, "nt", descending=descending
         ).collect()
     }
-    for low_card in (True, False):
-        got = {
-            r["i"]: r["nt"]
-            for r in global_ntile(
-                df, "v", [F.asc("i")], n_tiles, "nt",
-                descending=descending, low_cardinality=low_card,
-            ).collect()
-        }
-        assert got == reference, f"low_cardinality={low_card}"
+    assert got == reference
 
 
 @settings(max_examples=_ex(10), deadline=None)
@@ -422,16 +437,20 @@ def test_connected_components_matches_union_find(edges):
 
 
 def test_percent_rank_constant_column_falls_back():
-    """A constant column yields at most one distinct quantile bound; the
-    range path must fall back to the broadcast map instead of running a
-    degenerate one-bucket window — asserted on the PLAN (both paths give
-    the same values, so a value check alone cannot catch a dead guard)."""
+    """A constant column yields at most one distinct quantile bound; with
+    the size shortcut off, the probe must pick the broadcast map instead
+    of a degenerate one-bucket range window — asserted on the PLAN (both
+    paths give the same values, so a value check alone cannot catch a
+    dead guard)."""
     spark = _session()
     df = spark.createDataFrame([(i, 5.0) for i in range(10)], "i long, v double")
-    out = global_percent_rank(
-        df, "v", out_col="pr", descending=True, low_cardinality=False
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = global_percent_rank(df, "v", out_col="pr", descending=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "__bkt" not in plan  # broadcast-map path, not the bucketed one
     rows = out.collect()
     assert all(r["pr"] == 0.0 for r in rows)  # all tied -> rank 1 -> pr 0

@@ -31,7 +31,7 @@ def dim(spark):
         [(1, "London", "Gold"), (2, "NYC", "Silver"), (3, None, "Bronze")],
         "id long, city string, tier string",
     )
-    return scd2_init(snap, KEY, "2024-01-01")
+    return scd2_init(snap, "2024-01-01")
 
 
 def test_init_all_current(dim):

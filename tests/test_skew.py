@@ -41,16 +41,23 @@ def test_salted_join_rejects_right(spark, skewed):
         salted_join(big, small, on=["k"], how="right")
 
 
+def _forced_percent_rank(df, col, regime):
+    """Descending percent_rank from the rank scaffold with its regime
+    forced — SQL's (rank - 1) / (n - 1)."""
+    from kusuma_metamorph_etl_spark.operators.windows import _global_rank
+
+    rank, n = F.col("__rank"), F.col("__total")
+    return _global_rank(df, col, [], True, regime).withColumn(
+        "percent_rank", F.when(n > 1, (rank - 1) / (n - 1)).otherwise(0.0)
+    )
+
+
 def test_percent_rank_paths_agree_on_nan(spark):
     """Regression (r8 review): the range-partitioned path used to bucket
     NaN with the NULLs (bucket -1), flipping its rank position vs both
     the broadcast-map path and true PERCENT_RANK (Spark sorts NaN as the
-    LARGEST value).  Both regimes must agree on the same data."""
+    LARGEST value).  Every regime must agree on the same data."""
     from pyspark.sql import Window as W
-
-    from kusuma_metamorph_etl_spark.operators.windows import (
-        global_percent_rank,
-    )
 
     vals = [float(i) for i in range(500)] + [float("nan")] + [None] * 2
     df = spark.createDataFrame([(v,) for v in vals], "x double")
@@ -61,17 +68,15 @@ def test_percent_rank_paths_agree_on_nan(spark):
         ).collect()
         if r["x"] is not None
     }
-    for low_card in (True, False):
+    for regime in ("broadcast", "range", "distinct"):
         got = {
             ("nan" if r["x"] != r["x"] else r["x"]): r["percent_rank"]
-            for r in global_percent_rank(
-                df, "x", descending=True, low_cardinality=low_card
-            ).collect()
+            for r in _forced_percent_rank(df, "x", regime).collect()
             if r["x"] is not None
         }
-        assert abs(got["nan"] - truth["nan"]) < 1e-9, (low_card, got["nan"])
+        assert abs(got["nan"] - truth["nan"]) < 1e-9, (regime, got["nan"])
         for probe in (0.0, 250.0, 499.0):
-            assert abs(got[probe] - truth[probe]) < 1e-9, (low_card, probe)
+            assert abs(got[probe] - truth[probe]) < 1e-9, (regime, probe)
 
 
 def test_percent_rank_timestamp_input(spark):
@@ -81,10 +86,6 @@ def test_percent_rank_timestamp_input(spark):
     import datetime as dt
 
     from pyspark.sql import Window as W
-
-    from kusuma_metamorph_etl_spark.operators.windows import (
-        global_percent_rank,
-    )
 
     t0 = dt.datetime(2024, 6, 1)
     df = spark.createDataFrame(
@@ -98,9 +99,7 @@ def test_percent_rank_timestamp_input(spark):
     }
     got = {
         r["ts"]: r["percent_rank"]
-        for r in global_percent_rank(
-            df, "ts", descending=True, low_cardinality=False
-        ).collect()
+        for r in _forced_percent_rank(df, "ts", "range").collect()
     }
     for k in truth:
         assert abs(got[k] - truth[k]) < 1e-9
@@ -113,10 +112,6 @@ def test_percent_rank_hot_value_with_huge_distinct_tail(spark):
     regime ranks by value counts; values agree with PERCENT_RANK."""
     from pyspark.sql import Window as W
 
-    from kusuma_metamorph_etl_spark.operators.windows import (
-        _percent_rank_distinct_bucketed,
-    )
-
     # 5000 copies of the hot value + a 500-value distinct tail
     vals = [0.0] * 5000 + [float(i) for i in range(1, 501)]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
@@ -126,9 +121,103 @@ def test_percent_rank_hot_value_with_huge_distinct_tail(spark):
             "x", F.percent_rank().over(W.orderBy(F.desc("x"))).alias("pr")
         ).collect()
     }
-    out = _percent_rank_distinct_bucketed(df, "x", "percent_rank", True, 16)
+    out = _forced_percent_rank(df, "x", "distinct")
     got = {r["x"]: r["percent_rank"] for r in out.collect()}
     assert abs(got[0.0] - truth[0.0]) < 1e-9   # hot value: rank 500/(n-1)
     for probe in (1.0, 250.0, 500.0):
         assert abs(got[probe] - truth[probe]) < 1e-9, probe
     assert out.count() == len(vals)
+
+
+def _construction_jobs(spark, build):
+    """(result of ``build()``, Spark jobs it ran), counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rank construction")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rank_regime_follows_plan_then_one_probe(spark, monkeypatch):
+    """The rank regime comes from the plan, not the caller: a frame whose
+    size estimate fits the broadcast threshold takes the broadcast map
+    with no job; a larger one runs exactly one probe action, whose
+    distinct count and quantiles pick range (high distinct) or
+    distinct-bucketed (a hot value over a big tail)."""
+    from pyspark.sql import Window as W
+
+    from kusuma_metamorph_etl_spark.operators import windows
+
+    spread = spark.range(2000).select(F.col("id").cast("double").alias("x"))
+    hot = spark.createDataFrame(
+        [(0.0,)] * 3000 + [(float(i),) for i in range(1, 301)], "x double"
+    )
+
+    def choose(df):
+        return _construction_jobs(spark, lambda: windows._choose_regime(df, "x", 8))
+
+    (regime, _), jobs = choose(spread)
+    assert (regime, jobs) == ("broadcast", 0)
+    _, jobs = _construction_jobs(spark, lambda: windows.global_percent_rank(spread, "x"))
+    assert jobs == 0
+
+    monkeypatch.setattr(windows, "_BROADCAST_LIMIT", 100)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        _, one_action = _construction_jobs(
+            spark, lambda: spread.agg(F.count(F.lit(1))).first()
+        )
+        assert one_action > 0
+        (regime, bounds), jobs = choose(spread)
+        assert (regime, jobs) == ("range", one_action)
+        assert len(bounds) > 1
+        out, jobs = _construction_jobs(
+            spark, lambda: windows.global_percent_rank(spread, "x")
+        )
+        assert jobs == one_action
+        assert "windowspecdefinition(__bkt" in out._jdf.queryExecution().executedPlan().toString()
+        (regime, _), _ = choose(hot)
+        assert regime == "distinct"
+        truth = {
+            r["x"]: r["pr"]
+            for r in hot.select(
+                "x", F.percent_rank().over(W.orderBy(F.desc("x"))).alias("pr")
+            ).collect()
+        }
+        got = {r["x"]: r["percent_rank"] for r in windows.global_percent_rank(hot, "x").collect()}
+        assert got == truth
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_global_ntile_timestamp_range_regime(spark, probed_rank):
+    """global_ntile ranks a timestamp key in the range regime (quantile
+    bounds over its unix-micros shadow) and equals Spark's NTILE."""
+    import datetime as dt
+
+    from pyspark.sql import Window as W
+
+    from kusuma_metamorph_etl_spark.operators.windows import global_ntile
+
+    t0 = dt.datetime(2024, 6, 1)
+    df = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(minutes=i % 150)) for i in range(400)],
+        "i long, ts timestamp",
+    )
+    truth = {
+        r["i"]: r["nt"]
+        for r in df.select(
+            "i", F.ntile(7).over(W.orderBy("ts", "i")).alias("nt")
+        ).collect()
+    }
+    out = global_ntile(df, "ts", [F.asc("i")], 7, "nt")
+    assert "windowspecdefinition(__bkt" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.columns == ["i", "ts", "nt"]
+    assert {r["i"]: r["nt"] for r in out.collect()} == truth
