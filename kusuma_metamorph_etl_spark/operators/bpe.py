@@ -6,119 +6,62 @@ Training-data pipelines need actual tokenization for budget accounting
 (`sampling.py::pack_sequences` packs by token count) and for length
 filtering that matches what the downstream model will see.
 
-Scale split, same pattern as `similarity.py::ivf_build`:
-* TRAIN is a bounded driver-side loop over an aggregated word-frequency
-  table (the corpus reduces to ≤ ``max_words`` (word, count) rows — at
-  100 TB that aggregation is one shuffle; the merge loop itself touches
-  only the tiny frequency dict).
-* ENCODE is distributed: merges broadcast inside an Arrow-batched pandas
-  UDF; cost is per-token and embarrassingly parallel.
-
-Determinism: pair ties break lexicographically, so the same sample yields
-the same vocabulary on every run/platform — required for the
-oracle-gated round-trip query.
+Scale split, word format and determinism: `subword.py` docstring.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kusuma_metamorph_etl_spark.operators import subword
 
 # Marks the end of each word so merges never cross word boundaries and
 # decoding can restore the original whitespace split losslessly.
 END = "▁"  # LOWER ONE EIGHTH BLOCK, the sentencepiece convention
 
 
+def _most_frequent(pairs: Counter, sym_counts: Counter) -> subword.Pair | None:
+    """BPE's selection rule: the most frequent pair seen at least twice,
+    ties to the lexicographically smallest pair."""
+    return min(((-c, p) for p, c in pairs.items() if c >= 2), default=(0, None))[1]
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 256,
-    max_words: int = 5000,
 ) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges from the corpus word-frequency table.
-
-    The distributed part is one tokenize+count aggregation truncated to
-    the ``max_words`` most frequent words (a bounded collect — rare-tail
-    words contribute negligible pair mass); the merge loop is classic
-    driver-side BPE over that dict.
-    """
-    from kusuma_metamorph_etl_spark.operators.text import words
-
-    rows = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("w"))
-        .limit(max_words)
-        .collect()
+    """Learn ``n_merges`` BPE merges from the corpus word-frequency table
+    (:func:`subword.word_counts`): classic driver-side BPE, END-terminated
+    words, most frequent pair first."""
+    table = subword.word_counts(df, text_col)
+    return subword.learn_merges(
+        [list(w) + [END] for w, _ in table],
+        [c for _, c in table],
+        n_merges,
+        _most_frequent,
+        lambda a, b: a + b,
     )
-    # words as mutable symbol lists + incremental pair bookkeeping: each
-    # merge touches ONLY the words containing the merged pair (via the
-    # pair→word index), so the loop costs O(occurrences of merged pairs)
-    # instead of the textbook recount's O(n_merges × total vocabulary
-    # chars) — the difference that matters at max_words=5000 real-text
-    # vocabularies (the test corpus has ~31 distinct words, where both are
-    # sub-second; the Spark word-count job dominates either way).  Merge
-    # order is pinned identical to the naive recount in tests/test_bpe.py.
-    words_syms: list[list[str]] = [list(r["w"]) + [END] for r in rows]
-    word_counts: list[int] = [r["c"] for r in rows]
-    pairs: Counter = Counter()
-    index: dict[tuple[str, str], set[int]] = {}
-    for wi, syms in enumerate(words_syms):
-        c = word_counts[wi]
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            pairs[p] += c
-            index.setdefault(p, set()).add(wi)
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        if not pairs:
-            break
-        # max count, ties to the lexicographically smallest pair —
-        # deterministic across runs and platforms
-        pair, freq = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if freq < 2:
-            break
-        merges.append(pair)
-        merged = pair[0] + pair[1]
-        for wi in sorted(index.get(pair, ())):
-            syms, c = words_syms[wi], word_counts[wi]
-            # retract this word's old pair contributions
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pairs[p] -= c
-                if pairs[p] <= 0:
-                    del pairs[p]
-                if p != pair:
-                    idx = index.get(p)
-                    if idx is not None:
-                        idx.discard(wi)
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and (syms[i], syms[i + 1]) == pair:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            words_syms[wi] = out
-            # add the rewritten word's contributions back
-            for i in range(len(out) - 1):
-                p = (out[i], out[i + 1])
-                pairs[p] += c
-                index.setdefault(p, set()).add(wi)
-        index.pop(pair, None)
-    return merges
 
 
 def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     """Greedy lowest-rank-first BPE encode of one word (the standard
-    inference algorithm: repeatedly merge the best-ranked adjacent pair)."""
+    inference algorithm: repeatedly merge the best-ranked adjacent pair).
+
+    A word containing the END sentinel is REJECTED: decode maps every
+    END to a space, so encoding it would make the round trip silently
+    lossy.  The sentinel is a block-drawing codepoint real text corpora
+    do not contain; a corpus that does needs a different sentinel, not
+    silent corruption."""
+    if END in word:
+        raise ValueError(
+            f"bpe_encode: input contains the END sentinel {END!r}; "
+            "round-trip would be lossy — pre-clean the corpus or "
+            "choose a different sentinel"
+        )
     parts = list(word) + [END]
     while len(parts) > 1:
         best_rank, best_i = None, None
@@ -138,50 +81,10 @@ def bpe_encode(
     text_col: str = "text",
     out_col: str = "tokens",
 ) -> DataFrame:
-    """Distributed encode: tokens as ``array<string>`` via an Arrow-batched
-    pandas UDF; the merge table ships once in the UDF closure (broadcast
-    by Spark's task serialization — it is KBs).
-
-    Input containing the END sentinel is REJECTED (raised, task fails):
-    decode maps every END to a space, so encoding it would make the
-    round-trip silently lossy.  The sentinel is a block-drawing codepoint
-    real text corpora do not contain; a corpus that does needs a
-    different sentinel, not silent corruption.  Word splitting uses the
-    same ``[\\t\\n\\f\\r ]+`` class as :func:`~.text.words` / the oracle
-    regex — NOT Python ``str.split()``, whose Unicode whitespace (NBSP,
-    vertical tab, …) would disagree with the training tokenization.
-    Implemented as ``str.translate`` (fold the other four class chars to
-    space) + ``split(" ")`` + drop-empties, which is character-exact to
-    the regex split but stays in C — the regex formulation cost ~0.4 s
-    of the 1.5 s sf0.1 bench row (BENCH r6→r7; re-proved isolated A/B
-    in r8).
-    """
+    """Distributed encode (:func:`subword.encode`) with the merge table
+    as ranks."""
     ranks = {pair: i for i, pair in enumerate(merges)}
-    fold_ws = str.maketrans("\t\n\f\r", "    ")
-
-    @F.pandas_udf("array<string>")
-    def enc(texts: pd.Series) -> pd.Series:
-        def one(t: str) -> list[str]:
-            if t is None:
-                # NULL text passes through as NULL tokens — Series.map
-                # hands None to the fn, it is not auto-skipped (same
-                # contract as unigram_encode)
-                return None
-            if END in t:
-                raise ValueError(
-                    f"bpe_encode: input contains the END sentinel {END!r}; "
-                    "round-trip would be lossy — pre-clean the corpus or "
-                    "choose a different sentinel"
-                )
-            out: list[str] = []
-            for w in t.translate(fold_ws).split(" "):
-                if w:
-                    out.extend(encode_word(w, ranks))
-            return out
-
-        return texts.map(one)
-
-    return df.withColumn(out_col, enc(F.col(text_col)))
+    return subword.encode(df, lambda w: encode_word(w, ranks), text_col, out_col)
 
 
 def bpe_decode(tokens: Column) -> Column:

@@ -6,13 +6,7 @@ large seed of candidate pieces and PRUNES to the target size under an
 EM-estimated piece language model; encoding is Viterbi-optimal
 segmentation instead of greedy merge replay.
 
-Scale split — identical to BPE's (and `similarity.py::ivf_build`):
-
-* TRAIN is a bounded driver-side loop over the aggregated word-frequency
-  table (corpus → ≤ ``max_words`` (word, count) rows in one shuffle;
-  seeding and EM touch only that dict).
-* ENCODE is distributed: the piece table ships in an Arrow-batched
-  pandas UDF closure; per-word Viterbi is O(len × max_piece_len).
+Scale split and word format: `subword.py` docstring.
 
 Simplifications, declared: hard (Viterbi) EM rather than full
 forward-backward expectation — the M-step counts each word's single best
@@ -29,11 +23,9 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.operators import subword
 from kusuma_metamorph_etl_spark.operators.bpe import END
 
 # Log-prob assigned to out-of-vocabulary single characters at encode
@@ -42,19 +34,11 @@ from kusuma_metamorph_etl_spark.operators.bpe import END
 # character-coverage idea).
 UNK_LOGP = -100.0
 
-
-def _word_counts(df: DataFrame, text_col: str, max_words: int):
-    from kusuma_metamorph_etl_spark.operators.text import words
-
-    rows = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("w"))
-        .limit(max_words)
-        .collect()
-    )
-    return [(r["w"], r["c"]) for r in rows]
+# Training shape: seed pieces up to MAX_PIECE_LEN chars, keep
+# SEED_FACTOR x vocab_size seed candidates, run EM_ITERS hard-EM rounds.
+MAX_PIECE_LEN = 8
+SEED_FACTOR = 8
+EM_ITERS = 3
 
 
 def viterbi_segment(word: str, logp: dict[str, float], max_len: int) -> list[str]:
@@ -97,92 +81,69 @@ def unigram_train(
     df: DataFrame,
     text_col: str = "text",
     vocab_size: int = 512,
-    max_words: int = 5000,
-    max_piece_len: int = 8,
-    em_iters: int = 3,
-    seed_factor: int = 8,
 ) -> dict[str, float]:
     """Learn a unigram piece vocabulary: ``{piece: log-prob}``.
 
-    Seed = every substring (≤ ``max_piece_len``) of the frequent words,
-    count-weighted, truncated to ``seed_factor × vocab_size`` candidates
+    Seed = every substring (≤ ``MAX_PIECE_LEN``) of the frequent words,
+    count-weighted, truncated to ``SEED_FACTOR × vocab_size`` candidates
     (single characters always kept — the losslessness floor); then
-    ``em_iters`` rounds of hard EM: Viterbi-segment every word under the
+    ``EM_ITERS`` rounds of hard EM: Viterbi-segment every word under the
     current model, recount pieces from the segmentations, re-normalize,
     and prune count-ranked toward ``vocab_size`` (ties lexicographic, so
     the vocabulary is deterministic across runs/platforms).
     """
-    wc = _word_counts(df, text_col, max_words)
+    wc = subword.word_counts(df, text_col)
     seed: Counter = Counter()
     chars: set[str] = set()
     for w, c in wc:
         for i in range(len(w)):
             chars.add(w[i])
-            for j in range(i + 1, min(i + max_piece_len, len(w)) + 1):
+            for j in range(i + 1, min(i + MAX_PIECE_LEN, len(w)) + 1):
                 seed[w[i:j]] += c
-    keep_n = max(seed_factor * vocab_size, len(chars))
+    keep_n = max(SEED_FACTOR * vocab_size, len(chars))
     ranked = sorted(seed.items(), key=lambda kv: (-kv[1], kv[0]))
-    vocab_counts = dict(ranked[:keep_n])
-    for ch in chars:
-        vocab_counts.setdefault(ch, seed[ch])
+    vocab_counts = {ch: seed[ch] for ch in chars} | dict(ranked[:keep_n])
 
     def normalize(counts: dict[str, int]) -> dict[str, float]:
         total = sum(counts.values())
         return {p: math.log(c / total) for p, c in counts.items() if c > 0}
 
     logp = normalize(vocab_counts)
-    for it in range(em_iters):
+    for it in range(EM_ITERS):
         counts: Counter = Counter()
         for w, c in wc:
-            for piece in viterbi_segment(w, logp, max_piece_len):
+            for piece in viterbi_segment(w, logp, MAX_PIECE_LEN):
                 counts[piece] += c
         # prune toward vocab_size: linear schedule, single chars immune
         target = max(
             vocab_size,
-            int(len(logp) - (len(logp) - vocab_size) * (it + 1) / em_iters),
+            int(len(logp) - (len(logp) - vocab_size) * (it + 1) / EM_ITERS),
         )
         ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        kept = dict(ranked[:target])
-        for ch in chars:
-            kept.setdefault(ch, max(counts.get(ch, 0), 1))
-        logp = normalize(kept)
+        floor = {ch: max(counts.get(ch, 0), 1) for ch in chars}
+        logp = normalize(floor | dict(ranked[:target]))
     return logp
 
 
 def unigram_encode(
     df: DataFrame,
     logp: dict[str, float],
-    max_piece_len: int = 8,
     text_col: str = "text",
     out_col: str = "tokens",
 ) -> DataFrame:
-    """Distributed Viterbi encode: ``array<string>`` pieces with one END
-    sentinel token appended per word (so `bpe.bpe_decode` inverts both
-    tokenizers identically).  Same whitespace class, END-rejection
-    contract, and C-speed translate+split formulation as
-    `bpe.bpe_encode` (the regex split cost ~25% of the bench row)."""
-    fold_ws = str.maketrans("\t\n\f\r", "    ")
+    """Distributed Viterbi encode (:func:`subword.encode`): pieces with
+    one END sentinel token appended per word (so `bpe.bpe_decode`
+    inverts both tokenizers identically).  The Viterbi window is the
+    longest trained piece, so no candidate span is ever skipped.  Input
+    containing END is rejected, as in `bpe.encode_word`."""
+    max_len = max(map(len, logp), default=1)
 
-    @F.pandas_udf("array<string>")
-    def enc(texts: pd.Series) -> pd.Series:
-        def one(t: str) -> list[str]:
-            if t is None:
-                # NULL text passes through as NULL tokens (routine in
-                # crawl corpora) — Series.map hands None to the fn, it
-                # is not auto-skipped
-                return None
-            if END in t:
-                raise ValueError(
-                    f"unigram_encode: input contains the END sentinel "
-                    f"{END!r}; round-trip would be lossy"
-                )
-            out: list[str] = []
-            for w in t.translate(fold_ws).split(" "):
-                if w:
-                    out.extend(viterbi_segment(w, logp, max_piece_len))
-                    out.append(END)
-            return out
+    def encode_word(w: str) -> list[str]:
+        if END in w:
+            raise ValueError(
+                f"unigram_encode: input contains the END sentinel "
+                f"{END!r}; round-trip would be lossy"
+            )
+        return viterbi_segment(w, logp, max_len) + [END]
 
-        return texts.map(one)
-
-    return df.withColumn(out_col, enc(F.col(text_col)))
+    return subword.encode(df, encode_word, text_col, out_col)

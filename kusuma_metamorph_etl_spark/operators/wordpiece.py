@@ -1,8 +1,9 @@
 """[EXT] WordPiece: the third REAL trainable subword tokenizer next to
 :mod:`bpe` (merge-frequency criterion) and :mod:`unigram` (likelihood
 pruning) — the BERT-family algorithm (Schuster & Nakajima 2012; Wu et
-al. 2016 §4.1).  Two things distinguish it from BPE and justify a
-separate implementation rather than a flag:
+al. 2016 §4.1).  It shares BPE's scaffold (`subword.py`: word table,
+merge loop, encode UDF, round-trip gate); what differs is the selection
+rule and the encoder:
 
 * TRAINING picks the merge maximizing the LIKELIHOOD RATIO
   ``count(ab) / (count(a) * count(b))`` — "merge the pair that is most
@@ -14,13 +15,10 @@ separate implementation rather than a flag:
   emitted, continuation pieces carry the ``##`` prefix, and a word with
   any uncovered character becomes ``[UNK]`` wholesale.
 
-Scale split is the shared tokenizer pattern (`bpe.py` docstring): TRAIN
-is a bounded driver loop over the aggregated (word, count) table — one
-shuffle at any corpus size — plus one tiny distinct-character pass that
-seeds the vocabulary with the corpus alphabet (so encoding the training
-corpus never hits ``[UNK]`` and the round-trip gate is exact); ENCODE is
-distributed via an Arrow-batched pandas UDF with the vocabulary in the
-task closure (KBs).
+Scale split and word format: `subword.py` docstring.  Training adds one
+tiny distinct-character pass that seeds the vocabulary with the corpus
+alphabet, so encoding the training corpus never hits ``[UNK]`` and the
+round-trip gate is exact.
 
 Determinism: scores compare as exact rationals (no float ties), ties
 break on the lexicographically smallest pair — same contract as
@@ -32,10 +30,10 @@ from __future__ import annotations
 from collections import Counter
 from fractions import Fraction
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kusuma_metamorph_etl_spark.operators import subword
 
 CONT = "##"
 UNK = "[UNK]"
@@ -52,123 +50,60 @@ def _merge_symbols(a: str, b: str) -> str:
     return a + (b[len(CONT) :] if b.startswith(CONT) else b)
 
 
+def _best_ratio(pairs: Counter, sym_counts: Counter) -> subword.Pair | None:
+    """WordPiece's selection rule: the highest likelihood ratio
+    ``count(ab) / (count(a) * count(b))`` among pairs seen at least
+    twice, as an exact rational; ties to the smallest pair."""
+    scored = (
+        (Fraction(-cp, sym_counts[p[0]] * sym_counts[p[1]]), p)
+        for p, cp in pairs.items()
+        if cp >= 2
+    )
+    return min(scored, default=(None, None))[1]
+
+
 def wordpiece_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 256,
-    max_words: int = 5000,
 ) -> list[str]:
     """Learn a WordPiece vocabulary: corpus alphabet (bare + ## forms of
     every distinct character — full corpus, not just the truncated word
     table, so training-corpus coverage is total) plus ``n_merges``
-    likelihood-ratio merges over the ``max_words`` most frequent words.
-    Returns the vocabulary list (alphabet sorted, then merges in
-    creation order)."""
+    likelihood-ratio merges over the word table
+    (:func:`subword.word_counts`).  Returns the vocabulary list
+    (alphabet sorted, then merges in creation order)."""
     from kusuma_metamorph_etl_spark.operators.text import words
 
-    word_rows = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("w"))
-        .limit(max_words)
-        .collect()
+    table = subword.word_counts(df, text_col)
+    chars = F.explode(F.split(F.concat_ws("", words(F.col(text_col))), ""))
+    alpha = df.select(chars.alias("ch")).filter(F.col("ch") != "").distinct()
+    # bound: one row per distinct character of the corpus
+    alphabet = sorted(r["ch"] for r in alpha.collect())
+    merges = subword.learn_merges(
+        [_word_symbols(w) for w, _ in table],
+        [c for _, c in table],
+        n_merges,
+        _best_ratio,
+        _merge_symbols,
     )
-    # corpus alphabet: distinct characters over ALL words (bounded by
-    # the alphabet, not the corpus — one explode+distinct aggregation)
-    alpha_rows = (
-        df.select(
-            F.explode(
-                F.split(F.concat_ws("", words(F.col(text_col))), "")
-            ).alias("ch")
-        )
-        .filter(F.col("ch") != "")
-        .distinct()
-        .collect()
-    )
-    alphabet = sorted(r["ch"] for r in alpha_rows)
 
-    words_syms = [_word_symbols(r["w"]) for r in word_rows]
-    word_counts = [r["c"] for r in word_rows]
-    pairs: Counter = Counter()
-    sym_counts: Counter = Counter()
-    index: dict[tuple[str, str], set[int]] = {}
-    for wi, syms in enumerate(words_syms):
-        c = word_counts[wi]
-        for s in syms:
-            sym_counts[s] += c
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            pairs[p] += c
-            index.setdefault(p, set()).add(wi)
-
-    merges: list[str] = []
-    for _ in range(n_merges):
-        best, best_score = None, None
-        for p, cp in pairs.items():
-            if cp < 2:
-                continue
-            score = Fraction(cp, sym_counts[p[0]] * sym_counts[p[1]])
-            if (
-                best_score is None
-                or score > best_score
-                or (score == best_score and p < best)
-            ):
-                best, best_score = p, score
-        if best is None:
-            break
-        merged = _merge_symbols(*best)
-        merges.append(merged)
-        for wi in sorted(index.get(best, ())):
-            syms, c = words_syms[wi], word_counts[wi]
-            for s in syms:
-                sym_counts[s] -= c
-                if sym_counts[s] <= 0:
-                    del sym_counts[s]
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pairs[p] -= c
-                if pairs[p] <= 0:
-                    del pairs[p]
-                if p != best:
-                    idx = index.get(p)
-                    if idx is not None:
-                        idx.discard(wi)
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and (syms[i], syms[i + 1]) == best:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            words_syms[wi] = out
-            for s in out:
-                sym_counts[s] += c
-            for i in range(len(out) - 1):
-                p = (out[i], out[i + 1])
-                pairs[p] += c
-                index.setdefault(p, set()).add(wi)
-        index.pop(best, None)
-
-    vocab: list[str] = []
-    seen = set()
-    for ch in alphabet:
-        for form in (ch, CONT + ch):
-            if form not in seen:
-                seen.add(form)
-                vocab.append(form)
-    for m in merges:
-        if m not in seen:
-            seen.add(m)
-            vocab.append(m)
-    return vocab
+    alphabet_forms = [form for ch in alphabet for form in (ch, CONT + ch)]
+    return list(dict.fromkeys(alphabet_forms + [_merge_symbols(*p) for p in merges]))
 
 
 def encode_word(word: str, vocab: set[str]) -> list[str]:
     """Greedy longest-match-first WordPiece encode of one word; a word
     with any uncovered span becomes ``[UNK]`` wholesale (BERT
-    semantics)."""
+    semantics).  A word literally beginning with ``##`` is REJECTED: its
+    bare piece would decode as a continuation, so the round trip would
+    be silently lossy (the bpe END-sentinel contract)."""
+    if word.startswith(CONT):
+        raise ValueError(
+            f"wordpiece_encode: word {word!r} starts with the continuation marker "
+            f"{CONT!r}; round-trip would be lossy — pre-clean the corpus or "
+            "choose a different marker"
+        )
     pieces: list[str] = []
     start = 0
     while start < len(word):
@@ -192,39 +127,9 @@ def wordpiece_encode(
     text_col: str = "text",
     out_col: str = "tokens",
 ) -> DataFrame:
-    """Distributed longest-match encode (Arrow-batched pandas UDF; the
-    vocabulary ships once in the task closure).  Word splitting uses the
-    same ``[\\t\\n\\f\\r ]+`` class as training / the oracle regex — the
-    `bpe_encode` contract, including the C-speed translate+split
-    formulation.  NULL text passes through as NULL tokens."""
+    """Distributed longest-match encode (:func:`subword.encode`)."""
     vset = set(vocab)
-    fold_ws = str.maketrans("\t\n\f\r", "    ")
-
-    @F.pandas_udf("array<string>")
-    def enc(texts: pd.Series) -> pd.Series:
-        def one(t: str):
-            if t is None:
-                return None
-            out: list[str] = []
-            for w in t.translate(fold_ws).split(" "):
-                if w.startswith(CONT):
-                    # a word literally beginning with "##" would emit a
-                    # bare piece decode() must misread as a continuation
-                    # — fail LOUDLY instead of silently corrupting the
-                    # round-trip (the bpe END-sentinel contract)
-                    raise ValueError(
-                        f"wordpiece_encode: word {w!r} starts with the "
-                        f"continuation marker {CONT!r}; round-trip would "
-                        "be lossy — pre-clean the corpus or choose a "
-                        "different marker"
-                    )
-                if w:
-                    out.extend(encode_word(w, vset))
-            return out
-
-        return texts.map(one)
-
-    return df.withColumn(out_col, enc(F.col(text_col)))
+    return subword.encode(df, lambda w: encode_word(w, vset), text_col, out_col)
 
 
 def wordpiece_decode(tokens: Column) -> Column:

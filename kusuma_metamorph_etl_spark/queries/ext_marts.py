@@ -455,7 +455,7 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere.  Funded by consolidating `txt_fingerprint` +
     `txt_rolling_fingerprint` → `txt_fingerprint_family` under the
     retire-one policy."""
-    from kusuma_metamorph_etl_spark.operators import bpe
+    from kusuma_metamorph_etl_spark.operators import bpe, subword
 
     docs = t(spark, sf_dir, "documents")
     canon = docs.select(
@@ -483,7 +483,6 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merges = bpe.bpe_train(sampled, n_merges=200)
     encoded = bpe.bpe_encode(sampled, merges)
-    normalized = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     # r18 (guide §1.2 step 1 / §5): pack_sequences reads its input on
     # THREE plan paths — the quantile-bounds action, the in-bucket cumsum
     # branch, and the bucket-offsets broadcast branch — and each re-ran
@@ -494,8 +493,7 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "decide with small rows" shape) runs the encode exactly once per
     # invocation.
     gated = share(
-        encoded.withColumn("__norm", normalized)
-        .filter(bpe.bpe_decode(F.col("tokens")) == F.col("__norm"))
+        subword.lossless(encoded, bpe.bpe_decode(F.col("tokens")))
         .select(
             "doc_id",
             "source",

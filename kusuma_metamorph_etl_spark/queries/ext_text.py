@@ -4,9 +4,9 @@ fingerprints, chunking) — split from ``ext.py`` (r13)."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from kusuma_metamorph_etl_spark.operators import text
+from kusuma_metamorph_etl_spark.operators import subword, text
 from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
@@ -667,6 +667,16 @@ def txt_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(text.scrub_pii(F.col("text"))).alias("scrub_fp"),
     )
 
+def _roundtrip_lengths(encoded: DataFrame, decoded: Column) -> DataFrame:
+    """The tokenizer round-trip rows' output: the docs that pass the
+    lossless gate, with the length of their space-trimmed, run-collapsed
+    text — the oracle's ``regexp_replace(trim(text), '\\s+', ' ')``
+    (``trim`` strips only spaces on both engines)."""
+    normalized = F.regexp_replace(F.trim("text"), subword.WS_RUN, " ")
+    return subword.lossless(encoded, decoded).select(
+        "doc_id", F.length(normalized).cast("long").alias("n_norm_chars")
+    )
+
 @register(
     "txt_bpe_roundtrip",
     r"""SELECT doc_id,
@@ -685,16 +695,8 @@ def txt_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kusuma_metamorph_etl_spark.operators import bpe
 
     docs = t(spark, sf_dir, "documents")
-    merges = bpe.bpe_train(docs, n_merges=200)
-    encoded = bpe.bpe_encode(docs, merges)
-    normalized = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    return (
-        encoded.withColumn("__norm", normalized)
-        .filter(bpe.bpe_decode(F.col("tokens")) == F.col("__norm"))
-        .select(
-            "doc_id", F.length("__norm").cast("long").alias("n_norm_chars")
-        )
-    )
+    encoded = bpe.bpe_encode(docs, bpe.bpe_train(docs, n_merges=200))
+    return _roundtrip_lengths(encoded, bpe.bpe_decode(F.col("tokens")))
 
 @register(
     "txt_char_entropy",
@@ -867,16 +869,8 @@ def txt_unigram_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kusuma_metamorph_etl_spark.operators import bpe, unigram
 
     docs = t(spark, sf_dir, "documents")
-    logp = unigram.unigram_train(docs, vocab_size=512)
-    encoded = unigram.unigram_encode(docs, logp)
-    normalized = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    return (
-        encoded.withColumn("__norm", normalized)
-        .filter(bpe.bpe_decode(F.col("tokens")) == F.col("__norm"))
-        .select(
-            "doc_id", F.length("__norm").cast("long").alias("n_norm_chars")
-        )
-    )
+    encoded = unigram.unigram_encode(docs, unigram.unigram_train(docs, vocab_size=512))
+    return _roundtrip_lengths(encoded, bpe.bpe_decode(F.col("tokens")))
 
 @register(
     "txt_fix_mojibake",
@@ -982,16 +976,8 @@ def txt_wordpiece_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kusuma_metamorph_etl_spark.operators import wordpiece as wp
 
     docs = t(spark, sf_dir, "documents")
-    vocab = wp.wordpiece_train(docs, n_merges=200)
-    encoded = wp.wordpiece_encode(docs, vocab)
-    normalized = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    return (
-        encoded.withColumn("__norm", normalized)
-        .filter(wp.wordpiece_decode(F.col("tokens")) == F.col("__norm"))
-        .select(
-            "doc_id", F.length("__norm").cast("long").alias("n_norm_chars")
-        )
-    )
+    encoded = wp.wordpiece_encode(docs, wp.wordpiece_train(docs, n_merges=200))
+    return _roundtrip_lengths(encoded, wp.wordpiece_decode(F.col("tokens")))
 
 
 @register(

@@ -19,6 +19,8 @@ ALLOWED = {
     ("streaming/stateful.py", "handle", "key"),
     # the registry calls every query as fn(spark, sf_dir)
     ("queries/core.py", "src_inline_schema", "sf_dir"),
+    # subword.learn_merges calls every selection rule as pick(pairs, sym_counts)
+    ("operators/bpe.py", "_most_frequent", "sym_counts"),
 }
 
 

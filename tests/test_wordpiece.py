@@ -55,13 +55,16 @@ def test_roundtrip_lossless_on_corpus(spark, sf_small):
     assert stats["t"] < stats["c"]  # merges actually compress
 
 
-def test_training_alphabet_covers_corpus_no_unk(spark):
+def test_training_alphabet_covers_corpus_no_unk(spark, monkeypatch):
     """Vocabulary seeds from the FULL corpus alphabet (not the truncated
     word table), so encoding the training corpus never yields [UNK] —
-    even for words too rare to make the max_words cut."""
+    even for words too rare to make the MAX_WORDS cut."""
+    from kusuma_metamorph_etl_spark.operators import subword
+
+    monkeypatch.setattr(subword, "MAX_WORDS", 1)
     rows = [("common common common rareøword",)]
     df = spark.createDataFrame(rows, ["text"])
-    vocab = wp.wordpiece_train(df, n_merges=5, max_words=1)
+    vocab = wp.wordpiece_train(df, n_merges=5)
     toks = (
         wp.wordpiece_encode(df, vocab).select("tokens").first()["tokens"]
     )
