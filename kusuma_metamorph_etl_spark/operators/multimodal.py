@@ -1,8 +1,16 @@
 """[EXT] Multimodal columns (SURVEY.md §2.10 north-star).
 
 Images/audio/video ride through the engine as opaque ``binary`` columns
-with typed metadata; decode / feature-extract / resize / frame-sample run
-as Arrow-batched Pandas functions over ``mapInPandas``.
+with typed metadata.  Every Python pass over them goes through one of two
+seams; each format contributes only its own synthesize / decode / per-row
+function:
+
+* :func:`attach_payload` — the one ``pandas_udf("binary")``: text column
+  → ``payload`` (``synth(text)``) plus a ``payload_kind`` tag;
+* :func:`map_payloads` — the one ``mapInPandas``: ``(id, payload)`` →
+  zero or more typed rows per payload, the id carried with its input name
+  and type.  Feature extraction, resize, video frame walks, augmentation
+  and transcoding are row functions over it.
 
 The image and audio codecs are REAL: pure numpy encoders/decoders for
 binary PPM/PGM (P6/P5), BMP (24/32-bit BI_RGB, 8-bit palettized,
@@ -41,11 +49,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kusuma_metamorph_etl_spark.plans.share import share
 
 FEATURE_SCHEMA = (
-    "doc_id long, format string, width int, height int, channels int, "
+    "format string, width int, height int, channels int, "
     "n_bytes long, mean_value double, content_md5 string"
 )
 
@@ -57,18 +66,12 @@ def _fan_out(df: DataFrame, heavy: bool = False) -> DataFrame:
     UNDER-split inputs up to it (a repartition SHUFFLE of the payload
     bytes).
 
-    Why the ``heavy`` gate (r14 fresh-JVM A/B at sf0.1, closing the r13
-    VERDICT #3 finding that the fan-up was only A/B'd on one row):
-
-    * `mm_jpeg_arithmetic` (QM arithmetic codec, genuinely CPU-bound
-      per row): fan-up 1.5 s vs 16.5 s without — the win the fan-up
-      exists for.  Such stages pass ``heavy=True``.
-    * every cheap/moderate stage measured — `mm_binary_features`
-      (UTF-8 attach + PPM header parse) 0.70 s vs 1.21 s WITH fan-up,
-      `mm_phash_dedup` 2.38 vs 3.07, `mm_transcode` 4.8 vs 7.0,
-      `mm_video_frames` 0.98 vs 1.27 — the repartition shuffle of
-      payload bytes costs more than the single-split codec work it
-      parallelizes.  Default ``heavy=False`` skips the fan-up.
+    Why the ``heavy`` gate: a repartition of payload bytes costs more
+    than the single-split codec work it parallelizes for every cheap or
+    moderate stage (header parses, PNG/PPM codecs, pHash, Y4M walks), so
+    the default skips the fan-up; genuinely CPU-bound codecs (full JPEG
+    encode/decode, the QM arithmetic coder) pass ``heavy=True``.  The
+    measurements behind the gate are in OPTIMIZATION_r19.md.
 
     At 100 TB a scan yields thousands of splits, the fan-up is a no-op
     either way, and only the coalesce matters (format-branching unions
@@ -83,6 +86,67 @@ def _fan_out(df: DataFrame, heavy: bool = False) -> DataFrame:
     if n > target * 2:
         return df.coalesce(target)
     return df
+
+
+def attach_payload(
+    df: DataFrame,
+    synth: Callable[[str], bytes],
+    kind: str,
+    text_col: str = "text",
+    heavy: bool = False,
+) -> DataFrame:
+    """Synthesized payload column: ``payload = synth(text)`` through one
+    Arrow-batched pandas UDF, tagged ``payload_kind = kind``.  Options of
+    a synthesizer ride in with :func:`functools.partial`, e.g.
+    ``attach_payload(docs, partial(synthesize_png, interlace=True),
+    "image/png")``; ``heavy`` is for CPU-bound synthesizers (JPEG)."""
+
+    def make_payload(texts: pd.Series) -> pd.Series:
+        return texts.map(synth)
+
+    # Named after the synthesizer so each one reads apart in a plan.
+    make_payload.__name__ = getattr(synth, "func", synth).__name__
+    make = F.pandas_udf("binary")(make_payload)
+    return (
+        _fan_out(df, heavy)
+        .withColumn("payload", make(F.col(text_col)))
+        .withColumn("payload_kind", F.lit(kind))
+    )
+
+
+def map_payloads(
+    df: DataFrame,
+    rows_of: Callable[[bytes], list[Any]],
+    schema: str,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+    heavy: bool = False,
+) -> DataFrame:
+    """The one Arrow ``mapInPandas`` over binary payloads: each payload
+    becomes ``rows_of(payload)`` — a list of rows, each a tuple in
+    ``schema`` order or a dict keyed by ``schema`` names — and its id is
+    repeated once per row.  ``schema`` (DDL) lists the columns after the
+    id; the id keeps its input name and type, so string record ids work
+    as well as ``long`` doc ids.  Only ``(id, payload)`` enter the
+    Python boundary; ``heavy`` is the `_fan_out` fan-up for CPU-bound
+    row functions."""
+    fields = T.StructType.fromDDL(schema)
+    names = fields.fieldNames()
+    out_schema = T.StructType(
+        [T.StructField(id_col, df.schema[id_col].dataType), *fields]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            per = [rows_of(p) for p in batch[payload_col]]
+            out = pd.DataFrame([r for rows in per for r in rows], columns=names)
+            out.insert(
+                0, id_col, np.repeat(batch[id_col].values, [len(r) for r in per])
+            )
+            yield out
+
+    narrow = _fan_out(df.select(id_col, payload_col), heavy)
+    return narrow.mapInPandas(run, schema=out_schema)
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -141,7 +205,7 @@ def _decode_ppm(payload: bytes) -> np.ndarray:
     if not 1 <= maxval <= 65535:
         raise ValueError(f"PPM/PGM maxval {maxval} outside the spec range")
     # Netpbm sample width follows maxval: one byte up to 255, two bytes
-    # big-endian above (r12 — the 8-bit-only gate graduated).  Samples
+    # big-endian above.  Samples
     # present RAW at file depth; no rescaling.
     if maxval > 255:
         data = np.frombuffer(
@@ -210,7 +274,7 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     bpp = struct.unpack_from("<H", payload, 28)[0]
     compression = struct.unpack_from("<I", payload, 30)[0]
     if header_size >= 40 and bpp == 8 and compression in (0, 1):
-        # Palettized 8-bit, uncompressed (BI_RGB) or BI_RLE8 (r12):
+        # Palettized 8-bit, uncompressed (BI_RGB) or BI_RLE8:
         # biClrUsed BGRX entries follow the info header (0 → 256).
         bottom_up = h > 0
         h = abs(h)
@@ -238,7 +302,7 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     rows = np.frombuffer(
         payload, dtype=np.uint8, count=row_size * h, offset=data_offset
     ).reshape(h, row_size)
-    # 24-bit: BGR → RGB.  32-bit BI_RGB (r12): the fourth byte is the
+    # 24-bit: BGR → RGB.  32-bit BI_RGB: the fourth byte is the
     # spec's "reserved" pad under BITMAPINFOHEADER, dropped like every
     # mainstream decoder does — BGRX → RGB.
     arr = rows[:, : w * ch].reshape(h, w, ch)[:, :, 2::-1]
@@ -338,9 +402,9 @@ def encode_png(
         raise ValueError(f"unsupported PNG bit depth {depth}")
     if depth is None:
         depth = 16 if src.dtype == np.uint16 else 8
-    # honor an EXPLICIT depth (r11 ADVICE: it used to be silently
-    # re-derived from dtype): uint8 → depth 16 widens value-preserving;
-    # uint16 → depth 8 narrows only if every sample already fits.
+    # honor an EXPLICIT depth (not re-derived from dtype): uint8 →
+    # depth 16 widens value-preserving; uint16 → depth 8 narrows only if
+    # every sample already fits.
     if depth == 16:
         arr = np.asarray(src, dtype=np.uint16)
     else:
@@ -802,8 +866,7 @@ def image_features(payload: bytes) -> dict[str, Any]:
 
 
 PIXEL_MD5_SCHEMA = (
-    "doc_id long, format string, width int, height int, channels int, "
-    "pixel_md5 string"
+    "format string, width int, height int, channels int, pixel_md5 string"
 )
 
 
@@ -936,86 +999,7 @@ def synthesize_pgm_quantized(text: str) -> bytes:
     return encode_ppm(samples * np.uint8(255 // ((1 << depth) - 1)))
 
 
-def attach_png_subbyte_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    interlace: bool = False,
-) -> DataFrame:
-    """Synthesized sub-byte-depth PNG payload column (Arrow-batched
-    pandas UDF), typed ``image/png``; ``interlace`` emits the Adam7
-    per-pass-packed stream."""
-
-    @F.pandas_udf("binary")
-    def make_png(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda s: synthesize_png_subbyte(s, interlace))
-
-    return _fan_out(df).withColumn("payload", make_png(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("image/png")
-    )
-
-
-def attach_pgm_quantized_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Quantized-PGM twin payload column for the sub-byte gate."""
-
-    @F.pandas_udf("binary")
-    def make_pgm(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_pgm_quantized)
-
-    return _fan_out(df).withColumn("payload", make_pgm(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("image/pgm")
-    )
-
-
-def attach_image_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Synthesized-image payload column (Arrow-batched pandas UDF), typed
-    ``image/ppm``."""
-
-    @F.pandas_udf("binary")
-    def make_ppm(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_ppm)
-
-    return _fan_out(df).withColumn("payload", make_ppm(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("image/ppm")
-    )
-
-
-def attach_png_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    interlace: bool = False,
-    palette: bool = False,
-    trns: bool = False,
-    depth16: bool = False,
-) -> DataFrame:
-    """Synthesized-PNG payload column (Arrow-batched pandas UDF), typed
-    ``image/png``.  ``interlace`` synthesizes Adam7 streams; ``palette``
-    synthesizes indexed color type 3; ``trns`` adds the transparency
-    chunk (palette only)."""
-
-    @F.pandas_udf("binary")
-    def make_png(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda s: synthesize_png(
-                s,
-                interlace=interlace,
-                palette=palette,
-                trns=trns,
-                depth16=depth16,
-            )
-        )
-
-    return _fan_out(df).withColumn("payload", make_png(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("image/png")
-    )
-
-
-FAKE_FEATURE_SCHEMA = (
-    "doc_id long, n_bytes long, header_hex string, content_md5 string"
-)
+FAKE_FEATURE_SCHEMA = "n_bytes long, header_hex string, content_md5 string"
 
 
 def fake_decode(payload: bytes) -> dict[str, Any]:
@@ -1036,70 +1020,33 @@ def extract_binary_features(
     schema: str = FEATURE_SCHEMA,
     heavy: bool = False,
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``mapInPandas`` keeps the Python boundary batch-at-a-time: each pandas
-    DataFrame holds one Arrow record batch; the payload column is dropped
-    from the output so downstream shuffles never carry blobs.  ``schema``
-    must list ``id_col`` first, then the decoder's feature keys.
-    ``heavy=True`` opts the stage into the `_fan_out` repartition fan-up
-    — pass it when ``decoder`` is genuinely CPU-bound per row (full JPEG
-    Huffman+IDCT measured 3.4x faster fanned-up; PPM/PNG header-grade
-    decodes measured FASTER without, r14 A/B).
-    """
-    feature_cols = [
-        f.split()[0] for f in schema.split(",")[1:]
-    ]  # schema minus the id column
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            features = [decoder(p) for p in batch[payload_col]]
-            out = pd.DataFrame(features, columns=feature_cols)
-            out.insert(0, id_col, batch[id_col].values)
-            yield out
-
-    narrow = _fan_out(df.select(id_col, payload_col), heavy=heavy)
-    return narrow.mapInPandas(extract, schema=schema)
+    """One feature row per payload: ``decoder(payload)`` keyed by the
+    ``schema`` names (the columns after the id).  The payload is dropped
+    from the output so downstream shuffles never carry blobs.
+    ``heavy=True`` is for genuinely CPU-bound decoders (full JPEG
+    Huffman+IDCT); header-grade PPM/PNG decodes run faster without it."""
+    return map_payloads(
+        df, lambda p: [decoder(p)], schema, id_col, payload_col, heavy
+    )
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, payload binary, width int, height int, payload_kind string"
-)
+RESIZE_SCHEMA = "payload binary, width int, height int, payload_kind string"
 
 
 def resize(
     df: DataFrame,
     width: int,
     height: int,
-    resizer: Callable[[bytes, int, int], bytes] = resize_image,
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Arrow-batched resize over binary payloads.
+    """Nearest-neighbor resize of every image payload (:func:`resize_image`,
+    re-encoded in its source format), with the new dimensions as typed
+    metadata."""
+    def rows_of(payload: bytes) -> list[tuple]:
+        return [(resize_image(payload, width, height), width, height, "image/resized")]
 
-    Same ``mapInPandas`` seam as feature extraction; output carries the
-    resized payload plus its dimensions as typed metadata.  The default
-    ``resizer`` is the real nearest-neighbor PPM/BMP implementation;
-    production codecs (PNG/JPEG) inject through the same parameter.
-    """
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = pd.DataFrame(
-                {
-                    id_col: batch[id_col].values,
-                    payload_col: [
-                        resizer(p, width, height) for p in batch[payload_col]
-                    ],
-                }
-            )
-            out["width"] = width
-            out["height"] = height
-            out["payload_kind"] = "image/resized"
-            yield out
-
-    narrow = _fan_out(df.select(id_col, payload_col))
-    return narrow.mapInPandas(do_resize, schema=RESIZE_SCHEMA)
+    return map_payloads(df, rows_of, RESIZE_SCHEMA, id_col, payload_col)
 
 
 def sample_frames(
@@ -1115,7 +1062,7 @@ def sample_frames(
 
     Index bound is ``floor((len-1)/n)`` — ``floor(len/n)`` is off by one
     when the payload length is an exact multiple and emits a phantom
-    zero-length frame starting one byte past the end (r8 review);
+    zero-length frame starting one byte past the end;
     greatest(...,0) keeps the empty payload at one (empty) frame rather
     than a descending sequence."""
     frames = F.transform(
@@ -1150,10 +1097,10 @@ def sample_frames(
 # library: supported colorspaces are Cmono (luma only), C444, C422,
 # C420, C411 at 8-bit plus the depth-extended tags (C420p10/p12/…,
 # Cmono10/12/16 — two bytes per sample little-endian, values raw at
-# file depth like 16-bit PNG / 12-bit JPEG; r13, closing the r12 seam)
-# (planes returned as stored; no chroma upsampling — that is a consumer
-# choice, not a decode step).  Compressed video (H.26x, VP9, AV1) is out
-# of scope behind the same injectable-decoder seam as JPEG.
+# file depth like 16-bit PNG / 12-bit JPEG) (planes returned as stored;
+# no chroma upsampling — that is a consumer choice, not a decode step).
+# Compressed video (H.26x, VP9, AV1) is out of scope: a native decoder
+# composes with `video_frame_rows` through `map_payloads`.
 
 _Y4M_MAGIC = b"YUV4MPEG2 "
 
@@ -1161,11 +1108,10 @@ _Y4M_MAGIC = b"YUV4MPEG2 "
 def _y4m_depth(colorspace: str) -> int:
     """Sample bit depth a Y4M colorspace tag declares: ``C420p10`` /
     ``C422p12`` / ``C444p16`` carry a ``p<depth>`` suffix, deep mono is
-    ``Cmono<depth>`` with NO 'p' (ffmpeg emits Cmono9/10/12/16 — the r12
-    ADVICE gap: those fell into the 8-bit path and died later on a
-    misleading FRAME-marker error).  ``C420paldv`` matches neither
-    ('paldv' is chroma siting, not depth).  Anything undeclared is
-    8-bit per the spec."""
+    ``Cmono<depth>`` with NO 'p' (ffmpeg emits Cmono9/10/12/16; read as
+    8-bit they die later on a misleading FRAME-marker error).
+    ``C420paldv`` matches neither ('paldv' is chroma siting, not depth).
+    Anything undeclared is 8-bit per the spec."""
     m = re.search(r"p(\d+)$", colorspace)
     if m:
         return int(m.group(1))
@@ -1245,13 +1191,13 @@ def decode_video(payload: bytes) -> dict[str, Any]:
     if depth > 16:
         raise NotImplementedError(
             f"Y4M colorspace {colorspace!r} declares {depth}-bit samples "
-            "(8..16 decode); inject a decoder via "
-            "extract_binary_features(decoder=...)"
+            "(8..16 decode); compose a native decoder with "
+            "video_frame_rows through map_payloads"
         )
     if depth < 8:
         # Mirror the encoder's 8..16 range check: a malformed depth tag
         # (e.g. C420p7) must raise, not silently decode as 2-byte
-        # little-endian samples (r13 ADVICE).
+        # little-endian samples.
         raise ValueError(
             f"Y4M colorspace {colorspace!r} declares {depth}-bit samples; "
             "the Y4M bit-depth extension covers 8..16"
@@ -1272,8 +1218,8 @@ def decode_video(payload: bytes) -> dict[str, Any]:
         raise NotImplementedError(
             f"Y4M colorspace {colorspace!r} not supported "
             "(mono/444/422/420/411 at 8–16 bit decode; compressed video "
-            "stays out of scope); inject a decoder via "
-            "extract_binary_features(decoder=...)"
+            "stays out of scope); compose a native decoder with "
+            "video_frame_rows through map_payloads"
         )
     # Depth-extended tags store each sample as two bytes little-endian,
     # values raw at file depth (ffmpeg convention — same presentation
@@ -1332,80 +1278,43 @@ def synthesize_y4m(text: str) -> bytes:
     return encode_y4m(np.stack(frames), colorspace="mono")
 
 
-def attach_video_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Synthesized-Y4M payload column (Arrow-batched pandas UDF), typed
-    ``video/y4m``."""
-
-    @F.pandas_udf("binary")
-    def make_y4m(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_y4m)
-
-    return _fan_out(df).withColumn("payload", make_y4m(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("video/y4m")
-    )
-
-
 VIDEO_FRAME_SCHEMA = (
-    "doc_id long, frame_idx int, width int, height int, n_frames int, "
-    "mean_y double"
+    "frame_idx int, width int, height int, n_frames int, mean_y double"
 )
 
 
+def video_frame_rows(video: dict[str, Any]) -> list[tuple]:
+    """One :data:`VIDEO_FRAME_SCHEMA` row per frame of a decoded stream in
+    the :func:`decode_video` dict shape — ``frames`` (plane dicts with a
+    ``y`` array), ``width``, ``height``, ``n_frames``.  A native decoder
+    (ffmpeg/pyav) filling that shape composes with it through
+    :func:`map_payloads`."""
+    return [
+        (k, video["width"], video["height"], video["n_frames"],
+         float(planes["y"].mean()))
+        for k, planes in enumerate(video["frames"])
+    ]
+
+
 def extract_video_frames(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    decoder: Callable[[bytes], dict[str, Any]] | None = None,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Arrow-batched video decode: one output row per FRAME with stream
-    metadata and per-frame luma mean — the real-decode replacement for
-    byte-slice frame sampling.  Payload dropped from the output.
-
-    ``decoder`` is the same injection seam ``extract_binary_features``
-    carries (r16, closing the image-only gap): a native binding
-    (ffmpeg/pyav) plugs in per payload and must return the
-    :func:`decode_video` dict shape — ``frames`` (list of plane dicts
-    with a ``y`` array), ``width``, ``height``, ``n_frames``.  The
-    Arrow ``mapInPandas`` plumbing, schema, and per-frame fan-out stay
-    identical either way (pinned by
-    tests/test_multimodal.py::test_injected_video_decoder_composes_through_seam).
-    """
-    if decoder is None:
-        decoder = decode_video
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
-                video = decoder(payload)
-                for k, planes in enumerate(video["frames"]):
-                    rows.append(
-                        {
-                            id_col: doc_id,
-                            "frame_idx": k,
-                            "width": video["width"],
-                            "height": video["height"],
-                            "n_frames": video["n_frames"],
-                            "mean_y": float(planes["y"].mean()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_idx", "width", "height", "n_frames", "mean_y",
-                ],
-            )
-
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(
-        extract, schema=VIDEO_FRAME_SCHEMA
+    """Real Y4M decode: one output row per FRAME with stream metadata and
+    per-frame luma mean — the real-decode replacement for byte-slice
+    frame sampling.  Payload dropped from the output."""
+    return map_payloads(
+        df,
+        lambda p: video_frame_rows(decode_video(p)),
+        VIDEO_FRAME_SCHEMA,
+        id_col,
+        payload_col,
     )
 
 
 # --------------------------------------------------- perceptual image hash
 
-_PHASH_BITS = 63  # 8x8 DCT block minus the DC coefficient; fits a signed long
+_PHASH_SIZE = 8  # side of the kept low-frequency DCT block
+_PHASH_BITS = _PHASH_SIZE**2 - 1  # minus the DC coefficient; fits a signed long
 
 
 def _dct_matrix(n: int) -> np.ndarray:
@@ -1417,14 +1326,14 @@ def _dct_matrix(n: int) -> np.ndarray:
     return d
 
 
-_DCT_32 = _dct_matrix(32)
+_DCT = _dct_matrix(4 * _PHASH_SIZE)
 
 
-def phash(payload: bytes, hash_size: int = 8) -> int:
+def phash(payload: bytes) -> int:
     """DCT-based perceptual hash (classic pHash): decode, grayscale,
-    nearest-neighbor downsample to ``4*hash_size`` square, 2-D DCT-II,
-    keep the top-left ``hash_size``² low-frequency block, threshold each
-    coefficient at the block median (DC dropped) → 63-bit signature.
+    nearest-neighbor downsample to a 32×32 square, 2-D DCT-II, keep the
+    top-left 8×8 low-frequency block, threshold each coefficient at the
+    block median (DC dropped) → 63-bit signature.
 
     Near-duplicate IMAGES (re-encodes, small edits, resizes) land within
     a few bit flips; unrelated images differ in ~half the bits.  Pure
@@ -1434,14 +1343,13 @@ def phash(payload: bytes, hash_size: int = 8) -> int:
     px = img["pixels"].astype(np.float64)
     if px.ndim == 3:
         px = px.mean(axis=2)
-    size = hash_size * 4
+    size = 4 * _PHASH_SIZE
     src_h, src_w = px.shape
     rows = np.minimum((np.arange(size) * src_h) // size, src_h - 1)
     cols = np.minimum((np.arange(size) * src_w) // size, src_w - 1)
     small = px[rows][:, cols]
-    d = _DCT_32 if size == 32 else _dct_matrix(size)
-    coeffs = d @ small @ d.T
-    block = coeffs[:hash_size, :hash_size].ravel()[1:]  # drop DC
+    coeffs = _DCT @ small @ _DCT.T
+    block = coeffs[:_PHASH_SIZE, :_PHASH_SIZE].ravel()[1:]  # drop DC
     bits = block > np.median(block)
     return int(sum(1 << i for i, b in enumerate(bits) if b))
 
@@ -1459,8 +1367,8 @@ def phash_signatures(
     # Non-deterministic marker (guide §4.4): downstream blocking joins
     # imply isnotnull(phash); the pushed filter otherwise lands below the
     # projection and DUPLICATES the ArrowEvalPython node — every image
-    # paid the decode+DCT twice (r18 before-plan: 8 ph(make_ppm(..))
-    # evaluations in mm_phash_dedup's plan for one logical pass).
+    # paid the decode+DCT twice (OPTIMIZATION_r18.md counts the
+    # evaluations in mm_phash_dedup's plan).
     ph = ph.asNondeterministic()
 
     return df.select(F.col(id_col), ph(F.col(payload_col)).alias("phash"))
@@ -1482,8 +1390,7 @@ def phash_near_dups(
 
     # Both pigeonhole-blocking self-join sides consume the signature
     # frame; without materialization each side re-runs the full
-    # decode → grayscale → DCT Arrow chain over every image (r18
-    # plan: 3 ArrowEvalPython nodes per side in mm_phash_dedup).  The
+    # decode → grayscale → DCT Arrow chain over every image.  The
     # (id, phash) frame is two fixed-width columns — tiny next to the
     # payloads — so this is the dedup_embedding_lsh signature-sharing
     # trade, NOT the reverted hamming_blocked_pairs-level one (SimHash
@@ -1529,14 +1436,14 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     else:
         # Non-PCM fmt chunks carry the cbSize extension-size field
         # (WAVEFORMATEX) — 18 bytes with cbSize=0; strict parsers reject
-        # a 16-byte non-PCM fmt (r12 ADVICE).
+        # a 16-byte non-PCM fmt.
         fmt_chunk = b"fmt " + struct.pack(
             "<IHHIIHHH", 18, fmt_tag, channels, sample_rate, byte_rate,
             block_align, bits, 0,
         )
     # RIFF chunks are word-aligned: an odd-sized data chunk gets a zero
     # pad byte that is EXCLUDED from the chunk size but included in the
-    # RIFF size (r12 ADVICE — pcm8 mono with odd n hit this).
+    # RIFF size (pcm8 mono with odd n hits this).
     pad = b"\x00" if len(data) & 1 else b""
     body = (
         fmt_chunk
@@ -1637,7 +1544,7 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
 
 
 AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, format string, sample_rate int, channels int, "
+    "format string, sample_rate int, channels int, "
     "n_samples long, duration_ms long, n_bytes long, rms double"
 )
 
@@ -1696,21 +1603,6 @@ def synthesize_wav_format(
     return encode_wav(samples, sample_rate)
 
 
-def attach_audio_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Synthesized-audio payload column (Arrow-batched pandas UDF), typed
-    ``audio/wav``."""
-
-    @F.pandas_udf("binary")
-    def make_wav(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_wav)
-
-    return _fan_out(df).withColumn("payload", make_wav(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("audio/wav")
-    )
-
-
 # ------------------------------------------------------- audio DSP features
 
 _TONE_N = 1024  # samples per synthetic tone; FFT bin width = sr / _TONE_N
@@ -1734,9 +1626,7 @@ def synthesize_tone(text: str, sample_rate: int = 16000) -> bytes:
     return encode_wav(pcm, sample_rate)
 
 
-SPECTRAL_SCHEMA = (
-    "doc_id long, peak_hz double, spectral_centroid double, zcr double"
-)
+SPECTRAL_SCHEMA = "peak_hz double, spectral_centroid double, zcr double"
 
 
 def spectral_features(payload: bytes) -> dict[str, Any]:
@@ -1757,39 +1647,6 @@ def spectral_features(payload: bytes) -> dict[str, Any]:
         "spectral_centroid": float((freqs * mag).sum() / total) if total else 0.0,
         "zcr": float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))),
     }
-
-
-def extract_spectral_features(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched spectral feature extraction (same ``mapInPandas``
-    seam as :func:`extract_binary_features`; payloads dropped from the
-    output so downstream shuffles never carry audio)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            feats = [spectral_features(p) for p in batch[payload_col]]
-            out = pd.DataFrame(feats, columns=["peak_hz", "spectral_centroid", "zcr"])
-            out.insert(0, id_col, batch[id_col].values)
-            yield out
-
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(
-        extract, schema=SPECTRAL_SCHEMA
-    )
-
-
-def attach_tone_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Synthesized pure-tone payload column, typed ``audio/wav``."""
-
-    @F.pandas_udf("binary")
-    def make_tone(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_tone)
-
-    return _fan_out(df).withColumn("payload", make_tone(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("audio/wav")
-    )
 
 
 # ---------------------------------------------------------------- augmentation
@@ -1848,8 +1705,7 @@ def augment_image(payload: bytes, op: str) -> bytes:
 
 
 AUGMENT_SCHEMA = (
-    "doc_id long, op string, payload binary, width int, height int, "
-    "mean_value double"
+    "op string, payload binary, width int, height int, mean_value double"
 )
 
 
@@ -1859,46 +1715,29 @@ def augment(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Arrow-batched augmentation fan-out: one output row per (image,
-    op), carrying the re-encoded payload plus typed metadata.  Same
-    ``mapInPandas`` seam as decode/resize; fan-out is len(ops) — a
-    narrow, bounded expansion, embarrassingly partition-parallel."""
+    """Augmentation fan-out: one output row per (image, op), carrying the
+    re-encoded payload plus typed metadata — a narrow expansion by
+    len(ops), embarrassingly partition-parallel."""
     use_ops = list(ops or _AUG_OPS)
     unknown = set(use_ops) - set(_AUG_OPS)
     if unknown:
         raise ValueError(f"unknown augmentations {sorted(unknown)}")
 
-    def do_augment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
-                # decode ONCE per image; every op transforms the decoded
-                # array and stats come from it directly (the decode-per-op
-                # + re-decode-for-stats form measured 7.3s vs 2.4s warm
-                # for the 6-op fan-out at sf0.1)
-                img = decode_image(payload)
-                for op in use_ops:
-                    px = _augment_pixels(img["pixels"], op)
-                    rows.append(
-                        (
-                            doc_id,
-                            op,
-                            _encode_as(px, img["format"]),
-                            px.shape[1],
-                            px.shape[0],
-                            float(px.mean()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "op", payload_col, "width", "height", "mean_value"
-                ],
+    def rows_of(payload: bytes) -> list[tuple]:
+        # decode ONCE per image; every op transforms the decoded array and
+        # stats come from it directly (decode-per-op plus a re-decode for
+        # stats measured 3x slower on the 6-op fan-out)
+        img = decode_image(payload)
+        rows = []
+        for op in use_ops:
+            px = _augment_pixels(img["pixels"], op)
+            rows.append(
+                (op, _encode_as(px, img["format"]), px.shape[1], px.shape[0],
+                 float(px.mean()))
             )
+        return rows
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(
-        do_augment, schema=AUGMENT_SCHEMA
-    )
+    return map_payloads(df, rows_of, AUGMENT_SCHEMA, id_col, payload_col)
 
 
 # ---------------------------------------------------------- audio augmentation
@@ -1907,8 +1746,9 @@ _AUDIO_AUG_OPS = ("reverse", "gain_half", "decimate2", "pad_256")
 
 
 def augment_audio(payload: bytes, op: str) -> bytes:
-    """One deterministic audio augmentation of a PCM16 WAV payload,
-    re-encoded at the source sample rate.  Same reproducibility stance
+    """One deterministic audio augmentation of a PCM16 WAV payload (any
+    other sample format raises ``ValueError``), re-encoded at the source
+    sample rate.  Same reproducibility stance
     as :func:`augment_image`: geometric/integer ops only.
 
     * ``reverse`` — time reversal (a permutation: every sample-multiset
@@ -1928,10 +1768,16 @@ def augment_audio(payload: bytes, op: str) -> bytes:
 
 
 def _augment_samples(s: "np.ndarray", op: str) -> "np.ndarray":
+    if s.dtype != np.int16:
+        # PCM8 is offset-binary (silence 0x80), float32 is not integer and
+        # 24-bit does not fit int16: each op here would corrupt them.
+        raise ValueError(
+            f"audio augmentation needs PCM16 samples, got {s.dtype.name}"
+        )
     if op == "reverse":
         out = s[::-1]
     elif op == "gain_half":
-        out = (s >> 1).astype(np.int16)
+        out = s >> 1
     elif op == "decimate2":
         out = s[::2]
     elif op == "pad_256":
@@ -1949,9 +1795,7 @@ def _augment_samples(s: "np.ndarray", op: str) -> "np.ndarray":
     return np.ascontiguousarray(out)
 
 
-AUDIO_AUGMENT_SCHEMA = (
-    "doc_id long, op string, payload binary, n_samples long, sum_abs long"
-)
+AUDIO_AUGMENT_SCHEMA = "op string, payload binary, n_samples long, sum_abs long"
 
 
 def audio_augment(
@@ -1960,39 +1804,27 @@ def audio_augment(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Arrow-batched audio augmentation fan-out — one row per (clip, op)
-    with the re-encoded payload, decoded length, and the exact int64
-    sum of absolute samples (the permutation-invariance witness)."""
+    """Audio augmentation fan-out — one row per (clip, op) with the
+    re-encoded payload, decoded length, and the exact int64 sum of
+    absolute samples (the permutation-invariance witness)."""
     use_ops = list(ops or _AUDIO_AUG_OPS)
     unknown = set(use_ops) - set(_AUDIO_AUG_OPS)
     if unknown:
         raise ValueError(f"unknown audio augmentations {sorted(unknown)}")
 
-    def do_augment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
-                # one decode per clip; stats from the transformed array
-                # (same decode-sharing as the image fan-out)
-                audio = decode_audio(payload)
-                for op in use_ops:
-                    out = _augment_samples(audio["samples"], op)
-                    rows.append(
-                        (
-                            doc_id,
-                            op,
-                            encode_wav(out, audio["sample_rate"]),
-                            int(out.shape[0]),
-                            int(np.abs(out.astype(np.int64)).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "op", payload_col, "n_samples", "sum_abs"]
+    def rows_of(payload: bytes) -> list[tuple]:
+        # one decode per clip, as in the image fan-out
+        audio = decode_audio(payload)
+        rows = []
+        for op in use_ops:
+            out = _augment_samples(audio["samples"], op)
+            rows.append(
+                (op, encode_wav(out, audio["sample_rate"]), int(out.shape[0]),
+                 int(np.abs(out.astype(np.int64)).sum()))
             )
+        return rows
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(
-        do_augment, schema=AUDIO_AUGMENT_SCHEMA
-    )
+    return map_payloads(df, rows_of, AUDIO_AUGMENT_SCHEMA, id_col, payload_col)
 
 
 # ------------------------------------------------------------------- GIF
@@ -2242,23 +2074,6 @@ def synthesize_gif(text: str, interlace: bool = False) -> bytes:
     return encode_gif(_synthesize_pixels(text), interlace=interlace)
 
 
-def attach_gif_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    interlace: bool = False,
-) -> DataFrame:
-    """Synthesized-GIF payload column (Arrow-batched pandas UDF), typed
-    ``image/gif``."""
-
-    @F.pandas_udf("binary")
-    def make_gif(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: synthesize_gif(t, interlace=interlace))
-
-    return _fan_out(df).withColumn("payload", make_gif(F.col(text_col))).withColumn(
-        "payload_kind", F.lit("image/gif")
-    )
-
-
 def synthesize_jpeg(text: str) -> bytes:
     """Deterministic synthetic JPEG payload — same pixel contract as
     :func:`synthesize_ppm`.  JPEG is LOSSY: the decode matches the PPM
@@ -2267,24 +2082,6 @@ def synthesize_jpeg(text: str) -> bytes:
     from kusuma_metamorph_etl_spark.operators.jpeg import encode_jpeg
 
     return encode_jpeg(_synthesize_pixels(text), quality=95)
-
-
-def attach_jpeg_payload(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Synthesized-JPEG payload column (Arrow-batched pandas UDF), typed
-    ``image/jpeg``."""
-
-    @F.pandas_udf("binary")
-    def make_jpeg(texts: pd.Series) -> pd.Series:
-        return texts.map(synthesize_jpeg)
-
-    # heavy=True: full JPEG encode (BT.601 + DCT + Huffman) is CPU-bound
-    # per row — the mm_jpeg_features A/B measured 2.2 s fanned-up vs
-    # 7.6 s without (r14); the cheap attaches stay coalesce-only.
-    return _fan_out(df, heavy=True).withColumn(
-        "payload", make_jpeg(F.col(text_col))
-    ).withColumn("payload_kind", F.lit("image/jpeg"))
 
 
 def transcode_images(
@@ -2301,12 +2098,12 @@ def transcode_images(
     storage format.  Emits ``(id, src_format, payload, width, height)``
     with the payload re-encoded.
 
-    ``on_error`` (VERDICT r8 #7's accounting half): ``"raise"`` (default
-    — tests and curated corpora want the loud failure) or
-    ``"quarantine"`` — a corrupt or genuinely-unsupported payload (e.g.
-    arithmetic-coded JPEG) must not kill a 100 TB normalization job.
-    Two failure classes stay DISTINGUISHABLE (r9 self-review — lumping
-    them inflates the input-coverage metric with healthy images):
+    ``on_error``: ``"raise"`` (default — tests and curated corpora want
+    the loud failure) or ``"quarantine"`` — a corrupt or
+    genuinely-unsupported payload (e.g. arithmetic-coded JPEG) must not
+    kill a 100 TB normalization job.  Two failure classes stay
+    DISTINGUISHABLE (lumping them inflates the input-coverage metric
+    with healthy images):
 
     * DECODE failure (corrupt/unsupported INPUT): ``src_format='error'``,
       NULL payload, zero dims, exception text in ``error`` —
@@ -2318,84 +2115,40 @@ def transcode_images(
 
     GIF targets require palette-expressible pixels (the encoder raises
     rather than posterizing — see `encode_gif`); JPEG targets are lossy
-    by design.  Arrow ``mapInPandas``, decode+encode once per image, no
-    shuffle.
+    by design.  Decode+encode once per image, no shuffle.
     """
     if to not in ("png", "ppm", "bmp", "gif", "jpeg"):
         raise ValueError(f"unknown target format {to!r}")
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
-    encoders = {
-        "png": encode_png,
-        "ppm": encode_ppm,
-        "bmp": encode_bmp,
-        "gif": encode_gif,
-    }
     quarantine = on_error == "quarantine"
 
-    def transcode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if to == "jpeg":
-            from kusuma_metamorph_etl_spark.operators.jpeg import encode_jpeg
+    def rows_of(payload: bytes) -> list[dict[str, Any]]:
+        try:
+            img = decode_image(payload)
+        except (ValueError, NotImplementedError) as e:
+            # DECODE failure: the payload is corrupt or a genuinely
+            # unsupported codec — the carve-out the quarantine count
+            # quantifies
+            if not quarantine:
+                raise
+            return [{"src_format": "error", "payload": None, "width": 0,
+                     "height": 0, "error": f"{type(e).__name__}: {e}"}]
+        try:
+            out_payload, err = _encode_as(img["pixels"], to), None
+        except (ValueError, NotImplementedError) as e:
+            # ENCODE failure: the image is healthy, the TARGET can't
+            # express it (e.g. >256-color pixels -> GIF).  Keep the true
+            # src_format/dims so the quarantine metric stays "corrupt or
+            # unsupported INPUTS" and target-side misfits are separately
+            # countable.
+            if not quarantine:
+                raise
+            out_payload, err = None, f"{type(e).__name__}: {e}"
+        return [{"src_format": img["format"], "payload": out_payload,
+                 "width": img["width"], "height": img["height"], "error": err}]
 
-            enc = lambda px: encode_jpeg(px, quality=95)  # noqa: E731
-        else:
-            enc = encoders[to]
-        for batch in batches:
-            rows = []
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
-                try:
-                    img = decode_image(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    # DECODE failure: the payload is corrupt or a
-                    # genuinely-unsupported codec — the carve-out the
-                    # quarantine count quantifies
-                    if not quarantine:
-                        raise
-                    rows.append(
-                        {
-                            id_col: doc_id,
-                            "src_format": "error",
-                            "payload": None,
-                            "width": 0,
-                            "height": 0,
-                            "error": f"{type(e).__name__}: {e}",
-                        }
-                    )
-                    continue
-                try:
-                    out_payload = enc(img["pixels"])
-                    err = None
-                except (ValueError, NotImplementedError) as e:
-                    # ENCODE failure: the image is healthy, the TARGET
-                    # can't express it (e.g. >256-color pixels -> GIF).
-                    # Keep the true src_format/dims so the quarantine
-                    # metric stays "corrupt/unsupported INPUTS" and the
-                    # target-side misfits are separately countable via
-                    # error IS NOT NULL AND src_format <> 'error'
-                    # (r9 self-review).
-                    if not quarantine:
-                        raise
-                    out_payload, err = None, f"{type(e).__name__}: {e}"
-                rows.append(
-                    {
-                        id_col: doc_id,
-                        "src_format": img["format"],
-                        "payload": out_payload,
-                        "width": img["width"],
-                        "height": img["height"],
-                        "error": err,
-                    }
-                )
-            out = pd.DataFrame(rows)
-            yield out if quarantine else out.drop(columns=["error"])
-
-    # id type derived from the input (string WARC record ids are as
-    # valid as long doc ids — ADVICE r7), same as semantic_pairs
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_type}, src_format string, payload binary, "
-        "width int, height int"
-    )
+    schema = "src_format string, payload binary, width int, height int"
     if quarantine:
         schema += ", error string"
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(transcode, schema=schema)
+    return map_payloads(df, rows_of, schema, id_col, payload_col)

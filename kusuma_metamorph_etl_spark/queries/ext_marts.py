@@ -817,7 +817,9 @@ def mart_mm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes as min-id per md5(text), since pixels ARE the repeated
     md5 digest.)"""
     docs = t(spark, sf_dir, "documents")
-    imgs = multimodal.attach_image_payload(docs).select("doc_id", "payload")
+    imgs = multimodal.attach_payload(
+        docs, multimodal.synthesize_ppm, "image/ppm"
+    ).select("doc_id", "payload")
     copies = imgs.filter(F.col("doc_id") % 11 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1_000_000
     )
@@ -926,7 +928,7 @@ def mart_paired_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
       survivors either way;
     * CAPTION GATE — `text.quality_features` composite floor ≥ 0.05
       (the `txt_quality` stage, same floor as `mart_domain_curation`);
-    * IMAGE GATE — REAL decode via `multimodal.attach_image_payload` →
+    * IMAGE GATE — REAL decode via `multimodal.attach_payload` →
       `extract_binary_features` (Arrow `mapInPandas`), keep ≥5×5 (the
       `mm_binary_features` stage; the oracle re-derives dimensions from
       the synthesis contract);
@@ -974,7 +976,7 @@ def mart_paired_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     feats = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", "width", "height")
     return (
         agreed.join(feats, "doc_id")

@@ -1,7 +1,9 @@
 """[EXT] multimodal queries (image/audio/video codec features,
-phash dedup, augment, transcode) — split from ``ext.py`` (r13)."""
+phash dedup, augment, transcode) — split from ``ext.py``."""
 
 from __future__ import annotations
+
+from functools import partial, reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +37,7 @@ def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload size from the synthesis contract (operators/multimodal.py
     ``synthesize_ppm``).  A mis-parsed header fails the hash."""
     docs = t(spark, sf_dir, "documents")
-    payloads = multimodal.attach_image_payload(docs)
+    payloads = multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     feats = multimodal.extract_binary_features(payloads)
     return feats.select("doc_id", "format", "width", "height", "channels", "n_bytes")
 
@@ -58,9 +60,11 @@ def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     unfilter drops rows and turns the driver compare red — PNG byte size
     itself is zlib-version-dependent and deliberately not emitted."""
     docs = t(spark, sf_dir, "documents")
-    png = multimodal.extract_binary_features(multimodal.attach_png_payload(docs))
+    png = multimodal.extract_binary_features(
+        multimodal.attach_payload(docs, multimodal.synthesize_png, "image/png")
+    )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         png.join(ppm, "doc_id")
@@ -83,7 +87,9 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface; output is the oracle-computable planted list, gated on zero
     misses."""
     docs = t(spark, sf_dir, "documents")
-    imgs = multimodal.attach_image_payload(docs).select("doc_id", "payload")
+    imgs = multimodal.attach_payload(
+        docs, multimodal.synthesize_ppm, "image/ppm"
+    ).select("doc_id", "payload")
     planted = imgs.filter(F.col("doc_id") % 9 == 0)
     copies = planted.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     pairs = multimodal.phash_near_dups(
@@ -121,7 +127,7 @@ def mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     or raises, turning the driver row red.  Pixel-level round-trip
     equality is pinned in tests/."""
     docs = t(spark, sf_dir, "documents")
-    videos = multimodal.attach_video_payload(docs)
+    videos = multimodal.attach_payload(docs, multimodal.synthesize_y4m, "video/y4m")
     return multimodal.extract_video_frames(videos).select(
         "doc_id", "frame_idx", "width", "height", "n_frames"
     )
@@ -141,8 +147,12 @@ def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     the peak and fails the hash (bin frequencies are exact binary
     fractions, so equality is bit-for-bit)."""
     docs = t(spark, sf_dir, "documents")
-    tones = multimodal.attach_tone_payload(docs)
-    return multimodal.extract_spectral_features(tones).select("doc_id", "peak_hz")
+    tones = multimodal.attach_payload(docs, multimodal.synthesize_tone, "audio/wav")
+    return multimodal.extract_binary_features(
+        tones,
+        decoder=multimodal.spectral_features,
+        schema=multimodal.SPECTRAL_SCHEMA,
+    ).select("doc_id", "peak_hz")
 
 @register(
     "mm_audio_features",
@@ -165,7 +175,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash.  RMS energy is decode-only (not SQL-expressible) and
     is asserted in tests instead."""
     docs = t(spark, sf_dir, "documents")
-    payloads = multimodal.attach_audio_payload(docs)
+    payloads = multimodal.attach_payload(docs, multimodal.synthesize_wav, "audio/wav")
     feats = multimodal.extract_binary_features(
         payloads,
         decoder=multimodal.audio_features,
@@ -192,7 +202,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents""",
 )
 def mm_wav_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver evidence for the r12 WAV format matrix: per-document
+    """Driver evidence for the WAV format matrix: per-document
     payloads synthesized as PCM16 / PCM8 / IEEE-float32 by doc_id, run
     through the real RIFF/WAVE decode; ``sample_format`` is derived from
     the DECODED sample dtype (not echoed from the synthesis choice), so
@@ -202,7 +212,7 @@ def mm_wav_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/multimodal.py::synthesize_wav_format`): float32 carries
     the 12-byte fact chunk plus the 18-byte WAVEFORMATEX fmt (cbSize=0
     — required for non-PCM), and odd-length pcm8 data gets the RIFF
-    word-alignment pad byte (both r12 ADVICE conformance fixes)."""
+    word-alignment pad byte (both RIFF conformance rules)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
 
     @F.pandas_udf("binary")
@@ -220,27 +230,13 @@ def mm_wav_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fmt_by_dtype = {"int16": "pcm16", "uint8": "pcm8", "float32": "float32"}
 
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for did, pl in zip(pdf["doc_id"], pdf["payload"]):
-                audio = multimodal.decode_audio(bytes(pl))
-                rows.append(
-                    (
-                        did,
-                        fmt_by_dtype[audio["samples"].dtype.name],
-                        audio["n_samples"],
-                        len(pl),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_format", "n_samples", "n_bytes"],
-            )
+    def rows_of(payload: bytes) -> list[tuple]:
+        audio = multimodal.decode_audio(payload)
+        dtype = audio["samples"].dtype.name
+        return [(fmt_by_dtype[dtype], audio["n_samples"], len(payload))]
 
-    return payloads.mapInPandas(
-        extract,
-        "doc_id long, sample_format string, n_samples long, n_bytes long",
+    return multimodal.map_payloads(
+        payloads, rows_of, "sample_format string, n_samples long, n_bytes long"
     )
 
 @register(
@@ -279,7 +275,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P6 header "P6\\n8 8\\n255\\n" = 11 bytes + 192 pixel bytes); pixel
     placement is asserted in tests/test_multimodal.py."""
     docs = t(spark, sf_dir, "documents")
-    payloads = multimodal.attach_image_payload(docs)
+    payloads = multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     resized = multimodal.resize(payloads, 8, 8)
     return resized.select(
         "doc_id",
@@ -318,9 +314,10 @@ def mm_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # One synthesis pass: both consumers (original-features witness and
     # the augment fan-out) read the materialized payload frame — without
-    # sharing, make_png ran once per join branch (r18 before-plan nodes
-    # 2 and 8).
-    png = share(multimodal.attach_png_payload(docs))
+    # sharing, the PNG synthesis ran once per join branch.
+    png = share(
+        multimodal.attach_payload(docs, multimodal.synthesize_png, "image/png")
+    )
     orig = multimodal.extract_binary_features(png).select(
         "doc_id", F.col("mean_value").alias("orig_mean")
     )
@@ -357,14 +354,16 @@ def mm_audio_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserve the ORIGINAL decode's exact int64 |sample| sum (permutation
     / zero-extension invariants) — violating rows drop in-query.  The
     witness is the INDEPENDENT plain-decode path, not a second augment
-    run (r8 review: two augment passes could share a decode/re-encode
-    bug and still agree; the original decode cannot)."""
+    run (two augment passes could share a decode/re-encode bug and still
+    agree; the original decode cannot)."""
     import numpy as np
 
     docs = t(spark, sf_dir, "documents")
     # Shared synthesis pass — same §4 single-evaluation shape as
     # mm_augment above.
-    wav = share(multimodal.attach_audio_payload(docs))
+    wav = share(
+        multimodal.attach_payload(docs, multimodal.synthesize_wav, "audio/wav")
+    )
 
     def orig_abs_sum(payload: bytes) -> dict:
         audio = multimodal.decode_audio(payload)
@@ -373,7 +372,7 @@ def mm_audio_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     orig = multimodal.extract_binary_features(
-        wav, decoder=orig_abs_sum, schema="doc_id long, orig_abs long"
+        wav, decoder=orig_abs_sum, schema="orig_abs long"
     )
     aug = multimodal.audio_augment(wav)
     return (
@@ -407,9 +406,11 @@ def mm_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     array — a wrong LZW table, width bump, or palette read drops rows
     and turns the driver red."""
     docs = t(spark, sf_dir, "documents")
-    gif = multimodal.extract_binary_features(multimodal.attach_gif_payload(docs))
+    gif = multimodal.extract_binary_features(
+        multimodal.attach_payload(docs, multimodal.synthesize_gif, "image/gif")
+    )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         gif.join(ppm, "doc_id")
@@ -439,13 +440,17 @@ def mm_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, turning the driver red.  Equality is deliberately NOT the
     contract: JPEG is lossy by design."""
     docs = t(spark, sf_dir, "documents")
-    # heavy=True: Huffman + dequantize + IDCT per document (r14 A/B:
-    # 2.2 s fanned-up vs 7.6 s on the single scan split)
+    # heavy=True: JPEG encode and Huffman + dequantize + IDCT decode are
+    # CPU-bound per document (fan-up measured 2.2 s vs 7.6 s on the single
+    # scan split)
     jpg = multimodal.extract_binary_features(
-        multimodal.attach_jpeg_payload(docs), heavy=True
+        multimodal.attach_payload(
+            docs, multimodal.synthesize_jpeg, "image/jpeg", heavy=True
+        ),
+        heavy=True,
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         jpg.join(ppm, "doc_id")
@@ -554,27 +559,27 @@ def mm_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     fmt = F.col("doc_id") % 4
 
-    def _attach(frame, attach_fn, keep):
-        return attach_fn(frame.filter(keep)).select("doc_id", "payload")
-
-    mixed = (
-        _attach(docs, multimodal.attach_image_payload, fmt == 0)
-        .unionByName(_attach(docs, multimodal.attach_png_payload, fmt == 1))
-        .unionByName(_attach(docs, multimodal.attach_gif_payload, fmt == 2))
-        .unionByName(_attach(docs, multimodal.attach_jpeg_payload, fmt == 3))
+    sources = (
+        (multimodal.synthesize_ppm, "image/ppm", False),
+        (multimodal.synthesize_png, "image/png", False),
+        (multimodal.synthesize_gif, "image/gif", False),
+        (multimodal.synthesize_jpeg, "image/jpeg", True),
     )
-    # r18 (guide §1.2 step 1 / §5): `out` feeds TWO plan branches — the
-    # join's probe side and the `redecoded` feature pass — and each
-    # branch re-ran the whole synthesize→encode→sniff→transcode Python
-    # chain (the before-plan shows the 4-way union + MapInPandas subtree
-    # twice).  Sharing the transcoded rows runs the chain once per
-    # invocation.
+    parts = [
+        multimodal.attach_payload(docs.filter(fmt == i), synth, kind, heavy=heavy)
+        .select("doc_id", "payload")
+        for i, (synth, kind, heavy) in enumerate(sources)
+    ]
+    mixed = reduce(DataFrame.unionByName, parts)
+    # `out` feeds TWO plan branches — the join's probe side and the
+    # `redecoded` feature pass — and without sharing each branch re-runs
+    # the whole synthesize→encode→sniff→transcode Python chain.
     out = share(multimodal.transcode_images(mixed, to="png"))
     redecoded = multimodal.extract_binary_features(out).select(
         "doc_id", F.col("mean_value").alias("png_mean")
     )
     ppm_mean = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("src_mean"))
     tol = F.when(F.col("src_format") == "jpeg", F.lit(2.0)).otherwise(
         F.lit(1e-12)
@@ -607,10 +612,12 @@ def mm_png_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     red."""
     docs = t(spark, sf_dir, "documents")
     png = multimodal.extract_binary_features(
-        multimodal.attach_png_payload(docs, interlace=True)
+        multimodal.attach_payload(
+            docs, partial(multimodal.synthesize_png, interlace=True), "image/png"
+        )
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         png.join(ppm, "doc_id")
@@ -632,7 +639,7 @@ def mm_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     `operators/multimodal.py::encode_png_palette` + the PLTE branch of
     `_decode_png` — graduates the palette seam, the last common PNG
     variant behind it): per-document type-3 payloads synthesized IN THE
-    ADAM7 LAYOUT (palette indices riding the interlace passes — both r9
+    ADAM7 LAYOUT (palette indices riding the interlace passes — both
     codec paths in one stream), decoded by unfilter → pass reassembly →
     palette lookup.  Same gate as the other PNG rows: oracle-recomputed
     dimensions AND pixel-mean parity with the PPM twin, so a palette
@@ -640,10 +647,14 @@ def mm_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver red."""
     docs = t(spark, sf_dir, "documents")
     png = multimodal.extract_binary_features(
-        multimodal.attach_png_payload(docs, interlace=True, palette=True)
+        multimodal.attach_payload(
+            docs,
+            partial(multimodal.synthesize_png, interlace=True, palette=True),
+            "image/png",
+        )
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         png.join(ppm, "doc_id")
@@ -663,7 +674,7 @@ def mm_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_png_trns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL tRNS-transparency PNG decode ([EXT] multimodal; the tRNS
     branch of `operators/multimodal.py::_decode_png` — graduates the
-    last named PNG seam, r9 verdict #6): per-document type-3 payloads
+    last named PNG seam): per-document type-3 payloads
     carrying a HALF-LENGTH all-opaque tRNS chunk, so the decoder must
     parse the chunk, pad the alpha LUT to the palette length with 255,
     and assemble RGBA.  Gate: oracle-recomputed dimensions, channels
@@ -674,10 +685,14 @@ def mm_png_trns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py."""
     docs = t(spark, sf_dir, "documents")
     png = multimodal.extract_binary_features(
-        multimodal.attach_png_payload(docs, palette=True, trns=True)
+        multimodal.attach_payload(
+            docs,
+            partial(multimodal.synthesize_png, palette=True, trns=True),
+            "image/png",
+        )
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         png.join(ppm, "doc_id")
@@ -703,7 +718,7 @@ def mm_png_trns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_png_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL 16-bit-sample-depth PNG decode ([EXT] multimodal; graduates
     the IHDR depth gate `operators/multimodal.py::_decode_png` carried
-    since r5 — VERDICT r10 Next #7): per-document depth-16 RGB payloads
+    since the first PNG decoder): per-document depth-16 RGB payloads
     (each 8-bit sample expanded ×257 = hi|lo byte duplication, the PNG
     spec's recommended scaling), decoded by byte-plane unfilter at
     bpp=6 + big-endian sample recombination into uint16 pixels.  Gate:
@@ -715,10 +730,12 @@ def mm_png_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py."""
     docs = t(spark, sf_dir, "documents")
     png = multimodal.extract_binary_features(
-        multimodal.attach_png_payload(docs, depth16=True)
+        multimodal.attach_payload(
+            docs, partial(multimodal.synthesize_png, depth16=True), "image/png"
+        )
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs)
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
     ).select("doc_id", F.col("mean_value").alias("ppm_mean"))
     return (
         png.join(ppm, "doc_id")
@@ -741,7 +758,7 @@ def mm_png_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_gif_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL four-pass interlaced GIF decode ([EXT] multimodal —
     graduates the last GIF seam, the `ipacked & 0x40` gate
-    `operators/multimodal.py::_gif_walk_blocks` carried since r6):
+    `operators/multimodal.py::_gif_walk_blocks` used to carry):
     per-document GIF payloads written in the appendix-E pass order with
     the interlace flag set, decoded by the stream-row → image-row
     permutation.  The gate is STRONGER than `mm_gif_features`' mean
@@ -753,12 +770,14 @@ def mm_gif_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep every pass boundary in play."""
     docs = t(spark, sf_dir, "documents")
     gif = multimodal.extract_binary_features(
-        multimodal.attach_gif_payload(docs, interlace=True),
+        multimodal.attach_payload(
+            docs, partial(multimodal.synthesize_gif, interlace=True), "image/gif"
+        ),
         decoder=multimodal.pixel_md5_features,
         schema=multimodal.PIXEL_MD5_SCHEMA,
     )
     ppm = multimodal.extract_binary_features(
-        multimodal.attach_image_payload(docs),
+        multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm"),
         decoder=multimodal.pixel_md5_features,
         schema=multimodal.PIXEL_MD5_SCHEMA,
     ).select("doc_id", F.col("pixel_md5").alias("ppm_md5"))
@@ -780,14 +799,14 @@ def mm_gif_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_png_subbyte_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL sub-byte-depth PNG decode, progressive + Adam7-interlaced in
-    one tagged frame — r16 consolidation of the r12-green
+    one tagged frame — the consolidation of
     `mm_png_subbyte` + `mm_png_subbyte_interlaced` under the retire-one
     policy (funding `mart_paired_curation`).  Progressive: per-document
     greyscale payloads at a per-document depth ∈ {1,2,4} (one row
     exercises all three packings), scanlines filtered at bpp=1 then
     unpacked MSB-first and presented at 8 bits via the exact integer
     scaling 255//(2**depth-1) (the 1/2/4-bit seam
-    `operators/multimodal.py::_decode_png` named since r5).  Interlaced:
+    `operators/multimodal.py::_decode_png`).  Interlaced:
     the SAME payloads re-encoded with the interlace flag, every pass
     packed independently at its REDUCED width (PNG spec 8.2 — the
     4–8-pixel synthetic canvases make most pass widths differ from the
@@ -799,14 +818,20 @@ def mm_png_subbyte_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant, so the digest is the honest check)."""
     docs = t(spark, sf_dir, "documents")
     pgm = multimodal.extract_binary_features(
-        multimodal.attach_pgm_quantized_payload(docs),
+        multimodal.attach_payload(
+            docs, multimodal.synthesize_pgm_quantized, "image/pgm"
+        ),
         decoder=multimodal.pixel_md5_features,
         schema=multimodal.PIXEL_MD5_SCHEMA,
     ).select("doc_id", F.col("pixel_md5").alias("pgm_md5"))
     out = None
     for variant, interlace in (("progressive", False), ("adam7", True)):
         png = multimodal.extract_binary_features(
-            multimodal.attach_png_subbyte_payload(docs, interlace=interlace),
+            multimodal.attach_payload(
+                docs,
+                partial(multimodal.synthesize_png_subbyte, interlace=interlace),
+                "image/png",
+            ),
             decoder=multimodal.pixel_md5_features,
             schema=multimodal.PIXEL_MD5_SCHEMA,
         )

@@ -24,7 +24,7 @@ def payloads(spark, sf_small):
 @pytest.fixture(scope="module")
 def image_payloads(spark, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(20)
-    return multimodal.attach_image_payload(docs)
+    return multimodal.attach_payload(docs, multimodal.synthesize_ppm, "image/ppm")
 
 
 def _gradient(h, w):
@@ -901,7 +901,9 @@ class TestPhash:
         docs = spark.read.parquet(f"{sf_small}/documents.parquet").filter(
             F.col("doc_id") < 40
         )
-        imgs = multimodal.attach_image_payload(docs).select("doc_id", "payload")
+        imgs = multimodal.attach_payload(
+            docs, multimodal.synthesize_ppm, "image/ppm"
+        ).select("doc_id", "payload")
         copies = (
             imgs.filter(F.col("doc_id") < 5)
             .withColumn("doc_id", F.col("doc_id") + 1_000_000)
@@ -1333,7 +1335,9 @@ class TestAudioCodec:
 
     def test_synthesized_features(self, spark, sf_small):
         docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(20)
-        payloads = multimodal.attach_audio_payload(docs)
+        payloads = multimodal.attach_payload(
+            docs, multimodal.synthesize_wav, "audio/wav"
+        )
         rows = multimodal.extract_binary_features(
             payloads,
             decoder=multimodal.audio_features,
@@ -1387,7 +1391,7 @@ def test_augment_dataframe_fanout(spark):
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta epsilon")], ["doc_id", "text"]
     )
-    png = multimodal.attach_png_payload(docs)
+    png = multimodal.attach_payload(docs, multimodal.synthesize_png, "image/png")
     out = multimodal.augment(png, ops=["hflip", "rot90"])
     rows = out.collect()
     assert len(rows) == 4  # 2 docs x 2 ops
@@ -1435,13 +1439,43 @@ def test_audio_augment_invariants():
     assert np.array_equal(same, samples)
 
 
+def test_audio_augment_rejects_non_pcm16_samples():
+    """Every audio op is defined on signed 16-bit samples.  PCM8 is
+    offset-binary and float32 is not integer, so augmenting either must
+    raise ValueError instead of coming back silently re-encoded (PCM8
+    ``gain_half`` / ``pad_256`` used to return 16-bit PCM).  PCM16 output
+    stays byte-identical (pinned digests)."""
+    from kusuma_metamorph_etl_spark.operators.multimodal import (
+        _AUDIO_AUG_OPS,
+        augment_audio,
+        synthesize_wav_format,
+    )
+
+    for kind in ("pcm8", "float32"):
+        payload = synthesize_wav_format("non-pcm16 clip", kind)
+        for op in _AUDIO_AUG_OPS:
+            with pytest.raises(ValueError, match="PCM16"):
+                augment_audio(payload, op)
+    pcm16 = synthesize_wav_format("non-pcm16 clip", "pcm16")
+    digests = {
+        op: hashlib.md5(augment_audio(pcm16, op)).hexdigest()
+        for op in _AUDIO_AUG_OPS
+    }
+    assert digests == {
+        "reverse": "c64a7467cd6fff7455a72b4bd92a17bc",
+        "gain_half": "15c1f93225b07741dd6a48ad651ccc5f",
+        "decimate2": "d6a92b8401cc6573d922488877843354",
+        "pad_256": "376501b5fc78cb5cd58f90558b11158d",
+    }
+
+
 def test_audio_augment_dataframe_fanout(spark):
     from kusuma_metamorph_etl_spark.operators import multimodal
 
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta")], ["doc_id", "text"]
     )
-    wav = multimodal.attach_audio_payload(docs)
+    wav = multimodal.attach_payload(docs, multimodal.synthesize_wav, "audio/wav")
     out = multimodal.audio_augment(wav, ops=["reverse", "decimate2"]).collect()
     assert len(out) == 4
     by = {(r["doc_id"], r["op"]): r for r in out}
@@ -2385,20 +2419,17 @@ class TestTranscode:
     def test_mixed_formats_normalize_to_png_losslessly(self, spark, sf_small):
         docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(12)
         fmt = F.col("doc_id") % 3
-        mixed = (
-            multimodal.attach_image_payload(docs.filter(fmt == 0))
-            .select("doc_id", "payload")
-            .unionByName(
-                multimodal.attach_png_payload(docs.filter(fmt == 1)).select(
-                    "doc_id", "payload"
-                )
-            )
-            .unionByName(
-                multimodal.attach_gif_payload(docs.filter(fmt == 2)).select(
-                    "doc_id", "payload"
-                )
-            )
+        synths = (
+            multimodal.synthesize_ppm,
+            multimodal.synthesize_png,
+            multimodal.synthesize_gif,
         )
+        parts = [
+            multimodal.attach_payload(docs.filter(fmt == i), synth, "image")
+            .select("doc_id", "payload")
+            for i, synth in enumerate(synths)
+        ]
+        mixed = parts[0].unionByName(parts[1]).unionByName(parts[2])
         out = multimodal.transcode_images(mixed, to="png").collect()
         assert len(out) == docs.count()
         assert {r["src_format"] for r in out} == {"ppm", "png", "gif"}
@@ -2414,19 +2445,56 @@ class TestTranscode:
         with _pytest.raises(ValueError):
             multimodal.transcode_images(df, to="webp")
 
-    def test_string_record_ids_survive(self, spark):
-        # WARC-style string record ids must not hit a hardcoded `long`
-        # output schema (ADVICE r7)
+    @pytest.mark.parametrize(
+        "synth, run",
+        [
+            pytest.param(
+                multimodal.synthesize_ppm,
+                lambda df: multimodal.extract_binary_features(df, id_col="rid"),
+                id="extract_binary_features",
+            ),
+            pytest.param(
+                multimodal.synthesize_ppm,
+                lambda df: multimodal.resize(df, 8, 8, id_col="rid"),
+                id="resize",
+            ),
+            pytest.param(
+                multimodal.synthesize_y4m,
+                lambda df: multimodal.extract_video_frames(df, id_col="rid"),
+                id="extract_video_frames",
+            ),
+            pytest.param(
+                multimodal.synthesize_png,
+                lambda df: multimodal.augment(df, ops=["hflip"], id_col="rid"),
+                id="augment",
+            ),
+            pytest.param(
+                multimodal.synthesize_wav,
+                lambda df: multimodal.audio_augment(df, ops=["reverse"], id_col="rid"),
+                id="audio_augment",
+            ),
+            pytest.param(
+                multimodal.synthesize_ppm,
+                lambda df: multimodal.transcode_images(df, to="png", id_col="rid"),
+                id="transcode_images",
+            ),
+        ],
+    )
+    def test_string_record_ids_survive(self, spark, synth, run):
+        # WARC-style string record ids keep their name and type through
+        # every payload map — none may assume a `long` named doc_id
         docs = spark.createDataFrame(
             [("urn:uuid:rec-a",), ("urn:uuid:rec-b",)], ["rid"]
         )
-        payloads = multimodal.attach_image_payload(docs, text_col="rid").select(
-            "rid", "payload"
-        )
-        out = multimodal.transcode_images(payloads, to="png", id_col="rid").collect()
-        assert sorted(r["rid"] for r in out) == ["urn:uuid:rec-a", "urn:uuid:rec-b"]
-        for r in out:
-            assert multimodal.decode_image(bytes(r["payload"]))["format"] == "png"
+        payloads = multimodal.attach_payload(
+            docs, synth, "payload", text_col="rid"
+        ).select("rid", "payload")
+        out = run(payloads)
+        assert out.dtypes[0] == ("rid", "string")
+        assert sorted({r["rid"] for r in out.collect()}) == [
+            "urn:uuid:rec-a",
+            "urn:uuid:rec-b",
+        ]
 
 
 def test_jpeg_fill_bytes_before_markers_are_skipped():
@@ -3724,16 +3792,19 @@ def test_injected_audio_decoder_composes_through_seam(spark, sf_small):
     Arrow ``mapInPandas`` plumbing and produce output EQUAL to the
     default ``audio_features`` path on genuine WAV payloads."""
     from kusuma_metamorph_etl_spark.operators.multimodal import (
-        attach_audio_payload,
+        attach_payload,
         audio_features,
         decode_audio,
         extract_binary_features,
+        synthesize_wav,
     )
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(12)
-    corpus = attach_audio_payload(docs).select("doc_id", "payload")
+    corpus = attach_payload(docs, synthesize_wav, "audio/wav").select(
+        "doc_id", "payload"
+    )
     schema = (
-        "doc_id long, format string, sample_rate int, channels int, "
+        "format string, sample_rate int, channels int, "
         "n_samples int, duration_ms double, n_bytes int, rms double"
     )
 
@@ -3762,20 +3833,25 @@ def test_injected_audio_decoder_composes_through_seam(spark, sf_small):
 
 
 def test_injected_video_decoder_composes_through_seam(spark, sf_small):
-    """``extract_video_frames(decoder=...)`` — the injection seam added
-    r16 so video carries the same native escape hatch as images and
-    audio: a stand-in returning the ``decode_video`` dict shape must
-    produce per-frame output EQUAL to the default pure-Python Y4M walk
-    on genuine synthesized streams."""
+    """Video carries the same native escape hatch as images and audio: a
+    stand-in returning the ``decode_video`` dict shape, composed with
+    ``video_frame_rows`` through ``map_payloads``, must produce per-frame
+    output EQUAL to ``extract_video_frames``' pure-Python Y4M walk on
+    genuine synthesized streams."""
     from kusuma_metamorph_etl_spark.operators.multimodal import (
-        attach_video_payload,
+        VIDEO_FRAME_SCHEMA,
+        attach_payload,
         decode_video,
         extract_video_frames,
+        map_payloads,
+        synthesize_y4m,
+        video_frame_rows,
     )
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(12)
-    corpus = attach_video_payload(docs).select("doc_id", "payload")
-    calls = []
+    corpus = attach_payload(docs, synthesize_y4m, "video/y4m").select(
+        "doc_id", "payload"
+    )
 
     def native_standin(payload: bytes) -> dict:
         video = decode_video(payload)
@@ -3788,7 +3864,9 @@ def test_injected_video_decoder_composes_through_seam(spark, sf_small):
         }
 
     default = extract_video_frames(corpus)
-    injected = extract_video_frames(corpus, decoder=native_standin)
+    injected = map_payloads(
+        corpus, lambda p: video_frame_rows(native_standin(p)), VIDEO_FRAME_SCHEMA
+    )
     key = ["doc_id", "frame_idx"]
     d = {tuple(r[k] for k in key): r.asDict() for r in default.collect()}
     i = {tuple(r[k] for k in key): r.asDict() for r in injected.collect()}

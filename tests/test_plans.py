@@ -5,6 +5,8 @@ refactor that silently loses one fails CI."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -198,7 +200,9 @@ def test_hamming_blocking_never_cross_joins(spark, sf_small):
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(50)
     text_plan = _plan(simhash_near_dups(docs, bits=48, max_hamming=3))
-    imgs = multimodal.attach_image_payload(docs).select("doc_id", "payload")
+    imgs = multimodal.attach_payload(
+        docs, multimodal.synthesize_ppm, "image/ppm"
+    ).select("doc_id", "payload")
     img_plan = _plan(multimodal.phash_near_dups(imgs, max_hamming=2))
     for plan in (text_plan, img_plan):
         assert "CartesianProduct" not in plan
@@ -211,10 +215,78 @@ def test_phash_payloads_never_shuffle(spark, sf_small):
     from kusuma_metamorph_etl_spark.operators import multimodal
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(50)
-    imgs = multimodal.attach_image_payload(docs).select("doc_id", "payload")
+    imgs = multimodal.attach_payload(
+        docs, multimodal.synthesize_ppm, "image/ppm"
+    ).select("doc_id", "payload")
     plan = _plan(multimodal.phash_near_dups(imgs, max_hamming=2))
     for segment in plan.split("Exchange")[1:]:
         assert "payload" not in segment.split("\n")[0]
+
+
+@pytest.mark.parametrize(
+    "row, nodes, synths",
+    [
+        (
+            "mm_augment",
+            {"ArrowEvalPython": 1, "MapInPandas": 2},
+            {"synthesize_png": 1},
+        ),
+        (
+            "mm_transcode",
+            {"ArrowEvalPython": 5, "MapInPandas": 3},
+            # synthesize_ppm twice: one of the four corpus sources, and
+            # the independent source-mean witness
+            {
+                "synthesize_ppm": 2,
+                "synthesize_png": 1,
+                "synthesize_gif": 1,
+                "synthesize_jpeg": 1,
+            },
+        ),
+    ],
+)
+def test_shared_payload_frames_synthesize_once(
+    spark, sf_small, monkeypatch, row, nodes, synths
+):
+    # Both rows share() the frame that feeds two join branches; without
+    # it each branch re-runs the payload synthesis (mm_augment) or the
+    # whole synthesize -> transcode chain (mm_transcode).  Counted over
+    # the row's plan plus the plans of the frames it shares, every
+    # synthesis UDF appears once per attach_payload call.
+    from collections import Counter
+
+    from kusuma_metamorph_etl_spark.plans.share import share
+    from kusuma_metamorph_etl_spark.queries import ext_mm
+
+    shared = []
+
+    def recording_share(df, eager=False):
+        shared.append(df)
+        return share(df, eager)
+
+    monkeypatch.setattr(ext_mm, "share", recording_share)
+    final = getattr(ext_mm, row)(spark, sf_small)
+    # a shared frame already run by AQE prints its final and initial
+    # plans; count the final one
+    lines = [
+        line.lstrip(" :+-")
+        for df in (final, *shared)
+        for line in _plan(df).split("== Initial Plan ==")[0].splitlines()
+    ]
+    assert len(shared) == 1
+    node_counts = Counter(
+        line.split(" ")[0]
+        for line in lines
+        if line.startswith(("ArrowEvalPython", "MapInPandas"))
+    )
+    assert node_counts == nodes
+    synth_counts = Counter(
+        name
+        for line in lines
+        if line.startswith("ArrowEvalPython")
+        for name in re.findall(r"(synthesize_\w+)\(", line)
+    )
+    assert synth_counts == synths
 
 
 def test_interval_overlap_is_equi_join(spark, sf_small):
