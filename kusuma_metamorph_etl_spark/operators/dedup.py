@@ -17,6 +17,21 @@ Scale design — the point of each variant:
   similarity of token sets; blocking on signature chunks gives the
   candidate join.
 
+Every blocked operator here is "blocking key -> equi-join on the key ->
+candidate pairs -> exact verify", and three seams hold the shared parts:
+
+* :func:`pairs` builds every candidate join: the ``a < b`` self-join on
+  the key, or for an incremental batch new x history plus new x new
+  labelled by ``against``.  Each operator keeps only its key function.
+* :func:`cosine_verify` is the one numpy cosine over ``vec_a``/``vec_b``
+  (embedding LSH, SemDeDup and its incremental twin).
+* ``similarity.lloyd`` is the one k-means loop behind the SemDeDup cells
+  (``similarity.ivf_build``) and the PQ codebooks.
+
+The n-gram and MinHash paths share one array-Jaccard verify
+(:func:`_jaccard_verify`), the substring paths one span verify
+(:func:`_span_verify`).
+
 Cited parity: the reference has only the PK duplicate *gate*
 (`/root/reference/ETL-Airflow/dags/tasks/transform_utils.py:79-92`); these
 operators extend it to content-level dedup per the project north star.
@@ -173,7 +188,7 @@ def bloom_incremental_dedup(
         history_df.select(fingerprint(F.col(text_col)).alias("__fp")).distinct(),
         eager=True,
     )
-    n_bits, n_hashes = bloom_params_for(hist.count(), fpp)
+    n_bits, n_hashes = bloom_params_for(hist.count(), fpp)  # bound: one row
     sketch = bloom_sketch(hist, "__fp", n_bits=n_bits, n_hashes=n_hashes)
     flagged = bloom_probe(
         sketch,
@@ -236,6 +251,89 @@ def shingle_table(
     )
 
 
+# ----------------------------------------------------------------- candidate pairs
+
+
+def pairs(
+    left: DataFrame,
+    on: str | list[str],
+    id_col: str,
+    right: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate pairs from an equi-join on the blocking key ``on``.
+
+    With one side: the self-join of ``left`` on ``on``, each unordered
+    pair once as ``a < b``.  With ``right`` (the history of an
+    incremental batch ``left``): new x history unioned with new x new
+    (``a < b``), labelled by an ``against`` column ('history' / 'new');
+    ``a`` is always the new id, and the same id must not appear on both
+    sides.  ``on=[]`` is the cross join.
+
+    ``id_col`` comes out as ``a`` / ``b`` and every other non-key column
+    as ``<col>_a`` / ``<col>_b`` (a position, a signature, the vector).
+    No ``distinct``: a pair colliding on several keys (bands, LSH tables,
+    Hamming chunks) comes out once per key, and those callers collapse it
+    themselves."""
+    on = [on] if isinstance(on, str) else on
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *on,
+            *[
+                F.col(c).alias(s if c == id_col else f"{c}_{s}")
+                for c in df.columns
+                if c not in on
+            ],
+        )
+
+    def join(x: DataFrame, y: DataFrame) -> DataFrame:
+        return x.join(y, on=on) if on else x.crossJoin(y)
+
+    a = side(left, "a")
+    within = join(a, side(left, "b")).filter(F.col("a") < F.col("b"))
+    if right is None:
+        return within
+    return (
+        join(a, side(right, "b"))
+        .withColumn("against", F.lit("history"))
+        .unionByName(within.withColumn("against", F.lit("new")))
+    )
+
+
+def cosine_verify(cand: DataFrame, threshold: float) -> DataFrame:
+    """Exact cosine verify of candidate pairs carrying ``vec_a`` /
+    ``vec_b``: the pairs with cosine ≥ ``threshold``, every other column
+    passed through (ids keep their types, ``against`` survives) plus
+    ``cosine``.  One numpy dot + norm per Arrow batch instead of an
+    interpreted per-element fold per pair (the ``cosine_topk_np``
+    lesson: dense linear algebra does not belong in higher-order-function
+    expressions); measured at sf0.1 (~820k embedding-LSH candidates):
+    scoring 5-6 s as a fold vs 2.0 s here.  A zero-norm vector scores NaN
+    and never passes."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    keep = [f for f in cand.schema.fields if f.name not in ("vec_a", "vec_b")]
+    names = [f.name for f in keep]
+
+    def score(batches):
+        for batch in batches:
+            if not len(batch):
+                # a 0-row Arrow batch gives a 1-D empty array whose
+                # .sum(axis=1) raises AxisError
+                continue
+            av = np.array(list(batch["vec_a"]), dtype=np.float64)
+            bv = np.array(list(batch["vec_b"]), dtype=np.float64)
+            cos = (av * bv).sum(axis=1) / (
+                np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
+            )
+            out = batch[names].assign(cosine=cos)
+            yield out[out["cosine"] >= threshold]
+
+    schema = StructType([*keep, StructField("cosine", DoubleType())])
+    return cand.mapInPandas(score, schema=schema)
+
+
 # ----------------------------------------------------------------- exact Jaccard
 
 def _pair_overlap_counts(
@@ -249,11 +347,8 @@ def _pair_overlap_counts(
     with :func:`minhash_lsh_candidates` and verify candidates only."""
     shingles = shingle_table(df, text_col, id_col, n)
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    left = shingles.toDF("a", "shingle")
-    right = shingles.toDF("b", "shingle")
     common = (
-        left.join(right, on="shingle")
-        .filter(F.col("a") < F.col("b"))
+        pairs(shingles, "shingle", id_col)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
@@ -331,14 +426,6 @@ def minhash_signatures(
     Documents with fewer than ``n`` tokens have no shingles and drop out
     (they cannot be shingle-near-dups of anything).
     """
-    return _signatures_from_shingles(
-        shingle_table(df, text_col, id_col, n), id_col, n_hashes
-    )
-
-
-def _signatures_from_shingles(
-    shingles: DataFrame, id_col: str, n_hashes: int
-) -> DataFrame:
     # Measured (sf0.1, same session, 3 reps each): this explode+groupBy
     # formulation runs the full near-dup pipeline in ~4.2-4.7s; replacing
     # it with a shuffle-free row expression
@@ -351,7 +438,8 @@ def _signatures_from_shingles(
         for j in range(n_hashes)
     ]
     return (
-        shingles.groupBy(id_col)
+        shingle_table(df, text_col, id_col, n)
+        .groupBy(id_col)
         .agg(*mins)
         .select(
             F.col(id_col).alias("id"),
@@ -376,19 +464,29 @@ def minhash_lsh_candidates(
     (band_idx, band_hash).  Probability-of-candidacy follows the classic
     (1 - (1 - j^r)^b) S-curve.
     """
-    return _lsh_candidates_from_shingles(
-        shingle_table(df, text_col, id_col, n), id_col, n_hashes, bands
+    return (
+        pairs(
+            _band_table(df, text_col, id_col, n_hashes, bands, n),
+            ["band_idx", "band_hash"],
+            "id",
+        )
+        .select("a", "b")
+        .distinct()
     )
 
 
-def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
-    """(id, band_idx, band_hash) rows from an (id, sig) signature frame —
+def _band_table(
+    df: DataFrame, text_col: str, id_col: str, n_hashes: int, bands: int, n: int
+) -> DataFrame:
+    """(id, band_idx, band_hash) rows of ``df``'s MinHash signatures —
     the joinable LSH index representation (this is also the frame a
     production pipeline PERSISTS as its corpus index: append-only,
-    partitionable by band_idx)."""
+    partitionable by band_idx).  The parameters are checked before any
+    signature is built, on the batch and the incremental path alike."""
     if n_hashes < 1 or bands < 1:
-        # fail fast: n_hashes=0 raised a bare "exprs should not be empty"
-        # AssertionError and bands=0 a raw ZeroDivisionError (r17 edge sweep)
+        # n_hashes=0 would die inside signature construction with a bare
+        # "exprs should not be empty" AssertionError, bands=0 with a raw
+        # ZeroDivisionError
         raise ValueError(
             f"n_hashes and bands must be >= 1, got n_hashes={n_hashes}, "
             f"bands={bands}"
@@ -399,6 +497,7 @@ def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
             "— the remainder signature values would be silently ignored, "
             "shifting the LSH S-curve away from the configured threshold"
         )
+    sig = minhash_signatures(df, text_col, id_col, n_hashes, n)
     rows = n_hashes // bands
     return sig.select(
         "id",
@@ -418,18 +517,50 @@ def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     ).select("id", "band.band_idx", "band.band_hash")
 
 
-def _lsh_candidates_from_shingles(
-    shingles: DataFrame, id_col: str, n_hashes: int, bands: int
+def _jaccard_verify(
+    cand: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
 ) -> DataFrame:
-    sig = _signatures_from_shingles(shingles, id_col, n_hashes)
-    banded = _band_table(sig, n_hashes, bands)
-    left = banded.toDF("a", "band_idx", "band_hash")
-    right = banded.toDF("b", "band_idx", "band_hash")
+    """Exact n-gram Jaccard verify of candidate pairs ``cand`` (a, b,
+    ...): ``a`` looks up its text in ``a_docs``, ``b`` in ``b_docs``;
+    adds ``n_common`` and ``jaccard`` and keeps pairs ≥ ``threshold``.
+
+    Verification intersects the two documents' distinct-shingle ARRAYS
+    (``array_intersect``) instead of re-joining the exploded shingle
+    table: the shingle-level join + groupBy("a","b") shuffle it replaces
+    was the dominant bench cost (10.8s vs 6.9s at sf0.1, identical rows).
+    Each candidate pair carries two shingle arrays through two narrow
+    equi-joins; the intersection runs JVM-side inside codegen.  Persisting
+    the shingle table was also measured SLOWER than recomputation
+    (11.4-12.0s persisted vs 8.9-9.8s recomputed — cache materialization
+    plus the extra job boundary beat cheap tokenize passes), so the plan
+    recomputes."""
+
+    def sets(docs: DataFrame, s: str) -> DataFrame:
+        # Shingle sets are distinct per doc, so |intersect| is the exact
+        # common-shingle count and |array| the per-doc set size.  Tokens
+        # materialize in their own select — token_shingles embeds its
+        # input expression ~5x, and an inlined tokenizer evaluates per
+        # copy (measured 4.4s -> 0.2s for this projection at sf0.1).
+        return docs.select(
+            F.col(id_col).alias(s), words(F.col(text_col)).alias("__toks")
+        ).select(s, token_shingles(F.col("__toks"), n).alias(f"sh{s}"))
+
     return (
-        left.join(right, on=["band_idx", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+        cand.join(sets(a_docs, "a"), on="a")
+        .join(sets(b_docs, "b"), on="b")
+        .withColumn("n_common", F.size(F.array_intersect("sha", "shb")))
+        .withColumn(
+            "jaccard",
+            F.col("n_common")
+            / (F.size("sha") + F.size("shb") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -443,57 +574,12 @@ def minhash_near_dups(
     threshold: float = 0.5,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard — the full near-dup
-    pipeline (generate cheaply, verify exactly).
-
-    Verification intersects the two documents' distinct-shingle ARRAYS
-    (``array_intersect``) instead of re-joining the exploded shingle
-    table: the shingle-level join + groupBy("a","b") shuffle it replaces
-    was the dominant bench cost (10.8s vs 6.9s at sf0.1, identical rows).
-    Each candidate pair carries two shingle arrays through two narrow
-    equi-joins; the intersection runs JVM-side inside codegen.  Persisting
-    the shingle table was also measured SLOWER than recomputation
-    (11.4-12.0s persisted vs 8.9-9.8s recomputed — cache materialization
-    plus the extra job boundary beat cheap tokenize passes), so the plan
-    recomputes.
+    pipeline (generate cheaply, verify exactly; :func:`_jaccard_verify`).
     """
-    if n_hashes < 1 or bands < 1:
-        # fail fast at the public entry: a non-positive n_hashes otherwise
-        # dies inside signature construction with a bare "exprs should
-        # not be empty" AssertionError (r17 edge sweep); _band_table
-        # carries the same guard for the incremental callers
-        raise ValueError(
-            f"n_hashes and bands must be >= 1, got n_hashes={n_hashes}, "
-            f"bands={bands}"
-        )
-    shingles = shingle_table(df, text_col, id_col, n)
-    candidates = _lsh_candidates_from_shingles(shingles, id_col, n_hashes, bands)
-    # Shingle sets are distinct per doc, so |intersect| is the exact
-    # common-shingle count and |array| the per-doc set size.  Tokens
-    # materialize in their own select — token_shingles embeds its input
-    # expression ~5x, and an inlined tokenizer evaluates per copy
-    # (measured 4.4s -> 0.2s for this projection at sf0.1).
-    sh = df.select(
-        F.col(id_col), words(F.col(text_col)).alias("__toks")
-    ).select(F.col(id_col), token_shingles(F.col("__toks"), n).alias("sh"))
-    sa = sh.toDF("a", "sha")
-    sb = sh.toDF("b", "shb")
-    verified = (
-        candidates.join(sa, on="a")
-        .join(sb, on="b")
-        .select(
-            "a",
-            "b",
-            F.size(F.array_intersect("sha", "shb")).alias("n_common"),
-            F.size("sha").alias("na"),
-            F.size("shb").alias("nb"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    cand = minhash_lsh_candidates(df, text_col, id_col, n_hashes, bands, n)
+    return _jaccard_verify(cand, df, df, text_col, id_col, n, threshold).select(
+        "a", "b", "jaccard"
     )
-    return verified.select("a", "b", "jaccard")
 
 
 def incremental_minhash_near_dups(
@@ -518,63 +604,24 @@ def incremental_minhash_near_dups(
     PERSISTED index (`_band_table` output, partitionable by band_idx,
     append-only: tonight's new bands become tomorrow's history).
 
-    Returns (new_id, match_id, jaccard, against) where ``against`` is
+    Returns (new_id, match_id, against, jaccard) where ``against`` is
     'history' or 'new'; pairs are exact-Jaccard-verified on candidates
     only, same verify plan as :func:`minhash_near_dups`.  The same
     id must not appear on both sides.
     """
-    new_sig = _signatures_from_shingles(
-        shingle_table(new_df, text_col, id_col, n), id_col, n_hashes
+    new_bands, hist_bands = (
+        _band_table(d, text_col, id_col, n_hashes, bands, n)
+        for d in (new_df, history_df)
     )
-    hist_sig = _signatures_from_shingles(
-        shingle_table(history_df, text_col, id_col, n), id_col, n_hashes
-    )
-    new_bands = _band_table(new_sig, n_hashes, bands)
-    hist_bands = _band_table(hist_sig, n_hashes, bands)
-
-    cross = (
-        new_bands.toDF("new_id", "band_idx", "band_hash")
-        .join(hist_bands.toDF("match_id", "band_idx", "band_hash"),
-              on=["band_idx", "band_hash"])
-        .select("new_id", "match_id")
+    cand = (
+        pairs(new_bands, ["band_idx", "band_hash"], "id", hist_bands)
+        .select("a", "b", "against")
         .distinct()
-        .withColumn("against", F.lit("history"))
     )
-    l = new_bands.toDF("new_id", "band_idx", "band_hash")
-    r = new_bands.toDF("match_id", "band_idx", "band_hash")
-    within = (
-        l.join(r, on=["band_idx", "band_hash"])
-        .filter(F.col("new_id") < F.col("match_id"))
-        .select("new_id", "match_id")
-        .distinct()
-        .withColumn("against", F.lit("new"))
-    )
-    candidates = cross.unionByName(within)
-
-    def _sh(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col), words(F.col(text_col)).alias("__toks")
-        ).select(F.col(id_col), token_shingles(F.col("__toks"), n).alias("sh"))
-
-    sa = _sh(new_df).toDF("new_id", "sha")
-    sb = _sh(new_df.unionByName(history_df)).toDF("match_id", "shb")
-    return (
-        candidates.join(sa, on="new_id")
-        .join(sb, on="match_id")
-        .select(
-            "new_id",
-            "match_id",
-            "against",
-            F.size(F.array_intersect("sha", "shb")).alias("n_common"),
-            F.size("sha").alias("na"),
-            F.size("shb").alias("nb"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "match_id", "against", "jaccard")
+    return _jaccard_verify(
+        cand, new_df, new_df.unionByName(history_df), text_col, id_col, n, threshold
+    ).select(
+        F.col("a").alias("new_id"), F.col("b").alias("match_id"), "against", "jaccard"
     )
 
 
@@ -640,30 +687,25 @@ def hamming_blocked_pairs(
     if chunk_bits == 0:
         raise ValueError("bits must be >= max_hamming + 1")
 
-    def chunked(frame: DataFrame, id_out: str, sig_out: str) -> DataFrame:
-        # Last chunk absorbs the remainder bits so all bits are covered.
-        exprs = []
-        for c in range(n_chunks):
-            width = chunk_bits if c < n_chunks - 1 else bits - chunk_bits * (n_chunks - 1)
-            mask = (1 << width) - 1
-            exprs.append(
-                F.struct(
-                    F.lit(c).alias("chunk_idx"),
-                    F.shiftright(F.col(sig_out), c * chunk_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("chunk_val"),
-                )
+    # Last chunk absorbs the remainder bits so all bits are covered.
+    chunks = []
+    for c in range(n_chunks):
+        width = chunk_bits if c < n_chunks - 1 else bits - chunk_bits * (n_chunks - 1)
+        chunks.append(
+            F.struct(
+                F.lit(c).alias("chunk_idx"),
+                F.shiftright(F.col(sig_col), c * chunk_bits)
+                .bitwiseAND(F.lit((1 << width) - 1))
+                .alias("chunk_val"),
             )
-        return frame.select(
-            id_out, sig_out, F.explode(F.array(*exprs)).alias("ch")
-        ).select(id_out, sig_out, "ch.chunk_idx", "ch.chunk_val")
-
-    base = sigs.select(F.col(id_col), F.col(sig_col))
-    a = chunked(base.toDF("a", "sig_a"), "a", "sig_a")
-    b = chunked(base.toDF("b", "sig_b"), "b", "sig_b")
+        )
+    chunked = sigs.select(
+        F.col(id_col),
+        F.col(sig_col).alias("sig"),
+        F.explode(F.array(*chunks)).alias("ch"),
+    ).select(id_col, "sig", "ch.chunk_idx", "ch.chunk_val")
     return (
-        a.join(b, on=["chunk_idx", "chunk_val"])
-        .filter(F.col("a") < F.col("b"))
+        pairs(chunked, ["chunk_idx", "chunk_val"], id_col)
         .withColumn(
             "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         )
@@ -692,7 +734,7 @@ def lsh_planes_for(n_rows: int, target_occupancy: int = 128) -> int:
     """Hyperplane count that keeps expected bucket occupancy near
     ``target_occupancy``: ``max(4, ceil(log2(n / target)))``.
 
-    Why this exists (r13 scale probe): with a FIXED plane count the
+    Why this exists: with a FIXED plane count the
     bucket count is fixed, so occupancy grows linearly with the corpus
     and candidate pairs grow QUADRATICALLY — the probe measured
     exponent 1.43 on a 10x scale-up.  Holding occupancy constant makes
@@ -728,78 +770,33 @@ def embedding_lsh_pairs(
     ``n_planes=None`` derives the plane count from the corpus size via
     :func:`lsh_planes_for` (one count() job), keeping bucket occupancy —
     and therefore candidate-pair volume PER ROW — constant as the corpus
-    grows; a fixed plane count degrades quadratically (r13 scale probe).
+    grows; a fixed plane count degrades quadratically.
     """
     if n_planes is None:
-        n_planes = lsh_planes_for(df.count())
+        n_planes = lsh_planes_for(df.count())  # bound: one row
     from kusuma_metamorph_etl_spark.operators.similarity import (
         hyperplane_signatures_np,
     )
 
-    def sig(frame: DataFrame, out: str) -> DataFrame:
-        # ids only — the 64-float vectors stay OUT of the exploded frame
-        # and the bucket join; they re-attach per verified candidate
-        # below.  Signatures come from the broadcast-numpy path: the
-        # plan-literal formulation embedded 8×4×64 plane constants and
-        # paid a multi-second codegen compile per query (the same
-        # finding as `ivf_build`'s Lloyd loop; measured below).
-        return hyperplane_signatures_np(
-            frame, out, n_planes, n_tables, dim, id_col, vec_col
-        )
-
-    # Distinct candidate id-pairs FIRST (a pair colliding in several tables
-    # must cost one cosine, not several), then one vector-attach join per
-    # side and one exact verify per pair.  Measured at sf0.1 (2000 vecs,
-    # 8 tables x 16 buckets): 16.0s -> 5.1s vs verifying per-collision
-    # with vectors riding the exploded join; -> ~2.5s warm after the
-    # signature stage moved to the broadcast-numpy path (plan-literal
-    # planes cost a multi-second codegen compile per query).
-    # One signature pass, not two: both self-join sides read the same
-    # materialized (id, tbl, bucket) frame — without sharing, each side
-    # re-runs the MapInPandas hyperplane pass over the FULL vector corpus
-    # (r18 before-plan: sigs() at nodes 6 and 11).
-    sigs = share(sig(df, "a"))
-    cand = (
-        sigs.join(sigs.withColumnRenamed("a", "b"), on=["tbl", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    # Ids only in the bucket join: the vectors stay OUT of the exploded
+    # frame and re-attach per distinct candidate (a pair colliding in
+    # several tables costs one cosine, not several) — measured at sf0.1
+    # (2000 vecs, 8 tables x 16 buckets): 16.0s -> 5.1s vs verifying
+    # per-collision with vectors riding the exploded join.  Signatures
+    # come from the broadcast-numpy path: plan-literal planes embed
+    # 8×4×64 constants and pay a multi-second codegen compile per query.
+    # Both join sides read one shared signature frame: without it each
+    # side re-runs the MapInPandas hyperplane pass over the FULL corpus.
+    sigs = share(
+        hyperplane_signatures_np(df, "id", n_planes, n_tables, dim, id_col, vec_col)
     )
-    # Vectorized verify: candidates attach raw vectors and score in
-    # numpy over Arrow batches — one fused dot+norm per batch instead of
-    # an interpreted 64-element fold per pair (the cosine_topk_np lesson:
-    # dense linear algebra does not belong in HOF expressions).  Measured
-    # at sf0.1 (~820k candidates): scoring stage 5-6s fold → 2.0s numpy;
-    # whole dedup 6.1s → 4.6-5.0s warm, identical output rows.
-    import numpy as np
-    import pandas as pd
-
-    va = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("a_v"))
-    vb = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("b_v"))
-    attached = cand.join(va, on="a").join(vb, on="b")
-
-    def score(batches):
-        for batch in batches:
-            if len(batch) == 0:
-                # a 0-row Arrow batch gives a 1-D empty array whose
-                # .sum(axis=1) raises AxisError (same guard as
-                # semantic_pairs' score)
-                continue
-            av = np.array(list(batch["a_v"]), dtype=np.float64)
-            bv = np.array(list(batch["b_v"]), dtype=np.float64)
-            cos = (av * bv).sum(axis=1) / (
-                np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-            )
-            out = pd.DataFrame(
-                {"a": batch["a"], "b": batch["b"], "cosine": cos}
-            )
-            yield out[out["cosine"] >= threshold]
-
-    # Preserve the caller's id type (string doc ids, ints, ...) — a
-    # hard-coded `long` would make Arrow reject or coerce non-bigint ids.
-    id_type = df.schema[id_col].dataType.simpleString()
-    return attached.mapInPandas(
-        score, schema=f"a {id_type}, b {id_type}, cosine double"
+    cand = pairs(sigs, ["tbl", "bucket"], "id").select("a", "b").distinct()
+    vecs = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("vec_a"))
+    return cosine_verify(
+        cand.join(vecs, on="a")
+        .join(vecs.toDF("b", "vec_b"), on="b")
+        .select("a", "b", "vec_a", "vec_b"),
+        threshold,
     )
 
 
@@ -999,11 +996,10 @@ def _extend_match_udf(k: int):
             out["length"].append(left + k + right)
         return pd.DataFrame(out)
 
-    # Non-deterministic marker (guide §4.4): the `length >= min_len`
-    # filter on the result struct otherwise gets pushed below the
-    # star-expansion projection and DUPLICATES this ArrowEvalPython node
-    # — the r18 before-plan ran extend(__ta, __tb, ..) twice per
-    # candidate pair (nodes 48+51), doubling the span-extension work.
+    # Non-deterministic marker: the `length >= min_len` filter on the
+    # result struct otherwise gets pushed below the star-expansion
+    # projection and DUPLICATES this ArrowEvalPython node, running
+    # extend twice per candidate pair.
     return extend.asNondeterministic()
 
 
@@ -1043,60 +1039,84 @@ def substring_pairs(
     Shuffles carry fingerprints and candidate ids; document bodies move
     only for candidate pairs (the embedding-LSH verify economics).
     """
-    k = k or max(8, min_len // 2)
-    if k > min_len:
-        raise ValueError(f"k={k} must be <= min_len={min_len}")
-    w = min_len - k + 1
-    fp = _winnow_fingerprints_udf(k, w)
+    k, fingerprints = _fingerprints(min_len, k, id_col, text_col)
     # The sketch feeds THREE consumers (hot-hash count, both sides of the
     # candidate self-join); without sharing, Catalyst re-runs the text
     # scan + fingerprint UDF for each.  The shared frame is (id, hash,
     # pos) triples — sketch-sized, ~2/(w+1) rows per character, far
     # smaller than the corpus.
-    fps = share(
-        df.select(F.col(id_col), fp(F.col(text_col)).alias("f"))
-        .select(id_col, F.explode("f").alias("f"))
-        .select(id_col, "f.h", "f.pos")
-    )
-    hot = (
+    fps = share(fingerprints(df))
+    hot = F.broadcast(_hot_hashes(fps, id_col, max_df))
+    cand = pairs(fps.join(hot, on="h", how="left_anti"), "h", id_col)
+    return _span_verify(cand, df, df, id_col, text_col, k, min_len)
+
+
+def _fingerprints(min_len: int, k: int | None, id_col: str, text_col: str):
+    """``(k, fingerprints)``: the k-gram size (``min_len // 2`` unless
+    given, at least 8) and a function from a document frame to its
+    exploded (id, h, pos) winnowed-fingerprint sketch."""
+    k = k or max(8, min_len // 2)
+    if k > min_len:
+        raise ValueError(f"k={k} must be <= min_len={min_len}")
+    fp = _winnow_fingerprints_udf(k, min_len - k + 1)
+
+    def fingerprints(frame: DataFrame) -> DataFrame:
+        return (
+            frame.select(F.col(id_col), fp(F.col(text_col)).alias("f"))
+            .select(id_col, F.explode("f").alias("f"))
+            .select(id_col, "f.h", "f.pos")
+        )
+
+    return k, fingerprints
+
+
+def _hot_hashes(fps: DataFrame, id_col: str, max_df: int) -> DataFrame:
+    """Stop fingerprints: hashes present in more than ``max_df``
+    documents (boilerplate), dropped before the candidate join."""
+    return (
         fps.groupBy("h")
         .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
         .filter(F.col("n_docs") > max_df)
         .select("h")
     )
-    fps = fps.join(F.broadcast(hot), on="h", how="left_anti")
-    left = fps.select(
-        F.col("h"), F.col(id_col).alias("a"), F.col("pos").alias("pos_a")
-    )
-    right = fps.select(
-        F.col("h"), F.col(id_col).alias("b"), F.col("pos").alias("pos_b")
-    )
-    cand = (
-        left.join(right, on="h")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "pos_a", "pos_b")
-    )
-    texts_a = df.select(
-        F.col(id_col).alias("a"), F.col(text_col).alias("__ta")
-    )
-    texts_b = df.select(
-        F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
-    )
+
+
+def _span_verify(
+    cand: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    min_len: int,
+) -> DataFrame:
+    """Candidate-only span verify: anchors ``cand`` (h, a, pos_a, b,
+    pos_b, ...) join their texts by id (``a`` from ``a_docs``, ``b``
+    from ``b_docs``) and :func:`_extend_match_udf` grows each anchor to
+    its maximal equal span.  Keeps the spans of ≥ ``min_len`` chars as
+    (a, b, [against,] a_start, b_start, length), distinct: anchors
+    inside one span all extend to the same maximum."""
     extend = _extend_match_udf(k)
-    result = (
-        cand.join(texts_a, on="a")
-        .join(texts_b, on="b")
+    keys = [c for c in cand.columns if c not in ("h", "pos_a", "pos_b")]
+    return (
+        cand.join(
+            a_docs.select(F.col(id_col).alias("a"), F.col(text_col).alias("__ta")),
+            on="a",
+        )
+        .join(
+            b_docs.select(F.col(id_col).alias("b"), F.col(text_col).alias("__tb")),
+            on="b",
+        )
         .withColumn(
             "s",
             extend(
                 F.col("__ta"), F.col("__tb"), F.col("pos_a"), F.col("pos_b")
             ),
         )
-        .select("a", "b", "s.a_start", "s.b_start", "s.length")
+        .select(*keys, "s.a_start", "s.b_start", "s.length")
         .filter(F.col("length") >= min_len)
         .distinct()
     )
-    return result
 
 
 def incremental_substring_pairs(
@@ -1129,79 +1149,24 @@ def incremental_substring_pairs(
     the new-batch id and ``against`` ∈ {'history', 'new'}.  The same id
     must not appear on both sides.
     """
-    k = k or max(8, min_len // 2)
-    if k > min_len:
-        raise ValueError(f"k={k} must be <= min_len={min_len}")
-    w = min_len - k + 1
-    fp = _winnow_fingerprints_udf(k, w)
-
-    def sketch(frame: DataFrame) -> DataFrame:
-        # shared by the hot-hash count and the candidate joins
-        return share(
-            frame.select(F.col(id_col), fp(F.col(text_col)).alias("f"))
-            .select(id_col, F.explode("f").alias("f"))
-            .select(id_col, "f.h", "f.pos")
+    k, fingerprints = _fingerprints(min_len, k, id_col, text_col)
+    # each sketch is shared by the hot-hash count and the candidate joins
+    new_fps, hist_fps = share(fingerprints(new_df)), share(fingerprints(history_df))
+    hot = F.broadcast(
+        _hot_hashes(
+            new_fps.select(id_col, "h").unionByName(hist_fps.select(id_col, "h")),
+            id_col,
+            max_df,
         )
-
-    new_fps, hist_fps = sketch(new_df), sketch(history_df)
-    hot = (
-        new_fps.select(id_col, "h")
-        .unionByName(hist_fps.select(id_col, "h"))
-        .groupBy("h")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_df)
-        .select("h")
     )
-    new_f = new_fps.join(F.broadcast(hot), on="h", how="left_anti")
-    hist_f = hist_fps.join(F.broadcast(hot), on="h", how="left_anti")
-
-    left = new_f.select(
-        "h", F.col(id_col).alias("a"), F.col("pos").alias("pos_a")
+    cand = pairs(
+        new_fps.join(hot, on="h", how="left_anti"),
+        "h",
+        id_col,
+        hist_fps.join(hot, on="h", how="left_anti"),
     )
-    cross = (
-        left.join(
-            hist_f.select(
-                "h", F.col(id_col).alias("b"), F.col("pos").alias("pos_b")
-            ),
-            on="h",
-        )
-        .select("a", "b", "pos_a", "pos_b")
-        .withColumn("against", F.lit("history"))
-    )
-    within = (
-        left.join(
-            new_f.select(
-                "h", F.col(id_col).alias("b"), F.col("pos").alias("pos_b")
-            ),
-            on="h",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "pos_a", "pos_b")
-        .withColumn("against", F.lit("new"))
-    )
-    cand = cross.unionByName(within)
-
-    texts_a = new_df.select(
-        F.col(id_col).alias("a"), F.col(text_col).alias("__ta")
-    )
-    texts_b = history_df.select(
-        F.col(id_col).alias("b"), F.col(text_col).alias("__tb")
-    ).unionByName(
-        new_df.select(F.col(id_col).alias("b"), F.col(text_col).alias("__tb"))
-    )
-    extend = _extend_match_udf(k)
-    return (
-        cand.join(texts_a, on="a")
-        .join(texts_b, on="b")
-        .withColumn(
-            "s",
-            extend(
-                F.col("__ta"), F.col("__tb"), F.col("pos_a"), F.col("pos_b")
-            ),
-        )
-        .select("a", "b", "against", "s.a_start", "s.b_start", "s.length")
-        .filter(F.col("length") >= min_len)
-        .distinct()
+    return _span_verify(
+        cand, new_df, history_df.unionByName(new_df), id_col, text_col, k, min_len
     )
 
 
@@ -1321,8 +1286,6 @@ def semantic_pairs(
     duplicates are never missed.  Verification is exact cosine in numpy
     over Arrow batches — precision matches `embedding_lsh_pairs`.
     """
-    import numpy as np
-
     from kusuma_metamorph_etl_spark.operators.similarity import (
         assign_cells_np,
         ivf_build,
@@ -1335,42 +1298,19 @@ def semantic_pairs(
         # cluster count lets per-cell occupancy grow linearly and the
         # Σ|cell|² verify quadratically (the sf1.0 probe read exponent
         # 0.63 at the old fixed 32).
-        n_clusters = n_cells_for(df.count())
+        n_clusters = n_cells_for(df.count())  # bound: one row
     centroids = ivf_build(df, n_clusters, id_col, vec_col, refine_iters)
     # probes=1: every vector lives in exactly one cell, so the cell join
     # emits each candidate pair once — no distinct pass needed (unlike
     # multi-table LSH where a pair can collide in several tables).  The
     # assignment is the broadcast-numpy path (plan-literal centroids
     # cost a multi-second codegen compile at 32×64 — see
-    # `assign_cells_np`).  The b side is a RENAME of the a side, but a
-    # DataFrame self-join does NOT share the branch: the r18 before-plan
-    # ran the cell-assignment ArrowEvalPython once per join side over
-    # the full corpus.  Sharing the assigned frame lets both sides read
-    # one materialization.
-    a = share(assign_cells_np(df, centroids, "a", id_col, vec_col))
-    b = a.select(
-        F.col("a").alias("b"), F.col("a_v").alias("b_v"), "cell"
-    )
-    cand = a.join(b, on="cell").filter(F.col("a") < F.col("b"))
-
-    def score(batches):
-        for batch in batches:
-            av = np.array(list(batch["a_v"]), dtype=np.float64)
-            bv = np.array(list(batch["b_v"]), dtype=np.float64)
-            if len(av) == 0:
-                continue
-            cos = (av * bv).sum(axis=1) / (
-                np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-            )
-            out = pd.DataFrame(
-                {"a": batch["a"], "b": batch["b"], "cosine": cos}
-            )
-            yield out[out["cosine"] >= threshold]
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return cand.mapInPandas(
-        score, schema=f"a {id_type}, b {id_type}, cosine double"
-    )
+    # `assign_cells_np`).  A DataFrame self-join does NOT share the
+    # branch: without share() both join sides run the cell-assignment
+    # ArrowEvalPython over the full corpus.
+    cells = share(assign_cells_np(df, centroids, "id", id_col, vec_col))
+    cand = pairs(cells.withColumnRenamed("id_v", "vec"), "cell", "id")
+    return cosine_verify(cand.drop("cell"), threshold)
 
 
 def semantic_dedup(
@@ -1401,8 +1341,8 @@ def incremental_semantic_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Incremental SemDeDup (VERDICT r8 #5 — the semantic member of the
-    incremental family exact/MinHash/substring/CC already have): check a
+    """Incremental SemDeDup (the semantic member of the incremental
+    family beside exact/MinHash/substring/CC): check a
     NEW embedding batch against a PERSISTED corpus index without ever
     re-pairing the corpus against itself.
 
@@ -1414,8 +1354,8 @@ def incremental_semantic_pairs(
     ``isin`` partition filter — at 100 TB the nightly batch touches a
     handful of cells and the scan prunes to those files).  Candidate
     pairs are (new × corpus-in-cell) plus (new × new in-cell);
-    verification is the same exact-cosine Arrow scorer as
-    :func:`semantic_pairs`, so cost scales with |new| × cell occupancy,
+    verification is :func:`cosine_verify`, as in :func:`semantic_pairs`,
+    so cost scales with |new| × cell occupancy,
     not |corpus|².
 
     Same recall seam as the batch path, plus one incremental-specific
@@ -1430,8 +1370,6 @@ def incremental_semantic_pairs(
     """
     import json
 
-    import numpy as np
-
     from kusuma_metamorph_etl_spark.operators.similarity import (
         as_double,
         assign_cells_np,
@@ -1439,9 +1377,12 @@ def incremental_semantic_pairs(
 
     spark = new_df.sparkSession
     centroids = json.loads(
+        # bound: one row (the JSON centroid sidecar)
         spark.read.text(f"{index_path}/_ivf_centroids").first()["value"]
     )
-    a = assign_cells_np(new_df, centroids, "new_id", id_col, vec_col)
+    new = assign_cells_np(new_df, centroids, "id", id_col, vec_col).withColumnRenamed(
+        "id_v", "vec"
+    )
     # The assignment (a Python-worker pandas UDF) feeds four consumers:
     # the touched-cell collect, the history join, and both sides of the
     # within-batch self-join.  Measured A/B at sf0.1 (5 reps, warm):
@@ -1449,68 +1390,24 @@ def incremental_semantic_pairs(
     # ReusedExchange already shares the self-join's shuffle, so the UDF
     # runs ~3x on the BOUNDED nightly batch, and a checkpoint would
     # materialize the batch's full vectors to disk to save narrow
-    # Python work (r9 self-review, resolved measured-not-assumed).  A
-    # caller whose batch is huge enough to flip that trade persists
-    # `new_df` itself.
-    # Touched-cell set: bounded by n_centroids, so the collect is safe,
-    # and pushing it as a static filter prunes the corpus read to the
-    # touched partitions' files.
+    # Python work.  A caller whose batch is huge enough to flip that
+    # trade persists `new_df` itself.
+    # Pushing the touched cells as a static filter prunes the corpus
+    # read to the touched partitions' files.
     touched = sorted(
-        r["cell"] for r in a.select("cell").distinct().collect()
+        # bound: ≤ n_centroids cells
+        r["cell"] for r in new.select("cell").distinct().collect()
     )
     corpus = (
         spark.read.parquet(index_path)
         .filter(F.col("cell").isin(touched))
         .select(
-            F.col(id_col).alias("match_id"),
-            as_double(F.col(vec_col)).alias("match_id_v"),
-            "cell",
+            F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("vec"), "cell"
         )
     )
-    cand = (
-        a.join(corpus, on="cell")
-        .select("new_id", "new_id_v", "match_id", "match_id_v")
-        .withColumn("against", F.lit("history"))
-    )
-    b = a.select(
-        F.col("new_id").alias("match_id"),
-        F.col("new_id_v").alias("match_id_v"),
-        "cell",
-    )
-    within = (
-        a.join(b, on="cell")
-        .filter(F.col("new_id") < F.col("match_id"))
-        .select("new_id", "new_id_v", "match_id", "match_id_v")
-        .withColumn("against", F.lit("new"))
-    )
-    cand = cand.unionByName(within)
-
-    def score(batches):
-        for batch in batches:
-            av = np.array(list(batch["new_id_v"]), dtype=np.float64)
-            bv = np.array(list(batch["match_id_v"]), dtype=np.float64)
-            if len(av) == 0:
-                continue
-            cos = (av * bv).sum(axis=1) / (
-                np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-            )
-            out = pd.DataFrame(
-                {
-                    "new_id": batch["new_id"],
-                    "match_id": batch["match_id"],
-                    "against": batch["against"],
-                    "cosine": cos,
-                }
-            )
-            yield out[out["cosine"] >= threshold]
-
-    id_type = new_df.schema[id_col].dataType.simpleString()
-    return cand.mapInPandas(
-        score,
-        schema=(
-            f"new_id {id_type}, match_id {id_type},"
-            " against string, cosine double"
-        ),
+    cand = pairs(new, "cell", "id", corpus).drop("cell")
+    return cosine_verify(cand, threshold).select(
+        F.col("a").alias("new_id"), F.col("b").alias("match_id"), "against", "cosine"
     )
 
 

@@ -6,6 +6,19 @@ Embeddings are ``array<float>`` columns.  All math is built-in column
 expressions (``zip_with`` + ``aggregate``) — JVM-side, no Python per row.
 Floats are cast to double BEFORE arithmetic so results are bit-stable and
 reproducible in the SQL oracle (same element order, same IEEE ops).
+
+The ANN and near-dup paths share three seams:
+
+* ``dedup.pairs`` builds every candidate join (``cosine_pairs`` is its
+  ``on=[]`` cross join);
+* ``dedup.cosine_verify`` is the one numpy cosine over candidate pairs;
+* :func:`lloyd` is the one k-means loop: :func:`ivf_build` (one
+  subspace, cosine argmax) and :func:`pq_train` (m subspaces, L2
+  argmin) each pass only their assignment rule, seeded from one
+  hash-order sample (:func:`_hash_sample`).
+
+The query-side top-k tail of :func:`ivf_topk`, :func:`lsh_topk` and
+:func:`ivf_search` is :func:`_best_pairs`.
 """
 
 from __future__ import annotations
@@ -169,6 +182,7 @@ def cosine_topk_np(
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
 
+    # bound: |Q| rows (the query set is the small side)
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
         # np.array([]) is 1-D; norm(axis=1) would raise AxisError
@@ -226,12 +240,12 @@ def cosine_pairs(
     """All pairs (a < b) with cosine ≥ threshold — embedding near-dup
     detection.  Exhaustive at test scale; the scale path buckets with
     :func:`hyperplane_signature` first."""
-    a = df.select(F.col(id_col).alias("a"), as_double(F.col(vec_col)).alias("va"))
-    b = df.select(F.col(id_col).alias("b"), as_double(F.col(vec_col)).alias("vb"))
+    from kusuma_metamorph_etl_spark.operators.dedup import pairs
+
+    v = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("vec"))
     return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", cosine(F.col("va"), F.col("vb")).alias("cosine"))
+        pairs(v, [], id_col)
+        .select("a", "b", cosine(F.col("vec_a"), F.col("vec_b")).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -239,7 +253,7 @@ def cosine_pairs(
 def n_cells_for(n_rows: int, floor: int = 16, cap: int = 65536) -> int:
     """IVF cell count derived from corpus size: ``clamp(⌊√n⌋)``.
 
-    Why this exists (r13 scale probe → r14): with a FIXED cell count the
+    Why this exists: with a FIXED cell count the
     per-query candidate scan is ``n_probe/n_cells`` of the CORPUS, so
     query cost grows linearly with corpus size — `sim_ivf_topk` measured
     exponent 0.64 at the sf1.0 probe because 16 cells was tuned for
@@ -259,7 +273,7 @@ def maxsim_probe_for(n_cells: int, frac: float = 0.625, floor: int = 10) -> int:
     constant FRACTION of cells (default 5/8, the ratio the registered
     row was calibrated at on the 16-cell floor — 10/16).
 
-    Why this exists (r16 verdict → r17): with a FIXED ``n_probe`` the
+    Why this exists: with a FIXED ``n_probe`` the
     probed fraction shrinks as cells grow √n, and the measured doc-grain
     recall of `sim_maxsim_ann` fell 0.917 → 0.917 → 0.795 across the
     three driver scales — monotonically toward its 0.7 gate.  Holding
@@ -268,9 +282,8 @@ def maxsim_probe_for(n_cells: int, frac: float = 0.625, floor: int = 10) -> int:
     ``frac · n_docs`` of a pooled (1-row-per-doc) scan — the cheap
     stage; the expensive exact re-rank is bounded separately by
     :func:`maxsim_candidates_for`.  Same derived-parameter discipline as
-    :func:`n_cells_for` / ``dedup.lsh_planes_for`` (r14 rule: no
-    registered ANN path carries a capacity constant tuned to fixture
-    scale)."""
+    :func:`n_cells_for` / ``dedup.lsh_planes_for`` (no registered ANN
+    path carries a capacity constant tuned to fixture scale)."""
     import math
 
     if n_cells <= 0:
@@ -289,7 +302,7 @@ def maxsim_candidates_for(
     pooled-cosine rank among i.i.d. distractors grows with the corpus,
     so a FIXED shortlist is a shrinking fraction (35 was 56% of the
     sf0.01 corpus but 1.4% of sf1.0) and recall decays (fixed-vs-derived
-    recall/latency A/B at sf0.1 and sf1.0: BENCH_SCALE.json r17).  √n
+    recall/latency A/B at sf0.1 and sf1.0: BENCH_SCALE.json).  √n
     keeps the exact re-rank cost per query
     (``|q|·n_candidates·tokens_per_doc``) sublinear in the corpus; the
     cap bounds the broadcast candidate list (|q|×N rows) at cluster
@@ -310,92 +323,115 @@ def ivf_build(
     vec_col: str = "embedding",
     refine_iters: int = 0,
 ) -> list[list[float]]:
-    """Pick the IVF centroid set: the ``n_centroids`` corpus vectors
-    with the smallest ``xxhash64(id)`` (a deterministic pseudo-random
-    sample — one TakeOrdered top-k, no full sort), optionally refined
-    with ``refine_iters`` Lloyd (k-means) iterations.  Bounded driver
-    collects only — the index IS tiny by construction.
-
-    The r8 seeding picked ids at a stride (``id % (count//k) == 0``),
-    which silently seeded ZERO centroids whenever the id set missed the
-    stride — e.g. a corpus filtered to ``vec_id % 5 != 0`` has no ids
-    divisible by its own stride of 25 (found building the incremental-
-    SemDeDup index, r9).  Hash-order seeding is id-distribution
-    independent: any non-empty corpus seeds min(|corpus|, k) centroids.
-
-    Each Lloyd iteration is one distributed pass: BROADCAST-ndarray
-    cosine assignment + per-cell partial (count, sum-vector) reduction,
-    both inside one numpy ``mapInPandas`` over Arrow batches; the
-    collect is ≤ partitions × n_centroids partial rows (bounded by the
-    cluster shape, not the data), combined into exact per-cell means on
-    the driver.  An earlier formulation assigned cells through the
-    ``_centroid_cells`` plan-LITERAL path — correct, but every iteration
-    embeds n_centroids × dim constants in a fresh codegen unit and
-    recompiles it: measured 4.1 s/iteration at sf0.1 (32×64 literals)
-    vs 0.2 s for the broadcast-numpy pass, with `allclose(1e-9)`
-    centroid agreement.  Assignment ties break to the LOWEST cell index
-    (numpy argmax rule == the `_assign_cells` comparator); empty cells
-    keep their previous centroid (the deterministic stride seed makes
-    that rare).
+    """Pick the IVF centroid set: the ``n_centroids`` corpus vectors of
+    the hash-order sample (:func:`_hash_sample`), optionally refined with
+    ``refine_iters`` Lloyd iterations (:func:`lloyd`, one subspace):
+    cosine assignment, per-cell means of the raw vectors.  Bounded
+    driver collects only — the index IS tiny by construction.
+    Assignment ties break to the LOWEST cell index (numpy argmax rule ==
+    the `_assign_cells` comparator).  NULL vectors take no part.
     """
     import numpy as np
-    import pandas as pd
 
-    rows = (
-        corpus.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(n_centroids)
-        .select(as_double(F.col(vec_col)).alias("centroid"))
-        .collect()
-    )
-    centroids = [list(r["centroid"]) for r in rows]
-    if not centroids:
-        # empty corpus: np.array([]) is 1-D and the Lloyd loop's
-        # axis=1 norms would raise — mirror assign_cells_np's empty
-        # guard and return the empty centroid list (ADVICE r7)
-        return centroids
-    sc = corpus.sparkSession.sparkContext
-    for _ in range(refine_iters):
-        cmat = np.array(centroids, dtype=np.float64)
+    seeds = _hash_sample(corpus, n_centroids, id_col, vec_col)
+    if not len(seeds):
+        return []
+
+    def assign(v, books):
+        # cosine argmax, sums of the RAW vectors
+        (cmat,) = books
         cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
         cnorm[cnorm == 0] = 1.0
-        bc = sc.broadcast(cmat / cnorm)
+        vn = np.linalg.norm(v, axis=1, keepdims=True)
+        vn[vn == 0] = 1.0
+        return [(((v / vn) @ (cmat / cnorm).T).argmax(axis=1), v)]
+
+    return lloyd(corpus, [seeds], assign, refine_iters, vec_col)[0].tolist()
+
+
+def _hash_sample(
+    corpus: DataFrame, k: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """The ``k`` non-NULL vectors with the smallest ``xxhash64(id)``
+    (ties by id) as a (≤ k, dim) float64 matrix: a deterministic
+    pseudo-random sample, one TakeOrdered top-k with no full sort, that
+    seeds min(|corpus|, k) rows whatever the id distribution (a stride
+    rule ``id % (count//k) == 0`` seeds nothing when the ids miss the
+    stride)."""
+    import numpy as np
+
+    rows = (
+        corpus.filter(F.col(vec_col).isNotNull())
+        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        .limit(k)
+        .select(as_double(F.col(vec_col)).alias("v"))
+        .collect()  # bound: k rows
+    )
+    return np.array([r["v"] for r in rows], dtype=np.float64)
+
+
+def lloyd(
+    corpus: DataFrame,
+    seeds: list,
+    assign,
+    iters: int,
+    vec_col: str,
+) -> list:
+    """Lloyd (k-means) refinement of ``m`` independent codebooks, one
+    distributed pass per iteration over the non-NULL vectors of
+    ``corpus``.
+
+    ``seeds`` is a list of ``m`` (k_j, d_j) float64 arrays (a subspace
+    each); ``assign(v, books)`` maps an (n, dim) batch to one ``(cells,
+    x)`` per subspace: each row's cell index and the (n, d_j) rows to
+    average into it.  Each iteration broadcasts the codebooks, runs one
+    numpy ``mapInPandas`` that emits per-batch partial (subspace, cell,
+    count, sum) rows, collects them — ≤ partitions × m × k rows, bounded
+    by the cluster shape, not the data — and re-averages on the driver;
+    an empty cell keeps its codeword.  Returns the refined arrays.
+
+    Assignment runs in numpy against a broadcast ndarray, not through
+    plan-literal centroids: those embed k × dim constants in a fresh
+    codegen unit per iteration, measured 4.1 s/iteration at sf0.1 (32×64)
+    vs 0.2 s here with `allclose(1e-9)` agreement."""
+    import numpy as np
+
+    books = [b.copy() for b in seeds]
+    vecs = corpus.filter(F.col(vec_col).isNotNull()).select(
+        as_double(F.col(vec_col)).alias("__v")
+    )
+    sc = corpus.sparkSession.sparkContext
+    for _ in range(iters):
+        bc = sc.broadcast(books)
 
         def partials(batches):
-            cn = bc.value
+            bks = bc.value
             for batch in batches:
                 if not len(batch):
                     continue
                 v = np.array(list(batch["__v"]), dtype=np.float64)
-                vn = np.linalg.norm(v, axis=1, keepdims=True)
-                vn[vn == 0] = 1.0
-                assign = ((v / vn) @ cn.T).argmax(axis=1)
-                cells = np.unique(assign)
-                yield pd.DataFrame(
-                    {
-                        "cell": cells.astype("int32"),
-                        "n": [int((assign == c).sum()) for c in cells],
-                        "s": [v[assign == c].sum(axis=0) for c in cells],
-                    }
-                )
+                out = {"subspace": [], "cell": [], "n": [], "s": []}
+                for j, (cells, x) in enumerate(assign(v, bks)):
+                    for c in np.unique(cells):
+                        out["subspace"].append(j)
+                        out["cell"].append(int(c))
+                        out["n"].append(int((cells == c).sum()))
+                        out["s"].append(x[cells == c].sum(axis=0))
+                yield pd.DataFrame(out)
 
-        parts = (
-            corpus.select(as_double(F.col(vec_col)).alias("__v"))
-            .mapInPandas(partials, schema="cell int, n long, s array<double>")
-            .collect()
-        )  # bounded: <= partitions x n_centroids rows
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
+        parts = vecs.mapInPandas(
+            partials, schema="subspace int, cell int, n long, s array<double>"
+        ).collect()  # bound: ≤ partitions × m × k rows
+        sums: dict = {}
+        counts: dict = {}
         for r in parts:
-            c = r["cell"]
-            vec = np.array(r["s"], dtype=np.float64)
-            sums[c] = sums.get(c, 0) + vec
-            counts[c] = counts.get(c, 0) + r["n"]
-        centroids = [
-            (sums[c] / counts[c]).tolist() if counts.get(c) else centroids[c]
-            for c in range(len(centroids))
-        ]
+            key = (r["subspace"], r["cell"])
+            sums[key] = sums.get(key, 0) + np.array(r["s"], dtype=np.float64)
+            counts[key] = counts.get(key, 0) + r["n"]
+        for (j, c), n in counts.items():
+            books[j][c] = sums[(j, c)] / n
         bc.unpersist()
-    return centroids
+    return books
 
 
 def _centroid_cells(centroids: list[list[float]]) -> Column:
@@ -458,12 +494,12 @@ def assign_cells_np(
     # downstream equi-join on `cell` implies isnotnull(cell), and the
     # pushed filter otherwise lands BELOW the projection, yielding two
     # ArrowEvalPython nodes per assignment — every corpus vector paid
-    # the Python round-trip and the broadcast matmul twice (guide §4.4;
-    # observed in the r18 before-plans of every assign_cells_np caller).
+    # the Python round-trip and the broadcast matmul twice.
     cell_of = cell_of.asNondeterministic()
 
     v = as_double(F.col(vec_col))
-    return df.select(
+    # a NULL vector has no cell: it never pairs
+    return df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias(out),
         v.alias(f"{out}_v"),
         cell_of(v).alias("cell"),
@@ -538,13 +574,13 @@ def ivf_topk(
     an id-equality filter would silently drop a legitimate neighbor.
     """
     if n_centroids is None:
-        n_centroids = n_cells_for(corpus.count())
+        n_centroids = n_cells_for(corpus.count())  # bound: one row
     centroids = ivf_build(corpus, n_centroids, id_col, vec_col, refine_iters)
     if not centroids:
         # empty corpus seeds zero centroids (hash-order seeding seeds
         # min(|corpus|, k)); the plan-literal cell ranking would embed a
         # VOID-typed array and raise a baffling AnalysisException deep in
-        # analysis (r17 edge sweep) — an empty corpus has no neighbors,
+        # analysis — an empty corpus has no neighbors,
         # so return the empty result with the contract schema instead.
         q = queries.select(F.col(id_col).alias("query_id"))
         c = corpus.select(F.col(id_col).alias("neighbor_id"))
@@ -556,11 +592,19 @@ def ivf_topk(
     # write_ivf_index / incremental_semantic_pairs — one implementation
     # for every probes=1 corpus assignment, so a float-edge vector can
     # never land in different cells on two sides of the same comparison
-    # (r9 self-review; ties break to the lowest cell on both paths).
+    # (ties break to the lowest cell on both paths).
     # Queries keep the plan-literal multi-probe ranking.
     c = assign_cells_np(corpus, centroids, "neighbor_id", id_col, vec_col)
     q = _assign_cells(queries, cells, "query_id", n_probe, id_col, vec_col)
-    joined = c.join(F.broadcast(q), on="cell")
+    return _best_pairs(c.join(F.broadcast(q), on="cell"), k, exclude_self)
+
+
+def _best_pairs(joined: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """The ANN top-k tail: candidate (query_id, query_id_v, neighbor_id,
+    neighbor_id_v) rows, optionally without self-matches, scored by
+    cosine; a pair met in several cells or tables keeps one row (equal
+    cosines — ``max`` is just the dedup), then the top ``k`` per query
+    (cosine desc, neighbor_id asc)."""
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = (
@@ -633,7 +677,7 @@ def random_project(
 def _dim_of(df: DataFrame, vec_col: str) -> int:
     """Vector width from one row (embeddings are fixed-width by schema
     contract; a bounded single-row peek, not a scan)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = df.select(F.size(F.col(vec_col)).alias("d")).first()  # bound: one row
     if row is None:
         raise ValueError(f"random_project: empty frame, cannot infer {vec_col} width")
     return int(row["d"])
@@ -716,7 +760,9 @@ def hyperplane_signatures_np(
 
     id_type = df.schema[id_col].dataType.simpleString()
     return (
-        df.select(
+        # a NULL vector has no bucket: it never pairs
+        df.filter(F.col(vec_col).isNotNull())
+        .select(
             F.col(id_col).alias("__id"),
             as_double(F.col(vec_col)).alias("__v"),
         )
@@ -746,7 +792,7 @@ def lsh_topk(
 
     ``n_planes=None`` derives the plane count from the corpus size
     (``dedup.lsh_planes_for`` — constant expected bucket occupancy), the
-    same fixed-parameter fix the embedding-LSH dedup path got in r13:
+    same fixed-parameter fix as the embedding-LSH dedup path:
     with FIXED planes the per-table bucket count is fixed, so candidate
     pairs per query grow linearly with the corpus and the whole top-k
     degenerates toward brute force (sf1.0 probe measured exponent 0.54
@@ -764,7 +810,7 @@ def lsh_topk(
     if n_planes is None:
         from kusuma_metamorph_etl_spark.operators.dedup import lsh_planes_for
 
-        n_planes = lsh_planes_for(corpus.count())
+        n_planes = lsh_planes_for(corpus.count())  # bound: one row
 
     def sig(df: DataFrame, out: str) -> DataFrame:
         tables = F.array(
@@ -786,25 +832,8 @@ def lsh_topk(
 
     q = sig(queries, "query_id")
     c = sig(corpus, "neighbor_id")
-    scored = (
-        c.join(F.broadcast(q), on=["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("query_id_v"), F.col("neighbor_id_v")).alias("cosine"),
-        )
-        # A pair colliding in several tables appears once per table with an
-        # identical cosine; max() is just the dedup.
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    return top_k_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-    )
+    joined = c.join(F.broadcast(q), on=["tbl", "bucket"])
+    return _best_pairs(joined, k, exclude_self=True)
 
 
 def write_ivf_index(
@@ -827,13 +856,13 @@ def write_ivf_index(
     import json
 
     if n_centroids is None:
-        n_centroids = n_cells_for(corpus.count())
+        n_centroids = n_cells_for(corpus.count())  # bound: one row
     centroids = ivf_build(corpus, n_centroids, id_col, vec_col, refine_iters)
     # numpy assignment — the ONE probes=1 corpus-assignment path (shared
     # with ivf_topk's corpus side, semantic_pairs, and
     # incremental_semantic_pairs' new-batch side), so vectors written
     # here and batches assigned later can never disagree on a
-    # float-edge argmax cell (r9 self-review)
+    # float-edge argmax cell
     assigned = assign_cells_np(corpus, centroids, id_col, id_col, vec_col)
     (
         assigned.withColumnRenamed(f"{id_col}_v", vec_col)
@@ -870,6 +899,7 @@ def ivf_search(
     import json
 
     centroids = json.loads(
+        # bound: one row (the JSON centroid sidecar)
         spark.read.text(f"{path}/_ivf_centroids").first()["value"]
     )
     cells = _centroid_cells(centroids)
@@ -878,7 +908,7 @@ def ivf_search(
     # once and rebuild locally instead of re-running the source scan +
     # centroid scoring for the probed-cells set AND again for the join.
     q_rows = _assign_cells(queries, cells, "query_id", n_probe, id_col, vec_col)
-    collected = q_rows.collect()
+    collected = q_rows.collect()  # bound: |Q| × n_probe rows
     q = spark.createDataFrame(collected, q_rows.schema)
 
     probed = sorted({r["cell"] for r in collected})  # bounded: <= n_centroids
@@ -891,23 +921,7 @@ def ivf_search(
             "cell",
         )
     )
-    scored = (
-        corpus.join(F.broadcast(q), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("query_id_v"), F.col("neighbor_id_v")).alias("cosine"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    return top_k_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-    )
+    return _best_pairs(corpus.join(F.broadcast(q), on="cell"), k, exclude_self=True)
 
 
 def mmr_select(
@@ -968,7 +982,7 @@ def mmr_select(
         rel.filter(F.col("__v").isNotNull() & F.col("__rel").isNotNull())
         .orderBy(F.desc("__rel"), F.col(id_col))
         .limit(pool)
-        .collect()
+        .collect()  # bound: pool rows
     )
     if not top:
         return spark.createDataFrame(
@@ -1135,24 +1149,17 @@ def pq_train(
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks: ``m`` codebooks of ``k`` codewords
     over the L2-normalized corpus, seeded from the hash-order vector
-    sample (the `ivf_build` rule — id-distribution independent) and
-    refined with Lloyd iterations that run ALL subspaces in ONE
-    distributed pass each (per-partition (subspace, cell, count, sum)
-    partials; the collect is bounded by partitions × m × k).  Assignment
+    sample (:func:`_hash_sample`, the `ivf_build` rule) and refined with
+    :func:`lloyd` iterations that run ALL subspaces in ONE distributed
+    pass each.  Assignment
     is L2 per subspace — on normalized vectors ADC's summed dot products
     approximate cosine.  Ties break to the lowest codeword (numpy argmin
     rule); empty cells keep their previous codeword."""
     import numpy as np
 
-    rows = (
-        corpus.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(k)
-        .select(as_double(F.col(vec_col)).alias("v"))
-        .collect()
-    )
-    if not rows:
+    seed = _hash_sample(corpus, k, id_col, vec_col)
+    if not len(seed):
         return []
-    seed = np.array([r["v"] for r in rows], dtype=np.float64)
     dim = seed.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -1160,55 +1167,22 @@ def pq_train(
     norms = np.linalg.norm(seed, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     seed = seed / norms
+
+    def assign(v, books):
+        # L2 argmin per subspace over the normalized slices
+        vn = np.linalg.norm(v, axis=1, keepdims=True)
+        vn[vn == 0] = 1.0
+        v = v / vn
+        out = []
+        for j, bk in enumerate(books):
+            x = v[:, j * sub : (j + 1) * sub]
+            d = ((x[:, None, :] - bk[None, :, :]) ** 2).sum(axis=2)
+            out.append((d.argmin(axis=1), x))
+        return out
+
     # k codewords per subspace from the same k seed vectors' slices
-    books = [seed[:, j * sub : (j + 1) * sub].copy() for j in range(m)]
-    sc = corpus.sparkSession.sparkContext
-    for _ in range(refine_iters):
-        bc = sc.broadcast([b.copy() for b in books])
-
-        def partials(batches):
-            import pandas as pd_
-
-            bks = bc.value
-            for batch in batches:
-                if not len(batch):
-                    continue
-                v = np.array(list(batch["__v"]), dtype=np.float64)
-                vn = np.linalg.norm(v, axis=1, keepdims=True)
-                vn[vn == 0] = 1.0
-                v = v / vn
-                out = {"subspace": [], "cell": [], "n": [], "s": []}
-                for j, bk in enumerate(bks):
-                    x = v[:, j * sub : (j + 1) * sub]
-                    d = ((x[:, None, :] - bk[None, :, :]) ** 2).sum(axis=2)
-                    assign = d.argmin(axis=1)
-                    for c in np.unique(assign):
-                        out["subspace"].append(j)
-                        out["cell"].append(int(c))
-                        out["n"].append(int((assign == c).sum()))
-                        out["s"].append(x[assign == c].sum(axis=0))
-                yield pd_.DataFrame(out)
-
-        parts = (
-            corpus.select(as_double(F.col(vec_col)).alias("__v"))
-            .mapInPandas(
-                partials, schema="subspace int, cell int, n long, s array<double>"
-            )
-            .collect()
-        )
-        sums: dict = {}
-        counts: dict = {}
-        for r in parts:
-            key = (r["subspace"], r["cell"])
-            vec = np.array(r["s"], dtype=np.float64)
-            sums[key] = sums.get(key, 0) + vec
-            counts[key] = counts.get(key, 0) + r["n"]
-        for j in range(m):
-            for c in range(k):
-                if counts.get((j, c)):
-                    books[j][c] = sums[(j, c)] / counts[(j, c)]
-        bc.unpersist()
-    return [b.tolist() for b in books]
+    books = [seed[:, j * sub : (j + 1) * sub] for j in range(m)]
+    return [b.tolist() for b in lloyd(corpus, books, assign, refine_iters, vec_col)]
 
 
 def pq_encode(
@@ -1280,7 +1254,7 @@ def pq_topk(
     sub = books[0].shape[1]
     qrows = queries.select(
         F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("v")
-    ).collect()
+    ).collect()  # bound: |Q| rows (the query set is the small side)
     if not qrows:
         raise ValueError("pq_topk: empty query frame")
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
@@ -1488,7 +1462,7 @@ def maxsim_ann_topk(
     refine_iters: int = 1,
 ) -> DataFrame:
     """ANN-prefiltered MaxSim — the PRODUCTION ColBERT retrieval shape
-    (r16, the registered scale path beside :func:`maxsim_topk`'s exact
+    (the registered scale path beside :func:`maxsim_topk`'s exact
     token-level baseline):
 
     1. POOL: each token set collapses to its mean vector
@@ -1505,20 +1479,20 @@ def maxsim_ann_topk(
     ``n_probe``/``n_candidates`` default to None = DERIVED from the
     pooled corpus size (:func:`maxsim_probe_for` holds the probed-cell
     fraction constant as cells grow √n; :func:`maxsim_candidates_for`
-    grows the shortlist as √n_docs) — the r14 derived-parameter rule
-    (`n_cells_for` / `lsh_planes_for`): fixture-tuned constants decay as
+    grows the shortlist as √n_docs) — the derived-parameter rule of
+    `n_cells_for` / `lsh_planes_for`: fixture-tuned constants decay as
     the corpus grows (measured recall 0.917/0.917/0.795 at the three
-    driver scales with the r16 fixed (10, 35); BENCH_SCALE.json r17
-    records the fixed-vs-derived recall/latency points at sf0.1/sf1.0).
+    driver scales with a fixed (10, 35); BENCH_SCALE.json records the
+    fixed-vs-derived recall/latency points at sf0.1/sf1.0).
     Pass explicit ints to pin either knob.
 
     Doc and query keys stay in their OWN namespaces end to end: the
     prefilter searches doc centroids with ``exclude_self=False``, so a
     qkey numerically equal to a dkey (the common "queries are drawn
     from the corpus" shape) cannot be mistaken for a self-match and
-    silently dropped from its own shortlist.  (The r16 version offset
-    qkeys by 2^40 into a shared id space instead — unsound for 64-bit
-    hashed keys, where the offset could collide or overflow.)  Keys of
+    silently dropped from its own shortlist.  (Offsetting qkeys by 2^40
+    into a shared id space instead is unsound for 64-bit hashed keys,
+    where the offset could collide or overflow.)  Keys of
     ANY orderable type work, like :func:`maxsim_topk` itself.
 
     Same tie discipline as the exact row (score DESC, dkey ASC; 9-dp
@@ -1527,15 +1501,14 @@ def maxsim_ann_topk(
     :func:`maxsim_topk` the natural quality gate (the registered
     ``sim_maxsim_ann_err`` row pins it at ≥ 0.7).
 
-    The pooled doc frame is shared EAGERLY (r18, guide §1.2 step 1 /
-    §5): the index-build path takes ~4 passes over it (cell-count
+    The pooled doc frame is shared EAGERLY: the index-build path takes ~4 passes over it (cell-count
     derivation, seed collect, Lloyd pass, assignment scan in the final
     plan) and each pass over the LAZY frame re-runs the full token-table
     pooling aggregation — a whole-corpus scan + shuffle.  Materializing
     the pooled proxy once (n_docs×dim doubles — the small side by
-    construction, the §8 "decide with small rows" shape) turns three
-    redundant corpus aggregations into block reads (measured r18 sf0.1
-    in-session: construct 2.3 s → ~0.9 s, execute unchanged)."""
+    construction) turns three redundant corpus aggregations into block
+    reads (measured at sf0.1: construct 2.3 s → ~0.9 s, execute
+    unchanged)."""
     dcent = share(
         group_centroids(doc_tokens, d_col, vec_col=vec_col).select(
             F.col(d_col).alias(tok_col), F.col("centroid").alias(vec_col)
@@ -1543,7 +1516,7 @@ def maxsim_ann_topk(
         eager=True,
     )
     if n_probe is None or n_candidates is None or n_centroids is None:
-        n_docs = dcent.count()
+        n_docs = dcent.count()  # bound: one row
         if n_centroids is None:
             n_centroids = n_cells_for(n_docs)
         if n_probe is None:

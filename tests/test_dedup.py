@@ -847,15 +847,49 @@ def test_bloom_incremental_dedup_equals_plain_anti_join(spark, sf_small):
 
 
 def test_minhash_rejects_nonpositive_hashes_or_bands(spark):
-    """r17 edge sweep, batch 4: n_hashes=0 raised a bare 'exprs should
-    not be empty' AssertionError and bands=0 a raw ZeroDivisionError —
-    both now a clear ValueError ahead of the existing divisibility
-    check."""
+    """n_hashes=0 raised a bare 'exprs should not be empty'
+    AssertionError and bands=0 a raw ZeroDivisionError — both are a clear
+    ValueError ahead of the divisibility check, on the batch and the
+    incremental path."""
     import pytest
 
     from kusuma_metamorph_etl_spark.operators import dedup
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    hist = spark.createDataFrame([(2, "a b d")], "doc_id long, text string")
     for nh, nb in ((0, 4), (16, 0), (-8, 4)):
         with pytest.raises(ValueError, match="must be >= 1"):
             dedup.minhash_near_dups(docs, n_hashes=nh, bands=nb)
+        # the incremental path builds signatures of both sides: the
+        # guard must run before either
+        with pytest.raises(ValueError, match="must be >= 1"):
+            dedup.incremental_minhash_near_dups(docs, hist, n_hashes=nh, bands=nb)
+
+
+@pytest.mark.parametrize("op", ["embedding_dedup_lsh", "semantic_dedup", "ivf_build"])
+def test_null_vectors_never_pair(spark, op):
+    """A NULL embedding has no direction: the blocked paths never pair it
+    and keep its row, as the exact path does, and it seeds no centroid.
+    Five exact copies make the blocked paths' recall exact here."""
+    import random
+
+    from kusuma_metamorph_etl_spark.operators.similarity import ivf_build
+
+    rng = random.Random(7)
+    vecs = [[rng.uniform(-1.0, 1.0) for _ in range(64)] for _ in range(36)]
+    vecs += [list(v) for v in vecs[:5]]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(list(enumerate(vecs, 1)), schema)
+    df = clean.unionByName(spark.createDataFrame([(42, None)], schema))
+    if op == "ivf_build":
+        assert ivf_build(df, 8, refine_iters=2) == ivf_build(
+            clean, 8, refine_iters=2
+        )
+        return
+    exact = {r.vec_id for r in dedup.embedding_dedup(df, threshold=0.9).collect()}
+    if op == "embedding_dedup_lsh":
+        blocked = dedup.embedding_dedup(df, threshold=0.9, prefilter="lsh")
+    else:
+        blocked = dedup.semantic_dedup(df, threshold=0.9, n_clusters=4)
+    assert 42 in exact and len(exact) == 37
+    assert {r.vec_id for r in blocked.collect()} == exact

@@ -289,6 +289,63 @@ def test_shared_payload_frames_synthesize_once(
     assert synth_counts == synths
 
 
+@pytest.mark.parametrize(
+    "row, n_shared, nodes",
+    [
+        pytest.param(
+            "dedup_semantic",
+            1,
+            {"Exchange": 2, "MapInPandas": 1, "ArrowEvalPython": 1},
+            id="dedup_semantic",
+        ),
+        pytest.param(
+            "dedup_minhash_lsh", 0, {"Exchange": 2}, id="dedup_minhash_lsh"
+        ),
+        pytest.param(
+            "dedup_embedding_lsh",
+            1,
+            {"Exchange": 3, "MapInPandas": 2},
+            id="dedup_embedding_lsh",
+        ),
+    ],
+)
+def test_candidate_pass_runs_once(
+    spark, sf_small, monkeypatch, row, n_shared, nodes
+):
+    # The semantic and embedding-LSH rows share() the cell-assignment /
+    # signature frame that feeds both sides of the candidate self-join;
+    # without it each side re-runs the Python pass over the whole corpus.
+    # Counted over the row's plan plus the plans of the frames it shares,
+    # a second pass shows up as one more MapInPandas or ArrowEvalPython
+    # node, and a lost shared exchange as one more Exchange.
+    from collections import Counter
+
+    from kusuma_metamorph_etl_spark.operators import dedup
+    from kusuma_metamorph_etl_spark.plans.share import share
+    from kusuma_metamorph_etl_spark.queries import ext_dedup
+
+    shared = []
+
+    def recording_share(df, eager=False):
+        shared.append(df)
+        return share(df, eager)
+
+    monkeypatch.setattr(dedup, "share", recording_share)
+    final = getattr(ext_dedup, row)(spark, sf_small)
+    lines = [
+        line.lstrip(" :+-")
+        for df in (final, *shared)
+        for line in _plan(df).split("== Initial Plan ==")[0].splitlines()
+    ]
+    assert len(shared) == n_shared
+    node_counts = Counter(
+        line.split(" ")[0]
+        for line in lines
+        if line.startswith(("ArrowEvalPython", "MapInPandas", "Exchange "))
+    )
+    assert node_counts == nodes
+
+
 def test_interval_overlap_is_equi_join(spark, sf_small):
     # The chunked overlap join must plan as a hash equi-join on
     # (keys, chunk) — a nested-loop or cartesian means the range condition
