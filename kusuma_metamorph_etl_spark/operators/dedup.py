@@ -433,6 +433,10 @@ def minhash_signatures(
     # is ~8.2-9.2s — 16 intermediate long-arrays per row lose to
     # codegen'd map-side partial mins despite the extra shuffle.  Don't
     # "optimize" this back to the narrow form without re-measuring.
+    if n_hashes < 1:
+        # zero aggregates die inside Spark with a bare "exprs should not
+        # be empty" AssertionError
+        raise ValueError(f"n_hashes must be >= 1, got n_hashes={n_hashes}")
     mins = [
         F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"m{j}")
         for j in range(n_hashes)
@@ -484,9 +488,8 @@ def _band_table(
     partitionable by band_idx).  The parameters are checked before any
     signature is built, on the batch and the incremental path alike."""
     if n_hashes < 1 or bands < 1:
-        # n_hashes=0 would die inside signature construction with a bare
-        # "exprs should not be empty" AssertionError, bands=0 with a raw
-        # ZeroDivisionError
+        # ahead of the modulo below, which raises a raw
+        # ZeroDivisionError for bands=0
         raise ValueError(
             f"n_hashes and bands must be >= 1, got n_hashes={n_hashes}, "
             f"bands={bands}"

@@ -1194,8 +1194,10 @@ def pq_encode(
 ) -> DataFrame:
     """Distributed encode: each L2-normalized vector becomes its
     ``array<int>`` of per-subspace nearest codewords (Arrow batches,
-    codebooks in the task closure — m*k*sub doubles, KBs)."""
+    codebooks in the task closure — m*k*sub doubles, KBs).  Ids keep
+    their type."""
     import numpy as np
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     books = [np.array(b, dtype=np.float64) for b in codebooks]
     m = len(books)
@@ -1224,7 +1226,13 @@ def pq_encode(
         df.select(
             F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
         )
-        .mapInPandas(enc, schema=f"__id long, {out_col} array<bigint>")
+        .mapInPandas(
+            enc,
+            schema=StructType([
+                StructField("__id", df.schema[id_col].dataType),
+                StructField(out_col, ArrayType(LongType())),
+            ]),
+        )
         .withColumnRenamed("__id", id_col)
     )
 
@@ -1241,13 +1249,14 @@ def pq_topk(
     """ADC top-k: per-query lookup tables LUT[j][c] = <query_subspace_j,
     codeword_c> broadcast to executors; each partition scores its codes
     by m table lookups per row and emits only its LOCAL top-k per query
-    (numpy argpartition), so the final exact window ranks ≤ partitions ×
+    (numpy lexsort), so the final exact window ranks ≤ partitions ×
     queries × k partial rows — the corpus never shuffles and raw vectors
     are never read.  Ties break on (score desc, neighbor_id).  Queries
     are a bounded frame (same contract as `cosine_topk`'s query side);
     self-matches (query_id == neighbor_id) are excluded like the exact
-    path."""
+    path.  Ids keep their type."""
     import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     books = [np.array(b, dtype=np.float64) for b in codebooks]
     m = len(books)
@@ -1257,7 +1266,7 @@ def pq_topk(
     ).collect()  # bound: |Q| rows (the query set is the small side)
     if not qrows:
         raise ValueError("pq_topk: empty query frame")
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
+    qids = [r["qid"] for r in qrows]
     qv = np.array([r["v"] for r in qrows], dtype=np.float64)
     qn = np.linalg.norm(qv, axis=1, keepdims=True)
     qn[qn == 0] = 1.0
@@ -1301,13 +1310,20 @@ def pq_topk(
                     if ids[t] == q_ids[qi]:
                         continue
                     out["query_id"].append(q_ids[qi])
-                    out["neighbor_id"].append(int(ids[t]))
+                    out["neighbor_id"].append(ids[t])
                     out["adc_score"].append(float(col[t]))
             yield pd_.DataFrame(out)
 
     partial = codes.select(
         F.col(id_col).alias("__id"), F.col(code_col)
-    ).mapInPandas(score, schema="query_id long, neighbor_id long, adc_score double")
+    ).mapInPandas(
+        score,
+        schema=StructType([
+            StructField("query_id", queries.schema[id_col].dataType),
+            StructField("neighbor_id", codes.schema[id_col].dataType),
+            StructField("adc_score", DoubleType()),
+        ]),
+    )
     return top_k_per_group(
         partial,
         ["query_id"],

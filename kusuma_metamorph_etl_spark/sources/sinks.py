@@ -69,9 +69,8 @@ def dual_write(
     The legacy write is a DYNAMIC PARTITION OVERWRITE of the batch's own
     ``DAY_DT`` partition(s), not a plain append: a retried or backfilled
     run for the same ``run_date`` REPLACES that day instead of appending
-    every row twice (r8 review — the module's idempotent-reprocessing
-    promise was not actually implemented here).  For a new day it equals
-    append; other days are never touched.
+    every row twice — the module's idempotent-reprocessing promise.  For
+    a new day it equals append; other days are never touched.
 
     ``stamp_raw_quirk=True`` reproduces reference quirk B2 byte-for-byte
     (``ingestion_task.py:283`` writes the *stamped* frame to
@@ -81,9 +80,7 @@ def dual_write(
     Returns the stamped legacy frame for inspection.  The write-time
     cache (one persist covering both writes) is RELEASED before return —
     an action on the returned frame recomputes its lineage, so callers
-    doing heavy post-processing should persist it themselves.  (The old
-    docstring promised a still-persisted frame; the finally block below
-    has always unpersisted — the doc was the bug.)
+    doing heavy post-processing should persist it themselves.
     """
     df = df.persist()
     try:
@@ -245,10 +242,10 @@ def publish_snapshot(
     root = jvm.Path(table_root)
     fs = root.getFileSystem(conf)
     # LocalFileSystem writes .crc sidecars that go STALE across a
-    # delete+rename swap (ChecksumException on the next read) — object
-    # stores and HDFS don't have this quirk, but tests and local
-    # lakehouses do, so checksum sidecars are off for the manifest and
-    # any stale ones are cleared.
+    # rename swap (ChecksumException on the next read) — object stores
+    # and HDFS don't have this quirk, but tests and local lakehouses do,
+    # so checksum sidecars are off for the manifest and any stale ones
+    # are cleared.
     fs.setWriteChecksum(False)
     tmp = jvm.Path(f"{table_root}/manifest.json.tmp")
     out = fs.create(tmp, True)
@@ -259,10 +256,10 @@ def publish_snapshot(
     # next read; the manifest itself is NOT deleted — see below
     for stale in (".manifest.json.crc", ".manifest.json.tmp.crc"):
         fs.delete(jvm.Path(f"{table_root}/{stale}"), False)
-    # Overwrite-rename via FileContext: ONE atomic step.  The previous
-    # delete+rename swap left a window where a concurrent read_published
-    # found no manifest at all — exactly the half-state the docstring
-    # promises away.  FileContext.rename(OVERWRITE) is atomic on HDFS
+    # Overwrite-rename via FileContext: ONE atomic step.  A delete+rename
+    # swap leaves a window where a concurrent read_published finds no
+    # manifest at all — exactly the half-state the docstring promises
+    # away.  FileContext.rename(OVERWRITE) is atomic on HDFS
     # and POSIX; object-store backends emulate it (their manifest swap
     # would use a conditional PUT instead).
     java_import(jvm, "org.apache.hadoop.fs.FileContext")
@@ -275,6 +272,58 @@ def publish_snapshot(
     return version_dir
 
 
+def published_version(spark: SparkSession, table_root: str) -> str | None:
+    """The version the manifest at ``table_root`` points at (the name
+    :func:`publish_snapshot` was given, without its ``v=`` directory
+    prefix) — or ``None`` ONLY when the manifest does not exist yet.
+
+    Any OTHER failure raises: treating a transient filesystem error or a
+    corrupt manifest as "nothing published" would send a caller down its
+    first-publish path, which then atomically publishes a fresh table
+    over the manifest — the silent all-history-lost failure the manifest
+    design exists to prevent."""
+    import json
+
+    from pyspark.errors.exceptions.base import AnalysisException
+
+    try:
+        # read via spark.read.text: filesystem-portable, and py4j cannot
+        # fill a Python-side buffer through Java readFully (arrays copy).
+        # NOTE the visible (non-underscore) name: _-prefixed files are
+        # hidden from Hadoop input formats and would read as empty.
+        # bound: one line — the manifest is a single JSON object
+        line = spark.read.text(f"{table_root}/manifest.json").collect()[0]
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return None
+        raise
+    return json.loads(line["value"])["current"].removeprefix("v=")
+
+
+def _next_version(current: str | None, batch_id: int) -> str:
+    """Version name for a streaming sink's ``batch_id`` publish.  NEVER
+    the version the manifest points at: the derived plan READS that
+    directory, and batch numbering can collide with it (a replay after
+    the manifest swap committed, or a fresh checkpoint restarting at
+    batch 0) — overwriting it would destroy the input mid-read AND yank
+    files from under concurrent readers.  Alternate to the "...r"
+    sibling; overwriting a non-current directory is always safe."""
+    target = f"b{batch_id:06d}"
+    return f"{target}r" if current == target else target
+
+
+def _require_published(spark: SparkSession, table_root: str) -> str:
+    """:func:`published_version` for readers: a root with no manifest
+    raises, so a read never returns some other directory and a vacuum
+    never treats every version as "not current"."""
+    current = published_version(spark, table_root)
+    if current is None:
+        raise FileNotFoundError(
+            f"{table_root}/manifest.json does not exist: nothing published"
+        )
+    return current
+
+
 def read_published(
     spark: SparkSession, table_root: str, version: str | None = None
 ) -> DataFrame:
@@ -282,18 +331,11 @@ def read_published(
     ``version``, TIME-TRAVEL to any still-retained published version
     (every publish keeps its predecessors until :func:`vacuum_versions`
     removes them; a vacuumed version raises parquet's path error rather
-    than silently reading something else)."""
-    import json
-
-    if version is not None:
-        return spark.read.parquet(f"{table_root}/v={version}")
-    # read via spark.read.text: filesystem-portable, and py4j cannot
-    # fill a Python-side buffer through Java readFully (arrays copy).
-    # NOTE the visible (non-underscore) name: _-prefixed files are
-    # hidden from Hadoop input formats and would read as empty
-    line = spark.read.text(f"{table_root}/manifest.json").collect()[0]["value"]
-    current = json.loads(line)["current"]
-    return spark.read.parquet(f"{table_root}/{current}")
+    than silently reading something else).  A root with no manifest
+    raises."""
+    if version is None:
+        version = _require_published(spark, table_root)
+    return spark.read.parquet(f"{table_root}/v={version}")
 
 
 def vacuum_versions(
@@ -305,18 +347,14 @@ def vacuum_versions(
     :func:`publish_snapshot`: publish keeps every version; vacuum is the
     explicit, bounded cleanup step (deletion is the irreversible action,
     so it is its own call, not a publish side effect)."""
-    import json
-
     from py4j.java_gateway import java_import
 
+    current = f"v={_require_published(spark, table_root)}"
     jvm = spark.sparkContext._jvm
     java_import(jvm, "org.apache.hadoop.fs.Path")
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     root = jvm.Path(table_root)
     fs = root.getFileSystem(conf)
-    current = json.loads(
-        spark.read.text(f"{table_root}/manifest.json").collect()[0]["value"]
-    )["current"]
     versions = []
     for status in fs.listStatus(root):
         name = status.getPath().getName()

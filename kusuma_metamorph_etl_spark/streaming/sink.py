@@ -8,9 +8,8 @@ the latest micro-batch's state and ``legacy`` accumulates history.
 
 ``foreachBatch`` is AT-LEAST-ONCE: a crash between the sink write and the
 checkpoint commit replays the batch, so every write here must be
-batch-id-idempotent — a plain ``mode("append")`` is NOT (the r8 review
-caught all three sinks claiming idempotence while appending).  The
-patterns used instead, keyed on ``batch_id``:
+batch-id-idempotent — a plain ``mode("append")`` is NOT.  The patterns
+used instead, keyed on ``batch_id``:
 * overwrite of a batch-scoped partition/directory (dual-write legacy,
   heavy-hitter summaries) — the replay rewrites the same partition;
 * manifest-pointer republish of a derived snapshot (SCD2 dimension, CDC
@@ -32,6 +31,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.scd import scd2_init, scd2_merge
+from kusuma_metamorph_etl_spark.sources.sinks import (
+    DAY_DT,
+    _next_version,
+    publish_snapshot,
+    published_version,
+    read_published,
+    stamp_snapshot,
+)
 from kusuma_metamorph_etl_spark.streaming.metrics import record_batch_metrics
 
 
@@ -57,48 +64,6 @@ def _run_foreach_batch(stream_df, fn, checkpoint_dir: str, available_now: bool):
     if available_now:
         query.awaitTermination()
     return query
-
-
-def _read_current(spark, table_root: str):
-    """(current version name, its DataFrame) from the manifest pointer —
-    or (None, None) ONLY when the manifest genuinely does not exist yet
-    (the first-batch init case).
-
-    Any OTHER failure raises: the r9 review caught a bare ``except
-    Exception`` here that turned a transient filesystem error or a
-    corrupt manifest into the init path, which then atomically published
-    a one-micro-batch table over the manifest — the exact silent
-    all-history-lost failure this design exists to prevent.
-    """
-    import json
-
-    from pyspark.errors.exceptions.base import AnalysisException
-
-    try:
-        line = spark.read.text(f"{table_root}/manifest.json").collect()[0][
-            "value"
-        ]
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None, None
-        raise
-    current = json.loads(line)["current"]  # corrupt manifest: raise loud
-    return current, spark.read.parquet(f"{table_root}/{current}")
-
-
-def _next_version(current_name: str | None, batch_id: int) -> str:
-    """NEVER publish onto the version the manifest points at: the
-    derived plan READS that directory, and batch numbering can collide
-    with it (a replay after the manifest swap committed, or a fresh
-    checkpoint restarting at batch 0) — overwriting it would destroy
-    the input mid-read AND yank files from under concurrent readers.
-    Alternate to the "...r" sibling; overwriting a non-current
-    directory is always safe."""
-    target = f"b{batch_id:06d}"
-    if current_name == f"v={target}":
-        target = f"{target}r"
-    return target
 
 
 def stream_dual_write(
@@ -131,18 +96,15 @@ def stream_dual_write(
     both layouts by dropping the writer-internal column.
 
     ``run_date=None`` resolves to today ONCE at stream start, not per
-    micro-batch (r9 review): a replay that crossed midnight used to
-    stamp the same batch into a SECOND ``DAY_DT`` partition, and the
-    dynamic overwrite only replaces partitions present in the new data
-    — every row of the batch then appeared twice in legacy.  The
+    micro-batch: resolved per batch, a replay that crossed midnight
+    would stamp the same batch into a SECOND ``DAY_DT`` partition, and
+    the dynamic overwrite only replaces partitions present in the new
+    data — every row of the batch would appear twice in legacy.  The
     remaining seam is a crash-restart across midnight (a new process
     resolves the new date): replay idempotence across restarts needs an
     explicit ``run_date`` (or an event-time-derived stamp), which
     continuous production streams should pass per day.
     """
-
-    from kusuma_metamorph_etl_spark.sources.sinks import DAY_DT, stamp_snapshot
-
     if run_date is None:
         run_date = dt.date.today()
 
@@ -164,7 +126,7 @@ def stream_dual_write(
             .parquet(legacy_path)
         )
         if metrics_root is not None:
-            n = batch_df.count()
+            n = batch_df.count()  # bound: one number
             # dual write republishes every input row to both sides
             record_batch_metrics(
                 batch_df.sparkSession, metrics_root, "dual_write",
@@ -197,9 +159,9 @@ def stream_scd2_upsert(
     * readers (:func:`sources.sinks.read_published` on ``dim_path``)
       never observe a half-written dimension;
     * a crash mid-write leaves the previous version intact and the
-      manifest still pointing at it (the old read-overwrite-in-place
-      cycle could crash after deleting the dimension, and the next run's
-      "not yet created" fallback then silently re-initialized from one
+      manifest still pointing at it (a read-overwrite-in-place cycle
+      can crash after deleting the dimension, and the next run's "not
+      yet created" fallback then silently re-initializes from one
       micro-batch — all history lost);
     * a replayed batch re-derives and re-publishes the same version
       name with the same content — idempotent under at-least-once.
@@ -210,20 +172,19 @@ def stream_scd2_upsert(
     from pyspark.sql import functions as F
 
     from kusuma_metamorph_etl_spark.operators.sampling import row_sort_key
-    from kusuma_metamorph_etl_spark.sources.sinks import publish_snapshot
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
         # Deterministic winner among equal effective dates: hash the
-        # attribute tuple.  Plain desc(eff) left the tie to shuffle
+        # attribute tuple.  Plain desc(eff) leaves the tie to shuffle
         # order, so a replayed batch could commit different attributes
         # than the original run.  row_sort_key, not
         # md5(concat_ws('|', attrs)): concat_ws skips NULLs and '|'
-        # inside a value injects, so (NULL,'x') tied with ('x',NULL)
-        # and the replay non-determinism this hash exists to kill came
-        # back through the collision (r9 review; same fix as
+        # inside a value injects, so (NULL,'x') would tie with
+        # ('x',NULL) and the replay non-determinism this hash exists to
+        # kill would come back through the collision (the same fix
         # sampling.row_sort_key documents).
         attr_fp = row_sort_key("", attrs)
         window = Window.partitionBy(*key).orderBy(
@@ -235,12 +196,12 @@ def stream_scd2_upsert(
             .drop("__rn")
         )
         upd = latest.select(*key, *attrs, effective_from_col)
-        current_name, dim = _read_current(spark, dim_path)
-        if dim is None:
+        current = published_version(spark, dim_path)
+        if current is None:
             merged = scd2_init(upd, effective_col=effective_from_col)
         else:
             merged = scd2_merge(
-                dim,
+                read_published(spark, dim_path, current),
                 upd,
                 key,
                 attrs,
@@ -250,7 +211,7 @@ def stream_scd2_upsert(
                 check_unique=False,
             )
         publish_snapshot(
-            spark, merged, dim_path, _next_version(current_name, batch_id)
+            spark, merged, dim_path, _next_version(current, batch_id)
         )
 
     return _run_foreach_batch(
@@ -307,7 +268,7 @@ def stream_heavy_hitters(
                 agg = s.agg(
                     F.sum("n_part").alias("n_in"),
                     F.count(F.when(F.col("n_part").isNull(), 1)).alias("n_out"),
-                ).first()
+                ).first()  # bound: one row (a global aggregate)
                 record_batch_metrics(
                     batch_df.sparkSession, metrics_root, "heavy_hitters",
                     batch_id, rows_in=int(agg["n_in"] or 0),
@@ -371,26 +332,26 @@ def stream_cdc_apply(
     snapshot, documented out of scope here.
     """
     from kusuma_metamorph_etl_spark.operators.scd import cdc_apply
-    from kusuma_metamorph_etl_spark.sources.sinks import publish_snapshot
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # Empty micro-batch: nothing to reconcile — without this guard a
-        # zero-row trigger rewrote the ENTIRE snapshot into a fresh
-        # version directory and swapped the manifest, full-table write
-        # amplification for a no-op (r9 review; the scd2 twin had the
-        # guard already).
+        # zero-row trigger would rewrite the ENTIRE snapshot into a fresh
+        # version directory and swap the manifest, full-table write
+        # amplification for a no-op (the scd2 twin has the same guard).
         if batch_df.isEmpty():
             return
-        current_name, snapshot = _read_current(spark, table_path)
-        if snapshot is None:
+        current = published_version(spark, table_path)
+        if current is None:
             snapshot = spark.createDataFrame([], schema=snapshot_schema)
+        else:
+            snapshot = read_published(spark, table_path, current)
         updated = cdc_apply(snapshot, batch_df, key, seq_col, op_col)
         # version per micro-batch: replaying batch N republishes the
         # same version name with the same derived content — idempotent;
         # _next_version supplies the current-version collision guard.
         publish_snapshot(
-            spark, updated, table_path, _next_version(current_name, batch_id)
+            spark, updated, table_path, _next_version(current, batch_id)
         )
 
     return _run_foreach_batch(

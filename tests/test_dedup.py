@@ -850,7 +850,7 @@ def test_minhash_rejects_nonpositive_hashes_or_bands(spark):
     """n_hashes=0 raised a bare 'exprs should not be empty'
     AssertionError and bands=0 a raw ZeroDivisionError — both are a clear
     ValueError ahead of the divisibility check, on the batch and the
-    incremental path."""
+    incremental path, and on the public signature entry."""
     import pytest
 
     from kusuma_metamorph_etl_spark.operators import dedup
@@ -864,6 +864,9 @@ def test_minhash_rejects_nonpositive_hashes_or_bands(spark):
         # guard must run before either
         with pytest.raises(ValueError, match="must be >= 1"):
             dedup.incremental_minhash_near_dups(docs, hist, n_hashes=nh, bands=nb)
+        if nh < 1:
+            with pytest.raises(ValueError, match="must be >= 1"):
+                dedup.minhash_signatures(docs, n_hashes=nh)
 
 
 @pytest.mark.parametrize("op", ["embedding_dedup_lsh", "semantic_dedup", "ivf_build"])

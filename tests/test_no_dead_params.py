@@ -17,6 +17,8 @@ PKG = Path(__file__).resolve().parent.parent / "kusuma_metamorph_etl_spark"
 ALLOWED = {
     # applyInPandasWithState calls func(key, pdf_iter, state)
     ("streaming/stateful.py", "handle", "key"),
+    # _keyed_state_stream calls every per-key step as step(rows, ts_ns, prev)
+    ("streaming/stateful.py", "first_row", "ts_ns"),
     # the registry calls every query as fn(spark, sf_dir)
     ("queries/core.py", "src_inline_schema", "sf_dir"),
     # subword.learn_merges calls every selection rule as pick(pairs, sym_counts)

@@ -926,3 +926,23 @@ def test_sessionize_stream_prunes_input_columns(spark, sf_small):
     # columns are pruned from the shuffle + Arrow boundary
     head = analyzed.split("Project", 1)[0]
     assert "props" not in head
+
+
+@pytest.mark.parametrize("ttl", ["1 hour", None], ids=["ttl", "no_ttl"])
+@pytest.mark.parametrize("op", ["first_event", "dedup_window"])
+def test_stateful_streams_prune_input_columns(spark, sf_small, op, ttl):
+    # The same projection pin for the two other stateful operators, with
+    # and without the TTL watermark between the operator and the
+    # projection: `props` never reaches the Python handler, and the
+    # watermark is there exactly when a TTL needs its clock.
+    from kusuma_metamorph_etl_spark.streaming import stateful
+    from kusuma_metamorph_etl_spark.streaming.windows import stream_events
+
+    op_fn = getattr(stateful, f"{op}_stream")
+    out = op_fn(stream_events(spark, sf_small), state_ttl=ttl)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandasWithState" in analyzed
+    head, below = analyzed.split("Project", 1)
+    assert "props" not in head
+    assert "props" not in below.splitlines()[0]  # the projection itself
+    assert ("EventTimeWatermark" in head) == (ttl is not None)

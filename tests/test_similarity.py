@@ -575,6 +575,46 @@ class TestProductQuantization:
             similarity.pq_topk(emb.filter(F.lit(False)), codes, books, k=3)
 
 
+def test_pq_string_ids(spark):
+    """PQ keeps the id type: 20 vectors under zero-padded string ids
+    (lexical order = numeric order, so ties break alike) encode to the
+    same codes and retrieve the same neighbours as under long ids."""
+    import random
+
+    rng = random.Random(7)
+    vecs = [[rng.gauss(0.0, 1.0) for _ in range(8)] for _ in range(20)]
+    longs = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    strs = spark.createDataFrame(
+        [(f"v{i:02d}", v) for i, v in enumerate(vecs)],
+        "vec_id string, embedding array<double>",
+    )
+    books = similarity.pq_train(longs, m=4, k=4, refine_iters=1)
+    codes_l = similarity.pq_encode(longs, books)
+    codes_s = similarity.pq_encode(strs, books)
+    assert {
+        f"v{r['vec_id']:02d}": list(r["pq_code"]) for r in codes_l.collect()
+    } == {r["vec_id"]: list(r["pq_code"]) for r in codes_s.collect()}
+
+    q_l = longs.filter(F.col("vec_id") % 5 == 0)
+    q_s = strs.filter(F.col("vec_id").isin(["v00", "v05", "v10", "v15"]))
+    for run in (
+        lambda q, c, corpus: similarity.pq_topk(q, c, books, k=3),
+        lambda q, c, corpus: similarity.pq_topk_rerank(
+            q, c, corpus, books, k=3, shortlist=8
+        ),
+    ):
+        got_l = {
+            (f"v{r[0]:02d}", f"v{r[1]:02d}", round(r[2], 9))
+            for r in run(q_l, codes_l, longs).collect()
+        }
+        got_s = {
+            (r[0], r[1], round(r[2], 9)) for r in run(q_s, codes_s, strs).collect()
+        }
+        assert got_s == got_l and len(got_s) == 12
+
+
 def test_mmr_null_embedding_rows_dropped(spark):
     from kusuma_metamorph_etl_spark.operators.similarity import mmr_select
 

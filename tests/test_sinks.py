@@ -4,6 +4,7 @@ partition overwrite."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.sources.sinks import (
@@ -317,6 +318,27 @@ def test_vacuum_keeps_newest_and_never_the_current(spark, tmp_path):
     deleted2 = vacuum_versions(spark, root, keep=1)
     assert "v=20240103" not in deleted2
     assert read_published(spark, root).count() == 12
+
+
+def test_read_published_and_vacuum_raise_without_manifest(spark, tmp_path):
+    """A root with no manifest has nothing published: reading it raises,
+    and vacuuming it raises instead of deleting every version directory
+    as "not current"."""
+    from pyspark.errors.exceptions.base import AnalysisException
+
+    from kusuma_metamorph_etl_spark.sources.sinks import (
+        read_published,
+        vacuum_versions,
+    )
+
+    root = str(tmp_path / "tbl")
+    spark.range(3).write.parquet(f"{root}/v=001")
+    for call in (read_published, vacuum_versions):
+        with pytest.raises(
+            (AnalysisException, FileNotFoundError), match="manifest.json"
+        ):
+            call(spark, root)
+    assert spark.read.parquet(f"{root}/v=001").count() == 3
 
 
 def test_read_published_time_travel(spark, tmp_path):

@@ -439,6 +439,6 @@ def test_ttl_millis_units_and_errors():
     assert _ttl_millis(None) is None
     assert _ttl_millis("90 seconds") == 90_000
     assert _ttl_millis("2 days") == 2 * 86_400_000
-    for bad in ("3600", "2 fortnights", "soon"):
+    for bad in ("3600", "2 fortnights", "soon", "-5 seconds"):
         with pytest.raises(ValueError, match="state_ttl"):
             _ttl_millis(bad)
