@@ -3,9 +3,12 @@
 from kusuma_metamorph_etl_spark.plans.pipeline import Pipeline, Stage
 from kusuma_metamorph_etl_spark.plans.quality import (
     DuplicateKeyError,
+    GateError,
     NullPolicyError,
+    Outcome,
     SchemaMismatchError,
     assert_schema,
+    check,
     duplicate_gate,
     null_policy,
 )
@@ -14,9 +17,12 @@ __all__ = [
     "Pipeline",
     "Stage",
     "DuplicateKeyError",
+    "GateError",
     "NullPolicyError",
+    "Outcome",
     "SchemaMismatchError",
     "assert_schema",
+    "check",
     "duplicate_gate",
     "null_policy",
 ]

@@ -16,6 +16,7 @@ PACKAGE = Path(__file__).resolve().parent.parent / "kusuma_metamorph_etl_spark"
 MODULES = (
     "operators/dedup.py",
     "operators/similarity.py",
+    "plans/quality.py",
     "sources/sinks.py",
     "streaming/sink.py",
     "streaming/stateful.py",

@@ -19,6 +19,7 @@ from kusuma_metamorph_etl_spark.plans.quality import (
     null_policy,
     row_count_gate,
 )
+from tests.test_skew import _construction_jobs as _jobs_run
 
 
 def test_duplicate_gate_passes_on_unique_keys(spark):
@@ -82,6 +83,11 @@ def test_freshness_gate(spark):
         freshness_gate(df, "ts", "30 minutes", now="2024-06-01 12:00:00")
     with pytest.raises(FreshnessError):  # empty frame is stale by definition
         freshness_gate(df.filter("id > 9"), "ts", "2 hours", now="2024-06-01 12:00:00")
+    # a DATE column compares as midnight of its day
+    days = spark.createDataFrame([(1, dt.date(2024, 1, 1))], "id long, d date")
+    with pytest.raises(FreshnessError):
+        freshness_gate(days, "d", "2 days", now="2024-01-10 00:00:00")
+    assert freshness_gate(days, "d", "30 days", now="2024-01-10 00:00:00") is days
 
 
 def test_approx_count_distinct_error_bound(spark, sf_small):
@@ -162,6 +168,11 @@ def test_volume_anomaly_gate_short_or_constant_history(spark):
     assert volume_anomaly_gate(spark.range(100), const).count() == 100
     with pytest.raises(VolumeAnomalyError):
         volume_anomaly_gate(spark.range(101), const)
+    # an empty history leaves nothing to judge against: min_history < 1
+    # is rejected up front rather than crashing on a null mean
+    empty = spark.createDataFrame([], "n_rows long")
+    with pytest.raises(ValueError, match="must be >= 1"):
+        volume_anomaly_gate(df, empty, min_history=0)
 
 
 # --------------------------------------------------------- schema drift
@@ -407,3 +418,151 @@ def test_reconcile_honors_scale_above_six(spark):
     (row8,) = reconcile(src, tgt, ["grp"], "amount", scale=8).collect()
     assert not row8.amount_ok  # the 1e-8 drift must survive scale=8
     assert row8.status == "amount_mismatch"
+
+
+def test_gates_accept_dotted_column_names(spark):
+    """Column names may keep dots (``normalize_name`` does) or hold a
+    backtick: the check table, the duplicate gate and the orphan join
+    quote each name as one identifier instead of resolving a struct
+    field."""
+    from kusuma_metamorph_etl_spark.plans.quality import (
+        expectations,
+        find_orphans,
+        profile_columns,
+    )
+
+    df = spark.createDataFrame([(1, "x"), (1, None)], "`a.b` long, `c``d` string")
+    assert null_policy(df, ["a.b"]) is df
+    with pytest.raises(NullPolicyError):
+        null_policy(df, ["c`d"])
+    out = {
+        (r["check"], r["column"]): r["observed"]
+        for r in expectations(
+            df, [("not_null", "a.b"), ("unique", "a.b"), ("not_null", "c`d")]
+        ).collect()
+    }
+    assert out == {("not_null", "a.b"): 0, ("unique", "a.b"): 1, ("not_null", "c`d"): 1}
+    with pytest.raises(DuplicateKeyError) as err:
+        duplicate_gate(df, ["a.b"])
+    assert err.value.samples == [{"a.b": 1, "duplicate_count": 2}]
+    assert duplicate_gate(df, ["a.b", "c`d"]) is df
+    dim = spark.createDataFrame([(2,)], "`k.id` long")
+    assert find_orphans(df, dim, fk="a.b", pk="k.id").count() == 2
+    assert [tuple(r) for r in profile_columns(df, ["a.b", "c`d"]).collect()] == [
+        ("a.b", 2, 0, 1),
+        ("c`d", 2, 1, 1),
+    ]
+
+
+def test_empty_key_or_column_list_rejected(spark):
+    """An empty key list is a caller error, not one all-rows group; an
+    empty profile is a ``ValueError``, not a bare assertion.  An empty
+    NOT-NULL list stays a vacuous pass that runs no job."""
+    from kusuma_metamorph_etl_spark.plans.quality import profile_columns
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], ["id"])
+    with pytest.raises(ValueError, match="empty key list"):
+        duplicate_gate(df, [])
+    with pytest.raises(ValueError, match="empty column list"):
+        profile_columns(df, [])
+    assert _jobs_run(spark, lambda: null_policy(df, [])) == (df, 0)
+
+
+def test_gate_outcomes(spark, caplog):
+    """Every failing gate raises its ``GateError`` subclass carrying the
+    ``Outcome``: the gate's name, ``passed=False``, what it observed and
+    at most ``sample`` violating rows.  A pass is logged at INFO with its
+    outcome, and the schema gates run no job either way."""
+    import datetime as dt
+    import logging
+    import pickle
+
+    from kusuma_metamorph_etl_spark.plans.quality import (
+        GateError,
+        Outcome,
+        ReferentialIntegrityError,
+        SchemaDriftError,
+        VolumeAnomalyError,
+        referential_gate,
+        schema_drift_gate,
+        volume_anomaly_gate,
+    )
+
+    df = spark.createDataFrame(
+        [(1, None), (1, "a"), (2, None), (2, "b"), (3, None)], "id long, v string"
+    )
+    ts = spark.createDataFrame([(dt.datetime(2024, 6, 1, 11, 0),)], "ts timestamp")
+    hist = spark.createDataFrame([(100,)] * 8, "n_rows long")
+    dim = spark.createDataFrame([(9,)], "pk long")
+    now = "2024-06-01 12:00:00"
+    # gate -> (error, failing call, expected observed or None, sample rows)
+    failing = {
+        "duplicate_gate": (
+            DuplicateKeyError, lambda: duplicate_gate(df, ["id"], sample=1),
+            {"keys": ["id"]}, 1,
+        ),
+        "null_policy": (
+            NullPolicyError, lambda: null_policy(df, ["id", "v"], sample=2),
+            {"columns": ["id", "v"]}, 2,
+        ),
+        "referential_gate": (
+            ReferentialIntegrityError,
+            lambda: referential_gate(df, dim, fk="id", pk="pk", sample=3),
+            {"fk": "id", "pk": "pk"}, 3,
+        ),
+        "row_count_gate": (
+            RowCountError, lambda: row_count_gate(df, min_rows=1, max_rows=4),
+            {"row_count_min(1):*": 5, "row_count_max(4):*": 5}, 0,
+        ),
+        "volume_anomaly_gate": (
+            VolumeAnomalyError, lambda: volume_anomaly_gate(df, hist),
+            {"row_count_min(100):*": 5, "row_count_max(100):*": 5}, 0,
+        ),
+        "freshness_gate": (
+            FreshnessError, lambda: freshness_gate(ts, "ts", "30 minutes", now=now),
+            None, 0,
+        ),
+        "assert_schema": (
+            SchemaMismatchError, lambda: assert_schema(df, ["v", "id"]),
+            {"expected": ["v", "id"], "actual": ["id", "v"]}, 0,
+        ),
+        "schema_drift_gate": (
+            SchemaDriftError, lambda: schema_drift_gate(df, {"id": "bigint"}),
+            {"missing": [], "type_changed": [], "added": ["v"], "admitted": []}, 0,
+        ),
+    }
+    for gate, (error, run, observed, n_sample) in failing.items():
+        with pytest.raises(error) as err:
+            run()
+        assert isinstance(err.value, GateError)
+        outcome = err.value.outcome
+        assert (outcome.gate, outcome.passed, len(outcome.sample)) == (
+            gate, False, n_sample,
+        ), gate
+        if observed is not None:
+            assert outcome.observed == observed, gate
+        assert pickle.loads(pickle.dumps(err.value)).outcome == outcome, gate
+    with pytest.raises(FreshnessError) as err:
+        failing["freshness_gate"][1]()
+    seen = err.value.outcome.observed
+    assert seen["column"] == "ts" and seen["newest"] < seen["cutoff"]
+
+    def caught(run):
+        try:
+            run()
+        except GateError as exc:
+            return exc
+
+    # the schema gates read only df.schema, pass or fail
+    for gate in ("assert_schema", "schema_drift_gate"):
+        exc, jobs = _jobs_run(spark, lambda: caught(failing[gate][1]))
+        assert (exc.outcome.gate, jobs) == (gate, 0)
+    admitted = _jobs_run(spark, lambda: schema_drift_gate(df, {"id": "bigint"}, True))
+    assert admitted == (df, 0)
+
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="kusuma_metamorph_etl_spark.plans.quality"):
+        assert duplicate_gate(df, ["id", "v"]) is df
+    (record,) = caplog.records
+    assert record.levelno == logging.INFO
+    assert record.outcome == Outcome("duplicate_gate", True, {"keys": ["id", "v"]})
