@@ -9,10 +9,7 @@ follows its label's label (halving every label path, as in Hash-to-Min —
 Rastogi et al., "Finding Connected Components in Map-Reduce in
 Logarithmic Rounds", ICDE'13).  The combination converges in
 O(log diameter) rounds; a fixed point means labels equal the
-per-component minimum node id.  Large-star/small-star (Kiveris et al.,
-SoCC'14) ships alongside it (:func:`connected_components_star`) for
-graphs where Hash-to-Min's per-round edge duplication becomes the
-bottleneck — star rounds only ever rewire edges, never multiply them.
+per-component minimum node id.
 
 Scale shape per round: one equi-join of the symmetric edge list against
 current labels + one min-aggregation, both keyed on node id — shuffles
@@ -114,7 +111,7 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "raise max_iter (diameter-bound) or switch to large-star/small-star"
+        "raise max_iter (diameter-bound)"
     )
 
 
@@ -208,8 +205,9 @@ def pagerank(
     normalized edge list + ONE sum-aggregation — the dangling mass rides
     the same aggregation as the NULL-dst group (a rank row with no
     out-edges contributes its whole pr there), so no separate anti-join
-    pass exists; the scalar then broadcasts back.  Shuffles carry
-    (node, rank) pairs only, never a driver collect.  Edge normalization
+    pass exists; the scalar comes back as one driver row per round and
+    re-enters the next round as a literal.  Shuffles carry (node, rank)
+    pairs only.  Edge normalization
     is computed ONCE and shared; per-round lineage is truncated by
     LAZILY sharing the tiny (dst, mass) AGG frame — ranks itself
     stays a constant-depth derivation from it, so plans never grow, and
@@ -221,11 +219,10 @@ def pagerank(
     this one-join-one-agg round is the minimal shape).
     """
     if not 0.0 <= damping <= 1.0:
-        # fail fast: damping outside [0, 1] silently emits out-of-theory
-        # ranks (negative teleport mass) — still summing to 1, so nothing
-        # downstream would notice (r17 edge sweep).  The boundaries are
-        # well-defined: 0 = uniform teleport only, 1 = pure power
-        # iteration.
+        # damping outside [0, 1] silently emits out-of-theory ranks
+        # (negative teleport mass) that still sum to 1, so nothing
+        # downstream would notice.  The boundaries are well-defined:
+        # 0 = uniform teleport only, 1 = pure power iteration.
         raise ValueError(f"pagerank: damping must be in [0, 1], got {damping}")
     if n_iter < 0:
         raise ValueError(f"pagerank: n_iter must be >= 0, got {n_iter}")
@@ -250,19 +247,17 @@ def pagerank(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n = nodes.count()
+    n = nodes.count()  # bound: one row
     if n == 0:
         raise ValueError("pagerank: empty edge list (no nodes to rank)")
     ranks = nodes.withColumn("pr", F.lit(1.0 / n))
     # Every node rides the round's ONE aggregation via a zero-mass seed
-    # row, so the aggregate's output already contains every node and the
-    # old per-round `nodes LEFT JOIN agg` re-attachment (a second
-    # node-keyed shuffle join in EVERY one of the n_iter rounds) is gone
-    # (r19, VERDICT r18 Next #6).  Adding 0.0 to an IEEE sum is an
-    # identity (and the empty-group case becomes an exact 0.0, the same
-    # value the old coalesce supplied), so ranks are bit-equal up to the
-    # sum's already-nondeterministic partial order; oracle green across
-    # sf0.01/sf0.1/7-core.
+    # row, so the aggregate's output already contains every node and no
+    # per-round `nodes LEFT JOIN agg` re-attachment (a second node-keyed
+    # shuffle join per round) is needed.  Adding 0.0 to an IEEE sum is
+    # an identity (and an empty group sums to an exact 0.0), so ranks
+    # are bit-equal up to the sum's already-nondeterministic partial
+    # order.
     zero_seed = nodes.select(F.col("node").alias("dst"), F.lit(0.0).alias("c"))
     for _ in range(n_iter):
         # One pass: matched rows emit pr*p toward their dst; a dangling
@@ -282,16 +277,14 @@ def pagerank(
             .agg(F.sum("c").alias("mass"))
         )
         # The dangling mass is ONE bounded scalar per round.  Fetching
-        # it with first() makes the SAME driver action materialize the
-        # round's lazy share AND return the scalar — one job per
-        # round where the old BroadcastExchange + crossJoin shape paid
-        # two (checkpoint materialization, then the broadcast build).
-        # The value is bit-identical to what the broadcast carried, and
-        # a bounded 1-row collect is the same budget class as the
-        # approxQuantile/bloom driver fetches elsewhere in this repo.
+        # it on the driver makes the SAME action materialize the round's
+        # lazy share AND return the scalar — one job per round, where a
+        # BroadcastExchange + crossJoin shape pays two (checkpoint
+        # materialization, then the broadcast build).
         d_row = (
             agg.filter(F.col("dst").isNull())
             .select(F.coalesce(F.sum("mass"), F.lit(0.0)).alias("dm"))
+            # bound: one row
             .first()
         )
         dangling_mass = float(d_row["dm"]) if d_row is not None else 0.0
@@ -308,136 +301,6 @@ def pagerank(
             )
         )
     return ranks
-
-
-def connected_components_star(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(node, component) via alternating LARGE-STAR / SMALL-STAR rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the documented upgrade over :func:`connected_components`
-    when Hash-to-Min's per-round edge duplication becomes the bottleneck
-    (very dense components): star operations only ever REWIRE edges
-    (each round's edge count is bounded by the current one), and the
-    paper proves O(log n) round convergence with 2-approximable
-    per-round cost.
-
-    * large-star: every node u connects its LARGER neighbors to its
-      minimum neighborhood label m(u) = min(Γ(u) ∪ {u});
-    * small-star: u connects its smaller-or-equal neighbors (and
-      itself) to m(u).
-
-    At the fixed point every component is a star rooted at its minimum
-    node id; the root's self-edge carries the isolated-root case.  Round
-    structure per star op: one node-keyed min aggregation + one join —
-    (node, label) shuffles only, lineage truncated per round, identical
-    checkpointing contract to :func:`connected_components`.  Convergence
-    is detected by an order-independent edge-set checksum (sum of
-    per-edge hashes) — one scalar per round, no set-difference join.
-
-    Measured honestly (local[32], 4×160-node dense cliques, ~7.6k
-    edges): Hash-to-Min 3.6s vs star 4.8-5.2s — at toy scale per-round
-    fixed costs dominate and the DEFAULT stays
-    :func:`connected_components`.  The star variant's argument is the
-    memory/shuffle BOUND, not local latency: its per-round edge count
-    never exceeds the current one, while Hash-to-Min's propagation can
-    multiply intermediate (node, label) volume on dense components —
-    the regime that matters when one component holds 10^8 near-dup
-    members at 100 TB.  Identical outputs are pytest-pinned.
-    """
-    def canon(e: DataFrame) -> DataFrame:
-        # undirected edge set, canonical (lo, hi) orientation, no loops
-        return (
-            e.select(
-                F.least(F.col("u"), F.col("v")).alias("u"),
-                F.greatest(F.col("u"), F.col("v")).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def neighbors_min(e: DataFrame) -> DataFrame:
-        # m(u) over the SYMMETRIC neighborhood, including u itself
-        sym = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        return (
-            sym.groupBy("u")
-            .agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = neighbors_min(e)
-        rewired = (
-            sym.join(m, on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        return canon(rewired)
-
-    def small_star(e: DataFrame) -> DataFrame:
-        sym = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = neighbors_min(e)
-        rewired = (
-            sym.join(m, on="u")
-            .filter(F.col("v") <= F.col("u"))
-            .select("v", "m")
-            .union(m.select(F.col("u").alias("v"), F.col("m")))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        return canon(rewired)
-
-    def checksum(e: DataFrame):
-        row = e.agg(
-            # decimal sum: ANSI long would overflow on summed 64-bit hashes
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return row["h"], row["n"]
-
-    cur = share(
-        canon(
-            edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        ),
-        eager=True,
-    )
-    nodes = share(
-        cur.select(F.col("u").alias("node"))
-        .union(cur.select(F.col("v").alias("node")))
-        .distinct(),
-        eager=True,
-    )
-    prev_sig = checksum(cur)
-    for _ in range(max_iter):
-        cur = share(small_star(large_star(cur)), eager=True)
-        sig = checksum(cur)
-        if sig == prev_sig:
-            # fixed point: canonical (lo, hi) edges are (root, member)
-            # stars — members hang off the v side; every node NOT a
-            # member is its own root (covers roots and isolated nodes)
-            members = cur.select(
-                F.col("v").alias("node"), F.col("u").alias("component")
-            )
-            self_roots = (
-                nodes.join(members.select("node"), on="node", how="left_anti")
-                .select("node", F.col("node").alias("component"))
-            )
-            return members.unionByName(self_roots)
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
-    )
 
 
 def incremental_components(
@@ -498,13 +361,12 @@ def triangles_per_vertex(
     ordered by the orientation rank).
     """
     e = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-    # Three frames are shared (r18, guide §2.2): without them the plan
-    # re-derives `und` for both degree-union sides plus the orientation
-    # join, `oriented` for both wedge self-join sides plus the closure
-    # probe, and `tri` for all three corner-union branches — 9 copies of
-    # the dedup/degree/orientation pipeline in one plan (139 Exchanges /
-    # 90 source scans before; the corner branches are narrow column picks
-    # after).  Each frame is 2-3 long columns.
+    # Three frames are shared: without them the plan re-derives `und`
+    # for both degree-union sides plus the orientation join, `oriented`
+    # for both wedge self-join sides plus the closure probe, and `tri`
+    # for all three corner-union branches — 9 copies of the
+    # dedup/degree/orientation pipeline in one plan.  Each frame is 2-3
+    # long columns.
     und = share(
         e.filter(F.col("x") != F.col("y"))
         .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
@@ -588,7 +450,7 @@ def kcore(
         .distinct()
     )
     cur = share(und, eager=True)
-    n_edges = cur.count()
+    n_edges = cur.count()  # bound: one row
     converged = n_edges == 0
     for _ in range(max_iter):
         if converged:
@@ -606,7 +468,7 @@ def kcore(
             ),
             eager=True,
         )
-        n_next = nxt.count()
+        n_next = nxt.count()  # bound: one row
         cur = nxt
         if n_next in (n_edges, 0):  # no vertex fell below k -> fixed point
             converged = True

@@ -166,6 +166,7 @@ def cluster_by_zorder(
     import math
 
     probs = [i / levels for i in range(1, levels)]
+    # bound: len(cols) lists of at most 2**bits - 1 doubles
     all_bounds = df.stat.approxQuantile(list(cols), probs, 0.001)
     out = df
     bucket_cols = []

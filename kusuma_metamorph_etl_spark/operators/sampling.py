@@ -8,17 +8,91 @@ content hash (md5 of the row key), so the same row always lands on the
 same side of the split, on any cluster, in any engine that has md5 —
 which also makes them oracle-checkable in ANSI SQL.
 
-All operators are narrow (filter on a hash expression — no shuffle) and
-whole-stage-codegen'd; the filter is NOT parquet-pushable (expression on a
-computed value), so at scale pair with partition pruning on real columns.
+Every sampler is one of three draws over one digest, and keeps only its
+own rule:
+
+* the digest :func:`_digest` is ``md5(seed || '|' || key)`` — the SQL
+  oracle writes ``md5('42|' || key)``; :func:`_hex8` reads its first 8
+  hex chars as an unsigned 32-bit integer (uniforms, folds, buckets);
+* a FILTER on a digest expression (rate, stratified, split, temperature,
+  fractional epochs) is narrow and whole-stage-codegen'd, but NOT
+  parquet-pushable (it filters a computed value), so at scale pair it
+  with partition pruning on real columns;
+* :func:`_bottom_k` keeps the k smallest scores — Spark runs
+  ``orderBy(score).limit(k)`` as TakeOrderedAndProject (per-partition
+  k-heaps merged on the driver, no global sort);
+* :func:`_quota_draw` keeps the first ``quota`` rows per group in
+  (digest, key) order — one ``row_number`` window, one group-keyed
+  shuffle.
+
+NULL keys follow one rule, fixed by the digest: a NULL key has no
+content to hash, so its digest is NULL (``concat``, like SQL ``||``;
+``concat_ws`` would skip the NULL and give every NULL-key row the digest
+of the bare seed).  Filters therefore drop a NULL-key row, the bottom-k
+and quota draws never draw it, :func:`kfold_assign` gives it a NULL
+fold, and :func:`split_train_holdout` sends it to train so the split
+stays exhaustive.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.plans.share import share
+
+
+def _digest(key: Column, seed: str) -> Column:
+    """32-hex md5 of ``seed|key``; NULL for a NULL key."""
+    return F.md5(F.concat(F.lit(f"{seed}|"), key.cast("string")))
+
+
+def _hex8(digest: Column) -> Column:
+    """First 8 hex chars of an md5 digest as a long in [0, 2^32)."""
+    return F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
+
+
+def _bottom_k(df: DataFrame, score: Column, k: int, *tiebreak) -> DataFrame:
+    """The ``k`` rows with the smallest non-NULL ``score`` (ties broken
+    by ``tiebreak``); a NULL score is never drawn."""
+    # NULLs sort last and are dropped from the k drawn rows: a filter
+    # ahead of the sort would be pushed below the projection and hash
+    # every input row twice
+    return (
+        df.withColumn("__score", score)
+        .orderBy(F.col("__score").asc_nulls_last(), *tiebreak)
+        .limit(k)
+        .filter(F.col("__score").isNotNull())
+        .drop("__score")
+    )
+
+
+def _quota_draw(
+    df: DataFrame, group_cols: list[str], key: Column, seed: str, quota: Column
+) -> DataFrame:
+    """Rows ranked ``<= quota`` within their group in (digest, key)
+    order; NULL-key rows have no digest and are never drawn."""
+    w = Window.partitionBy(*group_cols).orderBy(_digest(key, seed), key)
+    return (
+        df.filter(key.isNotNull())
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= quota)
+        .drop("__rn")
+    )
+
+
+def _group_sizes(df: DataFrame, group_col: str) -> tuple[DataFrame, DataFrame]:
+    """``df`` without NULL groups, and its per-group count ``__n`` with
+    the smallest group's count ``__nmin`` broadcast beside every group.
+
+    NULL groups are dropped AND left out of the minimum: a handful of
+    unlabeled rows must not masquerade as the smallest group and shrink
+    every real group's rate or quota to their count (and the equi-joins
+    that attach the result could not match them anyway)."""
+    kept = df.filter(F.col(group_col).isNotNull())
+    counts = kept.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n"))
+    nmin = counts.agg(F.min("__n").alias("__nmin"))
+    return kept, counts.crossJoin(F.broadcast(nmin))
 
 
 def rate_threshold(rate: float) -> str:
@@ -54,9 +128,7 @@ def hash_bucket(key: Column, seed: str = "42") -> Column:
     the hex prefix is engine-portable (identical in Spark and ANSI SQL);
     no integer conversion needed.
     """
-    return F.substring(
-        F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), 1, 2
-    )
+    return F.substring(_digest(key, seed), 1, 2)
 
 
 def deterministic_sample(
@@ -75,20 +147,13 @@ def fixed_size_sample(
 
     The rate-based sampler gives a binomially-varying count; budgeted jobs
     (eval sets, human-review batches) need an exact size.  Hashing then
-    taking the global top-k is a distributed uniform draw with the same
-    content-keyed determinism as :func:`deterministic_sample` — and Spark
-    executes ``orderBy(h).limit(k)`` as TakeOrderedAndProject: per-
-    partition k-heaps merged on the driver, no global sort, no single-task
-    shuffle.  Ties on the full 32-hex digest require identical (seed, key)
-    — break them with a unique key if the key column can repeat.
+    taking the global bottom-k (:func:`_bottom_k`) is a distributed
+    uniform draw with the same content-keyed determinism as
+    :func:`deterministic_sample`.  Ties on the full 32-hex digest require
+    identical (seed, key) — break them with a unique key if the key
+    column can repeat.
     """
-    h = F.md5(F.concat_ws("|", F.lit(seed), key.cast("string")))
-    return (
-        df.withColumn("__h", h)
-        .orderBy("__h")
-        .limit(k)
-        .drop("__h")
-    )
+    return _bottom_k(df, _digest(key, seed), k)
 
 
 def stratified_sample(
@@ -103,35 +168,31 @@ def stratified_sample(
     sources hard, keep rare high-quality sources whole) — the quota knob
     of training-data mixing.  Same hash-bucket mechanism, one threshold
     per stratum via a CASE chain, so it stays a narrow codegen'd filter."""
-    bucket = hash_bucket(key, seed)
     threshold: Column = F.lit(rate_threshold(default_rate))
     for value, rate in sorted(rates.items()):
         threshold = F.when(stratum == value, F.lit(rate_threshold(rate))).otherwise(threshold)
-    return df.filter(bucket < threshold)
+    return df.filter(hash_bucket(key, seed) < threshold)
 
 
 def split_train_holdout(
     df: DataFrame, key: Column, holdout: float = 0.1, seed: str = "42"
 ) -> tuple[DataFrame, DataFrame]:
     """Disjoint, exhaustive (train, holdout) split on the same hash —
-    the reproducible-split primitive for eval-set hygiene at scale."""
-    threshold = rate_threshold(holdout)
-    bucket = hash_bucket(key, seed)
-    return (
-        df.filter(bucket >= F.lit(threshold)),
-        df.filter(bucket < F.lit(threshold)),
-    )
+    the reproducible-split primitive for eval-set hygiene at scale.  A
+    NULL-key row has no bucket and goes to train."""
+    hold = hash_bucket(key, seed) < F.lit(rate_threshold(holdout))
+    return df.filter(~F.coalesce(hold, F.lit(False))), df.filter(hold)
 
 
 def deterministic_shuffle(
     df: DataFrame,
     seed: str = "42",
     key_cols: list[str] | None = None,
-    key_out: str = "shuffle_key",
 ) -> DataFrame:
     """Reproducible global pseudo-random ordering for training-data runs:
     sort by :func:`row_sort_key` (md5 over the seed plus one fixed-width
-    per-column digest — see there for the collision story).
+    per-column digest — see there for the collision story), emitted as
+    ``shuffle_key``.
 
     ``DataFrame.orderBy(rand(seed))`` is partition-layout-dependent (same
     trap as ``sample``); a content-hash sort key reproduces the same order
@@ -142,7 +203,7 @@ def deterministic_shuffle(
     seed per epoch).
     """
     key = row_sort_key(str(seed), key_cols or df.columns)
-    return df.withColumn(key_out, key).orderBy(key_out)
+    return df.withColumn("shuffle_key", key).orderBy("shuffle_key")
 
 
 def interleave_sources(
@@ -151,16 +212,15 @@ def interleave_sources(
     weights: dict[str, float],
     key: Column,
     seed: str = "42",
-    pos_out: str = "mix_pos",
-    key_out: str = "mix_key",
 ) -> DataFrame:
     """Deterministic mixture interleaving — the training-data "data mix"
     order: every prefix of the output contains sources in proportion to
     ``weights`` (stride scheduling: a source with weight w occupies
     positions (k − 0.5)/w for k = 1, 2, …, so doubling a weight doubles a
-    source's density anywhere in the stream).
+    source's density anywhere in the stream).  The position is emitted
+    as ``mix_pos``.
 
-    Within each source, rows order by the content-hash key (same
+    Within each source, rows order by the content-hash digest (same
     partition-invariant determinism as :func:`deterministic_shuffle` —
     reshuffling the cluster cannot change the curriculum).  Sources
     missing from ``weights`` are dropped (weight 0), declared.
@@ -168,27 +228,23 @@ def interleave_sources(
     Tie contract: different sources CAN emit float-equal positions
     (equal weights always do: both emit (k−0.5)/w at every k; unequal
     ones can too, e.g. 0.3 and 0.1 both hit 5.0), so a sort on
-    ``pos_out`` alone leaves tie order to the shuffle.  The total order
-    is therefore FOLDED INTO THE DATA as ``key_out`` — a single
-    ``struct(pos, source)`` column where ``orderBy(key_out)`` alone is
-    fully deterministic (Spark compares structs field-by-field).  Two
+    ``mix_pos`` alone leaves tie order to the shuffle.  The total order
+    is therefore FOLDED INTO THE DATA as ``mix_key`` — a single
+    ``struct(mix_pos, source)`` column where ``orderBy("mix_key")`` alone
+    is fully deterministic (Spark compares structs field-by-field).  Two
     fields suffice for totality: within a source, ``row_number`` makes
     every position distinct, so any float-equal pair differs in
-    ``source_col``.  ``pos_out`` stays a plain double for prefix
+    ``source_col``.  ``mix_pos`` stays a plain double for prefix
     filtering and the SQL oracle; the mixture property itself holds
     under any tie order.
 
     Plan: one window rank per source partition + pure arithmetic; the
-    global sort on ``key_out`` is Spark's ordinary range-partitioned
+    global sort on ``mix_key`` is Spark's ordinary range-partitioned
     sort.  Emitting the position rather than materializing the order
     keeps the operator composable (filter a prefix for a token budget,
     then sort once at write time).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), key
-    )
+    w = Window.partitionBy(source_col).orderBy(_digest(key, seed), key)
     for src, wt in weights.items():
         if float(wt) < 0.0:
             raise ValueError(
@@ -210,8 +266,8 @@ def interleave_sources(
     return (
         df.withColumn("__w", weight_expr)
         .filter(F.col("__w").isNotNull())
-        .withColumn(pos_out, (rank - F.lit(0.5)) / F.col("__w"))
-        .withColumn(key_out, F.struct(F.col(pos_out), F.col(source_col)))
+        .withColumn("mix_pos", (rank - F.lit(0.5)) / F.col("__w"))
+        .withColumn("mix_key", F.struct(F.col("mix_pos"), F.col(source_col)))
         .drop("__w")
     )
 
@@ -240,9 +296,9 @@ def pack_sequences(
     token_col: str,
     seed: str = "42",
     key_cols: list[str] | None = None,
-    out_col: str = "pack_id",
 ) -> DataFrame:
-    """Assign each document to a fixed-token-budget training pack.
+    """Assign each document to a fixed-token-budget training pack,
+    emitted as ``pack_id``.
 
     Documents are laid out in the deterministic shuffle order
     (:func:`row_sort_key`, see :func:`deterministic_shuffle`) and cut into packs
@@ -267,12 +323,9 @@ def pack_sequences(
         quantile_bucket,
     )
 
-    from pyspark.sql import Window
-
     if budget <= 0:
-        # fail fast: budget 0 otherwise dies mid-execution with a cryptic
-        # ANSI DIVIDE_BY_ZERO, and a negative budget silently emits
-        # garbage negative pack ids (r17 edge sweep)
+        # budget 0 would otherwise die mid-execution with a cryptic ANSI
+        # DIVIDE_BY_ZERO, and a negative budget emits negative pack ids
         raise ValueError(f"pack_sequences: budget must be positive, got {budget}")
 
     spark = df.sparkSession
@@ -292,14 +345,11 @@ def pack_sequences(
 
     in_bucket = (
         Window.partitionBy("__bkt")
-        # token_col as the secondary sort closes the tie seam (r9
-        # review): with key_cols a SUBSET of the row (duplicate key
-        # values), rows tying on the full hash got arbitrary relative
-        # order and their cumulative sums — hence pack boundaries —
-        # could differ run to run.  Same-hash rows now order by length
-        # (rows identical in BOTH are interchangeable: any order yields
-        # the same prefix sums), restoring the documented pure-function-
-        # of-(data, seed, budget) contract.
+        # token_col as the secondary sort: with key_cols a SUBSET of the
+        # row (duplicate key values), rows tying on the full hash would
+        # otherwise take arbitrary relative order, and so would their
+        # cumulative sums and pack boundaries.  Rows identical in BOTH
+        # are interchangeable: any order yields the same prefix sums.
         .orderBy("__h", token_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -311,7 +361,7 @@ def pack_sequences(
     return (
         local.join(F.broadcast(offsets), on="__bkt")
         .withColumn(
-            out_col,
+            "pack_id",
             F.floor(
                 (F.col("__before") + F.col("__cum") - F.col(token_col))
                 / F.lit(budget)
@@ -335,23 +385,15 @@ def group_fixed_size_sample(
     examples from every source/language/domain" regardless of group
     skew.
 
-    One window ``row_number`` per group ordered by the content hash:
-    partition-invariant (the hash depends on (seed, key), never on
-    layout), one shuffle keyed on the group columns.  Per-group sort
-    cost is the usual window price; groups far hotter than their peers
-    sort more data — at extreme skew, pre-filter with a rate-based
-    sample slightly above k/|group| and top up, the same two-pass trick
-    as percent_rank's quantile-bucket path.
+    :func:`_quota_draw` with one quota for every group: partition-
+    invariant (the digest depends on (seed, key), never on layout), one
+    shuffle keyed on the group columns.  Per-group sort cost is the
+    usual window price; groups far hotter than their peers sort more
+    data — at extreme skew, pre-filter with a rate-based sample slightly
+    above k/|group| and top up, the same two-pass trick as
+    percent_rank's quantile-bucket path.
     """
-    from pyspark.sql import Window
-
-    h = F.md5(F.concat_ws("|", F.lit(seed), key.cast("string")))
-    w = Window.partitionBy(*group_cols).orderBy(h, key)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _quota_draw(df, group_cols, key, seed, F.lit(k))
 
 
 def mixture_sample(
@@ -369,15 +411,11 @@ def mixture_sample(
     the caller states the mix, the sampler materializes it.
 
     Groups absent from ``weights`` contribute NOTHING (an explicit mix
-    is a whitelist).  Mechanism = :func:`group_fixed_size_sample` with a
-    per-group quota instead of one k: one window ``row_number`` ordered
-    by the cross-engine md5 hash, quota resolved by a CASE chain on the
-    group value — partition-invariant, one group-keyed shuffle, and
-    SQL-replayable verbatim.  Quotas are rounded half-up from
-    ``total * w_g`` so the stated weights, not float banker's rounding,
-    decide the draw."""
-    from pyspark.sql import Window
-
+    is a whitelist).  Mechanism = :func:`_quota_draw` with a per-group
+    quota resolved by a CASE chain on the group value — partition-
+    invariant, one group-keyed shuffle, and SQL-replayable verbatim.
+    Quotas are rounded half-up from ``total * w_g`` so the stated
+    weights, not float banker's rounding, decide the draw."""
     quotas = {
         g: int(total * w + 0.5) for g, w in weights.items()
     }
@@ -391,13 +429,7 @@ def mixture_sample(
     quota: Column = F.lit(0)
     for value in named:
         quota = F.when(F.col(group_col) == value, F.lit(quotas[value])).otherwise(quota)
-    h = F.md5(F.concat_ws("|", F.lit(seed), key.cast("string")))
-    w = Window.partitionBy(group_col).orderBy(h, key)
-    return (
-        pruned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= quota)
-        .drop("__rn")
-    )
+    return _quota_draw(pruned, [group_col], key, seed, quota)
 
 
 def hash_unit(key: Column, seed: str = "42") -> Column:
@@ -405,12 +437,7 @@ def hash_unit(key: Column, seed: str = "42") -> Column:
     ``rand()`` keyed on content: first 8 hex chars of md5(seed|key) as an
     integer over 2^32.  Use when the keep-rate is COMPUTED in-query (the
     hex-string `hash_bucket` needs a Python-side threshold constant)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return h / F.lit(float(2**32))
+    return _hex8(_digest(key, seed)) / F.lit(float(2**32))
 
 
 def temperature_sample(
@@ -430,33 +457,24 @@ def temperature_sample(
     The decision is content-keyed (`hash_unit`), so the sample is
     partition- and engine-independent; rates are rounded to 9 dp before
     comparison so last-ulp ``pow`` differences between libm
-    implementations cannot flip a row.  Plan: one tiny per-source count
-    agg + broadcast join + narrow codegen'd filter — no shuffle of the
-    fact side.  Adds ``keep_rate`` for audit.
+    implementations cannot flip a row.  NULL sources are dropped
+    (:func:`_group_sizes`).  Plan: one tiny per-source count agg +
+    broadcast join + narrow codegen'd filter — no shuffle of the fact
+    side.  Adds ``keep_rate`` for audit.
     """
-    # NULL sources are dropped AND excluded from the min-count — the
-    # balance_classes rule (r9 review): a handful of unsourced rows must
-    # not masquerade as the minority source and shrink every real
-    # source's keep-rate to their count, while the equi-join below
-    # silently drops the NULL rows themselves anyway.
-    df = df.filter(F.col(source_col).isNotNull())
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
-    nmin = counts.agg(F.min("__n").alias("__nmin"))
-    rates = (
-        counts.crossJoin(F.broadcast(nmin))
-        .select(
-            source_col,
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.pow(
-                        F.col("__n").cast("double") / F.col("__nmin"),
-                        F.lit(alpha - 1.0),
-                    ),
+    df, sizes = _group_sizes(df, source_col)
+    rates = sizes.select(
+        source_col,
+        F.round(
+            F.least(
+                F.lit(1.0),
+                F.pow(
+                    F.col("__n").cast("double") / F.col("__nmin"),
+                    F.lit(alpha - 1.0),
                 ),
-                9,
-            ).alias("keep_rate"),
-        )
+            ),
+            9,
+        ).alias("keep_rate"),
     )
     return df.join(F.broadcast(rates), on=source_col).filter(
         hash_unit(key, seed) < F.col("keep_rate")
@@ -464,24 +482,18 @@ def temperature_sample(
 
 
 def kfold_assign(
-    df: DataFrame, key: Column, k: int = 5, seed: str = "42",
-    out_col: str = "fold",
+    df: DataFrame, key: Column, k: int = 5, seed: str = "42"
 ) -> DataFrame:
-    """Deterministic k-fold assignment: ``fold = md5-int(seed|key) % k``
+    """Deterministic k-fold assignment as ``fold = md5-int(seed|key) % k``
     — every row lands in the same fold on any cluster, any partitioning,
     any md5-capable engine (the cross-validation / sharded-eval split
-    primitive; folds are disjoint and exhaustive by construction).
-    Narrow column expression, no shuffle."""
+    primitive; folds are disjoint and exhaustive over non-NULL keys, and
+    a NULL key gets a NULL fold).  Narrow column expression, no shuffle."""
     if k < 1:
-        # fail fast: k=0 otherwise dies mid-execution with a cryptic ANSI
-        # REMAINDER_BY_ZERO; negative k emits negative folds (r17 edge sweep)
+        # k=0 would otherwise die mid-execution with a cryptic ANSI
+        # REMAINDER_BY_ZERO; negative k would emit negative folds
         raise ValueError(f"kfold_assign: k must be >= 1, got {k}")
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return df.withColumn(out_col, (h % k).cast("int"))
+    return df.withColumn("fold", (_hex8(_digest(key, seed)) % k).cast("int"))
 
 
 def balance_classes(
@@ -498,38 +510,23 @@ def balance_classes(
     distributions (the UNDERSAMPLING complement of
     :func:`temperature_sample`'s source reweighting).
 
-    Plan: one label-keyed count (tiny frame), a min over it to find the
-    minority size (broadcast single-row), then the same per-group
-    hash-ordered ``row_number`` draw as :func:`group_fixed_size_sample`
+    Plan: the label sizes of :func:`_group_sizes` (a tiny label-keyed
+    count and a broadcast single-row minimum), then :func:`_quota_draw`
     with the PER-LABEL quota joined in — one label-keyed window shuffle
-    over the data, everything else label-cardinality work.  The draw is
-    partition-invariant and engine-reproducible (md5 content hash, ties
-    on the key).  NULL labels are DROPPED (the quota join cannot match
-    them) AND excluded from the quota computation — a handful of
-    unlabeled rows must neither train as a class of their own nor
-    masquerade as the "minority" and shrink every real class's quota to
-    their count (ADVICE r7).  Filter or fill labels first; silently
-    training on an unlabeled class is the bug this refuses to have.
+    over the data, everything else label-cardinality work.  NULL labels
+    are DROPPED and excluded from the quota computation: filter or fill
+    labels first; silently training on an unlabeled class is the bug
+    this refuses to have.
     """
     if max_ratio <= 0:
         raise ValueError(f"max_ratio must be positive, got {max_ratio}")
-    from pyspark.sql import Window
-
-    labeled = df.filter(F.col(label_col).isNotNull())
-    counts = labeled.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n"))
-    minority = counts.agg(F.min("__n").alias("__min_n"))
-    quotas = counts.crossJoin(F.broadcast(minority)).select(
+    labeled, sizes = _group_sizes(df, label_col)
+    quotas = sizes.select(
         label_col,
-        F.floor(F.col("__min_n") * max_ratio).cast("long").alias("__quota"),
+        F.floor(F.col("__nmin") * max_ratio).cast("long").alias("__quota"),
     )
-    h = F.md5(F.concat_ws("|", F.lit(seed), key.cast("string")))
-    w = Window.partitionBy(label_col).orderBy(h, key)
-    return (
-        labeled.join(F.broadcast(quotas), on=label_col)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.col("__quota"))
-        .drop("__rn", "__quota")
-    )
+    joined = labeled.join(F.broadcast(quotas), on=label_col)
+    return _quota_draw(joined, [label_col], key, seed, F.col("__quota")).drop("__quota")
 
 
 def merge_samples(
@@ -556,7 +553,6 @@ def repeat_epochs(
     factor: float,
     key: Column,
     seed: str = "42",
-    out_col: str = "epoch_copy",
 ) -> DataFrame:
     """Materialize FRACTIONAL training epochs deterministically: each row
     appears ``floor(factor)`` times, plus one more for the
@@ -571,7 +567,7 @@ def repeat_epochs(
     for the fractional copy are exactly :func:`deterministic_sample`'s
     draw, so the same documents repeat on any cluster.
 
-    ``out_col`` numbers the copies 1..n (distinct rows for downstream
+    ``epoch_copy`` numbers the copies 1..n (distinct rows for downstream
     shuffling — feed :func:`deterministic_shuffle` with a
     (key, epoch_copy) sort key so copies spread across the epoch).
     ``factor < 1`` degrades to plain subsampling (0 base copies);
@@ -591,7 +587,7 @@ def repeat_epochs(
     return (
         df.withColumn("__n_copies", n_copies)
         .filter(F.col("__n_copies") > 0)
-        .withColumn(out_col, F.explode(F.sequence(F.lit(1), F.col("__n_copies"))))
+        .withColumn("epoch_copy", F.explode(F.sequence(F.lit(1), F.col("__n_copies"))))
         .drop("__n_copies")
     )
 
@@ -603,47 +599,27 @@ def weighted_sample(
     WITHOUT replacement with probability proportional to ``weight`` —
     Efraimidis–Spirakis A-ES (IPL 2006): each row scores ``-ln(u)/w``
     with ``u`` a content-keyed uniform from :func:`hash_unit`'s md5
-    construction, and the k SMALLEST scores win.
+    construction, and the k SMALLEST scores win (:func:`_bottom_k`).
 
     The importance-sampling knob of the mixing family: upweight rare
     high-quality sources at draw time instead of duplicating rows.  Same
-    execution shape as :func:`fixed_size_sample` — ``orderBy(score).
-    limit(k)`` compiles to TakeOrderedAndProject (per-partition k-heaps,
-    no global sort) — and the same mergeability argument (a global top-k
-    row survives its slice's top-k), so per-slice draws merge exactly.
-    Content-keyed determinism: same (seed, key, weight) → same sample on
-    any partitioning or engine (the driver oracle replays the md5 + ln
+    execution shape as :func:`fixed_size_sample` and the same
+    mergeability argument (a global bottom-k row survives its slice's
+    bottom-k), so per-slice draws merge exactly.  Content-keyed
+    determinism: same (seed, key, weight) → same sample on any
+    partitioning or engine (the driver oracle replays the md5 + ln
     arithmetic in SQL).
 
-    Rows with NULL or non-positive weight — and rows with a NULL
-    ``key`` — are EXCLUDED (zero/undefined inclusion probability; a
-    NULL key has no content to hash: Spark's ``concat_ws`` would skip
-    it and give every NULL-key row the SAME uniform, while SQL ``||``
-    concatenation nulls out — the r9 ADVICE's latent cross-engine
-    divergence, closed by filtering).  ``u`` is offset to
-    ``(h + 0.5) / 2^32`` so it is never exactly 0 (ln(0) = -inf would
-    make the row unsampleable regardless of weight).
+    Rows with NULL or non-positive weight, and rows with a NULL ``key``,
+    score NULL and are EXCLUDED (zero/undefined inclusion probability).
+    ``u`` is offset to ``(h + 0.5) / 2^32`` so it is never exactly 0
+    (ln(0) = -inf would make the row unsampleable regardless of weight);
+    the offset is exact in double, so ``u`` is bit-identical to the
+    oracle's ``(h + 0.5) / 4294967296``.
     """
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 32))
-    score = -F.ln(u) / weight.cast("double")
-    return (
-        df.filter(
-            key.isNotNull() & weight.isNotNull() & (weight.cast("double") > 0)
-        )
-        .withColumn("__score", score)
-        .orderBy("__score", key)
-        .limit(k)
-        .drop("__score")
-    )
+    w = weight.cast("double")
+    u = hash_unit(key, seed) + F.lit(0.5 / 2**32)
+    return _bottom_k(df, F.when(w > 0, -F.ln(u) / w), k, key)
 
 
 # --------------------------------------------------------- DSIR resampling
@@ -654,10 +630,7 @@ def hashed_bucket(token: Column, n_buckets: int) -> Column:
     as :func:`hash_unit`, so the oracle replays it as
     ``('0x' || substr(md5(w), 1, 8))::BIGINT % n`` (always non-negative:
     the hash is an unsigned 32-bit value before the mod)."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(token), 1, 8), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    )
+    return F.pmod(_hex8(F.md5(token)), F.lit(n_buckets))
 
 
 def dsir_log_weights(
@@ -692,13 +665,12 @@ def dsir_log_weights(
             hashed_bucket(F.col("__w"), n_buckets).alias("__bucket"),
         ).groupBy(*keys, "__bucket").agg(F.count(F.lit(1)).alias("__c"))
 
-    # Tokenize each corpus ONCE (guide §2.2): the r18 before-plan ran the
-    # raw explode+hash pipeline three times (global counts, total-token
-    # scalar, per-doc scoring counts) and the target pipeline twice
-    # (counts + total).  The per-doc raw counts are the finest grain, so
-    # the global raw distribution ROLLS UP from them (sum over docs is
-    # exactly the global count); both total-token scalars roll up from
-    # the ≤n_buckets-row count frames.
+    # Tokenize each corpus ONCE: the per-doc raw counts are the finest
+    # grain, so the global raw distribution ROLLS UP from them (sum over
+    # docs is exactly the global count); both total-token scalars roll
+    # up from the ≤n_buckets-row count frames.  Without the two shares
+    # the plan re-runs the raw explode+hash pipeline three times and the
+    # target pipeline twice.
     raw_doc = share(bucket_counts(raw, id_col))
     tcnt = share(bucket_counts(target).withColumnRenamed("__c", "__tc"))
     rcnt = raw_doc.groupBy("__bucket").agg(F.sum("__c").alias("__rc"))
@@ -745,23 +717,7 @@ def log_weighted_sample(
     ``ln(-ln u) − ln w`` draws the identical sample while never
     materializing ``w = exp(log_weight)`` (which overflows for the
     corpus-scale log-ratio sums importance resampling produces).
-    Same content-keyed uniform, same TakeOrderedAndProject shape, same
-    per-slice mergeability as :func:`weighted_sample`."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(seed), key.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 32))
-    score = F.ln(-F.ln(u)) - log_weight.cast("double")
-    return (
-        df.filter(key.isNotNull() & log_weight.isNotNull())
-        .withColumn("__score", score)
-        .orderBy("__score", key)
-        .limit(k)
-        .drop("__score")
-    )
+    Same content-keyed uniform, same bottom-k shape, same NULL exclusion
+    and per-slice mergeability as :func:`weighted_sample`."""
+    u = hash_unit(key, seed) + F.lit(0.5 / 2**32)
+    return _bottom_k(df, F.ln(-F.ln(u)) - log_weight.cast("double"), k, key)

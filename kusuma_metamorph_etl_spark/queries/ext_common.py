@@ -18,6 +18,29 @@ _W_LOWER = _W.format(src="lower(text)")
 
 _W_TEXT = _W.format(src="text")
 
+# The four Gopher quality metrics over a `tok` CTE carrying `text`, its
+# tokens `w` and lowercased tokens `wl`.  Must stay textually in sync
+# with operators/text.py::gopher_filter (thresholds live in the callers).
+_GOPHER_METRICS = """CASE WHEN len(w) > 0
+                      THEN CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w)
+                      ELSE 0.0 END AS avg_wl,
+                 CASE WHEN length(text) > 0
+                      THEN CAST(len(regexp_extract_all(text,
+                               '[#@<>{}\\[\\]\\\\|~^]')) AS DOUBLE)
+                           / length(text)
+                      ELSE 0.0 END AS sym_ratio,
+                 CASE WHEN len(w) > 0
+                      THEN CAST(len(list_filter(wl,
+                               x -> x IN ('the','a','and','of','to','in','is','it')))
+                               AS DOUBLE) / len(w)
+                      ELSE 0.0 END AS stop_ratio,
+                 CASE WHEN greatest(len(w) - 1, 0) > 0
+                      THEN round(1.0 - CAST(len(list_distinct(
+                               list_transform(range(1, greatest(len(w) - 1, 0) + 1),
+                                              i -> concat_ws(' ', w[i], w[i+1]))))
+                               AS DOUBLE) / (len(w) - 1), 6)
+                      ELSE 0.0 END AS rep2"""
+
 
 _SHINGLES = (
     "list_distinct(list_transform(range(len(w) - 2),"

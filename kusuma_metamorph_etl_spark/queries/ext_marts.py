@@ -9,7 +9,11 @@ from kusuma_metamorph_etl_spark.operators import multimodal, sampling, similarit
 from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import RUN_DATE, register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
-from kusuma_metamorph_etl_spark.queries.ext_common import _W_LOWER, _W_TEXT
+from kusuma_metamorph_etl_spark.queries.ext_common import (
+    _GOPHER_METRICS,
+    _W_LOWER,
+    _W_TEXT,
+)
 
 # ---------------------------------------------------------------- text analysis
 
@@ -253,9 +257,12 @@ _CANON = (
     " '\\s+', ' ', 'g'))"
 )
 
-@register(
-    "mart_llm_dataprep",
-    f"""WITH surviving AS MATERIALIZED (
+
+def _curation_sql(kept_cols: str) -> str:
+    """Oracle CTEs of :func:`_curated_english` up to the per-source
+    ``keep_rate`` table ``r``; ``kept`` projects ``kept_cols`` and the
+    caller writes the content-hash filter against ``r``."""
+    return f"""WITH surviving AS MATERIALIZED (
           SELECT * FROM (
             SELECT d.*, min(doc_id) OVER (PARTITION BY md5({_CANON})) AS keep_id
             FROM documents d)
@@ -266,28 +273,10 @@ _CANON = (
           SELECT doc_id,
                  (text IS NULL) AS is_null_text,
                  len(w) AS n_tokens,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS avg_wl,
-                 CASE WHEN length(text) > 0
-                      THEN CAST(len(regexp_extract_all(text,
-                               '[#@<>{{}}\\[\\]\\\\|~^]')) AS DOUBLE)
-                           / length(text)
-                      ELSE 0.0 END AS sym_ratio,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(len(list_filter(wl,
-                               x -> x IN ('the','a','and','of','to','in','is','it')))
-                               AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS stop_ratio,
-                 CASE WHEN greatest(len(w) - 1, 0) > 0
-                      THEN round(1.0 - CAST(len(list_distinct(
-                               list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-                                              i -> concat_ws(' ', w[i], w[i+1]))))
-                               AS DOUBLE) / (len(w) - 1), 6)
-                      ELSE 0.0 END AS rep2
+                 {_GOPHER_METRICS}
           FROM tok),
         kept AS (
-          SELECT t.doc_id, t.source, t.lang, m.n_tokens
+          SELECT {kept_cols}
           FROM tok t JOIN m USING (doc_id)
           WHERE NOT (m.is_null_text OR m.n_tokens < 20 OR m.n_tokens > 100000
                      OR m.avg_wl < 2.0 OR m.avg_wl > 12.0 OR m.sym_ratio > 0.12
@@ -298,22 +287,14 @@ _CANON = (
         r AS (SELECT source,
                      round(least(1.0, pow(n / (SELECT nmin FROM mn), -0.5)), 9)
                          AS keep_rate
-              FROM c)
-        SELECT k.doc_id, k.source, k.lang, CAST(k.n_tokens AS BIGINT) AS n_tokens,
-               r.keep_rate
-        FROM kept k JOIN r USING (source)
-        WHERE ('0x' || substr(md5('42|' || k.doc_id), 1, 8))::BIGINT
-              / 4294967296.0 < r.keep_rate""",
-)
-def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end LLM training-data prep as ONE composed pipeline ([EXT]
-    flagship composition): normalized exact dedup (reformatted copies
-    collapse, lowest id wins) → Gopher quality filter → language gate →
-    temperature source rebalancing — each stage the registered operator,
-    chained exactly as a corpus job would run them, with the WHOLE
-    pipeline oracle-checked end to end.  Plan: one dedup shuffle, scan-
-    speed narrow filters, one tiny rate agg + broadcast — the fact
-    stream shuffles once."""
+              FROM c)"""
+
+
+def _curated_english(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus curation chain both training-data capstones run, each
+    stage the registered operator: normalized exact dedup (reformatted
+    copies collapse, lowest id wins) → Gopher quality filter → English
+    gate → temperature source rebalancing (adds ``keep_rate``)."""
     docs = t(spark, sf_dir, "documents")
     canon = docs.select(
         "doc_id", text.normalize_for_dedup(F.col("text")).alias("__canon")
@@ -332,21 +313,38 @@ def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~10 rule references (filter-pushdown has no non-cheap-alias guard
     # the way CollapseProject does) — measured 14-15s for the quality
     # stage vs ~1.3s unpushed; (2) temperature_sample reads its input on
-    # three plan branches.  Sharing the projected frame makes `keep` a
-    # materialized COLUMN (filters on it are free) and lets the sampler's
-    # branches share one evaluation: whole pipeline 33s → ~3s at sf0.1.
-    # On a cluster this is exactly where the filtered corpus would be
-    # persisted as a table anyway.
+    # three plan branches (four in mart_pretrain_batches, whose tokenizer
+    # word-count aggregation reads it too).  Sharing the projected frame
+    # makes `keep` a materialized COLUMN (filters on it are free) and
+    # lets those branches share one evaluation: whole pipeline 33s → ~3s
+    # at sf0.1.  On a cluster this is exactly where the filtered corpus
+    # would be persisted as a table anyway.
     quality_all = share(text.gopher_filter(surviving))
     english = (
         quality_all.filter(F.col("keep"))
         .filter(F.col("lang") == "en")
         .drop("keep", "reject_reason")
     )
-    sampled = sampling.temperature_sample(
+    return sampling.temperature_sample(
         english, "source", F.col("doc_id"), alpha=0.5
     )
-    return sampled.select(
+
+@register(
+    "mart_llm_dataprep",
+    f"""{_curation_sql("t.doc_id, t.source, t.lang, m.n_tokens")}
+        SELECT k.doc_id, k.source, k.lang, CAST(k.n_tokens AS BIGINT) AS n_tokens,
+               r.keep_rate
+        FROM kept k JOIN r USING (source)
+        WHERE ('0x' || substr(md5('42|' || k.doc_id), 1, 8))::BIGINT
+              / 4294967296.0 < r.keep_rate""",
+)
+def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end LLM training-data prep as ONE composed pipeline ([EXT]
+    flagship composition): the :func:`_curated_english` chain, with the
+    WHOLE pipeline oracle-checked end to end.  Plan: one dedup shuffle,
+    scan-speed narrow filters, one tiny rate agg + broadcast — the fact
+    stream shuffles once."""
+    return _curated_english(spark, sf_dir).select(
         "doc_id",
         "source",
         "lang",
@@ -356,50 +354,7 @@ def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mart_pretrain_batches",
-    f"""WITH surviving AS MATERIALIZED (
-          SELECT * FROM (
-            SELECT d.*, min(doc_id) OVER (PARTITION BY md5({_CANON})) AS keep_id
-            FROM documents d)
-          WHERE doc_id = keep_id),
-        tok AS (SELECT doc_id, text, source, lang, {_W_TEXT} AS w, {_W_LOWER} AS wl
-                FROM surviving),
-        m AS (
-          SELECT doc_id,
-                 (text IS NULL) AS is_null_text,
-                 len(w) AS n_tokens,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS avg_wl,
-                 CASE WHEN length(text) > 0
-                      THEN CAST(len(regexp_extract_all(text,
-                               '[#@<>{{}}\\[\\]\\\\|~^]')) AS DOUBLE)
-                           / length(text)
-                      ELSE 0.0 END AS sym_ratio,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(len(list_filter(wl,
-                               x -> x IN ('the','a','and','of','to','in','is','it')))
-                               AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS stop_ratio,
-                 CASE WHEN greatest(len(w) - 1, 0) > 0
-                      THEN round(1.0 - CAST(len(list_distinct(
-                               list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-                                              i -> concat_ws(' ', w[i], w[i+1]))))
-                               AS DOUBLE) / (len(w) - 1), 6)
-                      ELSE 0.0 END AS rep2
-          FROM tok),
-        kept AS (
-          SELECT t.doc_id, t.source, m.n_tokens
-          FROM tok t JOIN m USING (doc_id)
-          WHERE NOT (m.is_null_text OR m.n_tokens < 20 OR m.n_tokens > 100000
-                     OR m.avg_wl < 2.0 OR m.avg_wl > 12.0 OR m.sym_ratio > 0.12
-                     OR m.stop_ratio < 0.02 OR m.rep2 > 0.6)
-            AND t.lang = 'en'),
-        c AS (SELECT source, count(*)::DOUBLE AS n FROM kept GROUP BY source),
-        mn AS (SELECT min(n) AS nmin FROM c),
-        r AS (SELECT source,
-                     round(least(1.0, pow(n / (SELECT nmin FROM mn), -0.5)), 9)
-                         AS keep_rate
-              FROM c),
+    f"""{_curation_sql("t.doc_id, t.source, m.n_tokens")},
         samp AS (
           SELECT k.doc_id, k.source, k.n_tokens
           FROM kept k JOIN r USING (source)
@@ -425,9 +380,9 @@ def mart_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus → TRAINING BATCHES capstone ([EXT], r17 — the end-to-end
     composition the r16 verdict named as the one missing piece): the
-    `mart_llm_dataprep` curation chain (normalized exact dedup → Gopher
-    quality filter → language gate → temperature source rebalancing),
-    then a REAL trained BPE tokenizer (`operators/bpe.py`: merges
+    :func:`_curated_english` chain `mart_llm_dataprep` runs (normalized
+    exact dedup → Gopher quality filter → language gate → temperature
+    source rebalancing), then a REAL trained BPE tokenizer (`operators/bpe.py`: merges
     learned on the FILTERED corpus — the production order — distributed
     Arrow-batched encode) gating every surviving row on lossless
     round-trip exactly as `txt_bpe_roundtrip` does, then fractional-
@@ -457,40 +412,15 @@ def mart_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     retire-one policy."""
     from kusuma_metamorph_etl_spark.operators import bpe, subword
 
-    docs = t(spark, sf_dir, "documents")
-    canon = docs.select(
-        "doc_id", text.normalize_for_dedup(F.col("text")).alias("__canon")
-    )
-    keep_ids = (
-        canon.select("doc_id", F.md5("__canon").alias("__fp"))
-        .groupBy("__fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    surviving = docs.join(keep_ids, "doc_id", "left_semi")
-    # same materialization point as mart_llm_dataprep (filter-pushdown
-    # trap + multi-branch reuse — see the audit note there); here the
-    # shared frame additionally feeds the tokenizer's word-count
-    # aggregation, so it is read on FOUR plan branches.
-    quality_all = share(text.gopher_filter(surviving))
-    english = (
-        quality_all.filter(F.col("keep"))
-        .filter(F.col("lang") == "en")
-        .drop("keep", "reject_reason")
-    )
-    sampled = sampling.temperature_sample(
-        english, "source", F.col("doc_id"), alpha=0.5
-    )
+    sampled = _curated_english(spark, sf_dir)
     merges = bpe.bpe_train(sampled, n_merges=200)
     encoded = bpe.bpe_encode(sampled, merges)
-    # r18 (guide §1.2 step 1 / §5): pack_sequences reads its input on
-    # THREE plan paths — the quantile-bounds action, the in-bucket cumsum
-    # branch, and the bucket-offsets broadcast branch — and each re-ran
-    # the Arrow-batched BPE encode + lossless-gate pass (the whole
-    # curation chain's most expensive stage; the r18 before-plan shows
-    # the full encode subtree twice in the FINAL plan alone).  Sharing
-    # the narrow post-gate proxy (doc_id, source, n_tokens — the §8
-    # "decide with small rows" shape) runs the encode exactly once per
+    # pack_sequences reads its input on THREE plan paths — the
+    # quantile-bounds action, the in-bucket cumsum branch, and the
+    # bucket-offsets broadcast branch — and each would re-run the
+    # Arrow-batched BPE encode + lossless-gate pass (the whole chain's
+    # most expensive stage).  Sharing the narrow post-gate proxy
+    # (doc_id, source, n_tokens) runs the encode exactly once per
     # invocation.
     gated = share(
         subword.lossless(encoded, bpe.bpe_decode(F.col("tokens")))

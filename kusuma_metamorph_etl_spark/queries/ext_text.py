@@ -10,7 +10,12 @@ from kusuma_metamorph_etl_spark.operators import subword, text
 from kusuma_metamorph_etl_spark.plans.share import share
 from kusuma_metamorph_etl_spark.registry import register
 from kusuma_metamorph_etl_spark.sources.catalog import load_table as t
-from kusuma_metamorph_etl_spark.queries.ext_common import _NUMREF_DECODE, _W_LOWER, _W_TEXT
+from kusuma_metamorph_etl_spark.queries.ext_common import (
+    _GOPHER_METRICS,
+    _NUMREF_DECODE,
+    _W_LOWER,
+    _W_TEXT,
+)
 
 @register(
     "txt_html_to_text",
@@ -565,25 +570,7 @@ def txt_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (text IS NULL) AS is_null_text,
                  length(text) AS n_chars,
                  len(w) AS n_tokens,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS avg_wl,
-                 CASE WHEN length(text) > 0
-                      THEN CAST(len(regexp_extract_all(text,
-                               '[#@<>{{}}\\[\\]\\\\|~^]')) AS DOUBLE)
-                           / length(text)
-                      ELSE 0.0 END AS sym_ratio,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(len(list_filter(wl,
-                               x -> x IN ('the','a','and','of','to','in','is','it')))
-                               AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS stop_ratio,
-                 CASE WHEN greatest(len(w) - 1, 0) > 0
-                      THEN round(1.0 - CAST(len(list_distinct(
-                               list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-                                              i -> concat_ws(' ', w[i], w[i+1]))))
-                               AS DOUBLE) / (len(w) - 1), 6)
-                      ELSE 0.0 END AS rep2
+                 {_GOPHER_METRICS}
           FROM tok)
         SELECT doc_id,
                CASE WHEN is_null_text THEN 'null_text'

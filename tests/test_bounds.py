@@ -15,7 +15,11 @@ PACKAGE = Path(__file__).resolve().parent.parent / "kusuma_metamorph_etl_spark"
 
 MODULES = (
     "operators/dedup.py",
+    "operators/graph.py",
+    "operators/partitioning.py",
+    "operators/sampling.py",
     "operators/similarity.py",
+    "operators/windows.py",
     "plans/quality.py",
     "sources/sinks.py",
     "streaming/sink.py",

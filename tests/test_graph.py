@@ -212,56 +212,6 @@ def test_pagerank_empty_edges_raises(spark):
         pagerank(empty)
 
 
-# ------------------------------------------------- large-star / small-star
-
-@pytest.mark.slow
-def test_star_cc_matches_hash_to_min_on_random_graphs(spark):
-    import random
-
-    from kusuma_metamorph_etl_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    for seed in (3, 4):
-        rng = random.Random(seed)
-        edges = list({(rng.randrange(60), rng.randrange(60)) for _ in range(70)})
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, ["a", "b"])
-        want = {
-            r["node"]: r["component"] for r in connected_components(df).collect()
-        }
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components_star(df).collect()
-        }
-        assert got == want and got
-
-
-@pytest.mark.slow
-def test_star_cc_star_graph_and_chain(spark):
-    from kusuma_metamorph_etl_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    # one huge star (the skew case large-star/small-star exists for)
-    star = spark.createDataFrame([(0, i) for i in range(1, 200)], ["a", "b"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(star).collect()
-    }
-    assert got == {i: 0 for i in range(200)}
-    # a long chain (diameter stress): 0-1-2-...-30
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], ["a", "b"]
-    )
-    got2 = {
-        r["node"]: r["component"]
-        for r in connected_components_star(chain).collect()
-    }
-    assert got2 == {i: 0 for i in range(31)}
-
-
 class TestIncrementalComponents:
     def _edges(self, spark, pairs):
         return spark.createDataFrame(pairs, ["a", "b"])

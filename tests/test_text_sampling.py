@@ -1610,3 +1610,70 @@ def test_degenerate_parameter_guards_r17(spark):
         rolling(ts, ["k"], "d", "v", days=0)
     with pytest.raises(ValueError, match="days must be >= 1"):
         rolling(ts, ["k"], "d", "v", days=-7)
+
+
+def test_null_keys_follow_the_digest_rule(spark):
+    """A NULL key has a NULL digest (SQL ``||``, as every oracle writes
+    ``md5('42|' || key)``): filters drop the row, the bottom-k and quota
+    draws never draw it, kfold gives it a NULL fold, and the holdout
+    split sends it to train.  The filter samplers are checked against
+    DuckDB running the oracle's construction."""
+    import duckdb
+
+    rows = [(i, "a" if i % 2 else "b") for i in range(1, 41)]
+    rows += [(None, "a"), (None, "b"), (None, "a"), (None, "b")]
+    df = spark.createDataFrame(rows, "id long, g string")
+    key = F.col("id")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, g VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+
+    def ids(frame):
+        return sorted((r.id for r in frame.collect()), key=lambda v: (v is None, v))
+
+    def duck(where):
+        got = con.execute(f"SELECT id FROM t WHERE {where}").fetchall()
+        return sorted((r[0] for r in got), key=lambda v: (v is None, v))
+
+    bucket = "substr(md5('42|' || id), 1, 2)"
+    unit = "('0x' || substr(md5('42|' || id), 1, 8))::BIGINT / 4294967296.0"
+    for rate in (0.7, 1.0):
+        want = duck(f"{bucket} < '{sampling.rate_threshold(rate)}'")
+        assert ids(sampling.deterministic_sample(df, key, rate=rate)) == want
+    want = duck(
+        f"{bucket} < CASE g WHEN 'a' THEN '{sampling.rate_threshold(0.5)}' "
+        f"ELSE '{sampling.rate_threshold(1.0)}' END"
+    )
+    got = sampling.stratified_sample(df, key, F.col("g"), {"a": 0.5, "b": 1.0})
+    assert ids(got) == want
+    # one source: keep_rate 1.0, so the filter is hash_unit < 1
+    got = sampling.temperature_sample(df.withColumn("g", F.lit("s")), "g", key)
+    assert ids(got) == duck(f"{unit} < 1.0")
+    got = sampling.repeat_epochs(df, 0.5, key)
+    assert ids(got) == duck(f"{unit} < 0.5")
+
+    non_null = list(range(1, 41))
+    assert ids(sampling.fixed_size_sample(df, key, k=50)) == non_null
+    assert ids(sampling.merge_samples(df, key, k=50)) == non_null
+    assert ids(sampling.group_fixed_size_sample(df, ["g"], key, k=50)) == non_null
+    mixed = sampling.mixture_sample(df, "g", {"a": 0.5, "b": 0.5}, 100, key)
+    assert ids(mixed) == non_null
+    assert ids(sampling.balance_classes(df, "g", key)) == non_null
+    weights = df.withColumn("w", F.lit(1.0))
+    assert ids(sampling.weighted_sample(weights, key, F.col("w"), k=50)) == non_null
+    assert ids(sampling.log_weighted_sample(weights, key, F.col("w"), k=50)) == non_null
+
+    folds = {
+        (r.id, r.fold) for r in sampling.kfold_assign(df, key, k=5).collect()
+    }
+    want = con.execute(
+        "SELECT id, (('0x' || substr(md5('42|' || id), 1, 8))::BIGINT % 5)::INT"
+        " FROM t"
+    ).fetchall()
+    assert folds == set(want)
+    assert {f for i, f in folds if i is None} == {None}
+
+    train, hold = sampling.split_train_holdout(df, key, holdout=0.5)
+    assert ids(hold) == duck(f"{bucket} < '{sampling.rate_threshold(0.5)}'")
+    assert sorted(ids(train) + ids(hold), key=lambda v: (v is None, v)) == ids(df)
+    assert ids(train)[-4:] == [None] * 4
